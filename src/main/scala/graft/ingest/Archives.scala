@@ -58,65 +58,43 @@ object Archives {
   private def basename(key: String): String =
     key.substring(key.lastIndexOf('/') + 1)
 
-  def expand(key: String, content: Array[Byte]): Expansion = {
-    val ext = evalExt(key)
-    if (IgnoreExts.contains(ext)) Ignored
-    else ext match {
+  /** The in-memory form of [[members]]: collects every kept member of
+    * `content`. */
+  def expand(key: String, content: Array[Byte]): Expansion =
+    if (IgnoreExts.contains(evalExt(key))) Ignored
+    else {
+      val out = Vector.newBuilder[(String, Array[Byte])]
+      members(key, () => new ByteArrayInputStream(content))((n, b) => out += n -> b)
+      Entries(out.result())
+    }
+
+  /** THE routing decision for one object, and its expansion: every
+    * entry point (packed scan, oversized and manifest routes, the
+    * `format("dicom")` source, [[expand]]) goes through here.
+    *
+    *  - ignored extensions never call `open`;
+    *  - `.dcm` yields its basename and at most [[DcmRangeBytes]] — the
+    *    ranged GET: an opener over storage is read no further;
+    *  - zip/tar* pass each kept member to `f` as soon as it is read and
+    *    keep no reference to it, so peak memory is the current member
+    *    plus whatever `f` retains — never the container, never the
+    *    member-byte sum (StreamedExpansionSpec's weak-reference test);
+    *  - anything else throws [[UnsupportedExtensionException]] without
+    *    opening the object.
+    *
+    * A broken container throws [[InvalidArchiveException]] when the
+    * visit reaches the break, after the members before it went to `f`. */
+  def members(key: String, open: () => InputStream)(f: (String, Array[Byte]) => Unit): Unit =
+    evalExt(key) match {
+      case ext if IgnoreExts.contains(ext) => ()
       case ".dcm" =>
-        Entries(Seq(basename(key) -> content.take(DcmRangeBytes)))
-      case ".zip" => expandZip(key, content)
-      case ".tar" | ".gz" | ".bz2" | ".xz" => expandTar(key, content)
+        val in = open()
+        val head = try readAll(in, DcmRangeBytes) finally in.close()
+        f(basename(key), head)
+      case ".zip" => visitZip(key, open())(f)
+      case ".tar" | ".gz" | ".bz2" | ".xz" => visitTar(key, open())(f)
       case other => throw new UnsupportedExtensionException(other)
     }
-  }
-
-  /** Streamed expansion for the oversized-object route (the reference's
-    * size-based compute router, `src/app.py:118-181`, re-expressed as a
-    * scan strategy): IDENTICAL member semantics to [[expand]] — the
-    * byte-array forms below delegate here, so the two routes cannot
-    * drift — but the archive itself is never materialized; peak memory
-    * is the largest KEPT MEMBER, not the container. A 50 GB tar.gz of
-    * scans expands entry-by-entry off the storage stream. Loose `.dcm`
-    * never reaches this (the router gives it the ranged header read,
-    * the reference's own `.dcm` bypass). */
-  def expandStream(key: String, in0: InputStream): Expansion = {
-    val ext = evalExt(key)
-    if (IgnoreExts.contains(ext)) { in0.close(); Ignored }
-    else ext match {
-      case ".zip" => expandZipStream(key, in0)
-      case ".tar" | ".gz" | ".bz2" | ".xz" => expandTarStream(key, in0)
-      case other => in0.close(); throw new UnsupportedExtensionException(other)
-    }
-  }
-
-  /** Fold an archive's kept members ONE AT A TIME off the storage
-    * stream: each member's bytes go through `f` as soon as they are
-    * read, and the expander keeps NO reference to a delivered member —
-    * so peak task memory is the CURRENT member plus whatever `f`
-    * retains (for the extraction flatMap that is the parsed metadata
-    * row: pixel bytes are dropped at parse). This is the holder of the
-    * oversized route's memory contract ("never the container, never
-    * the member sum"), pinned by StreamedExpansionSpec's
-    * weak-reference GC test. Member semantics (filter, order, error
-    * taxonomy) are [[expandStream]]'s — both delegate to the same
-    * per-member visitors, so the buffering and streaming forms cannot
-    * drift. Ignored extensions yield no members; loose `.dcm` never
-    * reaches this (the size router gives it the ranged header read). */
-  def mapMembersStream[A](key: String, in0: InputStream)(
-      f: (String, Array[Byte]) => A): Seq[A] = {
-    val ext = evalExt(key)
-    if (IgnoreExts.contains(ext)) { in0.close(); Nil }
-    else {
-      val out = Vector.newBuilder[A]
-      val g = (name: String, bytes: Array[Byte]) => { out += f(name, bytes); () }
-      ext match {
-        case ".zip" => visitZipStream(key, in0)(g)
-        case ".tar" | ".gz" | ".bz2" | ".xz" => visitTarStream(key, in0)(g)
-        case other => in0.close(); throw new UnsupportedExtensionException(other)
-      }
-      out.result()
-    }
-  }
 
   /** First `n` bytes without consuming them (mark/reset). */
   private def sniff(in: java.io.BufferedInputStream, n: Int): Array[Byte] = {
@@ -137,16 +115,7 @@ object Archives {
   private def keepMember(name: String, bytes: Array[Byte]): Boolean =
     !name.toUpperCase.contains("DICOMDIR") && DicomParser.isDicom(bytes)
 
-  private def expandZip(key: String, content: Array[Byte]): Entries =
-    expandZipStream(key, new ByteArrayInputStream(content))
-
-  private def expandZipStream(key: String, in0: InputStream): Entries = {
-    val out = Vector.newBuilder[(String, Array[Byte])]
-    visitZipStream(key, in0)((n, b) => out += n -> b)
-    Entries(out.result())
-  }
-
-  private def visitZipStream(key: String, in0: InputStream)(
+  private def visitZip(key: String, in0: InputStream)(
       f: (String, Array[Byte]) => Unit): Unit = {
     val in = new java.io.BufferedInputStream(in0)
     // sniff can throw on a broken storage stream: close + map to the
@@ -180,16 +149,7 @@ object Archives {
 
   /** tar / tar.gz / tar.bz2 / tar.xz — compression chosen by magic bytes
     * (tarfile.open('r') auto-detect semantics). */
-  private def expandTar(key: String, content: Array[Byte]): Entries =
-    expandTarStream(key, new ByteArrayInputStream(content))
-
-  private def expandTarStream(key: String, in0: InputStream): Entries = {
-    val out = Vector.newBuilder[(String, Array[Byte])]
-    visitTarStream(key, in0)((n, b) => out += n -> b)
-    Entries(out.result())
-  }
-
-  private def visitTarStream(key: String, in0: InputStream)(
+  private def visitTar(key: String, in0: InputStream)(
       f: (String, Array[Byte]) => Unit): Unit = {
     val raw = new java.io.BufferedInputStream(in0)
     // sniff AND the decompressor constructors eagerly read the stream
@@ -230,11 +190,15 @@ object Archives {
     } finally tin.close()
   }
 
-  private def readAll(in: InputStream): Array[Byte] = {
+  /** The stream's bytes, at most `cap` of them. */
+  private def readAll(in: InputStream, cap: Int = Int.MaxValue): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     val buf = new Array[Byte](65536)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+    var n = 0
+    while (n >= 0 && out.size < cap) {
+      n = in.read(buf, 0, math.min(buf.length, cap - out.size))
+      if (n > 0) out.write(buf, 0, n)
+    }
     out.toByteArray
   }
 }

@@ -3,7 +3,6 @@ package graft.sources
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -15,14 +14,17 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import graft.dicom.{Flatten, Tags, VrConvert}
-import graft.ingest.Archives
 import graft.pipeline.DicomPipeline
 
 /** DataSource V2: `spark.read.format("dicom").load(dir)`.
   *
   * The ergonomic face of the engine (SURVEY.md §7.3 "optional
-  * DataSource V2 FileFormat"): recursive listing (any-depth keys, same as
-  * the batch pipeline), schema inferred from a bounded file sample (or
+  * DataSource V2 FileFormat"): the batch pipeline's recursive,
+  * hidden-pruned listing (`_`/`.` paths are invisible, as in the packed
+  * scan) and its per-object reader
+  * ([[graft.pipeline.DicomPipeline.processObject]] over the stored
+  * object: 10 MB range for loose `.dcm`, archives streamed member by
+  * member), schema inferred from a bounded file sample (or
   * distributed over executors — never a full driver-side corpus parse),
   * size-packed input partitions, and REQUIRED-COLUMN PUSHDOWN: a
   * `SELECT modality FROM ...` only *converts* the requested tags (the
@@ -98,33 +100,6 @@ object DicomSourceUtil {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
-  /** All regular files under each path (RECURSIVE for a dir — the same
-    * any-depth key semantics as the batch pipeline's
-    * `recursiveFileLookup=true`; the reference processes whatever key an
-    * event names regardless of prefix depth), with sizes. Empty files are
-    * kept — they surface as skipped / failing objects exactly like the
-    * pipeline. */
-  def listFilesWithSize(paths: Seq[String], conf: Configuration): Seq[(String, Long)] =
-    paths.flatMap { path =>
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Nil
-      else if (fs.getFileStatus(p).isFile)
-        Seq(p.toString -> fs.getFileStatus(p).getLen)
-      else {
-        val it = fs.listFiles(p, true)
-        val out = Seq.newBuilder[(String, Long)]
-        while (it.hasNext) {
-          val s = it.next()
-          if (s.isFile) out += s.getPath.toString -> s.getLen
-        }
-        out.result()
-      }
-    }
-
-  def listFiles(paths: Seq[String], conf: Configuration): Seq[String] =
-    listFilesWithSize(paths, conf).map(_._1)
-
   /** Pack files into partitions by cumulative size (FilePartition-style
     * bin packing): one-task-per-file melts the scheduler at millions of
     * objects; one giant task starves parallelism. Files are sorted
@@ -146,40 +121,12 @@ object DicomSourceUtil {
     out.result()
   }
 
-  /** Read a file, optionally bounded to `cap` bytes (cap < 0 = whole
-    * file). The bounded form is the REAL ranged read of the reference's
-    * `Range: bytes=0-10000000` GET (`src/s3wrapper.py:53-63`) — for
-    * loose `.dcm` objects only the header region ever leaves storage. */
-  def readBytes(path: String, conf: Configuration, cap: Long = -1L): Array[Byte] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](1 << 16)
-      var remaining = if (cap < 0) Long.MaxValue else cap
-      var n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
-      while (n >= 0 && remaining > 0) {
-        out.write(buf, 0, n)
-        remaining -= n
-        n = if (remaining > 0)
-          in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
-        else -1
-      }
-      out.toByteArray
-    } finally in.close()
-  }
-
-  /** Byte cap for one object: loose `.dcm` routes read header-only. */
-  def capFor(path: String): Long =
-    if (Archives.evalExt(path) == ".dcm") Archives.DcmRangeBytes.toLong else -1L
-
   /** Rows of one source object (empty for ignored/failing objects).
     * `keep` = required-keyword set for pruned conversion (None = all). */
   def rowsOf(path: String, conf: Configuration, failOnError: Boolean,
              keep: Option[Set[String]] = None): Seq[Map[String, VrConvert.DicomValue]] =
     DicomPipeline.processObject("dicom-source", "local", path,
-      readBytes(path, conf, capFor(path)), keep) match {
+      DicomPipeline.fsOpener(path, conf), keep) match {
       case Right(rs) => rs.map(_.values)
       case Left(e) =>
         if (failOnError) throw new RuntimeException(s"${e.stage}: ${e.error}")
@@ -202,7 +149,8 @@ object DicomSourceUtil {
   def inferSchema(paths: Seq[String], conf: Configuration,
                   sampleFiles: Int = DefaultInferSampleFiles,
                   distributed: Boolean = false): StructType = {
-    val files = listFiles(paths, conf)
+    // the pipeline's own walk: the source reads exactly what the job reads
+    val files = paths.flatMap(DicomPipeline.walkFiles(conf, _)).map(_._1)
     // An explicit full-corpus request must not silently degrade to the
     // bounded sample: without an active session the distributed pass
     // cannot run, and a partial schema would look complete.
@@ -313,7 +261,8 @@ class DicomScan(required: StructType, paths: Seq[String],
   override def description(): String =
     s"DicomScan(path=${paths.mkString(",")}, columns=[${required.fieldNames.mkString(",")}])"
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = DicomSourceUtil.listFilesWithSize(paths, DicomSourceUtil.sessionConf())
+    val conf = DicomSourceUtil.sessionConf()
+    val files = paths.flatMap(DicomPipeline.walkFiles(conf, _))
     DicomSourceUtil.packPartitions(files, maxPartitionBytes)
       .map(DicomInputPartition.apply).toArray
   }

@@ -8,10 +8,10 @@ import graft.pipeline.DicomPipeline
   * is one Lambda invocation per S3 `ObjectCreated` event
   * (`src/app.py:97-108`) — exactly Structured Streaming's file-source
   * semantics. `readStream.format("binaryFile")` discovers new objects;
-  * `foreachBatch` runs the SAME extraction the batch job uses; the
-  * checkpointed source log gives exactly-once file processing — a
-  * deliberate improvement over the reference, which reprocesses
-  * re-uploaded objects (no idempotency check, SURVEY §2.5).
+  * `foreachBatch` runs the SAME extraction and write the batch job
+  * uses; the checkpointed source log gives exactly-once file
+  * processing — a deliberate improvement over the reference, which
+  * reprocesses re-uploaded objects (no idempotency check, SURVEY §2.5).
   */
 object DicomStream {
 
@@ -33,15 +33,8 @@ object DicomStream {
     var writer = bin.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val ex = DicomPipeline.extractFromBinary(batch, "local", "local")
-        val df = DicomPipeline.toDataFrame(batch.sparkSession, ex.rows)
-        if (df.columns.nonEmpty && !df.isEmpty)
-          df.write.mode("append")
-            .partitionBy(graft.dicom.Flatten.PartitionColSnake)
-            .option("compression", "snappy")
-            .parquet(outPath)
-        val errDf = batch.sparkSession.createDataFrame(ex.errors)
-        if (!errDf.isEmpty) errDf.write.mode("append").parquet(errorPath)
+        DicomPipeline.write(batch.sparkSession,
+          DicomPipeline.extractFromBinary(batch, "local", "local"), outPath, Some(errorPath))
         ()
       }
     if (availableNow) writer = writer.trigger(Trigger.AvailableNow())

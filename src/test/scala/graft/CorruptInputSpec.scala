@@ -10,7 +10,7 @@ import graft.pipeline.DicomPipeline
 class CorruptInputSpec extends AnyFunSuite {
 
   private def process(key: String, bytes: Array[Byte]) =
-    DicomPipeline.processObject("b", "r", key, bytes)
+    DicomPipeline.processObject("b", "r", key, () => new java.io.ByteArrayInputStream(bytes))
 
   test("truncated element (length beyond EOF) → parse error") {
     val good = DicomWriter.file(Seq(

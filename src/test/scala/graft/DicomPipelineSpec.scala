@@ -122,6 +122,29 @@ class DicomPipelineSpec extends AnyFunSuite {
     assert(q.recentProgress.count(_.numInputRows > 0) == 3)
   }
 
+  test("run and a streaming drain leave no persisted RDDs behind") {
+    val out = tmp()
+    val in = java.nio.file.Paths.get(out, "in")
+    java.nio.file.Files.createDirectories(in)
+    (0 until 2).foreach { i =>
+      java.nio.file.Files.write(in.resolve(s"obj-$i.dcm"), DicomWriter.file(Seq(
+        DicomWriter.strElement(0x0008, 0x0020, "DA", "20240301"),
+        DicomWriter.strElement(0x0008, 0x0060, "CS", "CT"))))
+    }
+    // compared with the set before: other suites share this SparkContext
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    DicomPipeline.run(spark, in.toString, s"$out/data", Some(s"$out/errors"))
+    assert(spark.read.parquet(s"$out/data").count() == 2)
+    assert((persisted -- before).isEmpty, "run left its intermediate persisted")
+    val q = graft.streaming.DicomStream.start(
+      spark, in.toString, s"$out/stream", s"$out/stream-errors", s"$out/ckpt",
+      maxFilesPerTrigger = Some(1))
+    q.awaitTermination()
+    assert(spark.read.parquet(s"$out/stream").count() == 2)
+    assert((persisted -- before).isEmpty, "micro-batches left their intermediates persisted")
+  }
+
   test("incompatible per-batch schemas FAIL the crawl (SURVEY §1.4 error semantics)") {
     val out = tmp()
     import spark.implicits._

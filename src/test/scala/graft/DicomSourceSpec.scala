@@ -67,6 +67,25 @@ class DicomSourceSpec extends AnyFunSuite {
     assert(packPartitions(Seq(("e1", 0L), ("e2", 0L)), 1L).flatten.length == 2)
   }
 
+  test("the source lists like the pipeline: hidden paths are invisible to every read") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-source-hidden")
+    try {
+      val dcm = DicomWriter.file(Seq(DicomWriter.strElement(0x0008, 0x0060, "CS", "CT")))
+      Files.write(dir.resolve("ok.dcm"), dcm)
+      Files.createDirectories(dir.resolve("_temporary"))
+      Files.write(dir.resolve("_temporary/t.dcm"), dcm)
+      Files.createDirectories(dir.resolve(".hidden"))
+      Files.write(dir.resolve(".hidden/h.dcm"), dcm)
+      // not DICOM: a strict read would abort on it if it were listed
+      Files.write(dir.resolve(".DS_Store"), "Bud1 desktop services".getBytes("UTF-8"))
+      val pipeline = graft.pipeline.DicomPipeline.extract(spark, dir.toString, "bkt", "reg")
+      val source = spark.read.format("dicom").load(dir.toString)
+      val strict = spark.read.format("dicom").option("failOnError", "true").load(dir.toString)
+      assert((pipeline.rows.count(), source.count(), strict.count()) == ((1L, 1L, 1L)))
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
   test("small read uses few partitions, not one per file") {
     assert(df.rdd.getNumPartitions <= 2) // 6 files, ~5 MB total, 128 MB cap
   }

@@ -28,19 +28,30 @@ class ExtractionScaleSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("listRoutes keeps the fork-free status walk") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/pipeline/DicomPipeline.scala")),
-      "UTF-8")
-    // walkFiles is the shared walk (listRoutes and manifestOf both ride it)
-    val walk = src.substring(src.indexOf("def walkFiles"),
-      src.indexOf("def maxInlineBytes"))
-      .linesIterator.map(_.replaceFirst("//.*$", "")) // the Scaladoc/comments
-      .mkString("\n")                                 // NAME the banned API
+    def source(file: String): String =
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"src/main/scala/graft/$file")), "UTF-8")
+        .linesIterator.map(_.replaceFirst("//.*$", "")) // the Scaladoc/comments
+        .mkString("\n")                                 // NAME the banned API
+    val banned = Seq("listFiles(", "listLocatedStatus", "LocatedFileStatus")
+    // walkFiles is the shared walk (listRoutes, manifestOf and the dicom
+    // source all ride it)
+    val pipeline = source("pipeline/DicomPipeline.scala")
+    val walk = pipeline.substring(pipeline.indexOf("def walkFiles"),
+      pipeline.indexOf("def maxInlineBytes"))
     assert(walk.contains("listStatusIterator"),
       "listRoutes no longer uses the plain status walk")
-    Seq("listFiles(", "listLocatedStatus", "LocatedFileStatus").foreach { bad =>
+    banned.foreach { bad =>
       assert(!walk.contains(bad),
         s"listRoutes reintroduced the forking located-status API: $bad")
+    }
+    // the format("dicom") source lists through walkFiles, never on its own
+    val dataSource = source("sources/DicomDataSource.scala")
+    assert(dataSource.contains("DicomPipeline.walkFiles"),
+      "the dicom source no longer lists through the pipeline's walk")
+    banned.foreach { bad =>
+      assert(!dataSource.contains(bad),
+        s"the dicom source reintroduced the forking located-status API: $bad")
     }
   }
 

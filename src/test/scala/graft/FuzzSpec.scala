@@ -17,6 +17,9 @@ class FuzzSpec extends AnyFunSuite {
     DicomWriter.strElement(0x0010, 0x0010, "PN", "A^B"),
     DicomWriter.usElement(0x0028, 0x0010, 979)))
 
+  private def process(key: String, bytes: Array[Byte]) =
+    DicomPipeline.processObject("b", "r", key, () => new java.io.ByteArrayInputStream(bytes))
+
   private val exts = Seq("f", "f.dcm", "f.zip", "f.tar", "f.gz", "f.bz2",
     "f.xz", "f.json", "f.weird")
 
@@ -25,7 +28,7 @@ class FuzzSpec extends AnyFunSuite {
       val bytes = new Array[Byte](rnd.nextInt(4000))
       rnd.nextBytes(bytes)
       val key = exts(i % exts.length)
-      val r = DicomPipeline.processObject("b", "r", key, bytes) // must not throw
+      val r = process(key, bytes) // must not throw
       assert(r.isLeft || r.isRight)
     }
   }
@@ -38,14 +41,14 @@ class FuzzSpec extends AnyFunSuite {
         val pos = rnd.nextInt(mutated.length)
         mutated(pos) = (mutated(pos) ^ (1 << rnd.nextInt(8))).toByte
       }
-      val r = DicomPipeline.processObject("b", "r", "scan", mutated)
+      val r = process("scan", mutated)
       assert(r.isLeft || r.isRight)
     }
   }
 
   test("truncations at every prefix never escape processObject") {
     (0 until valid.length by 7).foreach { n =>
-      val r = DicomPipeline.processObject("b", "r", "scan", valid.take(n))
+      val r = process("scan", valid.take(n))
       assert(r.isLeft || r.isRight)
     }
   }

@@ -95,21 +95,50 @@ class SizeRouterSpec extends AnyFunSuite {
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 
+  /** A zip broken twice: a good member, then a member cut off mid-element
+    * (DICM magic intact, so it is kept and fails at parse), then a third
+    * member whose compressed data — and the container with it — ends
+    * halfway. */
+  private def doublyCorruptZip(): Array[Byte] = {
+    val good = DicomWriter.file(Seq(DicomWriter.strElement(0x0008, 0x0060, "CS", "CT")))
+    val px = Array.tabulate(16 * 1024)(j => ((j * 7919) % 251).toByte)
+    val third = DicomWriter.file(Seq(
+      DicomWriter.strElement(0x0008, 0x0060, "CS", "MR"),
+      DicomWriter.element(0x7fe0, 0x0010, "OB", px)))
+    val bo = new java.io.ByteArrayOutputStream()
+    val zo = new java.util.zip.ZipOutputStream(bo)
+    Seq("good.dcm" -> good, "cut.dcm" -> good.dropRight(4)).foreach { case (n, b) =>
+      zo.putNextEntry(new java.util.zip.ZipEntry(n)); zo.write(b); zo.closeEntry()
+    }
+    zo.flush()
+    val thirdStart = bo.size()
+    zo.putNextEntry(new java.util.zip.ZipEntry("third.dcm")); zo.write(third); zo.closeEntry()
+    zo.flush()
+    val thirdEnd = bo.size()
+    zo.close()
+    bo.toByteArray.take((thirdStart + thirdEnd) / 2)
+  }
+
   test("streamed route taxonomy: corrupt oversized archive errors as expand") {
     val dir = java.nio.file.Files.createTempDirectory("graft-router-bad")
     try {
-      java.nio.file.Files.write(dir.resolve("bad.zip"),
-        Array.fill[Byte](64)('x'.toByte))
-      val res = DicomPipeline.processStreamedObject(
-        "bkt", "reg", dir.resolve("bad.zip").toUri.toString,
-        spark.sparkContext.hadoopConfiguration)
-      assert(res.isLeft)
-      assert(res.left.toOption.get.stage == "expand")
-      // identical verdict to the packed route on the same bytes
-      val packedRes = DicomPipeline.processObject(
-        "bkt", "reg", dir.resolve("bad.zip").toUri.toString,
-        Array.fill[Byte](64)('x'.toByte))
-      assert(packedRes.left.toOption.map(_.stage) == res.left.toOption.map(_.stage))
+      // bad.zip is corrupt from its first bytes: expand on both routes.
+      // broken-twice.zip fails at its second member, before the container
+      // break: both routes must stop at that first failure and agree.
+      java.nio.file.Files.write(dir.resolve("bad.zip"), Array.fill[Byte](64)('x'.toByte))
+      java.nio.file.Files.write(dir.resolve("broken-twice.zip"), doublyCorruptZip())
+      def stages(maxInline: Option[Long]): Map[String, String] = {
+        maxInline.foreach(v => spark.conf.set("spark.graft.route.maxInlineBytes", v.toString))
+        try {
+          val ex = DicomPipeline.extract(spark, dir.toString, "bkt", "reg")
+          assert(ex.rows.isEmpty(), "a failing object must contribute no rows")
+          ex.errors.collect().map(e => e.source_s3_key.split('/').last -> e.stage).toMap
+        } finally spark.conf.unset("spark.graft.route.maxInlineBytes")
+      }
+      val packed = stages(None)
+      val streamed = stages(Some(1L))
+      assert(streamed == packed, "the two routes disagree on the error stage")
+      assert(packed == Map("bad.zip" -> "expand", "broken-twice.zip" -> "parse"))
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 
@@ -125,17 +154,27 @@ class SizeRouterSpec extends AnyFunSuite {
         DicomWriter.usElement(0x0028, 0x0011, 8),
         DicomWriter.element(0x7fe0, 0x0010, "OB", new Array[Byte](12 * 1024 * 1024))))
       java.nio.file.Files.write(dir.resolve("big.dcm"), big)
-      val res = DicomPipeline.processStreamedObject(
-        "bkt", "reg", dir.resolve("big.dcm").toUri.toString,
-        spark.sparkContext.hadoopConfiguration)
+      val key = dir.resolve("big.dcm").toUri.toString
+      val stored = DicomPipeline.fsOpener(key, spark.sparkContext.hadoopConfiguration)
+      var bytesRead = 0L
+      val counted = () => new java.io.FilterInputStream(stored()) {
+        override def read(b: Array[Byte], off: Int, len: Int): Int = {
+          val n = super.read(b, off, len)
+          if (n > 0) bytesRead += n
+          n
+        }
+      }
+      val res = DicomPipeline.processObject("bkt", "reg", key, counted)
       assert(res.isRight, s"streamed big .dcm failed: $res")
+      assert(bytesRead == graft.ingest.Archives.DcmRangeBytes,
+        s"read $bytesRead bytes of a ${big.length}-byte object")
       val rows = res.toOption.get
       assert(rows.size == 1)
       assert(rows.head.values.get("Modality").map(_.toString).exists(_.contains("CT")),
         s"keys: ${rows.head.values.keys.toSeq.sorted}")
       // route invariance for the ranged read too
       val full = DicomPipeline.processObject(
-        "bkt", "reg", dir.resolve("big.dcm").toUri.toString, big)
+        "bkt", "reg", key, () => new java.io.ByteArrayInputStream(big))
       assert(full.toOption.get.map(_.values.toSeq.sortBy(_._1).mkString("|")) ==
         rows.map(_.values.toSeq.sortBy(_._1).mkString("|")))
     } finally graft.util.Fs.deleteRecursively(dir)

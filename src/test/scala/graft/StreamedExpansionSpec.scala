@@ -3,14 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.Archives
 
-/** The oversized route's memory contract: archive members stream
-  * through the extraction fold ONE AT A TIME, and the expander retains
-  * no reference to a delivered member — peak task memory is the
-  * current member plus what the fold keeps, never the container and
-  * never the member-byte sum. Pinned here with weak references (a
-  * buffering implementation keeps every member strongly reachable
-  * until the archive ends, so old refs could not clear mid-fold), plus
-  * member-semantics parity between the streaming and buffering forms. */
+/** The per-object reader's memory contract, on every route: archive
+  * members stream through the extraction fold ONE AT A TIME, and the
+  * expander retains no reference to a delivered member — peak task
+  * memory is the current member plus what the fold keeps, never the
+  * member-byte sum. Pinned here with weak references (a buffering
+  * implementation keeps every member strongly reachable until the
+  * archive ends, so old refs could not clear mid-fold), plus
+  * member-semantics parity between the visitor and the collecting
+  * `expand`. */
 class StreamedExpansionSpec extends AnyFunSuite {
 
   /** A valid ~`size`-byte DICOM member (DICM magic so keepMember
@@ -52,14 +53,15 @@ class StreamedExpansionSpec extends AnyFunSuite {
   test("streaming fold ≡ buffering expansion, member for member (zip and tar.gz)") {
     val members = (0 until 7).map(i => (f"m-$i.dcm", member(i, 4096)))
     for ((key, bytes) <- Seq("a.zip" -> zipOf(members), "a.tar.gz" -> tarGzOf(members))) {
-      val buffered = Archives.expandStream(key,
-        new java.io.ByteArrayInputStream(bytes)) match {
+      val buffered = Archives.expand(key, bytes) match {
         case Archives.Entries(es) => es.map { case (n, b) => (n, b.toSeq) }
         case other => fail(s"unexpected expansion $other")
       }
-      val streamed = Archives.mapMembersStream(key,
-        new java.io.ByteArrayInputStream(bytes)) { (n, b) => (n, b.toSeq) }
-      assert(streamed == buffered, s"$key member drift between routes")
+      val streamed = Vector.newBuilder[(String, Seq[Byte])]
+      Archives.members(key, () => new java.io.ByteArrayInputStream(bytes)) { (n, b) =>
+        streamed += n -> b.toSeq
+      }
+      assert(streamed.result() == buffered, s"$key member drift between routes")
     }
   }
 
@@ -73,8 +75,11 @@ class StreamedExpansionSpec extends AnyFunSuite {
     val archive = tarGzOf(members)
     val refs = scala.collection.mutable.ArrayBuffer[java.lang.ref.WeakReference[Array[Byte]]]()
     var minAliveObserved = Int.MaxValue
-    val names = Archives.mapMembersStream("big.tar.gz",
-      new java.io.ByteArrayInputStream(archive)) { (name, bytes) =>
+    val names = Vector.newBuilder[String]
+    // fed from memory, as the packed scan feeds it: the contract holds
+    // for every route, not only the oversized one
+    val archiveIn = () => new java.io.ByteArrayInputStream(archive)
+    Archives.members("big.tar.gz", archiveIn) { (name, bytes) =>
       refs += new java.lang.ref.WeakReference(bytes)
       if (refs.length % 8 == 0) {
         // try to clear everything but the member in hand; retry a few
@@ -84,9 +89,9 @@ class StreamedExpansionSpec extends AnyFunSuite {
         while (alive > 2 && attempts < 5) { System.gc(); Thread.sleep(20); attempts += 1 }
         minAliveObserved = math.min(minAliveObserved, alive)
       }
-      name
+      names += name
     }
-    assert(names.size == n)
+    assert(names.result().size == n)
     assert(minAliveObserved <= 2,
       s"delivered members stayed reachable mid-fold ($minAliveObserved alive of ${refs.length}) " +
         "— the expander is accumulating the archive")
