@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: prints the formatted physical plan of selected
   * queries so pushdown / broadcast / codegen properties can be audited.
   * Usage: runMain graft.Explain [sfDir] [query ...]  (default: key set) */
@@ -11,14 +9,7 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q1_agg", "q2_join_agg", "q3_topk", "dedup_embed_cosine",
                "sim_topk_brute", "dedup_minhash_lsh")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.LocalSession("4", "ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -791,9 +791,7 @@ object Dedup {
       .withColumn("component", $"node").persist()
     var changed = 1L
     var it = 0
-    val dbg = s.conf.get("spark.graft.cc.debug", "false").toBoolean
     while (changed > 0) {
-      val tRound = System.nanoTime()
       if (it >= maxIters)
         throw new IllegalStateException(
           s"componentsOf did not converge in $maxIters rounds — refusing to " +
@@ -844,7 +842,6 @@ object Dedup {
         merged.unpersist(false)
         labels = jumped
       }
-      if (dbg) println(f"[cc] round $it%2d changed=$changed%-8d ${(System.nanoTime() - tRound) / 1e9}%.3f s")
       it += 1
     }
     tracked(labels) // already persisted; registers it for release

@@ -15,29 +15,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Catalog {
 
   /** Register the partitioned output as an external table and discover
-    * its partitions (`MSCK REPAIR TABLE` is native Spark SQL). */
+    * its partitions (`MSCK REPAIR TABLE` is native Spark SQL). The schema
+    * comes from one sampled footer; [[crawl]] merges them all. */
   def registerTable(spark: SparkSession, location: String,
-                    db: String = "dicom_db", table: String = "dicom_metadata"): Unit = {
+                    db: String = "dicom_db", table: String = "dicom_metadata"): Unit =
+    register(spark, location, db, table, mergeSchema = false)
+
+  /** Crawler analog: merge all parquet footers under `location`
+    * (CombineCompatibleSchemas) and re-register the table with the
+    * evolved schema. Returns the registered table. */
+  def crawl(spark: SparkSession, location: String,
+            db: String = "dicom_db", table: String = "dicom_metadata"): DataFrame = {
+    register(spark, location, db, table, mergeSchema = true)
+    spark.table(s"$db.$table")
+  }
+
+  private def register(spark: SparkSession, location: String,
+                       db: String, table: String, mergeSchema: Boolean): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     spark.sql(s"DROP TABLE IF EXISTS $db.$table")
     // Spark 4 requires an explicit column list to state PARTITIONED BY;
     // omitting the clause lets partitioning be inferred from the Hive
     // layout (study_date=... directories).
+    val options = if (mergeSchema) "OPTIONS (mergeSchema 'true') " else ""
     spark.sql(
       s"""CREATE TABLE $db.$table
          |USING PARQUET
-         |LOCATION '$location'""".stripMargin)
+         |${options}LOCATION '$location'""".stripMargin)
     spark.sql(s"MSCK REPAIR TABLE $db.$table")
-  }
-
-  /** Crawler analog: merge all parquet footers under `location`
-    * (CombineCompatibleSchemas) and re-register the table with the
-    * evolved schema. Returns the merged-schema DataFrame. */
-  def crawl(spark: SparkSession, location: String,
-            db: String = "dicom_db", table: String = "dicom_metadata"): DataFrame = {
-    val merged = spark.read.option("mergeSchema", "true").parquet(location)
-    registerTable(spark, location, db, table)
-    merged
   }
 
   /** Small-file compaction for one Hive partition directory — the

@@ -336,47 +336,50 @@ object DicomPipeline {
     case VrConvert.DNull         => null
   }
 
+  /** The columns of a set of observed keywords, in keyword order:
+    * snake_case-renamed (wrangler `sanitize_columns=True` analog) and
+    * typed from the static dictionary. The ETL table and the
+    * `format("dicom")` source both build their schema here, so they
+    * agree on column order. */
+  def schemaFor(keywords: Seq[String]): StructType =
+    StructType(keywords.sorted.map(kw =>
+      StructField(Tags.snakeCase(kw), sparkTypeFor(kw), nullable = true)))
+
   /** Finalize the batch DataFrame: union of observed NON-NULL keys →
     * columns (this IS the reference's per-batch drop-all-null,
     * `src/app.py:41` — a keyword only becomes a column if some row holds
-    * a value), typed from the static dictionary, snake_case-renamed
-    * (wrangler `sanitize_columns=True` analog). */
+    * a value), laid out by [[schemaFor]]. */
   def toDataFrame(spark: SparkSession, rows: RDD[ImageRow]): DataFrame = {
-    val observed: Array[String] = rows
+    val keywords = rows
       .flatMap(_.values.collect { case (k, v) if v != VrConvert.DNull => k })
-      .distinct().collect()
-    val keywords = observed.sorted
-    val schema = StructType(keywords.map(kw =>
-      StructField(Tags.snakeCase(kw), sparkTypeFor(kw), nullable = true)))
-    val kwSeq = keywords.toIndexedSeq // avoid per-row Array→Seq copying
+      .distinct().collect().sorted.toIndexedSeq
     val rowRdd = rows.map { ir =>
-      Row.fromSeq(kwSeq.map(kw => ir.values.get(kw).map(toExternal).orNull))
+      Row.fromSeq(keywords.map(kw => ir.values.get(kw).map(toExternal).orNull))
     }
-    spark.createDataFrame(rowRdd, schema)
+    spark.createDataFrame(rowRdd, schemaFor(keywords))
   }
 
   /** Full job: extract → finalize → partitioned snappy write (+ errors
     * parquet). Returns (data, errors) as written. */
   def run(spark: SparkSession, inputPath: String, outPath: String,
           errorPath: Option[String] = None,
-          bucket: String = "local", region: String = "local",
-          maxRecordsPerFile: Long = 0L): (DataFrame, DataFrame) =
-    write(spark, extract(spark, inputPath, bucket, region), outPath, errorPath,
-      maxRecordsPerFile)
+          bucket: String = "local", region: String = "local"): (DataFrame, DataFrame) =
+    write(spark, extract(spark, inputPath, bucket, region), outPath, errorPath)
 
   /** Finalize one extraction, append it to `outPath` partitioned by
     * study date (snappy), append its errors to `errorPath`, then release
     * the persisted intermediate — shared by [[run]] and each streaming
     * micro-batch. Returns (data, errors) as written; both are lazy, so
-    * using them afterwards re-extracts. */
+    * using them afterwards re-extracts.
+    *
+    * The data write needs no emptiness check: every row carries the four
+    * lineage strings and a study date, so a batch has columns exactly
+    * when it has rows. */
   def write(spark: SparkSession, ex: Extracted, outPath: String,
-            errorPath: Option[String], maxRecordsPerFile: Long = 0L): (DataFrame, DataFrame) =
+            errorPath: Option[String]): (DataFrame, DataFrame) =
     try {
       val df = toDataFrame(spark, ex.rows)
-      if (df.columns.nonEmpty && !df.isEmpty) {
-        // maxRecordsPerFile bounds output-file size (the reference's known
-        // small-files weakness inverted: one file per invocation there; here
-        // the writer packs rows per partition and splits only past the cap).
+      if (df.columns.nonEmpty) {
         // REBALANCE on the partition column first: without it every scan
         // task writes one file per date it happens to hold — the 9.5k-object
         // rehearsal produced 5,251 files for 9,500 rows (measured); with it,
@@ -395,7 +398,6 @@ object DicomPipeline {
         arranged.write.mode("append")
           .partitionBy(Flatten.PartitionColSnake)
           .option("compression", "snappy")
-          .option("maxRecordsPerFile", if (maxRecordsPerFile > 0) maxRecordsPerFile.toString else "0")
           .parquet(outPath)
       }
       val errDf = spark.createDataFrame(ex.errors)

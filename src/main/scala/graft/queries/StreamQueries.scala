@@ -1021,9 +1021,6 @@ object StreamQueries {
     val q = ckDir.fold(q0)(d => q0.option("checkpointLocation", d.toString)).start()
     try q.awaitTermination()
     finally ckDir.foreach(graft.util.Fs.deleteRecursively)
-    if (s.conf.get("spark.graft.debug.streamProgress", "false").toBoolean)
-      q.recentProgress.foreach(p => System.err.println(
-        s"[ttl-debug] batch ${p.batchId} rows=${p.numInputRows} durationMs=${p.durationMs}"))
     lastNearDupState = Option(q.lastProgress)
       .flatMap(p => p.stateOperators.headOption)
       .map(op => (op.numRowsTotal, op.memoryUsedBytes))

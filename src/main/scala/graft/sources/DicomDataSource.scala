@@ -136,8 +136,8 @@ object DicomSourceUtil {
   /** Default file-sample size for schema inference. */
   val DefaultInferSampleFiles = 64
 
-  /** Schema inference: union of observed keywords, typed by the static
-    * dictionary, snake_cased, sorted.
+  /** Schema inference: union of observed keywords, laid out exactly as
+    * the ETL table lays them out ([[DicomPipeline.schemaFor]]).
     *
     * Scale design: the driver NEVER parses the whole corpus. The default
     * infers from a bounded sample (`inferSampleFiles`, first N by path
@@ -177,7 +177,7 @@ object DicomSourceUtil {
         // the driver bounded even if nothing parses.
         val want = math.max(1, sampleFiles)
         val examineCap = math.max(want * 16, 512)
-        val keySet = scala.collection.mutable.SortedSet.empty[String]
+        val keySet = scala.collection.mutable.Set.empty[String]
         var productive = 0
         var examined = 0
         val it = files.sorted.iterator
@@ -191,11 +191,7 @@ object DicomSourceUtil {
         }
         keySet.toSeq
       }
-    StructType(keys
-      .map(kw => kw -> Tags.snakeCase(kw)).sortBy(_._2)
-      .map { case (kw, col) =>
-        StructField(col, DicomPipeline.sparkTypeFor(kw), nullable = true)
-      })
+    DicomPipeline.schemaFor(keys)
   }
 
   /** snake_case column name → original keyword (inverse of the sanitize

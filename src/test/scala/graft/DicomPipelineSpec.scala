@@ -104,6 +104,49 @@ class DicomPipelineSpec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) FROM dicom_db.dicom_merged").head.getLong(0) == 3)
   }
 
+  test("crawl registers the merged schema: a column only the later-dated batch has is in the table") {
+    val out = tmp()
+    def batch(name: String, elements: Array[Byte]*): String = {
+      val dir = java.nio.file.Paths.get(out, name)
+      java.nio.file.Files.createDirectories(dir)
+      java.nio.file.Files.write(dir.resolve(s"$name.dcm"), DicomWriter.file(elements))
+      dir.toString
+    }
+    // the narrower batch lands on the earlier date, so a one-footer
+    // sample of the table root sees the schema without patient_sex
+    val early = batch("early",
+      DicomWriter.strElement(0x0008, 0x0020, "DA", "20240101"),
+      DicomWriter.strElement(0x0008, 0x0060, "CS", "CT"))
+    val late = batch("late",
+      DicomWriter.strElement(0x0008, 0x0020, "DA", "20240301"),
+      DicomWriter.strElement(0x0008, 0x0060, "CS", "MR"),
+      DicomWriter.strElement(0x0010, 0x0040, "CS", "F"))
+    DicomPipeline.run(spark, early, s"$out/data")
+    DicomPipeline.run(spark, late, s"$out/data")
+    val crawled = Catalog.crawl(spark, s"$out/data", table = "dicom_crawled")
+    assert(crawled.columns.contains("patient_sex"))
+    assert(spark.table("dicom_db.dicom_crawled").columns.contains("patient_sex"),
+      "the registered table lost the column only the later batch carries")
+    val sexes = spark.sql(
+      "SELECT study_date, patient_sex FROM dicom_db.dicom_crawled ORDER BY study_date")
+      .collect().map(r => (r.getDate(0).toString, r.getString(1))).toSeq
+    assert(sexes == Seq(("2024-01-01", null), ("2024-03-01", "F")))
+  }
+
+  test("a batch whose every object fails or is ignored writes no data and one error row") {
+    val out = tmp()
+    val in = java.nio.file.Paths.get(out, "in")
+    java.nio.file.Files.createDirectories(in)
+    java.nio.file.Files.write(in.resolve("bad.dcm"), "not a DICOM object".getBytes("UTF-8"))
+    java.nio.file.Files.write(in.resolve("sidecar.json"), "{}".getBytes("UTF-8"))
+    val (data, _) = DicomPipeline.run(spark, in.toString, s"$out/data", Some(s"$out/errors"))
+    assert(data.columns.isEmpty)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "data")))
+    val errors = spark.read.parquet(s"$out/errors").collect()
+    assert(errors.map(r => (r.getAs[String]("source_s3_key").endsWith("bad.dcm"),
+      r.getAs[String]("stage"))).toSeq == Seq((true, "parse")))
+  }
+
   test("per-object trigger isolation (maxFilesPerTrigger=1, S1 parity)") {
     val out = tmp()
     val in = s"$out/in"

@@ -71,7 +71,12 @@ class DicomSourceSpec extends AnyFunSuite {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft-source-hidden")
     try {
-      val dcm = DicomWriter.file(Seq(DicomWriter.strElement(0x0008, 0x0060, "CS", "CT")))
+      // SOPClassUID and ScanOptions sort one way as keywords and the
+      // other as snake_case names: the column-order probe
+      val dcm = DicomWriter.file(Seq(
+        DicomWriter.strElement(0x0008, 0x0016, "UI", "1.2.840.10008.5.1.4.1.1.2"),
+        DicomWriter.strElement(0x0008, 0x0060, "CS", "CT"),
+        DicomWriter.strElement(0x0018, 0x0022, "CS", "HELICAL_CT")))
       Files.write(dir.resolve("ok.dcm"), dcm)
       Files.createDirectories(dir.resolve("_temporary"))
       Files.write(dir.resolve("_temporary/t.dcm"), dcm)
@@ -83,6 +88,9 @@ class DicomSourceSpec extends AnyFunSuite {
       val source = spark.read.format("dicom").load(dir.toString)
       val strict = spark.read.format("dicom").option("failOnError", "true").load(dir.toString)
       assert((pipeline.rows.count(), source.count(), strict.count()) == ((1L, 1L, 1L)))
+      assert(source.columns.toSeq ==
+        graft.pipeline.DicomPipeline.toDataFrame(spark, pipeline.rows).columns.toSeq,
+        "format(\"dicom\") and the ETL table disagree on column order")
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** EXTRACTION DECADE — the extraction tier at the sf10 convention
   * (VERDICT r12 #5): ~10× ExtractionRehearsal's corpus through the
   * MANIFEST entry point (the 10M+-object route — the driver never
@@ -79,12 +77,7 @@ object ExtractionDecade {
     val nZips = sys.env.getOrElse("SPARK_GRAFT_DECADE_ZIPS", "5000").toInt
     val perZip = 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(cpus)
     import spark.implicits._
 
     // Wall-clock/heap gates are DEFERRED (ADVICE r13): every recorded

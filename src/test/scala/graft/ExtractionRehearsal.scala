@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Extraction-path scale rehearsal: push ~9.5k synthetic DICOM objects
   * (loose files + zip archives) through the REAL pipeline entry point
@@ -43,13 +42,7 @@ object ExtractionRehearsal {
     val nLoose = sys.env.getOrElse("SPARK_GRAFT_REH_LOOSE", "8000").toInt
     val nZips = sys.env.getOrElse("SPARK_GRAFT_REH_ZIPS", "500").toInt
     val perZip = 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     val scratch = graft.util.Fs.scratchDir(spark, "extraction_rehearsal")
     val input = scratch.resolve("input")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off stage profile for dedup_jaccard_prefix
@@ -10,12 +9,7 @@ import org.apache.spark.sql.functions._
 object JaccardProfile {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(cpus)
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     graft.functions.VectorExpressions.register(spark)
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off stage profile for dedup_ngram_jaccard at the rehearsal's sf1
@@ -11,12 +10,7 @@ import org.apache.spark.sql.functions._
 object NgramProfile {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(cpus)
     val dir = args.headOption.getOrElse("target/sf1")
     spark.conf.set("spark.graft.dedup.ngram.maxDf", "200")
     def time[T](label: String)(f: => T): T = {

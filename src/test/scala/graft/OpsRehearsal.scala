@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Rehearsal.fmt
 
 /** Growth-law rehearsal for the round-7 graph/string operators
   * (`graph_lpa`, `graph_kcore`, `dedup_edit_join`): 10× the bench corpus
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    rehearsal grows the output superlinearly and the wall must track
   *    pairs, not |names|².
   *
-  * Run: SPARK_GRAFT_CPUS=32 sbt "runMain graft.OpsRehearsal"
+  * Run: SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.OpsRehearsal"
   * Output: one JSON line + target/ops_rehearsal.json
   */
 object OpsRehearsal {
@@ -30,26 +31,12 @@ object OpsRehearsal {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(cpus)
+    val timeOne = Rehearsal.timeOne(spark) _
 
     val x10 = graft.util.Fs.scratchDir(spark, "opsx10").toString
     ensureX10(spark, x10)
 
-    def fmt(d: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    def timeOne(name: String, dir: String): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, dir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      graft.operators.Dedup.unpersistIntermediates(spark)
-      spark.catalog.clearCache()
-      (sec, n)
-    }
     timeOne("graph_kcore", "/root/testdata/sf0.01") // JIT warm-up
 
     val rows = Seq("graph_lpa", "graph_kcore", "dedup_edit_join").map { name =>

@@ -1,16 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch plan dumper for local iteration: prints the executed plan of
   * the queries named on the command line (sf0.001). Not a test. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.LocalSession("4", "ERROR")
     args.foreach { name =>
       val p = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
         .queryExecution.executedPlan.toString

@@ -1,0 +1,53 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-shape guard for what `src/main` ships: the engine plus the
+  * three contract mains. Measurement harnesses live in test scope and
+  * run as `sbt "Test/runMain graft.<Name>"`; every main builds its
+  * session through [[graft.util.LocalSession]]; no `println` debug
+  * switch comes back. A source guard, because the defect IS the shape. */
+class ProductionJarSpec extends AnyFunSuite {
+
+  /** (path relative to `root`, text) of every Scala file under `root`. */
+  private def sources(root: String): Seq[(String, String)] = {
+    val base = Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map((p: Path) => (base.relativize(p).toString, new String(Files.readAllBytes(p), "UTF-8")))
+    finally walk.close()
+  }
+
+  /** The text without comment lines: Scaladoc may NAME what the code
+    * must not contain. */
+  private def code(text: String): String =
+    text.linesIterator.map(_.replaceFirst("//.*$", ""))
+      .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/*") }
+      .mkString("\n")
+
+  private val definesMain = """def\s+main\s*\(""".r
+
+  test("src/main is the engine plus Bench, Verify and Explain; one session factory; no debug switches") {
+    val main = sources("src/main/scala/graft").map { case (f, text) => (f, code(text)) }
+    val mains = main.collect { case (f, c) if definesMain.findFirstIn(c).isDefined => f }
+    assert(mains.sorted == Seq("Bench.scala", "Explain.scala", "Verify.scala"),
+      "only the contract mains may ship; harnesses belong in src/test")
+
+    val builders = main.collect { case (f, c) if c.contains("SparkSession.builder") => f }
+    assert(builders == Seq("util/LocalSession.scala"),
+      "build sessions through graft.util.LocalSession")
+    val testMains = sources("src/test/scala/graft").map { case (f, text) => (f, code(text)) }
+      .collect { case (f, c) if definesMain.findFirstIn(c).isDefined && c.contains("SparkSession.builder") => f }
+    assert(testMains.isEmpty, s"test-scope mains with their own session builder: $testMains")
+
+    // split so this file does not match itself
+    val switches = Seq("spark.graft." + "cc.debug", "spark.graft." + "debug.streamProgress")
+    val all = sources("src")
+    switches.foreach { sw =>
+      val hits = all.collect { case (f, text) if text.contains(sw) => f }
+      assert(hits.isEmpty, s"debug switch $sw is back in $hits")
+    }
+  }
+}

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Recall-vs-cost curve for the ANN tier — the dial sheet a user reads
   * before picking an operating point ("what does 0.9 recall cost?").
   *
@@ -17,6 +15,7 @@ import org.apache.spark.sql.SparkSession
   * amortizes through the persisted PQ index and the query-side cost is
   * the probed-list scan ∝ nprobe plus the rerank-sized exact join).
   *
+  * Run: sbt "Test/runMain graft.RecallCurve"
   * Output: one JSON line + target/recall_curve.json; the round commits
   * it as RECALL_CURVE_r{N}.json next to RECALL_BASELINE.json, and
   * SimilarityRecallSpec gates the chosen high-recall default
@@ -26,13 +25,7 @@ object RecallCurve {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val passes = sys.env.getOrElse("SPARK_GRAFT_RECALL_RUNS", "2").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(cpus)
     import graft.operators.Similarity
 
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =

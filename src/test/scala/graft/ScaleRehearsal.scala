@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Rehearsal.fmt
 
 /** Scale rehearsal (one notch up): generates a 10× copy of the
   * documents/embeddings tables (sf1-equivalent) under `target/sf1`,
@@ -10,15 +11,12 @@ import org.apache.spark.sql.functions._
   * the evidence that candidate growth tracks Σn_b² (and that the
   * geometry dials control it) rather than the all-pairs n².
   *
-  * Generation is fully deterministic (hash-derived decisions only, no
-  * RNG): each source row is replicated 10×; replicas keep ~30% of texts
-  * byte-identical (exact-dup mass) and append a replica token to the
-  * rest (near-dup mass); embedding replicas add ±0.025/dim hash noise
-  * and renormalize (cos ≈ 0.98 near-dups, preserving cluster
-  * structure). The output lives under target/ — /root/testdata is
-  * read-only and stays untouched.
+  * Generation is fully deterministic: [[Rehearsal.replicate]] makes the
+  * documents and embeddings, and events, lineitem and orders get id-strided
+  * replicas. The output lives under the scratch dir (default target/) —
+  * the source corpus is read-only and stays untouched.
   *
-  * Run: SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleRehearsal"
+  * Run: SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.ScaleRehearsal"
   * Output: one JSON line + target/scale_rehearsal.json
   */
 object ScaleRehearsal {
@@ -75,24 +73,10 @@ object ScaleRehearsal {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(cpus)
+    val timeOne = Rehearsal.timeOne(spark) _
     ensureSf1(spark)
 
-    def fmt(d: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    def timeOne(name: String, dir: String): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, dir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      (sec, n)
-    }
     // warm-up pass at the small scale so JIT/codegen cost doesn't land on
     // the first measured family member
     timeOne("dedup_exact", "/root/testdata/sf0.01")
@@ -607,40 +591,8 @@ object ScaleRehearsal {
     // replicas and must regenerate
     val done = java.nio.file.Paths.get(s"$Sf1/$Sf1Marker")
     if (java.nio.file.Files.exists(done)) return
+    Rehearsal.replicate(s, Sf01, Sf1, replicas = 10, files = 16)
     val reps = s.range(10).withColumnRenamed("id", "replica")
-
-    val docs = s.read.parquet(s"$Sf01/documents.parquet")
-    // replica stride = max(id)+1, NOT count(): a sparse or offset id
-    // space would make count-based strides collide across replicas and
-    // silently corrupt the generated corpus with duplicate ids
-    val nDocs = docs.agg(max($"doc_id")).head().getLong(0) + 1L
-    docs.crossJoin(broadcast(reps))
-      .withColumn("keep",
-        $"replica" === 0 ||
-          pmod(hash(concat($"doc_id", lit(":"), $"replica")), lit(10)) < 3)
-      .withColumn("text",
-        when($"keep", $"text")
-          .otherwise(concat($"text", lit(" rep"), $"replica")))
-      .withColumn("doc_id", $"doc_id" + $"replica" * nDocs)
-      .withColumn("n_chars", length($"text").cast("long"))
-      .select("doc_id", "text", "lang", "source", "n_chars")
-      .repartition(16)
-      .write.mode("overwrite").parquet(s"$Sf1/documents.parquet")
-
-    val emb = s.read.parquet(s"$Sf01/embeddings.parquet")
-    val nVecs = emb.agg(max($"vec_id")).head().getLong(0) + 1L
-    val noisy = emb.crossJoin(broadcast(reps))
-      .withColumn("vec_id", $"vec_id" + $"replica" * nVecs)
-      .withColumn("embedding",
-        when($"replica" === 0, $"embedding").otherwise(
-          transform($"embedding", (v, i) =>
-            v + (pmod(hash(concat($"vec_id", lit(":"), i)), lit(1001)) - 500)
-              .cast("float") / 20000f)))
-      .withColumn("nrm",
-        sqrt(aggregate($"embedding", lit(0.0d), (a, v) => a + v.cast("double") * v)))
-      .withColumn("embedding", transform($"embedding", v => (v / $"nrm").cast("float")))
-      .select("vec_id", "embedding", "label")
-    noisy.repartition(16).write.mode("overwrite").parquet(s"$Sf1/embeddings.parquet")
 
     // events ×10: disjoint user populations per replica (id-strided),
     // same time span — the growth shape of a service gaining users, so

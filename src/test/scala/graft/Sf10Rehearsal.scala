@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Rehearsal.fmt
 
 /** One decade past [[ScaleRehearsal]]: an sf10 corpus (100× the bench
   * scale — 500k documents, 200k embeddings) for the BUCKETED dedup
@@ -14,12 +15,10 @@ import org.apache.spark.sql.functions._
   * documented dial adjustments (embedding LSH bits up, rare-gram df cap
   * scaled with the duplication factor)?
   *
-  * Generation matches ScaleRehearsal's deterministic scheme (hash-based
-  * decisions, no RNG) at 100 replicas: ~30% byte-identical replicas
-  * (exact-dup mass), the rest near-dups via a replica token; embeddings
-  * get ±0.025/dim hash noise, renormalized. Output under target/.
+  * Generation is ScaleRehearsal's [[Rehearsal.replicate]] at 100
+  * replicas. Output under the scratch dir (default target/).
   *
-  * Run: SPARK_GRAFT_CPUS=32 sbt "runMain graft.Sf10Rehearsal"
+  * Run: SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.Sf10Rehearsal"
   * Output: one JSON line + target/sf10_rehearsal.json
   */
 object Sf10Rehearsal {
@@ -33,25 +32,10 @@ object Sf10Rehearsal {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(cpus)
+    val timeOne = Rehearsal.timeOne(spark) _
     ensureSf10(spark)
 
-    def fmt(d: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    def timeOne(name: String, dir: String): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, dir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      graft.operators.Dedup.unpersistIntermediates(spark)
-      spark.catalog.clearCache()
-      (sec, n)
-    }
     timeOne("dedup_exact", "/root/testdata/sf0.01") // JIT warm-up
 
     // section filter for local iteration on ONE part of the rehearsal
@@ -465,48 +449,16 @@ object Sf10Rehearsal {
   private def scratch(s: SparkSession, name: String): String =
     graft.util.Fs.scratchDir(s, name).toString
 
-  /** 100-replica twin of ScaleRehearsal.ensureSf1 (same deterministic
-    * scheme, one decade further). Also ensures sf1 exists — the ratio
-    * baseline — by replicating the generation contract. */
+  /** 100-replica twin of ScaleRehearsal.ensureSf1 (same generator, one
+    * decade further). Requires the sf1 corpus — the ratio baseline. */
   private def ensureSf10(s: SparkSession): Unit = {
-    import s.implicits._
     require(java.nio.file.Files.exists(
       java.nio.file.Paths.get(scratch(s, "sf1"), ScaleRehearsal.Sf1Marker)),
       "run graft.ScaleRehearsal first: sf10 ratios baseline against its sf1 corpus")
     Sf10 = scratch(s, "sf10")
     val done = java.nio.file.Paths.get(s"$Sf10/_REHEARSAL_OK")
     if (java.nio.file.Files.exists(done)) return
-    val reps = s.range(100).withColumnRenamed("id", "replica")
-
-    val docs = s.read.parquet(s"$Sf01/documents.parquet")
-    val nDocs = docs.agg(max($"doc_id")).head().getLong(0) + 1L
-    docs.crossJoin(broadcast(reps))
-      .withColumn("keep",
-        $"replica" === 0 ||
-          pmod(hash(concat($"doc_id", lit(":"), $"replica")), lit(10)) < 3)
-      .withColumn("text",
-        when($"keep", $"text")
-          .otherwise(concat($"text", lit(" rep"), $"replica")))
-      .withColumn("doc_id", $"doc_id" + $"replica" * nDocs)
-      .withColumn("n_chars", length($"text").cast("long"))
-      .select("doc_id", "text", "lang", "source", "n_chars")
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$Sf10/documents.parquet")
-
-    val emb = s.read.parquet(s"$Sf01/embeddings.parquet")
-    val nVecs = emb.agg(max($"vec_id")).head().getLong(0) + 1L
-    emb.crossJoin(broadcast(reps))
-      .withColumn("vec_id", $"vec_id" + $"replica" * nVecs)
-      .withColumn("embedding",
-        when($"replica" === 0, $"embedding").otherwise(
-          transform($"embedding", (v, i) =>
-            v + (pmod(hash(concat($"vec_id", lit(":"), i)), lit(1001)) - 500)
-              .cast("float") / 20000f)))
-      .withColumn("nrm",
-        sqrt(aggregate($"embedding", lit(0.0d), (a, v) => a + v.cast("double") * v)))
-      .withColumn("embedding", transform($"embedding", v => (v / $"nrm").cast("float")))
-      .select("vec_id", "embedding", "label")
-      .repartition(32).write.mode("overwrite").parquet(s"$Sf10/embeddings.parquet")
+    Rehearsal.replicate(s, Sf01, Sf10, replicas = 100, files = 32)
     java.nio.file.Files.write(done, "ok\n".getBytes("UTF-8"))
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Wide-schema extraction rehearsal: the PS3.6 dictionary makes outputs
   * of hundreds-to-thousands of DISTINCT TAG COLUMNS reachable, but the
   * observed-schema finalize + drop-all-null + crawler-merge path
@@ -80,13 +78,7 @@ object WideSchemaRehearsal {
     val nObjects = sys.env.getOrElse("SPARK_GRAFT_WIDE_OBJECTS", "1200").toInt
     val perObj = 60
     val widths = Seq(120, 300, 600)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     def fmt(d: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     def timed[A](f: => A): (A, Double) = {
