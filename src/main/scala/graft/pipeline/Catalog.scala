@@ -85,7 +85,8 @@ object Catalog {
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     spark.read.parquet(partitionDir)
       .repartition(nFiles)
-      .write.mode("overwrite").parquet(staged.toString)
+      .write.options(graft.util.ForkFreeLocalFileSystem.WriteOptions)
+      .mode("overwrite").parquet(staged.toString)
     Files.move(dir, old)
     Files.move(staged, dir)
     graft.util.Fs.deleteRecursively(old)

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.dicom.{DicomParser, Flatten, Tags, VrConvert}
 import graft.ingest.Archives
+import graft.util.ForkFreeLocalFileSystem
 
 /** The end-to-end metadata-extraction job (SURVEY.md §3 E1/E2 collapsed
   * into one Spark job):
@@ -349,10 +350,32 @@ object DicomPipeline {
     * columns (this IS the reference's per-batch drop-all-null,
     * `src/app.py:41` — a keyword only becomes a column if some row holds
     * a value), laid out by [[schemaFor]]. */
-  def toDataFrame(spark: SparkSession, rows: RDD[ImageRow]): DataFrame = {
-    val keywords = rows
-      .flatMap(_.values.collect { case (k, v) if v != VrConvert.DNull => k })
-      .distinct().collect().sorted.toIndexedSeq
+  def toDataFrame(spark: SparkSession, rows: RDD[ImageRow]): DataFrame =
+    framed(spark, rows, rows.flatMap(observedKeys).distinct().collect())
+
+  private def observedKeys(ir: ImageRow): Iterable[String] =
+    ir.values.collect { case (k, v) if v != VrConvert.DNull => k }
+
+  /** Marks an errored object in the key union: no keyword or lineage key
+    * is empty ([[Flatten.flatten]] skips empty keywords). */
+  private val ErroredKey = ""
+
+  /** [[toDataFrame]] of an extraction's rows whose one key-union job also
+    * tells whether any object errored: each error contributes
+    * [[ErroredKey]] before the `distinct`, so the errors write needs no
+    * emptiness job of its own. */
+  private def toDataFrameFlaggingErrors(spark: SparkSession,
+                                        ex: Extracted): (DataFrame, Boolean) = {
+    val keys = ex.outcomes.flatMap {
+      case Right(rs) => rs.flatMap(observedKeys)
+      case Left(_) => Seq(ErroredKey)
+    }.distinct().collect()
+    (framed(spark, ex.rows, keys.filter(_ != ErroredKey)), keys.contains(ErroredKey))
+  }
+
+  private def framed(spark: SparkSession, rows: RDD[ImageRow],
+                     observed: Array[String]): DataFrame = {
+    val keywords = observed.sorted.toIndexedSeq
     val rowRdd = rows.map { ir =>
       Row.fromSeq(keywords.map(kw => ir.values.get(kw).map(toExternal).orNull))
     }
@@ -372,13 +395,14 @@ object DicomPipeline {
     * micro-batch. Returns (data, errors) as written; both are lazy, so
     * using them afterwards re-extracts.
     *
-    * The data write needs no emptiness check: every row carries the four
+    * Neither write runs an emptiness job: every row carries the four
     * lineage strings and a study date, so a batch has columns exactly
-    * when it has rows. */
+    * when it has rows, and the key union flags errored objects. Both
+    * write through [[ForkFreeLocalFileSystem]]. */
   def write(spark: SparkSession, ex: Extracted, outPath: String,
             errorPath: Option[String]): (DataFrame, DataFrame) =
     try {
-      val df = toDataFrame(spark, ex.rows)
+      val (df, errored) = toDataFrameFlaggingErrors(spark, ex)
       if (df.columns.nonEmpty) {
         // REBALANCE on the partition column first: without it every scan
         // task writes one file per date it happens to hold — the 9.5k-object
@@ -395,14 +419,19 @@ object DicomPipeline {
           if (writeTasks <= 8) df
           else df.hint("rebalance",
             org.apache.spark.sql.functions.col(Flatten.PartitionColSnake))
-        arranged.write.mode("append")
+        arranged.write.options(ForkFreeLocalFileSystem.WriteOptions)
+          .mode("append")
           .partitionBy(Flatten.PartitionColSnake)
           .option("compression", "snappy")
           .parquet(outPath)
       }
       val errDf = spark.createDataFrame(ex.errors)
-      errorPath.foreach { p =>
-        if (!errDf.isEmpty) errDf.write.mode("append").parquet(p)
+      // REBALANCE lets AQE size the errors write by bytes: one task (one
+      // file) for a handful of rows, more at scale — not one task per
+      // scan partition
+      if (errored) errorPath.foreach { p =>
+        errDf.hint("rebalance").write.options(ForkFreeLocalFileSystem.WriteOptions)
+          .mode("append").parquet(p)
       }
       (df, errDf)
     } finally ex.outcomes.unpersist(blocking = false)

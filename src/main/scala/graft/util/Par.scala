@@ -24,8 +24,7 @@ object Par {
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
       val fs = actions.map(a => scala.concurrent.Future(a()))
-      fs.foreach(scala.concurrent.Await.result(_,
-        scala.concurrent.duration.Duration(10, "min")))
+      fs.foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
     } finally pool.shutdownNow()
   }
 }

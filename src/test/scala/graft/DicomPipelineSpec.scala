@@ -239,11 +239,23 @@ class DicomPipelineSpec extends AnyFunSuite {
         .coalesce(1).write.mode("append").parquet(part)
     }
     val beforeRows = spark.read.parquet(part).orderBy($"idx").collect().toSeq
+    // the fork-free rewrite sets the bits the stock Hadoop writes above set
+    def modes() = {
+      import scala.jdk.CollectionConverters._
+      def mode(p: java.nio.file.Path) = java.nio.file.attribute.PosixFilePermissions
+        .toString(java.nio.file.Files.getPosixFilePermissions(p))
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(part))
+      val files = try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toVector
+        finally s.close()
+      (files.map(mode).toSet, mode(java.nio.file.Paths.get(part)))
+    }
+    val stockModes = modes()
     val (nBefore, nAfter) = Catalog.compactPartition(spark, part)
     assert(nBefore >= 20 && nAfter < nBefore)
     assert(nAfter == 1) // 20 tiny files fit one 128 MB target file
     val afterRows = spark.read.parquet(part).orderBy($"idx").collect().toSeq
     assert(afterRows == beforeRows)
+    assert(stockModes._1.size == 1 && modes() == stockModes)
     // staging/backup dirs are hidden siblings and must be gone afterward
     val parent = java.nio.file.Paths.get(part).getParent
     val base = java.nio.file.Paths.get(part).getFileName.toString

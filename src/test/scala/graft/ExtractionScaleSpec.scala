@@ -11,7 +11,10 @@ import org.apache.spark.sql.SparkSession
   *     (`listStatusIterator`): the located variant forks `ls -ld` per
   *     file on the local filesystem (~4 ms/fork → 37 s at 9.5k objects,
   *     ~12 h at 10M). Pinned as a source-shape guard — a timing assert
-  *     would be flaky, and the defect IS the API choice.
+  *     would be flaky, and the defect IS the API choice. The write side
+  *     has the twin defect (a forked `chmod` per file, `.crc` file and
+  *     directory), pinned the same way: every DICOM write passes the
+  *     fork-free writer options.
   *  2. the dynamic partition write must not explode into
   *     files-per-(task × date): a ~500-object run (enough write tasks to
   *     cross the rebalance threshold) must land EXACTLY one file per
@@ -52,6 +55,27 @@ class ExtractionScaleSpec extends AnyFunSuite {
     banned.foreach { bad =>
       assert(!dataSource.contains(bad),
         s"the dicom source reintroduced the forking located-status API: $bad")
+    }
+  }
+
+  test("every DicomPipeline and compactPartition write passes the fork-free options") {
+    // the write-side twin of the listing guard: a write on the stock
+    // local filesystem forks a `chmod` per file, .crc file and directory
+    def code(file: String): String =
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"src/main/scala/graft/$file")), "UTF-8")
+        .linesIterator.map(_.replaceFirst("//.*$", ""))
+        .filterNot(_.trim.startsWith("*")).mkString("\n")
+    val catalog = code("pipeline/Catalog.scala")
+    val compact = catalog.substring(catalog.indexOf("def compactPartition"),
+      catalog.indexOf("def analyze"))
+    Seq("DicomPipeline.scala" -> code("pipeline/DicomPipeline.scala"),
+        "Catalog.compactPartition" -> compact).foreach { case (name, src) =>
+      val writes = """\.write\b""".r.findAllIn(src).size
+      val forkFree = """\.write\s*\.options\(\s*(graft\.util\.)?ForkFreeLocalFileSystem\.WriteOptions\s*\)"""
+        .r.findAllIn(src).size
+      assert(writes > 0 && forkFree == writes,
+        s"$name: ${writes - forkFree} of $writes writes lack ForkFreeLocalFileSystem.WriteOptions")
     }
   }
 
