@@ -4,9 +4,13 @@ import java.io.{ByteArrayInputStream, InputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftFrames, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import graft.dicom.{DicomParser, Flatten, Tags, VrConvert}
 import graft.ingest.Archives
 import graft.util.ForkFreeLocalFileSystem
@@ -68,7 +72,10 @@ object DicomPipeline {
     * what is computed never depends on where it ran.
     *
     * The first failing member fails the whole object: ONE error record,
-    * tagged with its DLQ stage, and no partial rows. `keep` restricts value conversion to the
+    * tagged with its DLQ stage, and no partial rows. A member whose
+    * top-level value does not fit its column type (the file's VR
+    * disagrees with the dictionary's, [[VrDriftException]]) fails at the
+    * `transform` stage. `keep` restricts value conversion to the
     * named keywords (V2 column pruning); `None` = full conversion. */
   def processObject(bucket: String, region: String, key: String,
                     open: () => InputStream,
@@ -76,7 +83,12 @@ object DicomPipeline {
     try {
       val rows = Vector.newBuilder[ImageRow]
       Archives.members(key, open) { (name, bytes) =>
-        rows += ImageRow(Flatten.flatten(DicomParser.parse(bytes), bucket, region, key, name, keep))
+        val values = Flatten.flatten(DicomParser.parse(bytes), bucket, region, key, name, keep)
+        values.foreach { case (kw, v) =>
+          val dt = sparkTypeFor(kw)
+          if (!fits(v, dt)) throw new VrDriftException(kw, v, dt)
+        }
+        rows += ImageRow(values)
       }
       Right(rows.result())
     } catch {
@@ -313,9 +325,11 @@ object DicomPipeline {
   /** Spark type of a column, decided by the static dictionary VR + max VM
     * (SURVEY §1.3 table). Lineage columns are plain strings. */
   def sparkTypeFor(keyword: String): DataType =
-    Tags.byKeyword.get(keyword) match {
-      case None => StringType // lineage keys
-      case Some(info) => (info.vr, info.vmMax > 1) match {
+    dictionaryTypes.getOrElse(keyword, StringType) // lineage keys: absent
+
+  private lazy val dictionaryTypes: Map[String, DataType] =
+    Tags.byKeyword.map { case (kw, info) =>
+      kw -> ((info.vr, info.vmMax > 1) match {
         case ("DA", false) => DateType
         case ("DA", true)  => ArrayType(DateType)
         case ("PN", false) => pnStruct
@@ -323,19 +337,56 @@ object DicomPipeline {
         case ("SQ", _)     => MapType(StringType, StringType)
         case (_, true)     => ArrayType(StringType)
         case (_, false)    => StringType
-      }
+      })
     }
 
-  private def toExternal(v: VrConvert.DicomValue): Any = v match {
-    case VrConvert.DStr(s)       => s
-    case VrConvert.DStrList(xs)  => xs
-    case VrConvert.DDate(d)      => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d))
-    case VrConvert.DDateList(xs) => xs.map(d => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d)))
-    case VrConvert.DPersonName(c)      => Row.fromSeq(c)
-    case VrConvert.DPersonNameList(xs) => xs.map(Row.fromSeq)
-    case VrConvert.DMap(m)       => m
-    case VrConvert.DNull         => null
+  /** A top-level value whose shape (decided by the file's VR) does not
+    * fit its column type (decided by the dictionary's VR), e.g. a
+    * `StudyDate` written as `LO`: the object goes to the errors channel
+    * instead of failing the batch when its row is built. */
+  final class VrDriftException(keyword: String, v: VrConvert.DicomValue, dt: DataType)
+    extends RuntimeException(
+      s"$keyword holds a ${v.getClass.getSimpleName}, its column is ${dt.simpleString}")
+
+  /** Whether [[toCatalyst]]'s output for `v` is a value of type `dt`. */
+  private def fits(v: VrConvert.DicomValue, dt: DataType): Boolean = (v, dt) match {
+    case (VrConvert.DNull, _)                                   => true
+    case (VrConvert.DStr(_), StringType)                        => true
+    case (VrConvert.DStrList(_), ArrayType(StringType, _))      => true
+    case (VrConvert.DDate(_), DateType)                         => true
+    case (VrConvert.DDateList(_), ArrayType(DateType, _))       => true
+    case (VrConvert.DPersonName(_), _: StructType)              => true
+    case (VrConvert.DPersonNameList(_), ArrayType(_: StructType, _)) => true
+    case (VrConvert.DMap(_), _: MapType)                        => true
+    case _                                                      => false
   }
+
+  /** The one DicomValue → Catalyst converter: the ETL's rows, every
+    * [[toDataFrame]] and the `format("dicom")` source build their values
+    * here. The value's shape decides the representation; [[processObject]]
+    * has already checked that it fits the column. Map entries keep the
+    * `DMap`'s own order. */
+  def toCatalyst(v: VrConvert.DicomValue): Any = v match {
+    case VrConvert.DStr(s)             => UTF8String.fromString(s)
+    case VrConvert.DStrList(xs)        => new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any])
+    case VrConvert.DDate(d)            => d.toInt
+    case VrConvert.DDateList(xs)       => new GenericArrayData(xs.map(_.toInt).toArray[Any])
+    case VrConvert.DPersonName(c)      => personName(c)
+    case VrConvert.DPersonNameList(xs) => new GenericArrayData(xs.map(personName).toArray[Any])
+    case VrConvert.DMap(m) =>
+      val (ks, vs) = m.toArray.unzip
+      ArrayBasedMapData(ks.map(UTF8String.fromString).toArray[Any],
+        vs.map(UTF8String.fromString).toArray[Any])
+    case VrConvert.DNull               => null
+  }
+
+  private def personName(c: Seq[String]): InternalRow =
+    new GenericInternalRow(c.map(UTF8String.fromString).toArray[Any])
+
+  /** One image's row over `keywords`, in that order (null where absent). */
+  def internalRow(keywords: Array[String],
+                  values: Map[String, VrConvert.DicomValue]): InternalRow =
+    new GenericInternalRow(keywords.map(kw => values.get(kw).map(toCatalyst).orNull))
 
   /** The columns of a set of observed keywords, in keyword order:
     * snake_case-renamed (wrangler `sanitize_columns=True` analog) and
@@ -373,14 +424,26 @@ object DicomPipeline {
     (framed(spark, ex.rows, keys.filter(_ != ErroredKey)), keys.contains(ErroredKey))
   }
 
+  /** The rows as Catalyst rows laid out by [[schemaFor]]: no row
+    * encoder, so no task generates a serializer for the ~60 columns. */
   private def framed(spark: SparkSession, rows: RDD[ImageRow],
                      observed: Array[String]): DataFrame = {
-    val keywords = observed.sorted.toIndexedSeq
-    val rowRdd = rows.map { ir =>
-      Row.fromSeq(keywords.map(kw => ir.values.get(kw).map(toExternal).orNull))
-    }
-    spark.createDataFrame(rowRdd, schemaFor(keywords))
+    val keywords = observed.sorted
+    GraftFrames.fromInternal(spark,
+      rows.map(ir => internalRow(keywords, ir.values)), schemaFor(keywords.toIndexedSeq))
   }
+
+  /** Schema of the errors channel: `Encoders.product[DicomError]`'s. */
+  val ErrorSchema: StructType = StructType(
+    Seq("source_s3_key", "stage", "error").map(StructField(_, StringType)))
+
+  /** The errors channel as a DataFrame of [[ErrorSchema]] — the errors
+    * sink and the `errors` query both read it here. */
+  def errorsFrame(spark: SparkSession, errors: RDD[DicomError]): DataFrame =
+    GraftFrames.fromInternal(spark, errors.map { e =>
+      InternalRow(UTF8String.fromString(e.source_s3_key),
+        UTF8String.fromString(e.stage), UTF8String.fromString(e.error))
+    }, ErrorSchema)
 
   /** Full job: extract → finalize → partitioned snappy write (+ errors
     * parquet). Returns (data, errors) as written. */
@@ -398,7 +461,9 @@ object DicomPipeline {
     * Neither write runs an emptiness job: every row carries the four
     * lineage strings and a study date, so a batch has columns exactly
     * when it has rows, and the key union flags errored objects. Both
-    * write through [[ForkFreeLocalFileSystem]]. */
+    * write through [[ForkFreeLocalFileSystem]]. The errors write runs
+    * only after the data write has succeeded, so a batch whose data write
+    * fails appends no error rows and a retry does not repeat them. */
   def write(spark: SparkSession, ex: Extracted, outPath: String,
             errorPath: Option[String]): (DataFrame, DataFrame) =
     try {
@@ -412,9 +477,9 @@ object DicomPipeline {
         // repartition(col) would not. SMALL batches skip the shuffle: with
         // few write tasks the worst case is tasks × dates files — already
         // bounded — and the extra exchange doubled the fixture-scale write
-        // (0.71 → 1.42 s measured idle-to-idle). getNumPartitions is free
-        // (RDD-backed plan; no job).
-        val writeTasks = df.rdd.getNumPartitions
+        // (0.71 → 1.42 s measured idle-to-idle). The frame's rows map
+        // the extraction's rows one to one, so it has their partitions.
+        val writeTasks = ex.rows.getNumPartitions
         val arranged =
           if (writeTasks <= 8) df
           else df.hint("rebalance",
@@ -425,7 +490,7 @@ object DicomPipeline {
           .option("compression", "snappy")
           .parquet(outPath)
       }
-      val errDf = spark.createDataFrame(ex.errors)
+      val errDf = errorsFrame(spark, ex.errors)
       // REBALANCE lets AQE size the errors write by bytes: one task (one
       // file) for a handful of rows, more at scale — not one task per
       // scan partition

@@ -93,7 +93,7 @@ object DicomQueries {
   def errors(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ex = DicomPipeline.extract(s, Fixtures, "ref-bucket", "ref-region")
-    s.createDataFrame(ex.errors)
+    DicomPipeline.errorsFrame(s, ex.errors)
       .select(element_at(split($"source_s3_key", "/"), -1).as("source_key"),
               $"stage", $"error")
       .orderBy($"source_key")

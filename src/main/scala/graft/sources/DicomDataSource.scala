@@ -5,14 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import graft.dicom.{Flatten, Tags, VrConvert}
 import graft.pipeline.DicomPipeline
 
@@ -204,25 +202,15 @@ object DicomSourceUtil {
       .getOrElse(Tags.camelCase(col))
   }
 
-  def toCatalyst(v: VrConvert.DicomValue, dt: DataType): Any = (v, dt) match {
-    case (VrConvert.DStr(s), StringType) => UTF8String.fromString(s)
-    case (VrConvert.DStrList(xs), ArrayType(StringType, _)) =>
-      new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any])
-    case (VrConvert.DDate(d), DateType) => d.toInt
-    case (VrConvert.DDateList(xs), ArrayType(DateType, _)) =>
-      new GenericArrayData(xs.map(_.toInt).toArray[Any])
-    case (VrConvert.DPersonName(c), _: StructType) =>
-      InternalRow.fromSeq(c.map(UTF8String.fromString))
-    case (VrConvert.DPersonNameList(xs), ArrayType(_: StructType, _)) =>
-      new GenericArrayData(xs.map(c => InternalRow.fromSeq(c.map(UTF8String.fromString))).toArray[Any])
-    case (VrConvert.DMap(m), _: MapType) =>
-      val ks = m.keys.toSeq.sorted
-      ArrayBasedMapData(
-        ks.map(UTF8String.fromString).toArray[Any],
-        ks.map(k => UTF8String.fromString(m(k))).toArray[Any])
-    case (VrConvert.DNull, _) => null
-    case (other, t) => // defensive: stringify on type drift
-      if (t == StringType) UTF8String.fromString(VrConvert.stringify(other)) else null
+  /** Every column must have the type the dictionary gives its keyword
+    * ([[DicomPipeline.sparkTypeFor]]): the rows carry values of that
+    * type and nothing converts them, so a user schema that disagrees
+    * fails at planning, not in a task. */
+  def checkTypes(schema: StructType): Unit = schema.fields.foreach { f =>
+    val expected = DicomPipeline.sparkTypeFor(keywordFor(f.name))
+    if (!DataType.equalsStructurally(f.dataType, expected, ignoreNullability = true))
+      throw new IllegalArgumentException(
+        s"dicom column ${f.name} is ${expected.simpleString}, not ${f.dataType.simpleString}")
   }
 }
 
@@ -241,10 +229,16 @@ class DicomScanBuilder(full: StructType, paths: Seq[String],
                        failOnError: Boolean, maxPartitionBytes: Long)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = full
+  // Top-level pruning only: with nested schema pruning Spark passes a
+  // pruned struct (`patient_name: struct<family_name>`), but the rows
+  // carry whole values, so each required column keeps its full type and
+  // Spark extracts the subfield above the scan.
   override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan =
+    required = StructType(requiredSchema.fieldNames.map(full(_)))
+  override def build(): Scan = {
+    DicomSourceUtil.checkTypes(full)
     new DicomScan(required, paths, failOnError, maxPartitionBytes)
+  }
 }
 
 case class DicomInputPartition(files: Seq[String]) extends InputPartition
@@ -279,22 +273,17 @@ class DicomPartitionReader(files: Seq[String], required: StructType,
                            failOnError: Boolean, conf: SerializableHadoopConf)
     extends PartitionReader[InternalRow] {
 
-  // (source keyword, spark type) in output order
-  private val cols: Array[(String, DataType)] =
-    required.fields.map(f => (DicomSourceUtil.keywordFor(f.name), f.dataType))
+  // source keywords in output order
+  private val keywords: Array[String] =
+    required.fieldNames.map(DicomSourceUtil.keywordFor)
 
   // pruned conversion: only the required keywords are VR-converted
-  private val keep: Set[String] = cols.map(_._1).toSet
+  private val keep: Set[String] = keywords.toSet
 
   private lazy val iter: Iterator[InternalRow] =
     files.iterator.flatMap { file =>
       DicomSourceUtil.rowsOf(file, conf.value, failOnError, Some(keep))
-        .iterator.map { m =>
-          InternalRow.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-            cols.map { case (kw, dt) =>
-              m.get(kw).map(DicomSourceUtil.toCatalyst(_, dt)).orNull
-            }))
-        }
+        .iterator.map(DicomPipeline.internalRow(keywords, _))
     }
 
   private var current: InternalRow = _

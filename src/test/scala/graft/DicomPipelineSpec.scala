@@ -147,6 +147,50 @@ class DicomPipelineSpec extends AnyFunSuite {
       r.getAs[String]("stage"))).toSeq == Seq((true, "parse")))
   }
 
+  test("an object whose file VR disagrees with the dictionary is a transform error, not a failed batch") {
+    val out = tmp()
+    val in = java.nio.file.Paths.get(out, "in")
+    java.nio.file.Files.createDirectories(in)
+    def obj(name: String, elements: Array[Byte]*): Unit =
+      java.nio.file.Files.write(in.resolve(name), DicomWriter.file(elements))
+    obj("good.dcm", DicomWriter.strElement(0x0008, 0x0020, "DA", "20240301"),
+      DicomWriter.strElement(0x0008, 0x0060, "CS", "CT"),
+      DicomWriter.strElement(0x0010, 0x0010, "PN", "Doe^Jane"))
+    // PatientName (dictionary PN) and StudyDate (dictionary DA) as LO
+    obj("name-lo.dcm", DicomWriter.strElement(0x0008, 0x0060, "CS", "CT"),
+      DicomWriter.strElement(0x0010, 0x0010, "LO", "Doe^John"))
+    obj("date-lo.dcm", DicomWriter.strElement(0x0008, 0x0020, "LO", "20240302"),
+      DicomWriter.strElement(0x0008, 0x0060, "CS", "MR"))
+    obj("date-un.dcm", DicomWriter.element(0x0008, 0x0020, "UN", "20240303".getBytes("UTF-8")),
+      DicomWriter.strElement(0x0008, 0x0060, "CS", "MR"))
+    // a drifted value inside an SQ item is stringified like any other
+    obj("sq-item.dcm", DicomWriter.strElement(0x0008, 0x0020, "DA", "20240304"),
+      DicomWriter.sqElement(0x0008, 0x1110, Seq(
+        DicomWriter.strElement(0x0008, 0x0020, "LO", "20240304"))))
+    DicomPipeline.run(spark, in.toString, s"$out/data", Some(s"$out/errors"))
+    val data = spark.read.parquet(s"$out/data")
+    def name(key: String) = java.nio.file.Paths.get(key).getFileName.toString
+    assert(data.select("source_s3_key").collect().map(r => name(r.getString(0))).sorted.toSeq ==
+      Seq("good.dcm", "sq-item.dcm"))
+    assert(data.filter("patient_name.family_name = 'Doe'").count() == 1)
+    val errors = spark.read.parquet(s"$out/errors").collect()
+      .map(r => (name(r.getAs[String]("source_s3_key")), r.getAs[String]("stage"),
+        r.getAs[String]("error"))).sortBy(_._1).toSeq
+    assert(errors.map(e => (e._1, e._2)) ==
+      Seq(("date-lo.dcm", "transform"), ("date-un.dcm", "transform"), ("name-lo.dcm", "transform")))
+    assert(errors.forall(_._3.startsWith("VrDriftException: ")), errors.mkString("; "))
+
+    // a source read of the drifted columns skips them; failOnError surfaces them
+    val read = spark.read.format("dicom").load(in.toString)
+      .select("source_s3_key", "patient_name", "study_date").collect()
+    assert(read.map(r => name(r.getString(0))).sorted.toSeq == Seq("good.dcm", "sq-item.dcm"))
+    val strict = spark.read.format("dicom").option("failOnError", "true").load(in.toString)
+    val e = intercept[Exception] { strict.collect() }
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) +: chain(t.getCause)
+    assert(chain(e).exists(_.contains("transform: VrDriftException")))
+  }
+
   test("per-object trigger isolation (maxFilesPerTrigger=1, S1 parity)") {
     val out = tmp()
     val in = s"$out/in"

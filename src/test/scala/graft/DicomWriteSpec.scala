@@ -131,4 +131,26 @@ class DicomWriteSpec extends AnyFunSuite {
       assert(spark.read.parquet(dir.resolve("data").toString).count() == 500)
     } finally graft.util.Fs.deleteRecursively(dir)
   }
+
+  test("a failing data write fails the run, releases the intermediate and writes no errors") {
+    val dir = tmp()
+    try {
+      val in = dir.resolve("in")
+      Files.createDirectories(in)
+      (0 until 4).foreach(i => Files.write(in.resolve(s"obj-$i.dcm"), dcm(i, dates = 2)))
+      Files.write(in.resolve("bad.dcm"), "not a DICOM object".getBytes("UTF-8"))
+      // the data sink is a regular file: its write cannot create a directory
+      val data = Files.write(dir.resolve("data"), "a file".getBytes("UTF-8"))
+      def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val before = persisted
+      intercept[Exception] {
+        DicomPipeline.run(spark, in.toString, data.toString, Some(dir.resolve("errors").toString))
+      }
+      assert((persisted -- before).isEmpty, "the failed run left its intermediate persisted")
+      assert(new String(Files.readAllBytes(data), "UTF-8") == "a file")
+      // the errors write follows a successful data write only, so a retried
+      // batch does not append its error rows twice
+      assert(!Files.exists(dir.resolve("errors")))
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
 }

@@ -19,6 +19,9 @@ import org.apache.spark.sql.SparkSession
   *     files-per-(task × date): a ~500-object run (enough write tasks to
   *     cross the rebalance threshold) must land EXACTLY one file per
   *     study_date partition.
+  *  3. the batch frames are built from Catalyst rows: a row encoder's
+  *     serializer is generated per task, which cost more than the
+  *     extraction itself (BENCH_NOTES.md). A source-shape guard too.
   */
 class ExtractionScaleSpec extends AnyFunSuite {
 
@@ -58,18 +61,20 @@ class ExtractionScaleSpec extends AnyFunSuite {
     }
   }
 
+  /** The code of a `src/main/scala` file, without its comments. */
+  private def code(file: String): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"src/main/scala/$file")), "UTF-8")
+      .linesIterator.map(_.replaceFirst("//.*$", ""))
+      .filterNot(_.trim.startsWith("*")).mkString("\n")
+
   test("every DicomPipeline and compactPartition write passes the fork-free options") {
     // the write-side twin of the listing guard: a write on the stock
     // local filesystem forks a `chmod` per file, .crc file and directory
-    def code(file: String): String =
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"src/main/scala/graft/$file")), "UTF-8")
-        .linesIterator.map(_.replaceFirst("//.*$", ""))
-        .filterNot(_.trim.startsWith("*")).mkString("\n")
-    val catalog = code("pipeline/Catalog.scala")
+    val catalog = code("graft/pipeline/Catalog.scala")
     val compact = catalog.substring(catalog.indexOf("def compactPartition"),
       catalog.indexOf("def analyze"))
-    Seq("DicomPipeline.scala" -> code("pipeline/DicomPipeline.scala"),
+    Seq("DicomPipeline.scala" -> code("graft/pipeline/DicomPipeline.scala"),
         "Catalog.compactPartition" -> compact).foreach { case (name, src) =>
       val writes = """\.write\b""".r.findAllIn(src).size
       val forkFree = """\.write\s*\.options\(\s*(graft\.util\.)?ForkFreeLocalFileSystem\.WriteOptions\s*\)"""
@@ -77,6 +82,26 @@ class ExtractionScaleSpec extends AnyFunSuite {
       assert(writes > 0 && forkFree == writes,
         s"$name: ${writes - forkFree} of $writes writes lack ForkFreeLocalFileSystem.WriteOptions")
     }
+  }
+
+  test("DICOM rows and errors become frames as Catalyst rows, never through a row encoder") {
+    // createDataFrame over external Rows (or case classes) runs the row
+    // encoder, whose ~60-column serializer every task generates anew
+    Seq("pipeline/DicomPipeline.scala", "sources/DicomDataSource.scala",
+        "queries/DicomQueries.scala").foreach { f =>
+      val src = code(s"graft/$f")
+      assert(!src.contains("Row.fromSeq"), s"$f builds external Rows")
+      // the one allowed call: manifestOf's (path, length) pairs
+      val creates = """createDataFrame\([^)]*\)""".r.findAllIn(src).toSeq
+      assert(creates.forall(_ == "createDataFrame(files)"), s"$f: ${creates.mkString(", ")}")
+    }
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val shims = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.map(_.toString.stripPrefix("src/main/scala/"))
+        .filter(f => f.endsWith(".scala") && code(f).contains("internalCreateDataFrame")).toList
+    } finally walk.close()
+    assert(shims == List("org/apache/spark/sql/GraftFrames.scala"))
   }
 
   private def dcm(i: Int): Array[Byte] = DicomWriter.file(Seq(
