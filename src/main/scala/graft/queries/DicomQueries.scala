@@ -7,15 +7,26 @@ import graft.pipeline.{Catalog, DicomPipeline}
 
 /** SparkEntry-facing DICOM queries. The pipeline operators (SURVEY.md
   * §2.1-2.3) are not expressible as DuckDB SQL over the sf tables, so
-  * these run the engine over the reference fixture set
-  * (/root/reference/sample_dcm, read-only, fully deterministic content)
-  * and return stable, ordered results — the driver records rows-only
-  * checks. The two `*_fn` queries re-expose VR converters as SQL scalar
+  * these run the engine over the DICOM fixture set ([[Fixtures]], fully
+  * deterministic content) and return stable, ordered results — the
+  * driver records rows-only checks. The two `*_fn` queries re-expose VR converters as SQL scalar
   * functions (T1) applied to the sf tables, so they DO carry oracles.
   */
 object DicomQueries {
 
-  val Fixtures = "/root/reference/sample_dcm"
+  /** The DICOM fixture set (FIXTURES.md §1): the seven `sample_dcm/`
+    * objects committed in the checkout root, resolved against the working
+    * directory (sbt runs mains and tests from the checkout root). Read
+    * only; the one definition every DICOM query and spec reads. */
+  val Fixtures: String = java.nio.file.Paths.get("sample_dcm").toAbsolutePath.toString
+
+  /** The day-2 "arrived today" rule over a [[Fixtures]] manifest: the hash
+    * of the object's key relative to the fixture directory — for this
+    * flat set, its file name — mod 3 == 0 (`example.tar` and
+    * `example.tar.bz2`). Hashing the absolute path instead would make the
+    * split depend on where the checkout lives. */
+  private def newToday: org.apache.spark.sql.Column =
+    pmod(abs(hash(element_at(split(col("path"), "/"), -1))), lit(3)) === 0
 
   private def scratch(s: SparkSession): String = {
     val base = graft.util.Fs.scratchDir(s, "dicomq")
@@ -44,23 +55,20 @@ object DicomQueries {
   }
 
   /** Day-2 incremental extraction: yesterday's processed log covers the
-    * fixture corpus EXCEPT a deterministic "arrived today" subset (path
-    * hash mod 3 == 0) plus one object whose recorded length drifted (a
+    * fixture corpus EXCEPT a deterministic "arrived today" subset
+    * ([[newToday]]) plus one object whose recorded length drifted (a
     * changed object re-extracts). The gated result is the flat
     * projection of extracting ONLY [[DicomPipeline.manifestDelta]]'s
     * output — ManifestSpec pins byte-parity with directly extracting
     * just the delta objects, and the rehearsal pins cost ∝ delta. */
   def manifestDelta(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{abs, col, hash, pmod}
     val manifest = DicomPipeline.manifestOf(s, Fixtures)
-    val newToday = pmod(abs(hash(col("path"))), lit(3)) === 0
     val processed = manifest.filter(!newToday)
       // one "changed" object FROM THE PROCESSED SET: the log remembers a
       // different length, so the anti-join re-admits it even though the
       // path matched. example-0 is in the processed set under the hash
-      // rule (example-6 is hash-new already — drifting it would be a
-      // no-op, the r13 fix); the delta is the hash-new subset plus this
-      // changed object.
+      // rule (drifting a hash-new object would be a no-op); the delta is
+      // the hash-new subset plus this changed object.
       .withColumn("length",
         when(col("path").endsWith("example-0"), col("length") + 1L)
           .otherwise(col("length")))
@@ -350,7 +358,7 @@ object DicomQueries {
 
   /** The day-2 fixture split shared by [[corpusFunnelDelta]] and its
     * spec: standing = yesterday's processed objects (manifest minus the
-    * hash-mod-3 "new today" subset), delta = [[DicomPipeline.manifestDelta]]
+    * [[newToday]] subset), delta = [[DicomPipeline.manifestDelta]]
     * of the true manifest vs the processed log with one drifted length
     * (the changed object re-admits) — the exact [[manifestDelta]] entry
     * construction, so the two entries rehearse one day-2 story. */
@@ -368,12 +376,10 @@ object DicomQueries {
     * streamed twin stages the delta manifest's objects into its source
     * dir instead of batch-extracting them. */
   private[graft] def dayTwoManifests(s: SparkSession): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.{abs, col, hash, pmod}
     val manifest = DicomPipeline.manifestOf(s, Fixtures)
-    val newToday = pmod(abs(hash(col("path"))), lit(3)) === 0
     val processedLog = manifest.filter(!newToday)
       // the changed object must come from the PROCESSED set (example-0;
-      // example-6 is hash-new already) or the drift is a no-op
+      // drifting a hash-new object is a no-op)
       .withColumn("length",
         when(col("path").endsWith("example-0"), col("length") + 1L)
           .otherwise(col("length")))

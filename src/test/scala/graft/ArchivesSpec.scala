@@ -8,7 +8,7 @@ import graft.ingest.Archives
   * (`src/s3wrapper.py` + `src/utils/utils.py` semantics). */
 class ArchivesSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/sample_dcm"
+  private val fixtures = graft.queries.DicomQueries.Fixtures
   private def read(name: String): Array[Byte] =
     Files.readAllBytes(Paths.get(s"$fixtures/$name"))
 

@@ -46,7 +46,7 @@ class CorruptInputSpec extends AnyFunSuite {
 
   test("truncated gzip tar → expand error") {
     val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/sample_dcm/example.tar.gz"))
+      java.nio.file.Paths.get(graft.queries.DicomQueries.Fixtures, "example.tar.gz"))
     val r = process("cut.tar.gz", bytes.take(100))
     assert(r.isLeft)
     val e = r.swap.toOption.get
@@ -57,7 +57,7 @@ class CorruptInputSpec extends AnyFunSuite {
     // loose .dcm reads are capped; a file larger than the cap truncated
     // mid-pixel-data must still yield its metadata (header precedes pixels)
     val big = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/sample_dcm/example-0"))
+      java.nio.file.Paths.get(graft.queries.DicomQueries.Fixtures, "example-0"))
     val r = process("example-0", big)
     assert(r.toOption.get.length == 1)
   }

@@ -6,11 +6,11 @@ import graft.dicom._
 import graft.dicom.VrConvert._
 
 /** Pure-core tests: parser golden checks against the reference fixtures
-  * (/root/reference/sample_dcm, read-only) + VR conversion quirk pins
+  * (`sample_dcm/`, read-only) + VR conversion quirk pins
   * (SURVEY.md §1.3 effective semantics). */
 class DicomCoreSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/sample_dcm"
+  private val fixtures = graft.queries.DicomQueries.Fixtures
   private def read(name: String): Array[Byte] =
     Files.readAllBytes(Paths.get(s"$fixtures/$name"))
 

@@ -9,7 +9,7 @@ import graft.pipeline.{Catalog, DicomPipeline}
   * SQL read, crawler merge. */
 class DicomPipelineSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/sample_dcm"
+  private val fixtures = graft.queries.DicomQueries.Fixtures
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")

@@ -15,7 +15,7 @@ class DicomSourceSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val fixtures = "/root/reference/sample_dcm"
+  private val fixtures = graft.queries.DicomQueries.Fixtures
 
   private lazy val df = spark.read.format("dicom").load(fixtures)
 

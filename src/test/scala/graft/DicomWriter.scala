@@ -46,17 +46,22 @@ object DicomWriter {
     element(group, elem, "SQ", body.toByteArray)
   }
 
-  /** Full file: preamble + DICM + minimal meta + the given data-set
-    * elements, under the given transfer syntax UID. */
+  /** Full file: preamble + DICM + meta + the given data-set elements,
+    * under the given transfer syntax UID. The meta group holds its group
+    * length, the transfer syntax and any further group-0002 `meta`
+    * elements, in tag order. */
   def file(elements: Seq[Array[Byte]],
-           transferSyntax: String = "1.2.840.10008.1.2.1"): Array[Byte] = {
+           transferSyntax: String = "1.2.840.10008.1.2.1",
+           meta: Seq[Array[Byte]] = Nil): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     out.write(new Array[Byte](128))
     out.write("DICM".getBytes)
-    val ts = strElement(0x0002, 0x0010, "UI", transferSyntax)
-    val groupLen = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(ts.length).array()
+    def elementNumber(e: Array[Byte]): Int = (e(2) & 0xff) | (e(3) & 0xff) << 8
+    val metaBody = (meta :+ strElement(0x0002, 0x0010, "UI", transferSyntax)).sortBy(elementNumber)
+    val groupLen = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
+      .putInt(metaBody.map(_.length).sum).array()
     out.write(element(0x0002, 0x0000, "UL", groupLen))
-    out.write(ts)
+    metaBody.foreach(out.write)
     elements.foreach(out.write)
     out.toByteArray
   }

@@ -22,6 +22,8 @@ import org.apache.spark.sql.SparkSession
   *  3. the batch frames are built from Catalyst rows: a row encoder's
   *     serializer is generated per task, which cost more than the
   *     extraction itself (BENCH_NOTES.md). A source-shape guard too.
+  *  4. every DICOM fixture read resolves through `DicomQueries.Fixtures`
+  *     (the committed `sample_dcm/`), never a path of its own.
   */
 class ExtractionScaleSpec extends AnyFunSuite {
 
@@ -63,10 +65,32 @@ class ExtractionScaleSpec extends AnyFunSuite {
 
   /** The code of a `src/main/scala` file, without its comments. */
   private def code(file: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"src/main/scala/$file")), "UTF-8")
+    codeAt(java.nio.file.Paths.get(s"src/main/scala/$file"))
+
+  private def codeAt(path: java.nio.file.Path): String =
+    new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
       .linesIterator.map(_.replaceFirst("//.*$", ""))
-      .filterNot(_.trim.startsWith("*")).mkString("\n")
+      .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/*") }
+      .mkString("\n")
+
+  test("DICOM fixture paths come from DicomQueries.Fixtures alone") {
+    // the set is committed at sample_dcm/: a spec-local path to it, or a
+    // path into the reference's own checkout, reads files that a checkout
+    // may not hold. Only the definition and the generator name the
+    // directory; comments may still cite the reference's files.
+    val checkout = ("/" + "reference" + "(/|\")").r // split so this file does not match itself
+    val owners = Set("src/main/scala/graft/queries/DicomQueries.scala",
+                     "src/test/scala/graft/SampleDcm.scala")
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+    val hits = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.map(_.toString).filter(_.endsWith(".scala")).filter { f =>
+        val c = codeAt(java.nio.file.Paths.get(f))
+        checkout.findFirstIn(c).isDefined || (c.contains("sample_" + "dcm") && !owners(f))
+      }.toList.sorted
+    } finally walk.close()
+    assert(hits.isEmpty, s"fixture paths outside DicomQueries.Fixtures: ${hits.mkString(", ")}")
+  }
 
   test("every DicomPipeline and compactPartition write passes the fork-free options") {
     // the write-side twin of the listing guard: a write on the stock

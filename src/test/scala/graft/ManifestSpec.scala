@@ -74,7 +74,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("manifest route ≡ listed route on the reference fixture set") {
-    val fixtures = "/root/reference/sample_dcm"
+    val fixtures = graft.queries.DicomQueries.Fixtures
     val listed = snapshot(DicomPipeline.extract(spark, fixtures, "bkt", "reg"))
     val viaManifest = snapshot(DicomPipeline.extractFromManifest(
       spark, DicomPipeline.manifestOf(spark, fixtures), "bkt", "reg"))

@@ -16,7 +16,7 @@ class MultimodalSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val fixtures = "/root/reference/sample_dcm"
+  private val fixtures = graft.queries.DicomQueries.Fixtures
 
   test("media type sniffed from magic bytes, not extension") {
     val types = Multimodal.loadAssets(spark, fixtures)

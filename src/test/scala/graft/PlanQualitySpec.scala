@@ -63,7 +63,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("dicom V2 source scan reports pruned columns") {
     val pruned = spark.read.format("dicom")
-      .load("/root/reference/sample_dcm").select("modality")
+      .load(graft.queries.DicomQueries.Fixtures).select("modality")
     val leaf = pruned.queryExecution.executedPlan.collectLeaves().head.toString
     assert(leaf.contains("columns=[modality]"))
   }

@@ -21,7 +21,7 @@ class SizeRouterSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val fixtures = "/root/reference/sample_dcm"
+  private val fixtures = graft.queries.DicomQueries.Fixtures
 
   /** Canonical (rows, errors) snapshot of an extract run. */
   private def snapshot(maxInline: Option[Long]): (Seq[String], Seq[(String, String)]) = {
