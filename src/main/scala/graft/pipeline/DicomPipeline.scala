@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.io.{ByteArrayInputStream, InputStream}
+import java.io.InputStream
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
@@ -8,17 +8,20 @@ import org.apache.spark.sql.{DataFrame, GraftFrames, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import graft.dicom.{DicomParser, Flatten, Tags, VrConvert}
 import graft.ingest.Archives
+import graft.sources.{DicomSourceUtil, SerializableHadoopConf}
 import graft.util.ForkFreeLocalFileSystem
 
 /** The end-to-end metadata-extraction job (SURVEY.md §3 E1/E2 collapsed
   * into one Spark job):
   *
-  *   binaryFile scan → flatMap(route ∘ expand ∘ parse ∘ flatten)
+  *   list (path, length) → pack tasks → per task: open each stored object
+  *     → route ∘ expand ∘ parse ∘ flatten
   *     → observed-schema finalize → snake_case rename
   *     → write.partitionBy(study_date) snappy parquet
   *   + error side-channel (the DLQ analog, SURVEY §2.1 S10).
@@ -28,16 +31,17 @@ import graft.util.ForkFreeLocalFileSystem
   * message); a failed object contributes zero rows and one error record.
   *
   * Scale design:
-  *  - the parse/flatten runs entirely in executors (one task per file
-  *    slice of the binaryFile scan — at 100 TB this is the linear,
-  *    embarrassingly-parallel stage);
+  *  - the driver plans on metadata only (a (path, length) listing or
+  *    manifest); each task opens its objects itself and runs the
+  *    parse/flatten in executors — at 100 TB this is the linear,
+  *    embarrassingly-parallel stage;
   *  - the only driver interaction is collecting the OBSERVED KEY SET
   *    (bounded by the static tag dictionary, ~130 keywords — a few KB —
   *    never row data) to build the batch schema, mirroring the
   *    reference's per-batch drop-all-null dynamic schema
   *    (`src/app.py:39-41`);
-  *  - the parsed intermediate is persisted (MEMORY_AND_DISK_SER) so the
-  *    key-scan and the row materialization don't re-parse binaries;
+  *  - the per-object outcomes are persisted (MEMORY_AND_DISK_SER) so the
+  *    key-scan and the row materialization don't re-read storage;
   *  - the partitioned write uses Hive-style `study_date=` layout →
   *    partition-pruned reads for free (Catalyst
   *    `PruneFileSourcePartitions`).
@@ -65,11 +69,11 @@ object DicomPipeline {
 
   /** Process ONE source object end-to-end (pure; runs on executors):
     * [[Archives.members]] routes it by extension and visits its members,
-    * each parsed and flattened as soon as its bytes are read. Every route
-    * calls this with its own opener — the packed scan wraps the bytes it
-    * already holds, the oversized and manifest routes and the
-    * `format("dicom")` source open the stored object ([[fsOpener]]) — so
-    * what is computed never depends on where it ran.
+    * each parsed and flattened as soon as its bytes are read. Every
+    * reader opens the stored object through [[fsOpener]] — [[extract]],
+    * [[extractFromManifest]] and streaming micro-batches via
+    * [[readObjects]], and the `format("dicom")` source per file — so what
+    * is computed never depends on which entry point ran.
     *
     * The first failing member fails the whole object: ONE error record,
     * tagged with its DLQ stage, and no partial rows. A member whose
@@ -108,13 +112,33 @@ object DicomPipeline {
     p.getFileSystem(conf).open(p)
   }
 
-  /** One fork-free driver walk over `inputPath` — the listed route,
+  /** The one per-object reader: each task opens the stored objects of
+    * its partition ([[fsOpener]]) and runs [[processObject]] on them.
+    * [[extract]], [[extractFromManifest]] and each streaming micro-batch
+    * read through it. The Hadoop configuration ships as ONE broadcast,
+    * fetched once per executor; captured in the closure, it would be
+    * serialized into every task. */
+  private def readObjects(paths: RDD[String], bucket: String, region: String): RDD[Outcome] = {
+    val sc = paths.sparkContext
+    val conf = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
+    paths.map(p => processObject(bucket, region, p, fsOpener(p, conf.value.value)))
+  }
+
+  /** Spark's hidden-name rule (`HadoopFSUtils.shouldFilterOutPathName`
+    * plus the file index's data-path check): `_`-prefixed without `=`,
+    * `.`-prefixed, or an in-flight `._COPYING_` upload. A `_key=value`
+    * partition directory stays visible. */
+  private def hiddenName(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** One fork-free driver walk over `inputPath` — [[extract]],
     * [[manifestOf]] and the `format("dicom")` source all list through it:
-    * every visible file as (path, length), hidden-pruned exactly like
-    * Spark's InMemoryFileIndex
-    * (`_`/`.` prefixes invisible at ANY discovered level; the explicitly
-    * named root is always accepted — Spark applies its path filter to
-    * discovered children, not to the path you name).
+    * every visible file as (path, length), pruned by [[hiddenName]] at
+    * every discovered level, so it lists what a `binaryFile` scan of the
+    * same path lists (the explicitly named root is always accepted —
+    * Spark applies its path filter to discovered children, not to the
+    * path you name). A missing path fails, naming it.
     *
     * listStatusIterator, NOT listFiles(recursive): the located variant
     * materializes a LocatedFileStatus per file, which on the local
@@ -125,85 +149,43 @@ object DicomPipeline {
   private[graft] def walkFiles(conf: Configuration, inputPath: String): Seq[(String, Long)] = {
     val p = new Path(inputPath)
     val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Nil
-    else {
-      val files = Seq.newBuilder[(String, Long)]
-      def hidden(name: String): Boolean =
-        name.startsWith("_") || name.startsWith(".")
-      def walk(st: org.apache.hadoop.fs.FileStatus, isRoot: Boolean): Unit =
-        if (!isRoot && hidden(st.getPath.getName)) ()
-        else if (st.isDirectory) {
-          val it = fs.listStatusIterator(st.getPath)
-          while (it.hasNext) walk(it.next(), isRoot = false)
-        } else files += ((st.getPath.toString, st.getLen))
-      walk(fs.getFileStatus(p), isRoot = true)
-      files.result()
-    }
+    val files = Seq.newBuilder[(String, Long)]
+    def walk(st: org.apache.hadoop.fs.FileStatus, isRoot: Boolean): Unit =
+      if (!isRoot && hiddenName(st.getPath.getName)) ()
+      else if (st.isDirectory) {
+        val it = fs.listStatusIterator(st.getPath)
+        while (it.hasNext) walk(it.next(), isRoot = false)
+      } else files += ((st.getPath.toString, st.getLen))
+    walk(fs.getFileStatus(p), isRoot = true)
+    files.result()
   }
 
-  /** Zero-length files never produce scan splits (Spark file-source
-    * planning skips them), yet the reference's canonical failure fixture
-    * is an EMPTY `DICOMDIR` whose error record we must emit
-    * (README.md:116). One driver walk, two route lists: the empties and
-    * the OVERSIZED files (> maxInline bytes) for the S11 streamed route
-    * — an oversized `_temporary` leftover must not produce rows the
-    * packed route would never have produced (shared hidden rule). */
-  private def listRoutes(spark: SparkSession, inputPath: String,
-                         maxInline: Long): (Seq[String], Seq[String]) = {
-    val files = walkFiles(spark.sparkContext.hadoopConfiguration, inputPath)
-    (files.collect { case (p, 0L) => p },
-     files.collect { case (p, len) if len > maxInline => p })
-  }
-
-  /** Size threshold above which an object leaves the packed scan for the
-    * dedicated streamed route. Default mirrors the reference's 500 MB
-    * Lambda/Batch split (`src/app.py:25,118`) — with the difference that
-    * OUR override actually works (the reference reads the env var as a
-    * string and the `>` comparison with an int raises, so only its
-    * default path ever runs; COMPAT.md). */
-  private def maxInlineBytes(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.route.maxInlineBytes",
-      (500L * 1024 * 1024).toString).toLong
-
-  /** Read binaries and run the extraction flatMap. `bucket`/`region` are
+  /** List `inputPath` and run the extraction. `bucket`/`region` are
     * lineage constants (the storage coordinates of `inputPath`).
     *
-    * SIZE ROUTER (reference S11, `src/app.py:118-181`, as a scan
-    * strategy): objects ≤ maxInline ride the packed `binaryFile` scan
-    * (many small objects per task — the "Lambda" economics); objects
-    * above it are EXCLUDED from the scan by a pushed `length` filter
-    * (BinaryFileFormat skips their content entirely) and take a
-    * dedicated one-object-per-task streamed route instead (the
-    * "Batch" economics: isolated compute, bounded memory) that opens
-    * the stored object. Both routes run [[processObject]], so WHAT is
-    * computed never depends on WHERE it ran; SizeRouterSpec pins
-    * route-invariance. The per-object outcomes are persisted
+    * The driver plans on metadata alone and every task reads storage
+    * directly ([[readObjects]]): the (path, length) list of the one
+    * [[walkFiles]] walk is packed largest-first under the split size a
+    * `binaryFile` scan of the same files would use
+    * (`FilePartition.maxSplitBytes`, each file costing its length plus
+    * `spark.sql.files.openCostInBytes`), so the task count matches
+    * Spark's file-source planning. Size routing (reference S11,
+    * `src/app.py:118-181`) falls out of the packing: an object larger
+    * than the split size runs alone in its task, and no object is ever
+    * held whole — a loose `.dcm` reads at most its 10 MB range, archives
+    * stream member by member. Zero-length objects (the reference's empty
+    * `DICOMDIR` failure fixture) are packed like any other and reach
+    * the errors channel. The per-object outcomes are persisted
     * (MEMORY_AND_DISK_SER) so the key scan and the row materialization
-    * don't re-read binaries; [[write]] releases them. */
+    * don't re-read storage; [[write]] releases them. */
   def extract(spark: SparkSession, inputPath: String,
               bucket: String = "local", region: String = "local"): Extracted = {
-    val maxInline = maxInlineBytes(spark)
-    // recursiveFileLookup keeps the scan consistent with listRoutes'
-    // recursive walk (nested dirs yield rows AND their empties error)
-    val bin = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(inputPath)
-      .filter(org.apache.spark.sql.functions.col("length") <= maxInline)
-      .select("path", "content")
-    val packed = scanned(bin, bucket, region)
-    val (empties, larges) = listRoutes(spark, inputPath, maxInline)
-    val outcomes =
-      if (empties.isEmpty && larges.isEmpty) packed
-      else {
-        val conf = new graft.sources.SerializableHadoopConf(
-          spark.sparkContext.hadoopConfiguration)
-        // one task per oversized object: a 50 GB archive never shares its
-        // task (or its memory budget) with a thousand small objects
-        val paths = spark.sparkContext.parallelize(empties, math.max(1, empties.size min 32)) ++
-          spark.sparkContext.parallelize(larges, math.max(1, larges.size))
-        packed ++ paths.map(p => processObject(bucket, region, p, fsOpener(p, conf.value)))
-      }
-    Extracted(outcomes.persist(StorageLevel.MEMORY_AND_DISK_SER))
+    val files = walkFiles(spark.sparkContext.hadoopConfiguration, inputPath)
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val splitBytes = FilePartition.maxSplitBytes(spark, files.map(_._2 + openCost).sum)
+    val tasks = DicomSourceUtil.packPartitions(files, splitBytes, openCost)
+    val paths = spark.sparkContext.parallelize(tasks, math.max(1, tasks.size)).flatMap(identity)
+    Extracted(readObjects(paths, bucket, region).persist(StorageLevel.MEMORY_AND_DISK_SER))
   }
 
   /** Local/HDFS convenience builder for [[extractFromManifest]]: the same
@@ -246,75 +228,63 @@ object DicomPipeline {
   }
 
   /** Manifest-driven twin of [[extract]] — the 10M+-object batch entry
-    * point. Routing decisions (empty / packed / oversized) come from the
-    * manifest's `length` column, and small-object content is read INSIDE
-    * tasks, so the driver performs ZERO filesystem listing or metadata
-    * calls: its only per-corpus state is the manifest DataFrame (itself
-    * typically a parquet scan). This removes the InMemoryFileIndex
-    * driver-listing ceiling the directory entry point inherits from
-    * Spark's file sources.
+    * point. Task layout comes from the manifest's `length` column and
+    * every object is read INSIDE tasks ([[readObjects]]), so the driver
+    * performs ZERO filesystem listing or metadata calls: its only
+    * per-corpus state is the manifest DataFrame (itself typically a
+    * parquet scan). This removes the driver-listing ceiling the directory
+    * entry point inherits from walking the store.
     *
-    * Route parity with [[extract]]: every object goes through
-    * [[processObject]], reading the stored object through [[fsOpener]]
-    * (a loose `.dcm` reads at most the 10 MB range, archives stream
-    * member by member; nothing is persisted), and the hidden rule
-    * applies SEGMENT-WISE to manifest rows (an inventoried
-    * `_temporary/part.dcm` leftover stays invisible exactly as the packed
-    * scan's recursive walk would hide it — inventories are produced by
+    * Parity with [[extract]]: the same reader and the same
+    * [[hiddenName]] rule, applied SEGMENT-WISE to manifest rows (an
+    * inventoried `_temporary/part.dcm` leftover stays invisible exactly
+    * as the directory walk would hide it — inventories are produced by
     * listing stores wholesale, so Spark-job detritus WILL appear in
     * them; a corpus deliberately rooted under a dot-directory must be
-    * inventoried with paths relative to that root). ManifestSpec pins
-    * rows+errors equality against the listed route on the same corpus.
+    * inventoried with paths relative to that root). Nothing is
+    * persisted. ManifestSpec pins rows+errors equality against
+    * [[extract]] on the same corpus.
     *
-    * Partitioning: small objects pack many-per-task, task count sized by
-    * manifest byte totals (≈ `spark.sql.files.maxPartitionBytes` per
-    * task — the same economics as Spark's own file packing, computed
-    * from the manifest instead of a listing); oversized objects keep the
-    * S11 one-object-per-task isolation. */
+    * Partitioning: objects up to `spark.sql.files.maxPartitionBytes`
+    * pack many-per-task, task count sized by manifest byte totals (≈ that
+    * many bytes per task — Spark's own file-packing economics, computed
+    * from the manifest instead of a listing); larger objects run one per
+    * task; zero-length objects keep the manifest's own partitions. */
   def extractFromManifest(spark: SparkSession, manifest: DataFrame,
                           bucket: String = "local", region: String = "local"): Extracted = {
     // named imports: functions.bucket would shadow the lineage parameter
-    import org.apache.spark.sql.functions.{coalesce, col, count, exists, lit, split, sum}
-    val maxInline = maxInlineBytes(spark)
-    val hiddenSegment = exists(split(col("path"), "/"),
-      s => s.startsWith("_") || s.startsWith("."))
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, udf}
+    val invisible = udf((p: String) => p == null || p.split('/').exists(hiddenName))
     val m = manifest
       .select(col("path").cast("string").as("path"), col("length").cast("long").as("length"))
-      .filter(!hiddenSegment)
-    val small = m.filter(col("length") > 0 && col("length") <= maxInline)
+      .filter(!invisible(col("path")))
+    val bytesPerTask = math.max(1L,
+      spark.sessionState.conf.filesMaxPartitionBytes)
+    val small = m.filter(col("length") > 0 && col("length") <= bytesPerTask)
     // two scalar aggregates are the ONLY driver-side materialization —
     // they size the task layout, never enumerate objects
     val st = small.agg(count(lit(1)), coalesce(sum(col("length")), lit(0L))).head()
     val (nSmall, smallBytes) = (st.getLong(0), st.getLong(1))
-    val bytesPerTask = math.max(1L,
-      spark.sessionState.conf.filesMaxPartitionBytes)
     val smallParts = math.max(1, math.min(nSmall,
       math.max(spark.sparkContext.defaultParallelism.toLong,
         1L + smallBytes / bytesPerTask)).toInt)
     def paths(df: DataFrame): RDD[String] = df.select("path").rdd.map(_.getString(0))
-    val large = m.filter(col("length") > maxInline)
+    val large = m.filter(col("length") > bytesPerTask)
     val nLarge = math.min(large.count(), 1L << 20).toInt
     val all = paths(small).repartition(smallParts) ++
       paths(m.filter(col("length") === 0)) ++
       (if (nLarge == 0) spark.sparkContext.emptyRDD[String]
        else paths(large).repartition(nLarge))
-    val conf = new graft.sources.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    Extracted(all.map(p => processObject(bucket, region, p, fsOpener(p, conf.value))))
+    Extracted(readObjects(all, bucket, region))
   }
 
-  /** The packed-scan route over a (path, content) DataFrame: many small
-    * objects per task, each read from the bytes the scan already holds. */
-  private def scanned(bin: DataFrame, bucket: String, region: String): RDD[Outcome] =
-    bin.rdd.map { r =>
-      val content = r.getAs[Array[Byte]](1)
-      processObject(bucket, region, r.getString(0), () => new ByteArrayInputStream(content))
-    }
-
-  /** [[extract]] over an already-loaded (path, content) DataFrame — the
-    * streaming foreachBatch's entry. Persisted like [[extract]]'s. */
-  def extractFromBinary(bin: DataFrame, bucket: String, region: String): Extracted =
-    Extracted(scanned(bin, bucket, region).persist(StorageLevel.MEMORY_AND_DISK_SER))
+  /** [[extract]] over a DataFrame whose first column holds object paths —
+    * the streaming foreachBatch's entry (the `binaryFile` stream's `path`
+    * column: the stream discovers objects, the reader opens them).
+    * Persisted like [[extract]]'s. */
+  def extractFromPaths(paths: DataFrame, bucket: String, region: String): Extracted =
+    Extracted(readObjects(paths.rdd.map(_.getString(0)), bucket, region)
+      .persist(StorageLevel.MEMORY_AND_DISK_SER))
 
   /** The PN struct type (7 string fields, `tags.py:56-65` order). */
   val pnStruct: StructType = StructType(Seq(

@@ -3,6 +3,7 @@ package graft.sources
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -18,8 +19,8 @@ import graft.pipeline.DicomPipeline
   *
   * The ergonomic face of the engine (SURVEY.md §7.3 "optional
   * DataSource V2 FileFormat"): the batch pipeline's recursive,
-  * hidden-pruned listing (`_`/`.` paths are invisible, as in the packed
-  * scan) and its per-object reader
+  * hidden-pruned listing (the paths a `binaryFile` scan would skip are
+  * invisible) and its per-object reader
   * ([[graft.pipeline.DicomPipeline.processObject]] over the stored
   * object: 10 MB range for loose `.dcm`, archives streamed member by
   * member), schema inferred from a bounded file sample (or
@@ -102,9 +103,11 @@ object DicomSourceUtil {
     * bin packing): one-task-per-file melts the scheduler at millions of
     * objects; one giant task starves parallelism. Files are sorted
     * largest-first and greedily assigned under `maxBytes` (with at least
-    * one file per partition). */
-  def packPartitions(files: Seq[(String, Long)],
-                     maxBytes: Long): Seq[Seq[String]] = {
+    * one file per partition), so a file larger than `maxBytes` runs
+    * alone. Each placed file also charges `openCost`, exactly as Spark's
+    * `FilePartition.getFilePartitions` does. */
+  def packPartitions(files: Seq[(String, Long)], maxBytes: Long,
+                     openCost: Long = 0L): Seq[Seq[String]] = {
     val out = Vector.newBuilder[Seq[String]]
     var current = Vector.empty[String]
     var bytes = 0L
@@ -113,7 +116,7 @@ object DicomSourceUtil {
       if (current.nonEmpty && bytes + cost > maxBytes) {
         out += current; current = Vector.empty; bytes = 0L
       }
-      current :+= f; bytes += cost
+      current :+= f; bytes += cost + openCost
     }
     if (current.nonEmpty) out += current
     out.result()
@@ -160,10 +163,10 @@ object DicomSourceUtil {
     val keys: Seq[String] =
       if (distributed && SparkSession.getActiveSession.isDefined) {
         val sc = SparkSession.active.sparkContext
-        val sconf = new SerializableHadoopConf(conf)
+        val sconf = sc.broadcast(new SerializableHadoopConf(conf))
         val parts = math.max(1, math.min(files.size, sc.defaultParallelism * 4))
         sc.parallelize(files, parts)
-          .flatMap(f => rowsOf(f, sconf.value, failOnError = false)
+          .flatMap(f => rowsOf(f, sconf.value.value, failOnError = false)
             .iterator.flatMap(_.collect {
               case (k, v) if v != VrConvert.DNull => k
             }).toSet)
@@ -256,21 +259,23 @@ class DicomScan(required: StructType, paths: Seq[String],
     DicomSourceUtil.packPartitions(files, maxPartitionBytes)
       .map(DicomInputPartition.apply).toArray
   }
+  // one broadcast of the configuration, not a copy inside every task
   override def createReaderFactory(): PartitionReaderFactory =
     new DicomReaderFactory(required, failOnError,
-      new SerializableHadoopConf(DicomSourceUtil.sessionConf()))
+      SparkSession.active.sparkContext.broadcast(
+        new SerializableHadoopConf(DicomSourceUtil.sessionConf())))
 }
 
 class DicomReaderFactory(required: StructType, failOnError: Boolean,
-                         conf: SerializableHadoopConf)
+                         conf: Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new DicomPartitionReader(p.asInstanceOf[DicomInputPartition].files,
-      required, failOnError, conf)
+      required, failOnError, conf.value.value)
 }
 
 class DicomPartitionReader(files: Seq[String], required: StructType,
-                           failOnError: Boolean, conf: SerializableHadoopConf)
+                           failOnError: Boolean, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   // source keywords in output order
@@ -282,7 +287,7 @@ class DicomPartitionReader(files: Seq[String], required: StructType,
 
   private lazy val iter: Iterator[InternalRow] =
     files.iterator.flatMap { file =>
-      DicomSourceUtil.rowsOf(file, conf.value, failOnError, Some(keep))
+      DicomSourceUtil.rowsOf(file, conf, failOnError, Some(keep))
         .iterator.map(DicomPipeline.internalRow(keywords, _))
     }
 

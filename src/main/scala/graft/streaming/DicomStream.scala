@@ -7,10 +7,11 @@ import graft.pipeline.DicomPipeline
 /** Event-driven ingest parity (SURVEY.md §2.5): the reference's "stream"
   * is one Lambda invocation per S3 `ObjectCreated` event
   * (`src/app.py:97-108`) — exactly Structured Streaming's file-source
-  * semantics. `readStream.format("binaryFile")` discovers new objects;
-  * `foreachBatch` runs the SAME extraction and write the batch job
-  * uses; the checkpointed source log gives exactly-once file
-  * processing — a deliberate improvement over the reference, which
+  * semantics. `readStream.format("binaryFile")` discovers new objects
+  * (its `path` column only: the source never reads their content);
+  * `foreachBatch` opens them through the SAME per-object reader and
+  * write the batch job uses; the checkpointed source log gives
+  * exactly-once file processing — a deliberate improvement over the reference, which
   * reprocesses re-uploaded objects (no idempotency check, SURVEY §2.5).
   */
 object DicomStream {
@@ -29,12 +30,12 @@ object DicomStream {
       StructField("length", LongType), StructField("content", BinaryType)))
     var reader = spark.readStream.format("binaryFile").schema(binSchema)
     maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
-    val bin = reader.load(inputPath).select("path", "content")
-    var writer = bin.writeStream
+    val paths = reader.load(inputPath).select("path")
+    var writer = paths.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         DicomPipeline.write(batch.sparkSession,
-          DicomPipeline.extractFromBinary(batch, "local", "local"), outPath, Some(errorPath))
+          DicomPipeline.extractFromPaths(batch, "local", "local"), outPath, Some(errorPath))
         ()
       }
     if (availableNow) writer = writer.trigger(Trigger.AvailableNow())

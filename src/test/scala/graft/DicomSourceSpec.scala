@@ -94,6 +94,58 @@ class DicomSourceSpec extends AnyFunSuite {
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 
+  test("every read lists exactly what a binaryFile scan lists") {
+    import java.nio.file.Files
+    import graft.pipeline.DicomPipeline
+    val dir = Files.createTempDirectory("graft-source-listing")
+    try {
+      val dcm = DicomWriter.file(Seq(DicomWriter.strElement(0x0008, 0x0060, "CS", "CT")))
+      // a partition-style `_x=1` dir is visible; an in-flight `._COPYING_`
+      // upload and a `_metadata` file are not
+      Files.write(dir.resolve("a.dcm"), dcm)
+      Files.write(dir.resolve("b.dcm._COPYING_"), dcm)
+      Files.createDirectories(dir.resolve("_x=1"))
+      Files.write(dir.resolve("_x=1/c.dcm"), dcm)
+      Files.write(dir.resolve("_metadata"), dcm)
+      val listed = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
+        .load(dir.toString).select("path").collect().map(_.getString(0)).toSet
+      assert(listed.map(_.split('/').last) == Set("a.dcm", "c.dcm"))
+      // every visible object yields rows or an error, so its key is seen
+      def keys(ex: DicomPipeline.Extracted): Set[String] =
+        ex.rows.collect().flatMap(_.values.get(graft.dicom.Flatten.LineageKey))
+          .map { case graft.dicom.VrConvert.DStr(k) => k; case v => v.toString }.toSet ++
+          ex.errors.collect().map(_.source_s3_key)
+      val manifest = DicomPipeline.manifestOf(spark, dir.toString)
+      assert(manifest.collect().map(_.getString(0)).toSet == listed, "manifestOf")
+      assert(keys(DicomPipeline.extract(spark, dir.toString, "bkt", "reg")) == listed, "extract")
+      assert(keys(DicomPipeline.extractFromManifest(spark, manifest, "bkt", "reg")) == listed,
+        "extractFromManifest")
+      val source = spark.read.format("dicom").option("failOnError", "true").load(dir.toString)
+      assert(source.select("source_s3_key").collect().map(_.getString(0)).toSet == listed,
+        "format(\"dicom\")")
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
+  test("a missing input path fails every read, naming the path") {
+    import graft.pipeline.DicomPipeline
+    val dir = java.nio.file.Files.createTempDirectory("graft-source-missing")
+    try {
+      val missing = dir.resolve("no-such-input").toString
+      def failure(read: => Any): String = {
+        val e = intercept[Exception](read)
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).mkString(" / ")
+      }
+      Seq(
+        "extract" -> failure(DicomPipeline.extract(spark, missing, "bkt", "reg")),
+        "manifestOf" -> failure(DicomPipeline.manifestOf(spark, missing)),
+        "format(\"dicom\")" -> failure(spark.read.format("dicom").load(missing).count())
+      ).foreach { case (surface, msg) =>
+        assert(msg.contains("no-such-input"), s"$surface: $msg")
+      }
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
   test("small read uses few partitions, not one per file") {
     assert(df.rdd.getNumPartitions <= 2) // 6 files, ~5 MB total, 128 MB cap
   }

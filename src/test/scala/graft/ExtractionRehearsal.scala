@@ -4,8 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Extraction-path scale rehearsal: push ~9.5k synthetic DICOM objects
   * (loose files + zip archives) through the REAL pipeline entry point
-  * (`binaryFile` scan → route → expand → parse → flatten → finalize →
-  * partitioned snappy write) and record throughput, task-time skew, and
+  * (listing → per-task object reads → route → expand → parse → flatten
+  * → finalize → partitioned snappy write) and record throughput, task-time skew, and
   * output-file counts. This is the reference's whole job
   * (`src/app.py:97-189`) at ~1000× its per-invocation object count —
   * the evidence that the driver listing, task granularity, and dynamic
@@ -91,11 +91,10 @@ object ExtractionRehearsal {
         if (t.taskInfo != null) durations.add(t.taskInfo.duration)
     })
 
-    // driver listing cost in isolation: path-only projection of the scan
+    // driver listing cost in isolation: the walk extract() plans on
     val tList0 = System.nanoTime()
-    val listed = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(input.toString).select("path").count()
+    val listed = graft.pipeline.DicomPipeline.walkFiles(
+      spark.sparkContext.hadoopConfiguration, input.toString).size.toLong
     val listSec = (System.nanoTime() - tList0) / 1e9
 
     // phase breakdown first (same entry points run() composes), then the
@@ -130,7 +129,7 @@ object ExtractionRehearsal {
     // driver cost — two scalar aggregates over the manifest scan decide
     // the whole task layout, so it stays flat as object count grows,
     // where the listed route's construction embeds the serial driver
-    // walk + InMemoryFileIndex listing. Parity with the listed route is
+    // walk. Parity with the listed route is
     // asserted at rehearsal scale, not just fixture scale.
     val manifestPq = scratch.resolve("manifest").toString
     val (_, invSec) = phase("manifest inventory walk") {
@@ -233,16 +232,16 @@ object ExtractionRehearsal {
       val packedSec = (System.nanoTime() - tp0) / 1e9
       require(gotPacked == nMembers && exA.errors.count() == 0,
         s"archive arm parity: $gotPacked/$nMembers members")
-      // same corpus through the oversized streamed route: force every
-      // archive over maxInline so each takes its own task
-      spark.conf.set("spark.graft.route.maxInlineBytes", "1024")
+      // same corpus one archive per task: a split size below every
+      // archive's length gives each its own task
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
       val ts0 = System.nanoTime()
       val exS = try {
         val e = graft.pipeline.DicomPipeline.extract(spark, aDir.toString, "rehearsal", "local")
         require(e.rows.count() == nMembers && e.errors.count() == 0,
           "streamed-route archive parity broke")
         e
-      } finally spark.conf.unset("spark.graft.route.maxInlineBytes")
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
       val streamedSec = (System.nanoTime() - ts0) / 1e9
       System.err.println(
         f"[rehearsal] archives $nArch%5d x $perArch: packed ${fmt(packedSec)}s " +

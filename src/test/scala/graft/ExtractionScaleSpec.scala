@@ -24,6 +24,8 @@ import org.apache.spark.sql.SparkSession
   *     extraction itself (BENCH_NOTES.md). A source-shape guard too.
   *  4. every DICOM fixture read resolves through `DicomQueries.Fixtures`
   *     (the committed `sample_dcm/`), never a path of its own.
+  *  5. the Hadoop configuration reaches tasks as one broadcast, never
+  *     as a copy serialized into each task. A source-shape guard too.
   */
 class ExtractionScaleSpec extends AnyFunSuite {
 
@@ -35,23 +37,23 @@ class ExtractionScaleSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("listRoutes keeps the fork-free status walk") {
+  test("walkFiles keeps the fork-free status walk") {
     def source(file: String): String =
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"src/main/scala/graft/$file")), "UTF-8")
         .linesIterator.map(_.replaceFirst("//.*$", "")) // the Scaladoc/comments
         .mkString("\n")                                 // NAME the banned API
     val banned = Seq("listFiles(", "listLocatedStatus", "LocatedFileStatus")
-    // walkFiles is the shared walk (listRoutes, manifestOf and the dicom
-    // source all ride it)
+    // walkFiles is the shared walk (extract, manifestOf and the dicom
+    // source all ride it); it ends where extract begins
     val pipeline = source("pipeline/DicomPipeline.scala")
-    val walk = pipeline.substring(pipeline.indexOf("def walkFiles"),
-      pipeline.indexOf("def maxInlineBytes"))
+    val from = pipeline.indexOf("def walkFiles")
+    val walk = pipeline.substring(from, pipeline.indexOf("def extract(", from))
     assert(walk.contains("listStatusIterator"),
-      "listRoutes no longer uses the plain status walk")
+      "walkFiles no longer uses the plain status walk")
     banned.foreach { bad =>
       assert(!walk.contains(bad),
-        s"listRoutes reintroduced the forking located-status API: $bad")
+        s"walkFiles reintroduced the forking located-status API: $bad")
     }
     // the format("dicom") source lists through walkFiles, never on its own
     val dataSource = source("sources/DicomDataSource.scala")
@@ -126,6 +128,27 @@ class ExtractionScaleSpec extends AnyFunSuite {
         .filter(f => f.endsWith(".scala") && code(f).contains("internalCreateDataFrame")).toList
     } finally walk.close()
     assert(shims == List("org/apache/spark/sql/GraftFrames.scala"))
+  }
+
+  test("the Hadoop configuration reaches tasks only as a broadcast") {
+    // a SerializableHadoopConf captured in a closure or a reader factory
+    // is serialized into every task; a broadcast ships once per executor
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val sites = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.map(_.toString.stripPrefix("src/main/scala/"))
+        .filter(_.endsWith(".scala")).toList.flatMap { f =>
+          val src = code(f)
+          val all = "new SerializableHadoopConf\\(".r.findAllIn(src).size
+          val broadcast = "broadcast\\(\\s*new SerializableHadoopConf\\(".r.findAllIn(src).size
+          if (all == 0) Nil else List((f, all, broadcast))
+        }
+    } finally walk.close()
+    assert(sites.nonEmpty, "no SerializableHadoopConf is built under src/main")
+    val captured = sites.collect { case (f, all, broadcast) if all != broadcast =>
+      s"$f: ${all - broadcast} of $all"
+    }
+    assert(captured.isEmpty, s"not built as a broadcast argument: ${captured.mkString("; ")}")
   }
 
   private def dcm(i: Int): Array[Byte] = DicomWriter.file(Seq(

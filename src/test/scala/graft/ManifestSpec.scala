@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.pipeline.DicomPipeline
 
-/** Manifest-driven batch entry point (the 10M+-object path): routing and
-  * content reads are driven by a (path, length) inventory, the driver
-  * never lists the store. The contract under test is ROUTE PARITY — the
-  * manifest route must reproduce the listed route's rows AND errors
-  * byte-for-byte on the same corpus, across all three physical routes
-  * (packed small, zero-length error channel, oversized streamed).
+/** Manifest-driven batch entry point (the 10M+-object path): task
+  * layout and content reads are driven by a (path, length) inventory, the
+  * driver never lists the store. The contract under test is ROUTE PARITY
+  * — the manifest route must reproduce the listed route's rows AND errors
+  * byte-for-byte on the same corpus, across all three task layouts
+  * (small objects packed, zero-length objects, objects above
+  * `spark.sql.files.maxPartitionBytes` alone in their task).
   */
 class ManifestSpec extends AnyFunSuite {
 
@@ -39,8 +40,8 @@ class ManifestSpec extends AnyFunSuite {
       (0 until 4).foreach(i => Files.write(dir.resolve(f"loose-$i.dcm"), smallDcm(i)))
       val nested = Files.createDirectory(dir.resolve("nested"))
       Files.write(nested.resolve("deep.dcm"), smallDcm(40))
-      // the "oversized" object: a zip of two members, routed streamed by
-      // a threshold between the loose size and the zip size
+      // the "oversized" object: a zip of two members, alone in its task
+      // under a split size between the loose size and the zip size
       val bo = new java.io.ByteArrayOutputStream()
       val zo = new java.util.zip.ZipOutputStream(bo)
       (0 until 2).foreach { j =>
@@ -59,7 +60,7 @@ class ManifestSpec extends AnyFunSuite {
       val loose = Files.size(dir.resolve("loose-0.dcm"))
       val zip = Files.size(dir.resolve("big.zip"))
       assert(loose < zip, "fixture geometry: zip must exceed a loose file")
-      spark.conf.set("spark.graft.route.maxInlineBytes", ((loose + zip) / 2).toString)
+      spark.conf.set("spark.sql.files.maxPartitionBytes", ((loose + zip) / 2).toString)
       try {
         val listed = snapshot(DicomPipeline.extract(spark, dir.toString, "bkt", "reg"))
         val manifest = DicomPipeline.manifestOf(spark, dir.toString)
@@ -69,7 +70,7 @@ class ManifestSpec extends AnyFunSuite {
         assert(listed._2 == Seq(("DICOMDIR", "parse")))
         assert(viaManifest._1 == listed._1, "manifest route changed extracted rows")
         assert(viaManifest._2 == listed._2, "manifest route changed the error channel")
-      } finally spark.conf.unset("spark.graft.route.maxInlineBytes")
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 

@@ -2,14 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 import graft.pipeline.DicomPipeline
 
-/** S11 — size-based compute router, re-expressed as a scan strategy:
-  * small objects ride the packed binaryFile scan, oversized objects take
-  * a dedicated one-object-per-task STREAMED route (ranged read for
+/** S11 — size-based compute router, re-expressed as task packing: the
+  * listed objects are packed largest-first under Spark's split size, so
+  * small objects share a task and an object larger than the split size
+  * runs alone; every task opens its objects itself (ranged read for
   * `.dcm`, entry-streaming for archives). The contract under test is
-  * ROUTE INVARIANCE: what is computed never depends on which route ran.
+  * ROUTE INVARIANCE: what is computed never depends on how objects were
+  * packed into tasks.
   */
 class SizeRouterSpec extends AnyFunSuite {
 
@@ -23,52 +24,38 @@ class SizeRouterSpec extends AnyFunSuite {
 
   private val fixtures = graft.queries.DicomQueries.Fixtures
 
+  private val SplitConf = "spark.sql.files.maxPartitionBytes"
+
+  /** `f` with `spark.sql.files.maxPartitionBytes` at `bytes` (None: the
+    * default). */
+  private def withSplit[A](bytes: Option[Long])(f: => A): A = {
+    bytes.foreach(v => spark.conf.set(SplitConf, v.toString))
+    try f finally spark.conf.unset(SplitConf)
+  }
+
   /** Canonical (rows, errors) snapshot of an extract run. */
-  private def snapshot(maxInline: Option[Long]): (Seq[String], Seq[(String, String)]) = {
-    maxInline match {
-      case Some(v) => spark.conf.set("spark.graft.route.maxInlineBytes", v.toString)
-      case None => spark.conf.unset("spark.graft.route.maxInlineBytes")
-    }
-    try {
+  private def snapshot(split: Option[Long]): (Seq[String], Seq[(String, String)]) =
+    withSplit(split) {
       val ex = DicomPipeline.extract(spark, fixtures, "bkt", "reg")
       val rows = ex.rows.collect()
         .map(_.values.toSeq.sortBy(_._1).mkString("|")).sorted.toSeq
       val errs = ex.errors.collect()
         .map(e => (e.source_s3_key.split('/').last, e.stage)).sorted.toSeq
       (rows, errs)
-    } finally spark.conf.unset("spark.graft.route.maxInlineBytes")
-  }
+    }
 
   test("route invariance: all-streamed equals all-packed, rows and errors") {
-    val packed = snapshot(None) // default 500 MB: every fixture is small
-    // 1-byte threshold: every non-empty fixture is "oversized" and takes
-    // the streamed route — loose .dcm via ranged read, zip/tar/tgz/tbz2
-    // via entry-streaming; the empty DICOMDIR still errors via its own
-    // channel
+    val packed = snapshot(None) // default split: fixtures share tasks
+    // 1-byte split: every fixture is larger than the split and runs
+    // alone in its task — loose .dcm via ranged read, zip/tar/tgz/tbz2
+    // via entry-streaming, the empty DICOMDIR to the errors channel
     val streamed = snapshot(Some(1L))
     assert(packed._1.nonEmpty)
-    assert(streamed._1 == packed._1, "streamed route changed extracted rows")
-    assert(streamed._2 == packed._2, "streamed route changed the error channel")
+    assert(streamed._1 == packed._1, "one object per task changed extracted rows")
+    assert(streamed._2 == packed._2, "one object per task changed the error channel")
     // sanity on the fixture mix this invariance actually exercised
     assert(packed._1.size == 10)
     assert(packed._2 == Seq(("DICOMDIR", "parse")))
-  }
-
-  test("packed scan excludes oversized objects via a pushed length filter") {
-    // the exact scan shape extract() builds — the filter must reach the
-    // binaryFile source (files above the cap are skipped, not read)
-    val df = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(fixtures)
-      .filter(col("length") <= 1L)
-      .select("path", "content")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("LessThanOrEqual(length,1)"),
-      s"length filter not pushed to the binaryFile scan:\n$plan")
-    // and it actually prunes: only the empty DICOMDIR survives ≤ 1 byte
-    // (zero-length files produce no scan splits, so the packed side reads
-    // NOTHING here)
-    assert(df.count() == 0)
   }
 
   test("hidden files are invisible to BOTH routes (packed parity)") {
@@ -78,20 +65,17 @@ class SizeRouterSpec extends AnyFunSuite {
       val visible = DicomWriter.file(Seq(
         DicomWriter.strElement(0x0008, 0x0060, "CS", "CT")))
       Files.write(dir.resolve("ok.dcm"), visible)
-      // Spark's InMemoryFileIndex excludes _/.-prefixed paths from the
-      // packed scan; the router's walk must apply the SAME rule, or an
-      // oversized hidden leftover produces rows only below the threshold
+      // Spark's InMemoryFileIndex excludes _/.-prefixed paths from a
+      // file scan; the walk must apply the SAME rule, or a hidden
+      // leftover produces rows
       Files.write(dir.resolve("_leftover.dcm"), visible)
       Files.write(dir.resolve(".hidden.dcm"), visible)
-      spark.conf.set("spark.graft.route.maxInlineBytes", "1")
-      try {
-        val ex = DicomPipeline.extract(spark, dir.toString, "bkt", "reg")
-        val keys = ex.rows.collect()
-          .flatMap(_.values.get(graft.dicom.Flatten.LineageKey).map(_.toString)) ++
-          ex.errors.collect().map(_.source_s3_key)
-        assert(keys.nonEmpty && keys.forall(_.contains("ok.dcm")),
-          s"hidden files leaked into the streamed route: ${keys.mkString(", ")}")
-      } finally spark.conf.unset("spark.graft.route.maxInlineBytes")
+      val ex = DicomPipeline.extract(spark, dir.toString, "bkt", "reg")
+      val keys = ex.rows.collect()
+        .flatMap(_.values.get(graft.dicom.Flatten.LineageKey).map(_.toString)) ++
+        ex.errors.collect().map(_.source_s3_key)
+      assert(keys.nonEmpty && keys.forall(_.contains("ok.dcm")),
+        s"hidden files leaked into the extraction: ${keys.mkString(", ")}")
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 
@@ -122,22 +106,19 @@ class SizeRouterSpec extends AnyFunSuite {
   test("streamed route taxonomy: corrupt oversized archive errors as expand") {
     val dir = java.nio.file.Files.createTempDirectory("graft-router-bad")
     try {
-      // bad.zip is corrupt from its first bytes: expand on both routes.
+      // bad.zip is corrupt from its first bytes: expand in both layouts.
       // broken-twice.zip fails at its second member, before the container
-      // break: both routes must stop at that first failure and agree.
+      // break: both layouts must stop at that first failure and agree.
       java.nio.file.Files.write(dir.resolve("bad.zip"), Array.fill[Byte](64)('x'.toByte))
       java.nio.file.Files.write(dir.resolve("broken-twice.zip"), doublyCorruptZip())
-      def stages(maxInline: Option[Long]): Map[String, String] = {
-        maxInline.foreach(v => spark.conf.set("spark.graft.route.maxInlineBytes", v.toString))
-        try {
-          val ex = DicomPipeline.extract(spark, dir.toString, "bkt", "reg")
-          assert(ex.rows.isEmpty(), "a failing object must contribute no rows")
-          ex.errors.collect().map(e => e.source_s3_key.split('/').last -> e.stage).toMap
-        } finally spark.conf.unset("spark.graft.route.maxInlineBytes")
+      def stages(split: Option[Long]): Map[String, String] = withSplit(split) {
+        val ex = DicomPipeline.extract(spark, dir.toString, "bkt", "reg")
+        assert(ex.rows.isEmpty(), "a failing object must contribute no rows")
+        ex.errors.collect().map(e => e.source_s3_key.split('/').last -> e.stage).toMap
       }
       val packed = stages(None)
       val streamed = stages(Some(1L))
-      assert(streamed == packed, "the two routes disagree on the error stage")
+      assert(streamed == packed, "the two layouts disagree on the error stage")
       assert(packed == Map("bad.zip" -> "expand", "broken-twice.zip" -> "parse"))
     } finally graft.util.Fs.deleteRecursively(dir)
   }
@@ -146,7 +127,7 @@ class SizeRouterSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-router-dcm")
     try {
       // valid header + a pixel payload pushing the file well past the
-      // 10 MB range cap: the streamed route must still parse the header
+      // 10 MB range cap: the stored-object read must still parse the header
       // (stop-before-pixels never needs the tail)
       val big = DicomWriter.file(Seq(
         DicomWriter.strElement(0x0008, 0x0060, "CS", "CT"),
@@ -165,7 +146,7 @@ class SizeRouterSpec extends AnyFunSuite {
         }
       }
       val res = DicomPipeline.processObject("bkt", "reg", key, counted)
-      assert(res.isRight, s"streamed big .dcm failed: $res")
+      assert(res.isRight, s"big .dcm failed: $res")
       assert(bytesRead == graft.ingest.Archives.DcmRangeBytes,
         s"read $bytesRead bytes of a ${big.length}-byte object")
       val rows = res.toOption.get
@@ -177,6 +158,56 @@ class SizeRouterSpec extends AnyFunSuite {
         "bkt", "reg", key, () => new java.io.ByteArrayInputStream(big))
       assert(full.toOption.get.map(_.values.toSeq.sortBy(_._1).mkString("|")) ==
         rows.map(_.values.toSeq.sortBy(_._1).mkString("|")))
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
+  test("an object larger than the split size runs alone in its task") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-router-alone")
+    try {
+      (0 until 6).foreach { i =>
+        Files.write(dir.resolve(s"small-$i.dcm"), DicomWriter.file(Seq(
+          DicomWriter.strElement(0x0010, 0x0020, "LO", s"P$i"))))
+      }
+      Files.write(dir.resolve("big.dcm"), DicomWriter.file(Seq(
+        DicomWriter.strElement(0x0010, 0x0020, "LO", "BIG"),
+        DicomWriter.element(0x7fe0, 0x0010, "OB", new Array[Byte](256 * 1024)))))
+      // a 64 KB split and a 1-byte open cost: the small objects fit
+      // one task together, the big one fits none
+      spark.conf.set("spark.sql.files.openCostInBytes", "1")
+      val tasks = try withSplit(Some(64L * 1024)) {
+        DicomPipeline.extract(spark, dir.toString, "bkt", "reg").outcomes.map {
+          case Right(rs) => rs.head.values(graft.dicom.Flatten.LineageKey).toString
+          case Left(e) => e.source_s3_key
+        }.glom().collect().map(_.map(_.split('/').last.takeWhile(_ != ')')).toSet)
+      } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+      assert(tasks.contains(Set("big.dcm")), s"big.dcm shared a task: ${tasks.toSeq}")
+      assert(tasks.flatten.toSet.size == 7)
+      assert(tasks.exists(_.size > 1), s"small objects were not packed: ${tasks.toSeq}")
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
+  test("extract plans as many tasks as a binaryFile scan of the same directory") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-router-tasks")
+    try {
+      // no zero-length files: a binaryFile scan plans none for them
+      (0 until 40).foreach { i =>
+        Files.write(dir.resolve(f"obj-$i%02d.dcm"), new Array[Byte](500 + (i * 7919 % 40) * 1000))
+      }
+      (0 until 3).foreach(i => Files.write(dir.resolve(s"large-$i.zip"), new Array[Byte](200 * 1024)))
+      def both(): (Int, Int) = (
+        DicomPipeline.extract(spark, dir.toString, "bkt", "reg").outcomes.getNumPartitions,
+        spark.read.format("binaryFile").option("recursiveFileLookup", "true")
+          .load(dir.toString).rdd.getNumPartitions)
+      val default = both()
+      assert(default._1 == default._2, s"default split: (extract, binaryFile) = $default")
+      // a split small enough that the layout is many tasks of varied size
+      spark.conf.set("spark.sql.files.openCostInBytes", "1024")
+      val small = try withSplit(Some(64L * 1024))(both())
+        finally spark.conf.unset("spark.sql.files.openCostInBytes")
+      assert(small._1 == small._2, s"64 KB split: (extract, binaryFile) = $small")
+      assert(small._1 > default._1)
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 }

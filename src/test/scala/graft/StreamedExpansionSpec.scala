@@ -107,14 +107,14 @@ class StreamedExpansionSpec extends AnyFunSuite {
     try {
       val members = (0 until 50).map(i => (f"scan-$i%02d.dcm", member(i, 64 * 1024)))
       java.nio.file.Files.write(dir.resolve("big.zip"), zipOf(members))
-      // a small loose file keeps the packed branch non-empty
+      // a small loose file shares no task with the archive
       java.nio.file.Files.write(dir.resolve("loose.dcm"), member(99, 4096))
-      spark.conf.set("spark.graft.route.maxInlineBytes", (128 * 1024).toString)
+      spark.conf.set("spark.sql.files.maxPartitionBytes", (128 * 1024).toString)
       try {
         val ex = graft.pipeline.DicomPipeline.extract(spark, dir.toString, "t", "l")
         assert(ex.rows.count() == 51L, "50 streamed members + 1 loose object")
         assert(ex.errors.count() == 0L)
-      } finally spark.conf.unset("spark.graft.route.maxInlineBytes")
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 }
