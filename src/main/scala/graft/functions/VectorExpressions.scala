@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -144,25 +143,4 @@ case class PqAdc(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorExpressions {
-  /** Register the graft native expressions (`graft_dot`,
-    * `graft_gram_min_md5`) for the session. Truly idempotent: skips
-    * re-registration when the function already exists, so per-query calls
-    * don't spam "replaced a previously registered function" WARNs. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def once(name: String, builder: Seq[Expression] => Expression): Unit = {
-      val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!reg.functionExists(ident))
-        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-    once("graft_dot", exprs => DotProduct(exprs(0), exprs(1)))
-    once("graft_gram_min_md5", exprs => GramMinMd5(exprs(0), exprs(1)))
-    once("graft_char_grams", exprs => CharGrams(exprs(0), exprs(1)))
-    once("graft_sorted_inter", exprs => SortedInterCount(exprs(0), exprs(1)))
-    once("graft_bpe_sym_len", exprs => BpeSymLen(exprs(0), exprs(1)))
-    once("graft_pq_adc", exprs => PqAdc(exprs(0), exprs(1)))
-  }
 }

@@ -69,8 +69,10 @@ object Archives {
     }
 
   /** THE routing decision for one object, and its expansion: every
-    * entry point (packed scan, oversized and manifest routes, the
-    * `format("dicom")` source, [[expand]]) goes through here.
+    * reader goes through here — `DicomPipeline.readObjects` (`extract`,
+    * the manifest route and streaming micro-batches) and the
+    * `format("dicom")` reader, both through `DicomPipeline.processObject`,
+    * and [[expand]].
     *
     *  - ignored extensions never call `open`;
     *  - `.dcm` yields its basename and at most [[DcmRangeBytes]] — the

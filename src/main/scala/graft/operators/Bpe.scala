@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.bpeSymLen
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -233,7 +234,6 @@ object Bpe {
     * (n_words ≤ n_tokens ≤ chars + words). */
   def encode(s: SparkSession, dir: String, k: Int = 8): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val merges = learn(s, dir, k)
       .select($"left", $"right").as[(String, String)].collect()
 
@@ -246,7 +246,7 @@ object Bpe {
     val mergesLit = typedLit[Seq[Seq[String]]](
       merges.toSeq.map { case (a, b) => Seq(a, b) })
     val dict = wordFreq(s, dir).select($"word",
-      call_function("graft_bpe_sym_len", $"word", mergesLit).as("n_sym"))
+      bpeSymLen($"word", mergesLit).as("n_sym"))
 
     // (doc, word) pre-agg BEFORE the dictionary join: the partial agg
     // collapses repeated words map-side, so the join and both exchanges

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.charGrams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -257,11 +258,10 @@ object Curation {
     * [[graft.functions.CharGrams]] expression. */
   def contamination(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val withGrams = docs(s, dir)
       .filter(length($"text") >= 8)
       .select($"doc_id",
-        call_function("graft_char_grams", $"text", lit(8)).as("g_set"))
+        charGrams($"text", lit(8)).as("g_set"))
     val bench = withGrams
       .filter($"doc_id" % 199 === 0)
       .select($"doc_id".as("bench_doc"), explode($"g_set").as("gram"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.{dot, charGrams, sortedInter}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -333,7 +334,6 @@ object Dedup {
   private def minhashVerifyWithSets(s: SparkSession, sets: DataFrame,
                                     cand: DataFrame): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     // candidate-bound: `sets` is already semi-joined to LSH-surfaced
     // docs (a vanishing corpus fraction), so 4 store tasks are safe
     val candSets = ckptHinted(sets.coalesce(4),
@@ -348,7 +348,7 @@ object Dedup {
       // min/max < 0.5 passes the (identically rounding) oracle but not us.
       .filter(least($"ca.n_sh", $"cb.n_sh") >= lit(0.5 - 0.00005) * greatest($"ca.n_sh", $"cb.n_sh"))
       .select($"doc_a", $"doc_b",
-        call_function("graft_sorted_inter", $"ca.sh_set", $"cb.sh_set")
+        sortedInter($"ca.sh_set", $"cb.sh_set")
           .cast("double").as("n_inter"),
         ($"ca.n_sh" + $"cb.n_sh").as("n_sum"))
       .select($"doc_a", $"doc_b",
@@ -933,7 +933,6 @@ object Dedup {
   private def ngramGramSets(s: SparkSession, in: DataFrame,
                             widen: Boolean = true): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     // widened: the one-pass gram extraction is the family's heavy narrow
     // work and must not inherit a single-split scan's parallelism.
     // `widen = false` for CANDIDATE-BOUND inputs (ADVICE r16): the verify
@@ -943,7 +942,7 @@ object Dedup {
     // the caller's broadcast job before the repartition re-plans it.
     val src = if (widen) widened(in) else in
     src.select($"doc_id",
-      call_function("graft_char_grams", $"text", lit(5)).as("g_set"))
+      charGrams($"text", lit(5)).as("g_set"))
   }
 
   /** Candidate pairs sharing a RARE gram (df ≤ maxDf), UN-checkpointed so
@@ -1051,7 +1050,7 @@ object Dedup {
       // admits true J down to 0.69995) — oracle parity at the boundary.
       .filter(least($"ca.n_g", $"cb.n_g") >= lit(0.7 - 0.00005) * greatest($"ca.n_g", $"cb.n_g"))
       .select($"doc_a", $"doc_b",
-        call_function("graft_sorted_inter", $"ca.g_set", $"cb.g_set")
+        sortedInter($"ca.g_set", $"cb.g_set")
           .cast("double").as("n_inter"),
         ($"ca.n_g" + $"cb.n_g").as("n_sum"))
       .select($"doc_a", $"doc_b",
@@ -1131,7 +1130,6 @@ object Dedup {
     * BOTH engines intersect the same hash sets. */
   def jaccardPrefix(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     // ONE materialization of the corpus word-set relation, shared by
     // the ranking side (prefix extraction reads the checkpoint) and the
     // verify side (candSets IS the checkpoint): r15 computed
@@ -1196,7 +1194,7 @@ object Dedup {
       .join(candSets.as("ca"), $"doc_a" === $"ca.doc_id")
       .join(candSets.as("cb"), $"doc_b" === $"cb.doc_id")
       .select($"doc_a", $"doc_b",
-        call_function("graft_sorted_inter", $"ca.w_set", $"cb.w_set")
+        sortedInter($"ca.w_set", $"cb.w_set")
           .cast("long").as("n_inter"),
         ($"ca.n_w" + $"cb.n_w").as("n_sum"))
       .filter(lit(9) * $"n_inter" >= lit(4) * $"n_sum")
@@ -1227,7 +1225,6 @@ object Dedup {
     * the b-capacity gate (n_b ≥ t) sit INSIDE the join condition. */
   def containment(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     // shared word-set checkpoint — same single-materialization fix as
     // [[jaccardPrefix]] (one tokenize+hash pass at scan width feeds the
     // token ranking AND the verify sets; the fixed coalesce(4) verify
@@ -1274,7 +1271,7 @@ object Dedup {
       .join(candSets.as("ca"), $"doc_a" === $"ca.doc_id")
       .join(candSets.as("cb"), $"doc_b" === $"cb.doc_id")
       .select($"doc_a", $"doc_b",
-        call_function("graft_sorted_inter", $"ca.w_set", $"cb.w_set")
+        sortedInter($"ca.w_set", $"cb.w_set")
           .cast("long").as("n_inter"),
         $"ca.n_w".as("n_a"))
       .filter(lit(10) * $"n_inter" >= lit(9) * $"n_a")
@@ -1618,7 +1615,6 @@ object Dedup {
     * path (Σ n_b² bucketed join, never all-pairs). */
   def embedCosine(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val src = s.read.parquet(s"$dir/embeddings.parquet")
     val n = src.count()
     val cap = exactCosineMaxRows(s)
@@ -1628,10 +1624,10 @@ object Dedup {
       "Use Similarity.embedLshNearDup for the bucketed scale path.")
     val e = src
       .select($"vec_id", $"embedding",
-        expr("sqrt(graft_dot(embedding, embedding))").as("nrm"))
+        sqrt(dot($"embedding", $"embedding")).as("nrm"))
     e.as("a").join(e.as("b"), $"a.vec_id" < $"b.vec_id")
       .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
-        expr("round(graft_dot(a.embedding, b.embedding) / (a.nrm * b.nrm), 4)").as("cos_sim"))
+        round(dot($"a.embedding", $"b.embedding") / ($"a.nrm" * $"b.nrm"), 4).as("cos_sim"))
       .filter($"cos_sim" >= 0.45)
       .orderBy($"vec_a", $"vec_b")
   }

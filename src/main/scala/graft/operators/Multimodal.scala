@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.dot
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dicom.{DicomParser, Tags}
@@ -928,10 +929,9 @@ object Multimodal {
     * [[Similarity]] dials document. */
   def assetNeighbors(s: SparkSession, dirs: Seq[String], k: Int = 3): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val embedded = Dedup.tracked(pseudoEmbed(s, dirs)
       .select($"path", $"embedding",
-        expr("sqrt(graft_dot(embedding, embedding))").as("nrm")))
+        sqrt(dot($"embedding", $"embedding")).as("nrm")))
     val tables = s.conf.get("spark.graft.mm.lsh.tables", "8").toInt
     val bits = s.conf.get("spark.graft.mm.lsh.bits", "2").toInt
     // tracked too: the symmetric union references the candidate relation

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.GraftFunctions.{dot, pqAdc}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,25 +24,28 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  private def emb(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+  private def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
-  }
 
-  private val normExpr = "sqrt(graft_dot(embedding, embedding))"
+  /** The L2 norm of an array column, `sqrt(graft_dot(v, v))`. */
+  private def norm(v: String = "embedding"): Column = sqrt(dot(col(v), col(v)))
+
+  /** Cosine of `embedding` against the broadcast query `q_emb`, over
+    * their norms `nrm` and `q_nrm`. */
+  private def qCos: Column = dot(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm"))
 
   /** Exact top-10 cosine neighbors of vec_id = 0 (excluding itself).
     * One broadcast of the query vector; the scan stays narrow; the final
     * top-k is a TakeOrdered — no full sort, no shuffle of scores. */
   def topkBrute(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = emb(s, dir).select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+    val e = emb(s, dir).select($"vec_id", $"embedding", norm().as("nrm"))
     val q = e.filter($"vec_id" === 0)
       .select($"embedding".as("q_emb"), $"nrm".as("q_nrm"))
     e.filter($"vec_id" =!= 0)
       .join(broadcast(q))
       .select($"vec_id",
-        expr("round(graft_dot(embedding, q_emb) / (nrm * q_nrm), 6)").as("cos_sim"))
+        round(qCos, 6).as("cos_sim"))
       .orderBy($"cos_sim".desc, $"vec_id")
       .limit(10)
   }
@@ -61,12 +65,12 @@ object Similarity {
     * [[embedLshNearDup]] / [[Dedup.embedCosine]]'s bucketed path. */
   def rangeSearch(s: SparkSession, dir: String, tau: Double = 0.35): DataFrame = {
     import s.implicits._
-    val e = emb(s, dir).select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+    val e = emb(s, dir).select($"vec_id", $"embedding", norm().as("nrm"))
     val probes = e.filter(pmod($"vec_id", lit(10)) === 3)
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"), $"nrm".as("q_nrm"))
     e.join(broadcast(probes), $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id",
-        expr("round(graft_dot(embedding, q_emb) / (nrm * q_nrm), 4)").as("cos_sim"))
+        round(qCos, 4).as("cos_sim"))
       .filter($"cos_sim" >= tau)
       .orderBy($"q_id", $"vec_id")
   }
@@ -96,13 +100,13 @@ object Similarity {
   def mmrDiversify(s: SparkSession, dir: String,
                    shortN: Int = 30, k: Int = 10): DataFrame = {
     import s.implicits._
-    val e = emb(s, dir).select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+    val e = emb(s, dir).select($"vec_id", $"embedding", norm().as("nrm"))
     val q = e.filter($"vec_id" === 0)
       .select($"embedding".as("q_emb"), $"nrm".as("q_nrm"))
     val sl = e.filter($"vec_id" =!= 0)
       .join(broadcast(q))
       .select($"vec_id", $"embedding", $"nrm",
-        expr("cast(round(graft_dot(embedding, q_emb) / (nrm * q_nrm) * 1e6) as bigint)")
+        round(qCos * 1e6).cast("bigint")
           .as("relq"))
       .orderBy($"relq".desc, $"vec_id")
       .limit(shortN)
@@ -124,7 +128,6 @@ object Similarity {
                      shortN: Int = 30, k: Int = 10,
                      nprobe: Int = 8, rerank: Int = 200): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val idxPath = java.nio.file.Files.createTempDirectory(
       graft.util.Fs.scratchDir(s, "pqidx"), "mmr").toAbsolutePath
     try {
@@ -134,13 +137,13 @@ object Similarity {
       val ids = pqTopkFromIndex(s, dir, idxPath.toString, nprobe, rerank,
           topN = shortN)
         .select($"vec_id").as[Long].collect() // ≤ shortN — dial-bounded
-      val e = emb(s, dir).select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+      val e = emb(s, dir).select($"vec_id", $"embedding", norm().as("nrm"))
       val q = e.filter($"vec_id" === 0)
         .select($"embedding".as("q_emb"), $"nrm".as("q_nrm"))
       val sl = e.filter($"vec_id".isin(ids.toIndexedSeq: _*)) // In-pushed scan
         .join(broadcast(q))
         .select($"vec_id", $"embedding", $"nrm",
-          expr("cast(round(graft_dot(embedding, q_emb) / (nrm * q_nrm) * 1e6) as bigint)")
+          round(qCos * 1e6).cast("bigint")
             .as("relq"))
       mmrGreedy(s, sl, k)
     } finally graft.util.Fs.deleteRecursively(idxPath)
@@ -165,13 +168,13 @@ object Similarity {
       .filter($"vec_id" =!= 0)
       .orderBy($"adc_q".desc, $"vec_id").limit(shortN)
       .select($"vec_id").as[Long].collect() // ≤ shortN — dial-bounded
-    val e = emb(s, dir).select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+    val e = emb(s, dir).select($"vec_id", $"embedding", norm().as("nrm"))
     val q = e.filter($"vec_id" === 0)
       .select($"embedding".as("q_emb"), $"nrm".as("q_nrm"))
     val sl = e.filter($"vec_id".isin(ids.toIndexedSeq: _*)) // In-pushed scan
       .join(broadcast(q))
       .select($"vec_id", $"embedding", $"nrm",
-        expr("cast(round(graft_dot(embedding, q_emb) / (nrm * q_nrm) * 1e6) as bigint)")
+        round(qCos * 1e6).cast("bigint")
           .as("relq"))
     mmrGreedy(s, sl, k)
   }
@@ -186,7 +189,7 @@ object Similarity {
     import s.implicits._
     val pairs = sl.as("a").join(sl.as("b"), $"a.vec_id" =!= $"b.vec_id")
       .select($"a.vec_id".as("va"), $"b.vec_id".as("vb"),
-        (call_function("graft_dot", $"a.embedding", $"b.embedding") /
+        (dot($"a.embedding", $"b.embedding") /
           ($"a.nrm" * $"b.nrm") * lit(1e6)).as("sqx"))
       .select($"va", $"vb", round($"sqx").cast("long").as("sq"))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
@@ -230,13 +233,13 @@ object Similarity {
   def annFiltered(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-      .select($"vec_id", $"label", $"embedding", expr(normExpr).as("nrm"))
+      .select($"vec_id", $"label", $"embedding", norm().as("nrm"))
     val q = e.filter(pmod($"vec_id", lit(50)) === 7)
       .select($"vec_id".as("q_id"), $"label".as("q_label"),
         $"embedding".as("q_emb"), $"nrm".as("q_nrm"))
     e.join(broadcast(q), $"label" === $"q_label" && $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id",
-        expr("round(graft_dot(embedding, q_emb) / (nrm * q_nrm), 6)").as("cos_sim"))
+        round(qCos, 6).as("cos_sim"))
       .withColumn("rank", row_number().over(
         Window.partitionBy($"q_id").orderBy($"cos_sim".desc, $"vec_id")).cast("long"))
       .filter($"rank" <= k)
@@ -262,7 +265,7 @@ object Similarity {
   def semanticDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-      .select($"vec_id", $"label".as("cluster"), $"embedding", expr(normExpr).as("nrm"))
+      .select($"vec_id", $"label".as("cluster"), $"embedding", norm().as("nrm"))
     semanticKeepSet(s, e).withColumnRenamed("cluster", "label")
   }
 
@@ -297,13 +300,12 @@ object Similarity {
                           k: Int = 0, iters: Int = 3): DataFrame = {
     import s.implicits._
     val assigned = kmeansAssignment(s, dir, k, iters)
-    graft.functions.VectorExpressions.register(s)
     // auto-salt from the expected per-cluster pair budget: spread any
     // cluster carrying more than ~2M pairs; constant-size clusters
     // derive 1 (no probe-side duplication at all)
     val targetSize = math.max(1,
       s.conf.get("spark.graft.dedup.semantic.targetClusterSize", "200").toInt)
-    semanticKeepSet(s, assigned.withColumn("nrm", expr(normExpr)),
+    semanticKeepSet(s, assigned.withColumn("nrm", norm()),
       autoSaltFor(targetSize.toDouble))
   }
 
@@ -398,9 +400,8 @@ object Similarity {
   private[graft] def quantizedKmeansAssignment(s: SparkSession, dir: String,
       k: Int, iters: Int): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val base = Dedup.tracked(emb(s, dir)
-      .select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+      .select($"vec_id", $"embedding", norm().as("nrm"))
       .filter($"nrm" > 0)
       .withColumn("q",
         expr("transform(embedding, x -> cast(round(x / nrm * 1000) as bigint))")))
@@ -560,7 +561,7 @@ object Similarity {
       .join(bSide, $"a.cluster" === $"b.cluster" &&
         $"a.salt" === $"b.salt" && $"a.vec_id" < $"b.vec_id")
       .filter(round(
-        call_function("graft_dot", $"a.embedding", $"b.embedding") /
+        dot($"a.embedding", $"b.embedding") /
           ($"a.nrm" * $"b.nrm"), 4) >= tau)
       .select($"b.vec_id".as("vec_id")).distinct()
     ec.join(dropped, Seq("vec_id"), "left_anti")
@@ -656,12 +657,12 @@ object Similarity {
     * expression tree — an intermediate `bits` array column gets inlined
     * per-reference by CollapseProject, re-evaluating every dot for each
     * bit reference (tables×bits blow-up). */
-  private[graft] def bucketsCol(tables: Int, bits: Int): org.apache.spark.sql.Column = {
+  private[graft] def bucketsCol(tables: Int, bits: Int): Column = {
     val planes = planeMatrix(tables * bits)
     array((0 until tables).map { t =>
       (0 until bits).map { i =>
-        when(call_function("graft_dot", col("embedding"),
-               typedlit(planes(t * bits + i))) >= 0, lit(1 << i)).otherwise(lit(0))
+        when(dot(col("embedding"), typedlit(planes(t * bits + i))) >= 0, lit(1 << i))
+          .otherwise(lit(0))
       }.reduce(_ + _)
     }: _*)
   }
@@ -678,7 +679,7 @@ object Similarity {
     import s.implicits._
     val (tables, bits) = annGeometry(s, emb(s, dir).count())
     val e = emb(s, dir)
-      .select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+      .select($"vec_id", $"embedding", norm().as("nrm"))
       .withColumn("buckets", bucketsCol(tables, bits))
     val tabs = e.select($"vec_id", $"embedding", $"nrm",
       posexplode($"buckets").as(Seq("t", "bucket")))
@@ -688,7 +689,7 @@ object Similarity {
     tabs.filter($"vec_id" =!= 0)
       .join(broadcast(q), $"t" === $"q_t" && $"bucket" === $"q_bucket")
       .select($"vec_id",
-        expr("round(graft_dot(embedding, q_emb) / (nrm * q_nrm), 6)").as("cos_sim"))
+        round(qCos, 6).as("cos_sim"))
       .distinct()
       .orderBy($"cos_sim".desc, $"vec_id")
       .limit(10)
@@ -722,7 +723,7 @@ object Similarity {
   private[graft] def embedLshCandidates(
       s: SparkSession, dir: String, minSim: Option[Double] = None): DataFrame = {
     import s.implicits._
-    val e = emb(s, dir).select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+    val e = emb(s, dir).select($"vec_id", $"embedding", norm().as("nrm"))
     lshBucketedPairs(e, "vec_id", lshTables(s), lshBits(s), 4, minSim)
       .withColumnsRenamed(Map("id_a" -> "vec_a", "id_b" -> "vec_b"))
   }
@@ -745,7 +746,7 @@ object Similarity {
         col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket") &&
           col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        round(call_function("graft_dot", col("a.embedding"), col("b.embedding")) /
+        round(dot(col("a.embedding"), col("b.embedding")) /
           (col("a.nrm") * col("b.nrm")), scale).as("cos_sim"))
     minSim.fold(scored)(t => scored.filter(col("cos_sim") >= t)).distinct()
   }
@@ -773,26 +774,26 @@ object Similarity {
   private def ivfSearch(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-      .select($"vec_id", $"label", $"embedding", expr(normExpr).as("nrm"))
+      .select($"vec_id", $"label", $"embedding", norm().as("nrm"))
     val cent = e
       .select($"label", posexplode($"embedding").as(Seq("dim", "v")))
       .groupBy($"label", $"dim")
       .agg(round(avg($"v".cast("double")), 8).as("m"))
       .groupBy($"label")
       .agg(expr("transform(sort_array(collect_list(struct(dim, m))), x -> x.m)").as("cvec"))
-      .withColumn("cnorm", expr("sqrt(graft_dot(cvec, cvec))"))
+      .withColumn("cnorm", norm("cvec"))
     val q = e.filter($"vec_id" === 0)
       .select($"embedding".as("q_emb"), $"nrm".as("q_nrm"))
     val best = cent.join(broadcast(q))
       .select($"label".as("best_label"),
-        expr("round(graft_dot(cvec, q_emb) / (cnorm * q_nrm), 6)").as("c_sim"))
+        round(dot($"cvec", $"q_emb") / ($"cnorm" * $"q_nrm"), 6).as("c_sim"))
       .orderBy($"c_sim".desc, $"best_label")
       .limit(nprobe)
     e.filter($"vec_id" =!= 0)
       .join(broadcast(best), $"label" === $"best_label")
       .join(broadcast(q))
       .select($"vec_id",
-        expr("round(graft_dot(embedding, q_emb) / (nrm * q_nrm), 6)").as("cos_sim"))
+        round(qCos, 6).as("cos_sim"))
       .orderBy($"cos_sim".desc, $"vec_id")
       .limit(10)
   }
@@ -958,7 +959,7 @@ object Similarity {
     val cent = kmeansCentroids(s, dir)
     val bc = s.sparkContext.broadcast(cent)
     val e = emb(s, dir)
-      .select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+      .select($"vec_id", $"embedding", norm().as("nrm"))
       .as[(Long, Array[Float], Double)]
     val assigned = e
       .map { case (id, v, n) => (id, v, n, nearestCentroid(v, bc.value)) }
@@ -978,7 +979,7 @@ object Similarity {
       .filter($"vec_id" =!= 0 && $"cluster".isin(probes: _*))
       .join(broadcast(q))
       .select($"vec_id",
-        expr("round(graft_dot(embedding, q_emb) / (nrm * q_nrm), 6)").as("cos_sim"))
+        round(qCos, 6).as("cos_sim"))
       .orderBy($"cos_sim".desc, $"vec_id")
       .limit(10)
   }
@@ -1035,9 +1036,8 @@ object Similarity {
   private[graft] def unitVecs(s: SparkSession, dir: String):
       org.apache.spark.sql.Dataset[(Long, Array[Float])] = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     emb(s, dir)
-      .select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+      .select($"vec_id", $"embedding", norm().as("nrm"))
       .filter($"nrm" > 0)
       .select($"vec_id",
         expr("transform(embedding, x -> cast(x / nrm as float))").as("unit"))
@@ -1197,21 +1197,21 @@ object Similarity {
     val shortlistIds = encoded
       .filter($"vec_id" =!= 0 && $"cluster".isin(probes: _*))
       .select($"vec_id",
-        call_function("graft_pq_adc", $"codes", typedLit(lut)).as("adc"))
+        pqAdc($"codes", typedLit(lut)).as("adc"))
       .orderBy($"adc".desc, $"vec_id")
       .limit(rerank)
       .select($"vec_id").as[Long].collect()
     // exact cosine re-rank of just the shortlist: the In filter pushes
     // into the parquet scan, so the re-rank touches candidate rows only
     val full = emb(s, dir)
-      .select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+      .select($"vec_id", $"embedding", norm().as("nrm"))
     val q = full.filter($"vec_id" === 0)
       .select($"embedding".as("q_emb"), $"nrm".as("q_nrm"))
     full
       .filter($"vec_id".isin(shortlistIds.toIndexedSeq: _*))
       .join(broadcast(q))
       .select($"vec_id",
-        expr("round(graft_dot(embedding, q_emb) / (nrm * q_nrm), 6)").as("cos_sim"))
+        round(qCos, 6).as("cos_sim"))
       .orderBy($"cos_sim".desc, $"vec_id")
       .limit(topN)
   }
@@ -1235,7 +1235,7 @@ object Similarity {
     a.join(broadcast(q), Seq("cluster")) // list restriction: probe = q's list
       .filter($"vec_id" =!= 0)
       .select($"vec_id",
-        expr("round(graft_dot(embedding, q_emb) / (nrm * q_nrm), 6)").as("cos_sim"))
+        round(qCos, 6).as("cos_sim"))
       .orderBy($"cos_sim".desc, $"vec_id")
       .limit(10)
   }
@@ -1260,10 +1260,9 @@ object Similarity {
     * →ADC MECHANICS cross-engine. */
   def pqExact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val pqM = 4; val ksub = 4; val iters = 3
     val data = Dedup.tracked(emb(s, dir)
-      .select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+      .select($"vec_id", $"embedding", norm().as("nrm"))
       .filter($"nrm" > 0)
       .select($"vec_id", expr(
         "transform(embedding, x -> cast(round(x / nrm * 1000) as bigint))").as("q")))
@@ -1403,9 +1402,8 @@ object Similarity {
   private[graft] def writePqCodesBatchWith(s: SparkSession, model: PqModel,
       indexPath: String, rawBatch: DataFrame, batchId: Long): Unit = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val batch = rawBatch
-      .select(col("vec_id"), col("embedding"), expr(normExpr).as("nrm"))
+      .select(col("vec_id"), col("embedding"), norm().as("nrm"))
       .filter(col("nrm") > 0)
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x / nrm as float))").as("unit"))
@@ -1606,7 +1604,6 @@ object Similarity {
   def pqTopkFromIndex(s: SparkSession, dir: String, path: String,
                       nprobe: Int = 4, rerank: Int = 50, topN: Int = 10): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val model = readPqModel(s, path)
     // the query vector is normalized driver-side (one O(1) row read).
     // Divide in DOUBLE and round once to float — exactly what unitVecs'
@@ -1912,14 +1909,14 @@ object Similarity {
   def semanticContamination(s: SparkSession, dir: String,
                             tau: Double = 0.42): DataFrame = {
     import s.implicits._
-    val e = emb(s, dir).select($"vec_id", $"embedding", expr(normExpr).as("nrm"))
+    val e = emb(s, dir).select($"vec_id", $"embedding", norm().as("nrm"))
     val isEval = pmod($"vec_id", lit(20)) === 0
     val ev = e.filter(isEval)
       .select($"vec_id".as("eval_id"), $"embedding".as("q_emb"), $"nrm".as("q_nrm"))
     e.filter(!isEval)
       .join(broadcast(ev))
       .select($"eval_id", $"vec_id".as("train_id"),
-        expr("round(graft_dot(embedding, q_emb) / (nrm * q_nrm), 4)").as("cos_sim"))
+        round(qCos, 4).as("cos_sim"))
       // quantized micro-units: an exact integer argmax key (the 4-dp
       // round already defines the comparison grain, so no information
       // is lost packing it)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.{dot, gramMinMd5}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -298,11 +299,10 @@ object TextAnalysis {
     * unsigned; hex only for the winner). 2.9 s → ~0.9 s at sf0.1. */
   def fingerprint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     docs(s, dir)
       .filter(length($"text") >= 8)
       .select($"doc_id",
-        call_function("graft_gram_min_md5", $"text", lit(8)).as("fingerprint"),
+        gramMinMd5($"text", lit(8)).as("fingerprint"),
         (length($"text") - lit(7)).cast("long").as("n_grams"))
       .orderBy($"doc_id")
   }
@@ -858,7 +858,6 @@ object TextAnalysis {
                    rrfK: Int = 60, armN: Int = 100, topN: Int = 20): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorExpressions.register(s)
     val lex = bm25Scores(s, dir, terms, k1 = 1.2, b = 0.75)
       .orderBy($"score_q".desc, $"doc_id").limit(armN)
       .withColumn("rank_lex",
@@ -892,13 +891,13 @@ object TextAnalysis {
         case _ =>
           val e = s.read.parquet(s"$dir/embeddings.parquet")
             .select($"vec_id", $"embedding",
-              expr("sqrt(graft_dot(embedding, embedding))").as("nrm"))
+              sqrt(dot($"embedding", $"embedding")).as("nrm"))
           val q = e.filter($"vec_id" === 0)
             .select($"embedding".as("q_emb"), $"nrm".as("q_nrm"))
           e.filter($"vec_id" =!= 0)
             .join(broadcast(q))
             .select($"vec_id".as("doc_id"),
-              expr("round(graft_dot(embedding, q_emb) / (nrm * q_nrm), 6)").as("cos_sim"))
+              round(dot($"embedding", $"q_emb") / ($"nrm" * $"q_nrm"), 6).as("cos_sim"))
             .orderBy($"cos_sim".desc, $"doc_id").limit(armN)
       }
     val vec = armScores

@@ -183,9 +183,9 @@ object DicomQueries {
         |ORDER BY archive_path""".stripMargin)
   }
 
-  /** Register a session UDF once — same existence guard as
-    * [[graft.functions.VectorExpressions.register]], so per-query calls
-    * don't spam "replaced a previously registered function" WARNs. */
+  /** Register a session UDF once. Registering an existing name replaces
+    * it and logs a "replaced a previously registered function" WARN, so
+    * without the existence guard every query call would log one. */
   private def registerOnce(
       s: SparkSession, name: String,
       u: org.apache.spark.sql.expressions.UserDefinedFunction): Unit = {

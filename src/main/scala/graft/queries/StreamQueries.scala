@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.functions.GraftFunctions.dot
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -1890,7 +1891,6 @@ object StreamQueries {
   private[graft] def embedNearDupDrain(s: SparkSession, stream: DataFrame,
       name: String, deleteDirs: Seq[java.nio.file.Path]): DataFrame = withRocksDbState(s) {
     import s.implicits._
-    graft.functions.VectorExpressions.register(s)
     val tau = BigDecimal(0.3)
     def cos(a: VecOwner, v: VecBucketRow): BigDecimal = {
       var d = 0.0
@@ -1914,7 +1914,7 @@ object StreamQueries {
     }
     val q = stream
       .select(col("vec_id"), col("embedding"),
-        expr("sqrt(graft_dot(embedding, embedding))").as("nrm"))
+        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
       // zero-norm vectors have no direction to compare — drop them before
       // bucketing (the same defense unitVecs applies); without this,
       // cos() divides by 0 → NaN and BigDecimal(NaN) would crash the

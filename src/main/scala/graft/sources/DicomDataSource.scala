@@ -25,7 +25,8 @@ import graft.pipeline.DicomPipeline
   * object: 10 MB range for loose `.dcm`, archives streamed member by
   * member), schema inferred from a bounded file sample (or
   * distributed over executors — never a full driver-side corpus parse),
-  * size-packed input partitions, and REQUIRED-COLUMN PUSHDOWN: a
+  * input partitions size-packed under the session's
+  * `spark.sql.files.maxPartitionBytes`, and REQUIRED-COLUMN PUSHDOWN: a
   * `SELECT modality FROM ...` only *converts* the requested tags (the
   * binary scan still walks element headers — bounded by the
   * stop-at-pixel-data rule — but skips value conversion and row
@@ -38,8 +39,7 @@ import graft.pipeline.DicomPipeline
   *    its error side-channel semantics);
   *  - `inferSampleFiles` (default 64): schema-inference sample bound;
   *  - `inferMode` (`sample` | `full`): `full` distributes full-corpus
-  *    inference over executors;
-  *  - `maxPartitionBytes` (default 128 MB): input-partition packing bound.
+  *    inference over executors.
   */
 class DicomDataSource extends TableProvider with DataSourceRegister {
 
@@ -161,7 +161,7 @@ object DicomSourceUtil {
         "full-corpus pass runs on executors); start a session or drop " +
         "to the bounded-sample default")
     val keys: Seq[String] =
-      if (distributed && SparkSession.getActiveSession.isDefined) {
+      if (distributed) {
         val sc = SparkSession.active.sparkContext
         val sconf = sc.broadcast(new SerializableHadoopConf(conf))
         val parts = math.max(1, math.min(files.size, sc.defaultParallelism * 4))
@@ -223,13 +223,10 @@ class DicomTable(schema: StructType, paths: Seq[String]) extends Table with Supp
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new DicomScanBuilder(schema, paths,
-      options.getBoolean("failOnError", false),
-      options.getLong("maxPartitionBytes", 128L * 1024 * 1024))
+    new DicomScanBuilder(schema, paths, options.getBoolean("failOnError", false))
 }
 
-class DicomScanBuilder(full: StructType, paths: Seq[String],
-                       failOnError: Boolean, maxPartitionBytes: Long)
+class DicomScanBuilder(full: StructType, paths: Seq[String], failOnError: Boolean)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = full
   // Top-level pruning only: with nested schema pruning Spark passes a
@@ -240,14 +237,13 @@ class DicomScanBuilder(full: StructType, paths: Seq[String],
     required = StructType(requiredSchema.fieldNames.map(full(_)))
   override def build(): Scan = {
     DicomSourceUtil.checkTypes(full)
-    new DicomScan(required, paths, failOnError, maxPartitionBytes)
+    new DicomScan(required, paths, failOnError)
   }
 }
 
 case class DicomInputPartition(files: Seq[String]) extends InputPartition
 
-class DicomScan(required: StructType, paths: Seq[String],
-                failOnError: Boolean, maxPartitionBytes: Long)
+class DicomScan(required: StructType, paths: Seq[String], failOnError: Boolean)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -256,7 +252,8 @@ class DicomScan(required: StructType, paths: Seq[String],
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = DicomSourceUtil.sessionConf()
     val files = paths.flatMap(DicomPipeline.walkFiles(conf, _))
-    DicomSourceUtil.packPartitions(files, maxPartitionBytes)
+    DicomSourceUtil.packPartitions(files,
+      SparkSession.active.sessionState.conf.filesMaxPartitionBytes)
       .map(DicomInputPartition.apply).toArray
   }
   // one broadcast of the configuration, not a copy inside every task

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.dot
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 
 /** The round-8 corpus-tooling additions (`text_chunk`, `text_search`,
@@ -171,14 +172,13 @@ class CorpusToolsSpec extends AnyFunSuite {
   test("corpus_contamination_semantic equals a brute-force window argmax") {
     import spark.implicits._
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    graft.functions.VectorExpressions.register(spark)
     val n = e.select($"vec_id", $"embedding",
-      expr("sqrt(graft_dot(embedding, embedding))").as("nrm"))
+      sqrt(dot($"embedding", $"embedding")).as("nrm"))
     val ev = n.filter(pmod($"vec_id", lit(20)) === 0)
       .select($"vec_id".as("eval_id"), $"embedding".as("qe"), $"nrm".as("qn"))
     val brute = n.filter(pmod($"vec_id", lit(20)) =!= 0).crossJoin(ev)
       .select($"eval_id", $"vec_id".as("train_id"),
-        expr("round(graft_dot(embedding, qe) / (nrm * qn), 4)").as("cos_sim"))
+        round(dot($"embedding", $"qe") / ($"nrm" * $"qn"), 4).as("cos_sim"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy($"eval_id")
           .orderBy($"cos_sim".desc, $"train_id")))

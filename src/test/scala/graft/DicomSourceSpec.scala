@@ -150,6 +150,14 @@ class DicomSourceSpec extends AnyFunSuite {
     assert(df.rdd.getNumPartitions <= 2) // 6 files, ~5 MB total, 128 MB cap
   }
 
+  test("spark.sql.files.maxPartitionBytes sizes the read: at 1 byte each object plans alone") {
+    val objects = graft.pipeline.DicomPipeline.walkFiles(
+      spark.sparkContext.hadoopConfiguration, fixtures).size
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    try assert(spark.read.format("dicom").load(fixtures).rdd.getNumPartitions == objects)
+    finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
   test("multi-path load reads all paths (paths JSON option)") {
     val two = spark.read.format("dicom")
       .load(s"$fixtures/example-0", s"$fixtures/example-6")

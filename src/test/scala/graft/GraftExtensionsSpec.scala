@@ -2,45 +2,67 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import graft.functions.GraftFunctions
 
-/** The extensions class must make the native functions available to a
-  * pure-SQL session (no Scala register call), and coexist with the
-  * programmatic `VectorExpressions.register` path. */
+/** The extensions class must make every native function of
+  * [[GraftFunctions.all]] available by name to a pure-SQL session, with
+  * the same result as the Column an operator builds, and
+  * [[graft.util.LocalSession]] must install it. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("spark.sql.extensions injects graft functions into a fresh session") {
-    // extensions only apply at session CREATION — under `sbt test` all
-    // suites share one JVM, so an active session from another suite must
-    // be stopped or getOrCreate silently returns it without extensions
+  /** Per function: its (a, b) arguments as SQL literals, and the result. */
+  private val cases: Map[String, (String, String, Any)] = Map(
+    "graft_dot" -> ("array(1.0f, 2.0f)", "array(3.0f, 4.0d)", 11.0),
+    "graft_gram_min_md5" -> ("'abcdefgh'", "8", "e8dc4081b13434b45189a720b77b6818"),
+    "graft_char_grams" -> ("'abcd'", "3", Seq("abc", "bcd")),
+    "graft_sorted_inter" -> ("array('a', 'b', 'd')", "array('b', 'c', 'd')", 2L),
+    "graft_bpe_sym_len" -> ("'lower'", "array(array('l', 'o'), array('lo', 'w'))", 4L),
+    "graft_pq_adc" -> ("X'0001'", "array(1.0d, 2.0d, 10.0d, 20.0d)", 21.0))
+
+  // extensions only apply at session CREATION — under `sbt test` all
+  // suites share one JVM, so an active session from another suite must
+  // be stopped or getOrCreate silently returns it without extensions
+  private def freshSession(build: => SparkSession)(body: SparkSession => Unit): Unit = {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
+    val s = build
+    try body(s)
+    finally {
+      s.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
+
+  /** Every function resolves by name, and its SQL result equals both
+    * the expected value and the result of the operators' Column. */
+  private def assertSqlMatchesColumns(s: SparkSession): Unit = {
+    assert(GraftFunctions.all.map(_.name).toSet == cases.keySet)
+    GraftFunctions.all.foreach { f =>
+      assert(s.catalog.functionExists(f.name), s"${f.name} does not resolve")
+      val (a, b, expected) = cases(f.name)
+      val row = s.sql(s"SELECT $a AS a, $b AS b")
+      val bySql = row.selectExpr(s"${f.name}(a, b)").head().get(0)
+      val byColumn = row.select(f(col("a"), col("b"))).head().get(0)
+      assert(bySql == expected, f.name)
+      assert(byColumn == bySql, f.name)
+    }
+  }
+
+  test("spark.sql.extensions injects graft functions into a fresh session") {
+    freshSession(SparkSession.builder()
       .master("local[2]")
       .appName("graft-extensions-spec")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      val dot = s.sql(
-        "SELECT graft_dot(array(1.0f, 2.0f), array(3.0f, 4.0f)) AS d")
-        .head().getDouble(0)
-      assert(dot == 11.0)
-      val grams = s.sql("SELECT graft_char_grams('abcd', 3) AS g")
-        .head().getSeq[String](0)
-      assert(grams == Seq("abc", "bcd"))
-      assert(s.sql("SELECT graft_gram_min_md5('abcdefgh', 8) AS f")
-        .head().getString(0).length == 32)
-      // programmatic register stays idempotent alongside the injection
-      graft.functions.VectorExpressions.register(s)
-      assert(s.sql("SELECT graft_dot(array(1.0d), array(2.0d))")
-        .head().getDouble(0) == 2.0)
-    } finally {
-      s.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+      .getOrCreate())(assertSqlMatchesColumns)
+  }
+
+  test("a LocalSession session resolves every native function by name") {
+    freshSession(graft.util.LocalSession("2"))(assertSqlMatchesColumns)
   }
 }

@@ -11,7 +11,6 @@ object JaccardProfile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.util.LocalSession(cpus)
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

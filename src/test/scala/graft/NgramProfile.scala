@@ -28,7 +28,6 @@ object NgramProfile {
     val cand = time("cand (cached run)") {
       graft.operators.Dedup.ngramCandidates(spark, dir).localCheckpoint()
     }
-    graft.functions.VectorExpressions.register(spark)
     val sizes = time("gram sizes (skinny)") {
       spark.read.parquet(s"$dir/documents.parquet")
         .filter(length($"text") >= 5)

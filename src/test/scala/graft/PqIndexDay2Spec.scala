@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import graft.functions.GraftFunctions.dot
 import graft.operators.Similarity
+import org.apache.spark.sql.functions.sqrt
 
 /** Day-2 PQ index maintenance (`sim_pq_index_day2`): append encodes
   * with the FROZEN day-1 codebooks and compaction is an anti-join
@@ -39,10 +41,9 @@ class PqIndexDay2Spec extends AnyFunSuite {
       val all = spark.read.parquet(s"$sf/embeddings.parquet")
         .select($"vec_id", $"embedding")
       // unit-normalize exactly as the operator does (shared entry)
-      graft.functions.VectorExpressions.register(spark)
       val unit = all
-        .selectExpr("vec_id", "embedding",
-          "sqrt(graft_dot(embedding, embedding)) as nrm")
+        .select($"vec_id", $"embedding",
+          sqrt(dot($"embedding", $"embedding")).as("nrm"))
         .filter($"nrm" > 0)
         .selectExpr("vec_id",
           "transform(embedding, x -> cast(x / nrm as float)) as unit")

@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import graft.functions.GraftFunctions.dot
 import graft.operators.Similarity
+import org.apache.spark.sql.functions.sqrt
 
 /** Day-N codebook retrain migration (`sim_pq_index_retrain`): the
   * versioned-root lifecycle must (a) genuinely retrain — the v2 sidecar
@@ -36,10 +38,9 @@ class PqRetrainSpec extends AnyFunSuite {
 
   private def unitVecs() = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     spark.read.parquet(s"$sf/embeddings.parquet")
-      .selectExpr("vec_id", "embedding",
-        "sqrt(graft_dot(embedding, embedding)) as nrm")
+      .select($"vec_id", $"embedding",
+        sqrt(dot($"embedding", $"embedding")).as("nrm"))
       .filter($"nrm" > 0)
       .selectExpr("vec_id",
         "transform(embedding, x -> cast(x / nrm as float)) as unit")

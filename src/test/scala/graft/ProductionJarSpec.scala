@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * three contract mains. Measurement harnesses live in test scope and
   * run as `sbt "Test/runMain graft.<Name>"`; every main builds its
   * session through [[graft.util.LocalSession]]; no `println` debug
-  * switch comes back. A source guard, because the defect IS the shape. */
+  * switch comes back; the native functions have one registry. A source
+  * guard, because the defect IS the shape. */
 class ProductionJarSpec extends AnyFunSuite {
 
   /** (path relative to `root`, text) of every Scala file under `root`. */
@@ -49,5 +50,36 @@ class ProductionJarSpec extends AnyFunSuite {
       val hits = all.collect { case (f, text) if text.contains(sw) => f }
       assert(hits.isEmpty, s"debug switch $sw is back in $hits")
     }
+  }
+
+  /** The argument text of every `fn(` call in `c`, up to its matching
+    * close parenthesis. */
+  private def callArgs(c: String, fn: String): Seq[String] =
+    ("""\b""" + fn + """\(""").r.findAllMatchIn(c).map { m =>
+      var depth = 1
+      var i = m.end
+      while (i < c.length && depth > 0) {
+        if (c(i) == '(') depth += 1 else if (c(i) == ')') depth -= 1
+        i += 1
+      }
+      c.substring(m.end, i)
+    }.toSeq
+
+  test("native functions: operators build Columns, GraftExtensions is installed only by LocalSession") {
+    val main = sources("src/main/scala").map { case (f, text) => (f, code(text)) }
+    val operators = main.filterNot(_._1.startsWith("graft/functions/"))
+    // split so this file does not match itself
+    val register = "VectorExpressions." + "register"
+    val registers = operators.collect { case (f, c) if c.contains(register) => f }
+    assert(registers.isEmpty, s"per-operator $register calls in $registers")
+    val byName = for {
+      (f, c) <- operators
+      fn <- Seq("expr", "selectExpr", "call_function")
+      args <- callArgs(c, fn) if args.contains("graft_")
+    } yield s"$f: $fn($args)"
+    assert(byName.isEmpty, s"native functions looked up by name; use graft.functions.GraftFunctions: $byName")
+    val installs = main.collect { case (f, c) if c.contains("spark.sql.extensions") => f }
+    assert(installs == Seq("graft/util/LocalSession.scala"),
+      "install GraftExtensions in graft.util.LocalSession only")
   }
 }

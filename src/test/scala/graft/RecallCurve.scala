@@ -103,7 +103,6 @@ object RecallCurve {
     // low fused row is attributable to the dense arm (recall@100 low
     // too) vs the RRF arithmetic (recall@100 high, fused still low).
     import org.apache.spark.sql.functions.{broadcast, col}
-    graft.functions.VectorExpressions.register(spark)
     val e100 = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .selectExpr("vec_id", "embedding",
         "sqrt(graft_dot(embedding, embedding)) AS nrm")

@@ -367,7 +367,6 @@ object Sf10Rehearsal {
     // artifact write (the r14 lesson: gates never eat the evidence).
     val annJson = if (sections("ann")) {
       import graft.operators.{Similarity, TextAnalysis}
-      graft.functions.VectorExpressions.register(spark)
       val rr = Similarity.hybridRerank(spark)
       val k = Similarity.PqCoarseLists
       val autoNp = Similarity.autoNprobe(nVecs, k, rr)
