@@ -20,7 +20,15 @@ fi
 SF=${1:-/root/testdata/sf0.01}
 OUT=target/ci_verify
 
-sbt -batch test
+mkdir -p target
+sbt -batch test 2>&1 | tee target/ci_test.log
+# every spec shares SparkSuite's one session: Spark prints this line when
+# a getOrCreate with options finds a session already running
+if grep -q "Using an existing Spark session" target/ci_test.log; then
+  echo "a second getOrCreate with options reached the shared test session" \
+    "(see target/ci_test.log)" >&2
+  exit 1
+fi
 
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
   sbt -batch "runMain graft.Verify $SF $PWD/$OUT"

@@ -117,12 +117,13 @@ object StreamQueries {
     * story in the deployment shape the reference actually runs (one
     * event per arriving object): every fixture object drains through
     * [[graft.streaming.DicomStream]] at `maxFilesPerTrigger=1` (route →
-    * expand → parse → flatten per micro-batch, checkpointed
-    * exactly-once, partitioned parquet sink — the gated ingest path
-    * unchanged), then the curation funnel runs over the SINK relation
-    * via [[graft.queries.DicomQueries.funnelFromRaw]] — the same
-    * normalize/exact-dedup/near-dup/quality expressions, stage for
-    * stage. Per-batch
+    * expand → parse → flatten per micro-batch, a checkpointed source
+    * log that never re-lists a committed object, an at-least-once
+    * partitioned parquet sink that appends a replayed batch twice — the
+    * gated ingest path unchanged), then the curation funnel runs over
+    * the SINK relation via [[graft.queries.DicomQueries.funnelFromRaw]] —
+    * the same normalize/exact-dedup/near-dup/quality expressions, stage
+    * for stage. Per-batch
     * schemas differ (each object observes its own key set), so the sink
     * read merges schemas — the union-of-observed-keys semantics the
     * batch extraction computes in one pass; values are per-row

@@ -10,9 +10,12 @@ import graft.pipeline.DicomPipeline
   * semantics. `readStream.format("binaryFile")` discovers new objects
   * (its `path` column only: the source never reads their content);
   * `foreachBatch` opens them through the SAME per-object reader and
-  * write the batch job uses; the checkpointed source log gives
-  * exactly-once file processing — a deliberate improvement over the reference, which
-  * reprocesses re-uploaded objects (no idempotency check, SURVEY §2.5).
+  * write the batch job uses. The checkpointed source log never
+  * re-lists an object a committed batch took — an improvement over the
+  * reference, which reprocesses re-uploaded objects (no idempotency
+  * check, SURVEY §2.5). The sink is at-least-once, though: the batch
+  * id is ignored and the write appends, so a batch replayed after a
+  * crash between sink write and commit appends its rows twice.
   */
 object DicomStream {
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Bpe
 
@@ -10,14 +8,7 @@ import graft.operators.Bpe
   * the same word-frequency dictionary — the strongest gate available for
   * an operator whose round-k input depends on k-1 data-dependent
   * argmaxes (no SQL oracle can express it). */
-class BpeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("bpe-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,36 +1,16 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Bucketing
 
 /** Bucketed co-located join: both sides pre-bucketed on the join key →
   * the sort-merge join must run with NO shuffle exchange under the join
   * (the one aggregation exchange afterwards is expected). */
-class BucketingSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("bucketing-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  /** Force the SMJ path at runtime (session may be shared across suites;
-    * builder configs would be silently ignored) and restore after. */
-  private def withNoBroadcast[A](body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try body
-    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+class BucketingSpec extends SparkSuite {
 
   test("bucketed join has no exchange below the join; result is correct") {
-    // plan resolution AND collection must run under the tuned conf —
-    // queryExecution is lazy, so everything stays inside the wrapper
-    val (plan, got) = withNoBroadcast {
+    // force the sort-merge join; plan resolution AND collection must run
+    // under it — queryExecution is lazy, so everything stays inside
+    val (plan, got) = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = Bucketing.bucketedOrdersJoin(spark, "/root/testdata/sf0.001")
       (df.queryExecution.executedPlan.toString, df.collect().toSeq)
     }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.{col, struct, to_json}
@@ -15,9 +14,7 @@ import graft.pipeline.DicomPipeline.ImageRow
   * same through `to_json` (which keeps map-entry order), except a date
   * in the 1582 calendar gap, which the old `java.sql.Date` path moved
   * ten days (COMPAT.md). */
-class CatalystRowsSpec extends AnyFunSuite {
-
-  private lazy val spark = graft.util.LocalSession("4")
+class CatalystRowsSpec extends SparkSuite {
 
   private def str(g: Int, e: Int, vr: String, v: String) = DicomWriter.strElement(g, e, vr, v)
 

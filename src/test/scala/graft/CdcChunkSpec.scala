@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -13,15 +11,7 @@ import graft.operators.Dedup
   * unedited corpus are preserved. Fixed-offset blocking loses every
   * chunk after the edit point; CDC loses at most one (plus a possible
   * boundary split/merge at the edit's own chunk). */
-class CdcChunkSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("cdc-chunk-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CdcChunkSpec extends SparkSuite {
 
   test("coverage: chunks tile each document exactly") {
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.{Curation, TextAnalysis}
 
 /** Definitions of the corpus-statistics operators pinned on crafted
@@ -9,14 +7,7 @@ import graft.operators.{Curation, TextAnalysis}
   * (integer tie-break contract), unigram surprisal (corpus-LM scoring),
   * and the quality funnel's first-fail composition law. The oracle pins
   * the real corpus; this pins the SEMANTICS. */
-class CorpusStatsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("corpus-stats-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CorpusStatsSpec extends SparkSuite {
 
   private def stage(rows: Seq[(Long, String)]): String = {
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.dot
 import graft.operators.{Dedup, Similarity, TextAnalysis}
@@ -13,15 +11,7 @@ import graft.operators.{Dedup, Similarity, TextAnalysis}
   * hashes alone don't name — window coverage, keeper uniqueness,
   * estimate/exact agreement shape, brute-force argmax equality, and the
   * pushed index filter on the search path. */
-class CorpusToolsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("corpus-tools-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CorpusToolsSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

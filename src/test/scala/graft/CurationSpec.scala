@@ -1,20 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Curation
 
 /** Dataset-curation operators: value invariants (the oracle pins exact
   * values — these pin the properties that must survive refactors) and the
   * scale-critical plan shapes. */
-class CurationSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("curation-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

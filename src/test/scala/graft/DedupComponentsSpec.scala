@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Dedup
 
 /** Pins the TRANSITIVE semantics of near-dup components: a chain
@@ -10,14 +8,7 @@ import graft.operators.Dedup
   * reason `dedup_components` exists. The chain is crafted so the
   * 3-gram Jaccards are a~b ≈ 0.71, b~c = 0.5 (both ≥ the 0.5 cut)
   * and a~c ≈ 0.33 (below it). */
-class DedupComponentsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("dedup-components-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupComponentsSpec extends SparkSuite {
 
   test("a~b~c chain collapses into one component even though a~c is no pair") {
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.{Dedup, Graph}
 import graft.queries.Relational
 
@@ -10,15 +8,7 @@ import graft.queries.Relational
   * partition, a table with one row) and that no corpus-level oracle
   * exercises: every operator must return an empty/consistent result,
   * never throw. */
-class DegenerateInputSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("degenerate-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DegenerateInputSpec extends SparkSuite {
 
   /** A scratch sf-dir holding EMPTY copies of the tables the round's
     * operators read (schemas cloned from the real sf0.001 fixtures). */

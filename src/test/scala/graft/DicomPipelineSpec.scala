@@ -1,23 +1,13 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.{Catalog, DicomPipeline}
 
 /** End-to-end pipeline over the reference fixture set: extraction counts,
   * schema shape, error channel (DLQ analog), partitioned write + pruned
   * SQL read, crawler merge. */
-class DicomPipelineSpec extends AnyFunSuite {
+class DicomPipelineSpec extends SparkSuite {
 
   private val fixtures = graft.queries.DicomQueries.Fixtures
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("dicom-pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory(
@@ -83,14 +73,13 @@ class DicomPipelineSpec extends AnyFunSuite {
       .collect().map(_.toString)
     val again = graft.queries.DicomQueries.partitionedSql(spark, "")
       .collect().map(_.toString)
-    try {
-      spark.conf.set("spark.graft.dicom.catalogReuse", "false")
+    withConf("spark.graft.dicom.catalogReuse" -> "false") {
       val fresh = graft.queries.DicomQueries.partitionedSql(spark, "")
         .collect().map(_.toString)
       assert(viaReuse.nonEmpty && viaReuse.sameElements(fresh),
         "standing-catalog path drifted from the fresh-table path")
       assert(again.sameElements(fresh), "second reuse call drifted")
-    } finally spark.conf.unset("spark.graft.dicom.catalogReuse")
+    }
   }
 
   test("crawler merges divergent per-batch schemas") {
@@ -472,8 +461,7 @@ class DicomPipelineSpec extends AnyFunSuite {
     // fingerprint (never on pid or mere existence), the dir is not
     // swept at exit, and the entry's output is unchanged.
     val durable = tmp()
-    spark.conf.set("spark.graft.dicom.funnelIdxDir", durable)
-    try {
+    try withConf("spark.graft.dicom.funnelIdxDir" -> durable) {
       val batch = graft.queries.DicomQueries.corpusFunnelDelta(spark, "")
         .collect().map(_.toString)
       // "run 1" (yesterday): builds hashes + ndidx + fingerprint marker
@@ -507,9 +495,6 @@ class DicomPipelineSpec extends AnyFunSuite {
       assert(day3.sameElements(batch))
       assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fp,
         "a fingerprint mismatch must rebuild and restamp the marker")
-    } finally {
-      spark.conf.unset("spark.graft.dicom.funnelIdxDir")
-      graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(durable))
-    }
+    } finally graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(durable))
   }
 }

@@ -1,19 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 
 /** DataSource V2 `format("dicom")`: schema inference, reading, column
   * pruning pushdown, permissive error handling. */
-class DicomSourceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("dicom-source-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DicomSourceSpec extends SparkSuite {
 
   private val fixtures = graft.queries.DicomQueries.Fixtures
 
@@ -153,9 +144,9 @@ class DicomSourceSpec extends AnyFunSuite {
   test("spark.sql.files.maxPartitionBytes sizes the read: at 1 byte each object plans alone") {
     val objects = graft.pipeline.DicomPipeline.walkFiles(
       spark.sparkContext.hadoopConfiguration, fixtures).size
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
-    try assert(spark.read.format("dicom").load(fixtures).rdd.getNumPartitions == objects)
-    finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    withConf("spark.sql.files.maxPartitionBytes" -> "1") {
+      assert(spark.read.format("dicom").load(fixtures).rdd.getNumPartitions == objects)
+    }
   }
 
   test("multi-path load reads all paths (paths JSON option)") {
@@ -222,13 +213,13 @@ class DicomSourceSpec extends AnyFunSuite {
   test("inferMode=full without an active session fails fast, never silent sample") {
     import graft.sources.DicomSourceUtil
     val conf = spark.sparkContext.hadoopConfiguration
-    val prev = org.apache.spark.sql.SparkSession.getActiveSession
-    org.apache.spark.sql.SparkSession.clearActiveSession()
+    val prev = SparkSession.getActiveSession
+    SparkSession.clearActiveSession()
     try {
       val e = intercept[IllegalStateException] {
         DicomSourceUtil.inferSchema(Seq(fixtures), conf, distributed = true)
       }
       assert(e.getMessage.contains("inferMode=full"))
-    } finally prev.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
+    } finally prev.foreach(SparkSession.setActiveSession)
   }
 }

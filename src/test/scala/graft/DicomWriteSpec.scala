@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.DicomPipeline
 
 /** The job's two writes cost per byte written, not per process forked or
@@ -14,9 +13,7 @@ import graft.pipeline.DicomPipeline
   *  - the errors write runs only when the key union saw an error, and is
   *    rebalanced into one file for a handful of rows however many scan
   *    partitions they came from. */
-class DicomWriteSpec extends AnyFunSuite {
-
-  private lazy val spark = graft.util.LocalSession("4")
+class DicomWriteSpec extends SparkSuite {
 
   private def tmp(): Path =
     Files.createTempDirectory(Paths.get("target"), "dicomwrite").toAbsolutePath

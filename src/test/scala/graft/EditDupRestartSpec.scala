@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.queries.StreamQueries
 
@@ -11,15 +9,7 @@ import graft.queries.StreamQueries
   * NAME, which the exact verify needs) must survive a stop/restart,
   * nothing re-emits, and a silent lower-id handover persists across a
   * further restart. */
-class EditDupRestartSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("editdup-restart-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EditDupRestartSpec extends SparkSuite {
 
   test("owner id AND name survive restart; handover persists; no re-emission") {
     import spark.implicits._

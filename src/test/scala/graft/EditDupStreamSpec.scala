@@ -1,21 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.queries.StreamQueries
 
 /** The streaming edit-distance filter beyond its hash gate: cross-batch
   * first-seen ownership, the exact-verify behind the signature match
   * (a colliding non-match must NOT report), and determinism. */
-class EditDupStreamSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("editdup-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EditDupStreamSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

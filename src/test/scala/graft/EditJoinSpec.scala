@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Dedup
 
 /** The symmetric-delete edit join's two load-bearing claims, checked
@@ -10,14 +8,7 @@ import graft.operators.Dedup
   * type (the losslessness theorem, exercised over random mutations);
   * (2) the full operator equals the naive all-pairs Levenshtein join
   * in-process at sf0.001. */
-class EditJoinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("edit-join-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EditJoinSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

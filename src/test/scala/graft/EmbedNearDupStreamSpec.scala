@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.queries.StreamQueries
 
 /** Streaming embedding near-dup (`stream_embed_neardup`): the DuckDB
@@ -10,15 +8,7 @@ import graft.queries.StreamQueries
   * (collision-only output would be ~4× larger and hash-fail). This
   * spec pins the geometry-bounded state claim, cross-batch first-seen,
   * and determinism. */
-class EmbedNearDupStreamSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("embed-neardup-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EmbedNearDupStreamSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,8 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
-
 /** CI-sized pins for the two extraction-path scale defects the r5
   * rehearsal found and fixed (r5 verdict #6) — they previously held by
   * code shape alone:
@@ -27,15 +24,7 @@ import org.apache.spark.sql.SparkSession
   *  5. the Hadoop configuration reaches tasks as one broadcast, never
   *     as a copy serialized into each task. A source-shape guard too.
   */
-class ExtractionScaleSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .appName("extraction-scale-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtractionScaleSpec extends SparkSuite {
 
   test("walkFiles keeps the fork-free status walk") {
     def source(file: String): String =

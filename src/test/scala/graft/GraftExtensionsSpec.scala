@@ -1,15 +1,15 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.functions.GraftFunctions
+import graft.SparkSuite.freshSession
 
 /** The extensions class must make every native function of
   * [[GraftFunctions.all]] available by name to a pure-SQL session, with
   * the same result as the Column an operator builds, and
   * [[graft.util.LocalSession]] must install it. */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends SparkSuite {
 
   /** Per function: its (a, b) arguments as SQL literals, and the result. */
   private val cases: Map[String, (String, String, Any)] = Map(
@@ -19,23 +19,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     "graft_sorted_inter" -> ("array('a', 'b', 'd')", "array('b', 'c', 'd')", 2L),
     "graft_bpe_sym_len" -> ("'lower'", "array(array('l', 'o'), array('lo', 'w'))", 4L),
     "graft_pq_adc" -> ("X'0001'", "array(1.0d, 2.0d, 10.0d, 20.0d)", 21.0))
-
-  // extensions only apply at session CREATION — under `sbt test` all
-  // suites share one JVM, so an active session from another suite must
-  // be stopped or getOrCreate silently returns it without extensions
-  private def freshSession(build: => SparkSession)(body: SparkSession => Unit): Unit = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = build
-    try body(s)
-    finally {
-      s.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
-  }
 
   /** Every function resolves by name, and its SQL result equals both
     * the expected value and the result of the operators' Column. */
@@ -63,6 +46,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("a LocalSession session resolves every native function by name") {
-    freshSession(graft.util.LocalSession("2"))(assertSqlMatchesColumns)
+    // `spark` is first read here, after freshSession has stopped the
+    // shared session, so LocalSession builds it anew
+    freshSession(spark)(assertSqlMatchesColumns)
   }
 }

@@ -1,21 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.{Graph, TextAnalysis}
 
 /** PageRank and inverted-index invariants the hash oracle can't express
   * as properties: mass conservation bounds, rank positivity, posting-cap
   * honoring — the checks that localize a bug when the hash gate merely
   * says "different". */
-class GraphSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graph-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

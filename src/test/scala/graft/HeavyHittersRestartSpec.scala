@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.queries.StreamQueries
 
@@ -13,15 +11,7 @@ import graft.queries.StreamQueries
   * ([[StreamQueries.hhSummaries]]) through three runs over one growing
   * file-source directory, all recovering from the same explicit
   * checkpoint on the RocksDB provider. */
-class HeavyHittersRestartSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("hh-restart-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HeavyHittersRestartSpec extends SparkSuite {
 
   test("summary counts continue across stop → restart from checkpoint") {
     import spark.implicits._

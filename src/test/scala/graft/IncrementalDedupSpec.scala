@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -9,14 +7,7 @@ import graft.operators.Dedup
   * the full run, and the structural guarantee that index×index pairs are
   * never produced — the property that makes the pattern viable when the
   * index is 100 TB and the batch is a fraction of a percent. */
-class IncrementalDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("incremental-dedup-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalDedupSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

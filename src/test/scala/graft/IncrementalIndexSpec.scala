@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -11,15 +9,7 @@ import graft.operators.Dedup
   * corpus. The `dedup_incremental_idx` query shares the recompute
   * oracle's SQL, so the driver gate re-proves this against DuckDB; this
   * spec pins it in-process plus the artifact shape. */
-class IncrementalIndexSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("incremental-index-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalIndexSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -110,11 +100,10 @@ class IncrementalIndexSpec extends AnyFunSuite {
         .collect().map(_.toString).sorted
       Dedup.unpersistIntermediates(spark)
       // cap 0 → every non-empty candidate set overflows → fallback route
-      spark.conf.set("spark.graft.dedup.index.pushdownMaxIds", "0")
-      val fellBack =
-        try Dedup.incrementalPairsFromIndex(spark, idx, docs.filter(isBatch))
+      val fellBack = withConf("spark.graft.dedup.index.pushdownMaxIds" -> "0") {
+        Dedup.incrementalPairsFromIndex(spark, idx, docs.filter(isBatch))
           .collect().map(_.toString).sorted
-        finally spark.conf.unset("spark.graft.dedup.index.pushdownMaxIds")
+      }
       Dedup.unpersistIntermediates(spark)
       assert(pushed.nonEmpty, "fixture corpus has batch-involving near-dups")
       assert(pushed.sameElements(fellBack),

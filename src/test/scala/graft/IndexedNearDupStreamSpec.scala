@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.min
 import org.apache.spark.sql.streaming.Trigger
 import graft.queries.StreamQueries
@@ -13,15 +11,7 @@ import graft.operators.Dedup
   * sf0.01 (including a stream doc owned by a higher-id day-1 doc);
   * this spec pins the frozen-vs-min-wins distinction on crafted data —
   * where the two semantics provably differ — and determinism. */
-class IndexedNearDupStreamSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("indexed-neardup-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IndexedNearDupStreamSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

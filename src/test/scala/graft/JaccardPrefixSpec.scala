@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -13,14 +11,7 @@ import graft.operators.Dedup
   * the missing pair named, not as an opaque hash diff), plus the
   * integer-threshold boundary semantics.
   */
-class JaccardPrefixSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("jaccard-prefix-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JaccardPrefixSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Dedup
 
 /** Segment-level boilerplate removal (`dedup_lines`): the oracle gates
@@ -9,14 +7,7 @@ import graft.operators.Dedup
   * docs — cross-doc segments go, within-doc repeats stay, order is
   * preserved, and a doc that is ALL boilerplate survives as an empty
   * row rather than vanishing. */
-class LineDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("line-dedup-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LineDedupSpec extends SparkSuite {
 
   test("cross-doc segments drop, unique content survives in order") {
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Curation, Maintenance}
 import graft.queries.Relational
@@ -12,16 +10,7 @@ import graft.queries.Relational
   * (each merge action reachable, delete-of-absent a no-op, funnel step
   * ordering strict, weighting actually biases the sample) and the
   * determinism contracts that must survive refactors. */
-class MaintenanceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("maintenance-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MaintenanceSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

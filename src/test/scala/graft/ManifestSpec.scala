@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.DicomPipeline
 
 /** Manifest-driven batch entry point (the 10M+-object path): task
@@ -12,15 +10,7 @@ import graft.pipeline.DicomPipeline
   * (small objects packed, zero-length objects, objects above
   * `spark.sql.files.maxPartitionBytes` alone in their task).
   */
-class ManifestSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("manifest-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ManifestSpec extends SparkSuite {
 
   private def smallDcm(i: Int): Array[Byte] = DicomWriter.file(Seq(
     DicomWriter.strElement(0x0008, 0x0020, "DA", f"202401${i % 28 + 1}%02d"),
@@ -60,8 +50,7 @@ class ManifestSpec extends AnyFunSuite {
       val loose = Files.size(dir.resolve("loose-0.dcm"))
       val zip = Files.size(dir.resolve("big.zip"))
       assert(loose < zip, "fixture geometry: zip must exceed a loose file")
-      spark.conf.set("spark.sql.files.maxPartitionBytes", ((loose + zip) / 2).toString)
-      try {
+      withConf("spark.sql.files.maxPartitionBytes" -> ((loose + zip) / 2).toString) {
         val listed = snapshot(DicomPipeline.extract(spark, dir.toString, "bkt", "reg"))
         val manifest = DicomPipeline.manifestOf(spark, dir.toString)
         val viaManifest = snapshot(
@@ -70,7 +59,7 @@ class ManifestSpec extends AnyFunSuite {
         assert(listed._2 == Seq(("DICOMDIR", "parse")))
         assert(viaManifest._1 == listed._1, "manifest route changed extracted rows")
         assert(viaManifest._2 == listed._2, "manifest route changed the error channel")
-      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      }
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.functions.MisraGries
 import graft.operators.TextAnalysis
 
@@ -11,14 +9,7 @@ import graft.operators.TextAnalysis
   * the trim path actually fires: the superset/err invariant, its
   * survival under partition-order merges, and the certificate's
   * fail-loudly contract when the budget is hostile. */
-class MisraGriesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("misra-gries-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MisraGriesSpec extends SparkSuite {
 
   /** Exact counts of a token stream, locally. */
   private def exactCounts(rows: Seq[Array[String]]): Map[String, Long] =
@@ -113,8 +104,7 @@ class MisraGriesSpec extends AnyFunSuite {
     }
     val dir = stage(docs)
     val exact = Map("hot" -> 100L, "warm" -> 100L, "tepid" -> 100L)
-    spark.conf.set("spark.graft.stream.hh.m", "8")
-    try {
+    withConf("spark.graft.stream.hh.m" -> "8") {
       val out = graft.queries.StreamQueries.streamHeavyHitters(spark, dir)
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       // lower bounds only — a streamed count above the true count would
@@ -125,7 +115,7 @@ class MisraGriesSpec extends AnyFunSuite {
       // the three heavies clear any possible per-shard err here and must
       // all surface
       exact.keys.foreach(w => assert(out.contains(w), s"heavy '$w' lost in trims"))
-    } finally spark.conf.unset("spark.graft.stream.hh.m")
+    }
   }
 
   test("certificate fails loudly when the budget cannot separate the tail") {

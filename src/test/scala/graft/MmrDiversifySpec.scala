@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -12,15 +10,7 @@ import graft.operators.Similarity
   * rank-1 = brute-top-1 anchor, and that the diversity term actually
   * buys diversity — the MMR set's mean pairwise cosine is strictly
   * below the plain top-k's on the clustered test embeddings. */
-class MmrDiversifySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("mmr-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MmrDiversifySpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.01"
 

@@ -1,20 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Multimodal
 
 /** Multimodal binary-column operators over the reference fixtures:
   * real DICOM header decode, stub geometry for non-DICOM, frame-sample
   * explode shape, pseudo-embedding compatibility with the ANN path. */
-class MultimodalSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("multimodal-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends SparkSuite {
 
   private val fixtures = graft.queries.DicomQueries.Fixtures
 

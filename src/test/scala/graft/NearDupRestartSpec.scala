@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.queries.StreamQueries
 
@@ -16,15 +14,7 @@ import graft.queries.StreamQueries
   * gate drain's memory sink cannot recover from a checkpoint, so the
   * spec attaches a foreachBatch collector instead).
   */
-class NearDupRestartSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("neardup-restart-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NearDupRestartSpec extends SparkSuite {
 
   test("owners survive stop → restart from checkpoint; no re-emission, handover persists") {
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.queries.StreamQueries
 
 /** Streaming near-dup filter: single-batch equality with the batch
@@ -9,15 +7,7 @@ import graft.queries.StreamQueries
   * DuckDB oracle; this spec pins the CROSS-batch semantics (first-seen
   * owner wins — a later-arriving lower id is new content, not a dup of
   * the future) and determinism. */
-class NearDupStreamSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("neardup-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NearDupStreamSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

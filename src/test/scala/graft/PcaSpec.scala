@@ -1,21 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Similarity
 
 /** The PCA math behind `sim_pca_project`: the generated-CTE oracle
   * hash-gates the fixed-point training end to end (cross-engine
   * replay); this pins the MATH — that the integer eigensolver still
   * computes principal components — against first principles. */
-class PcaSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("pca-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PcaSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,21 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Multimodal
 
 /** What the rows-only gate can't see about the perceptual-hash family:
   * dHash's invariance claims (re-encode exact, rescale/noise near,
   * structural difference far), the losslessness of the 8-band join at
   * the threshold, and determinism. */
-class PhashSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("phash-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PhashSpec extends SparkSuite {
 
   private def bytes(dir: String, name: String): Array[Byte] =
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, name))

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.queries.StreamQueries
 
@@ -19,15 +17,7 @@ import graft.queries.StreamQueries
   * dropped. This spec pins that the filters also hold across restarts:
   * a gate-failing or model-negative document emits nothing and leaves
   * no bucket state behind in any run. */
-class PipelineRestartSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("pipeline-restart-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineRestartSpec extends SparkSuite {
 
   // passes every tier: ≥10 tokens, mean length in [2,15], no
   // punctuation, en-stopword argmax, and 'hash' ≥ 4% of tokens so the

@@ -1,32 +1,15 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality regression guards: the physical plans the engine is
   * designed around must not silently degrade (pushdown reaching the
   * scan, broadcast joins for dims, TakeOrdered for top-k, partial
   * aggregation). These are the properties that decide 100 TB behavior. */
-class PlanQualitySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-quality-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanQualitySpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String = {
-    // the session may be shared with suites that tune join thresholds —
-    // pin the defaults these assertions depend on
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+  private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
-  }
 
   test("q1: filter pushed to parquet scan + pruned read schema") {
     val p = plan("q1_agg")
@@ -151,7 +134,6 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("persisted-index incremental: equi-joins only, sets restricted by semi-join") {
     import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
     val idx = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "idxplan").toAbsolutePath.toString
     try {

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.functions.GraftFunctions.dot
 import graft.operators.Similarity
 import org.apache.spark.sql.functions.sqrt
@@ -11,15 +9,7 @@ import org.apache.spark.sql.functions.sqrt
   * rewrite — both must land byte-identically where a one-shot encode
   * with the same model would, and neither may touch the coordinate
   * system. */
-class PqIndexDay2Spec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("pq-index-day2-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PqIndexDay2Spec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.functions.GraftFunctions.dot
 import graft.operators.Similarity
 import org.apache.spark.sql.functions.sqrt
@@ -13,15 +11,7 @@ import org.apache.spark.sql.functions.sqrt
   * encode are deterministic); (c) swap `CURRENT` atomically; and (d)
   * fail fast on a degenerate retrain BEFORE touching the pointer, so a
   * bad scheduled run can never break the live index. */
-class PqRetrainSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("pq-retrain-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PqRetrainSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-shape guard for what `src/main` ships: the engine plus the
   * three contract mains. Measurement harnesses live in test scope and
   * run as `sbt "Test/runMain graft.<Name>"`; every main builds its
-  * session through [[graft.util.LocalSession]]; no `println` debug
+  * session through [[graft.util.LocalSession]], every spec through
+  * [[SparkSuite]]; no `println` debug
   * switch comes back; the native functions have one registry. A source
   * guard, because the defect IS the shape. */
 class ProductionJarSpec extends AnyFunSuite {
@@ -30,18 +31,29 @@ class ProductionJarSpec extends AnyFunSuite {
 
   private val definesMain = """def\s+main\s*\(""".r
 
+  // split so this file does not match itself
+  private val builder = "SparkSession." + "builder"
+
   test("src/main is the engine plus Bench, Verify and Explain; one session factory; no debug switches") {
     val main = sources("src/main/scala/graft").map { case (f, text) => (f, code(text)) }
     val mains = main.collect { case (f, c) if definesMain.findFirstIn(c).isDefined => f }
     assert(mains.sorted == Seq("Bench.scala", "Explain.scala", "Verify.scala"),
       "only the contract mains may ship; harnesses belong in src/test")
 
-    val builders = main.collect { case (f, c) if c.contains("SparkSession.builder") => f }
+    val builders = main.collect { case (f, c) if c.contains(builder) => f }
     assert(builders == Seq("util/LocalSession.scala"),
       "build sessions through graft.util.LocalSession")
-    val testMains = sources("src/test/scala/graft").map { case (f, text) => (f, code(text)) }
-      .collect { case (f, c) if definesMain.findFirstIn(c).isDefined && c.contains("SparkSession.builder") => f }
-    assert(testMains.isEmpty, s"test-scope mains with their own session builder: $testMains")
+    // test-scope mains build through LocalSession and specs share the one
+    // session of SparkSuite; the one builder left is GraftExtensionsSpec's,
+    // whose subject is what a bare builder carrying only the extensions gets
+    val test = sources("src/test/scala/graft").map { case (f, text) => (f, code(text)) }
+    val testBuilders = test.collect { case (f, c) if c.contains(builder) => f }
+    assert(testBuilders == Seq("GraftExtensionsSpec.scala"),
+      s"test sources with their own session builder: $testBuilders")
+    val specFactories = test.collect {
+      case (f, c) if f.endsWith("Spec.scala") && c.contains("LocalSession" + "(") => f
+    }
+    assert(specFactories.isEmpty, s"specs call LocalSession outside SparkSuite: $specFactories")
 
     // split so this file does not match itself
     val switches = Seq("spark.graft." + "cc.debug", "spark.graft." + "debug.streamProgress")

@@ -1,9 +1,7 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.apache.spark.sql.SparkSession
 import graft.dicom.{DicomParser, Tags}
 import graft.pipeline.DicomPipeline
 
@@ -14,20 +12,12 @@ import graft.pipeline.DicomPipeline
   * uncommon-but-standard tags (RT, ophthalmology, SR, print, waveform
   * groups) must flow through to columns here too — not silently vanish
   * because a curated table lacks the keyword. */
-class Ps36DictionarySpec extends AnyFunSuite {
+class Ps36DictionarySpec extends SparkSuite {
 
   /** Deterministically sample `n` values from a generator (no
     * scalatestplus bridge in the offline dependency set). */
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(1042L + i)))
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("ps36-dict-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("dictionary carries the full PS3.6 surface, not a curated subset") {
     assert(Tags.dict.size > 2800)

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Curation
 
@@ -13,15 +11,7 @@ import graft.operators.Curation
   * is not a constant classifier), and that a single-class degenerate
   * corpus yields finite scores and the majority prediction instead of a
   * smoothing blow-up. */
-class QualityClassifierSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("quality-classifier-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityClassifierSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.01"
 

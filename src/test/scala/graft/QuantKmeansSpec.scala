@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.{Dedup, Similarity}
 
 /** Quantized-integer k-means (`dedup_semantic_kmeans_exact`): the
@@ -9,15 +7,7 @@ import graft.operators.{Dedup, Similarity}
   * re-quantization, ties) at three SFs; this spec pins the properties
   * the hash alone doesn't name — non-degeneracy, determinism, and the
   * keep-set invariant. */
-class QuantKmeansSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("quant-kmeans-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QuantKmeansSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,21 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.functions.{QuantileBuild, QuantileSketch, QuantileUnion}
 
 /** The published Greenwald-Khanna guarantee, asserted on the UNIONED
   * sketch (the path q35 ships): for target quantile q, the estimate's
   * TRUE rank lies within ±ε·n of q·n. Rows-only entries carry their
   * guarantees in specs — the q33/q34 SketchBoundsSpec convention. */
-class QuantileSketchSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("quantile-sketch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QuantileSketchSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

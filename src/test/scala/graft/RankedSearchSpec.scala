@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.TextAnalysis
 
 /** Ranked-retrieval additions (`text_search_bm25`, `text_search_hybrid`):
@@ -10,15 +8,7 @@ import graft.operators.TextAnalysis
   * independent in-test reimplementation, the idf ordering a rare term
   * must impose, and the RRF arithmetic/sentinel contract of the fusion.
   */
-class RankedSearchSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("ranked-search-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RankedSearchSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -109,17 +99,11 @@ class RankedSearchSpec extends AnyFunSuite {
     // whole corpus, so the fused ranking must equal the brute arm's row
     // for row — flipping the dial trades recall for cost only
     val brute = TextAnalysis.hybridSearch(spark, sf).collect().map(_.toString)
-    try {
-      spark.conf.set("spark.graft.hybrid.denseArm", "ivf_pq")
-      spark.conf.set("spark.graft.hybrid.nprobe", "10")
-      spark.conf.set("spark.graft.hybrid.rerank", "1000000")
+    withConf("spark.graft.hybrid.denseArm" -> "ivf_pq", "spark.graft.hybrid.nprobe" -> "10",
+        "spark.graft.hybrid.rerank" -> "1000000") {
       val viaPq = TextAnalysis.hybridSearch(spark, sf).collect().map(_.toString)
       assert(viaPq.nonEmpty && viaPq.sameElements(brute),
         "PQ dense arm at rerank-all dials drifted from the brute fusion")
-    } finally {
-      spark.conf.unset("spark.graft.hybrid.denseArm")
-      spark.conf.unset("spark.graft.hybrid.nprobe")
-      spark.conf.unset("spark.graft.hybrid.rerank")
     }
     graft.operators.Dedup.unpersistIntermediates(spark)
   }

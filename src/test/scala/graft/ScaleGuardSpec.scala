@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Dedup
 
 /** Pins the scale guards: the exact O(n²) cosine path must refuse
@@ -9,29 +7,19 @@ import graft.operators.Dedup
   * n-gram Jaccard candidate generator must df-filter BEFORE any doc list
   * materializes (the window-based plan shape), so a stop-gram can never
   * grow an unbounded collect_list aggregation buffer. */
-class ScaleGuardSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("scale-guard-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScaleGuardSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
   test("embedCosine fails fast past the configured row cap, naming the scale path") {
-    spark.conf.set("spark.graft.dedup.exactCosineMaxRows", "3")
-    try {
+    withConf("spark.graft.dedup.exactCosineMaxRows" -> "3") {
       val e = intercept[IllegalArgumentException] {
         Dedup.embedCosine(spark, sf)
       }
       assert(e.getMessage.contains("exactCosineMaxRows"))
       assert(e.getMessage.contains("embedLshNearDup"),
         "the error must point at the bucketed scale path")
-    } finally spark.conf.unset("spark.graft.dedup.exactCosineMaxRows")
+    }
   }
 
   test("embedCosine runs under the default cap") {
@@ -42,34 +30,26 @@ class ScaleGuardSpec extends AnyFunSuite {
     import graft.operators.Similarity
     def candidates(): Long = Similarity.embedLshCandidates(spark, sf).count()
     val atDefault = candidates() // 4 tables × 6 bits
-    try {
-      spark.conf.set("spark.graft.lsh.bits", "12")
-      val atTwelve = candidates()
-      assert(atTwelve < atDefault,
-        s"12-bit buckets must collide less than 6-bit ones ($atTwelve vs $atDefault)")
-      // more tables at fixed bits = more OR-amplified recall = more candidates
-      spark.conf.set("spark.graft.lsh.bits", "6")
-      spark.conf.set("spark.graft.lsh.tables", "8")
+    val atTwelve = withConf("spark.graft.lsh.bits" -> "12")(candidates())
+    assert(atTwelve < atDefault,
+      s"12-bit buckets must collide less than 6-bit ones ($atTwelve vs $atDefault)")
+    // more tables at fixed bits = more OR-amplified recall = more candidates
+    withConf("spark.graft.lsh.bits" -> "6", "spark.graft.lsh.tables" -> "8") {
       assert(candidates() >= atDefault,
         "extra tables can only add collision opportunities")
-    } finally {
-      spark.conf.unset("spark.graft.lsh.bits")
-      spark.conf.unset("spark.graft.lsh.tables")
     }
   }
 
   test("simhash candidate volume shrinks with fewer, wider bands") {
     def pairs(): Long = Dedup.simhashPairs(spark, sf).count()
     val atDefault = pairs() // 4 × 15-bit bands, hamming ≤ 12 verification
-    try {
-      // 2 × 30-bit bands: only hamming < 2 is guaranteed a collision —
-      // strictly fewer candidates survive to (and through) verification
-      spark.conf.set("spark.graft.simhash.bands", "2")
-      assert(pairs() <= atDefault)
-      spark.conf.set("spark.graft.simhash.bands", "7") // does not divide 60
+    // 2 × 30-bit bands: only hamming < 2 is guaranteed a collision —
+    // strictly fewer candidates survive to (and through) verification
+    withConf("spark.graft.simhash.bands" -> "2")(assert(pairs() <= atDefault))
+    withConf("spark.graft.simhash.bands" -> "7") { // does not divide 60
       val e = intercept[IllegalArgumentException](pairs())
       assert(e.getMessage.contains("spark.graft.simhash.bands"))
-    } finally spark.conf.unset("spark.graft.simhash.bands")
+    }
   }
 
   test("dedup intermediate caches AND checkpoints are released by unpersistIntermediates") {
@@ -111,11 +91,9 @@ class ScaleGuardSpec extends AnyFunSuite {
   test("widened: narrow-heavy passes never inherit a single-split scan's width") {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    // assume(), not assert (ADVICE r16): the precondition depends on the
-    // box's core count — on a 1-2 core runner the single-file scan is not
-    // below defaultParallelism, which is an environment shape, not a code
-    // defect; cancel instead of failing there
-    assume(docs.rdd.getNumPartitions < spark.sparkContext.defaultParallelism,
+    // the session is local[4] on any host, and the one-file
+    // documents.parquet reads as 1 split
+    assert(docs.rdd.getNumPartitions < spark.sparkContext.defaultParallelism,
       "fixture precondition: one small parquet file must read as fewer splits than cores")
     // a below-cores input widens to the session's parallelism — the
     // verify-relation materializations (jaccardPrefix/containment word
@@ -142,7 +120,7 @@ class ScaleGuardSpec extends AnyFunSuite {
     // r17: localCheckpoint BAKES IN whatever partitioning AQE last chose
     // (1 partition at small SFs), so the prefix-join candidate stages ran
     // single-threaded; the consumer re-widens the checkpointed leaf.
-    assume(docs.rdd.getNumPartitions < spark.sparkContext.defaultParallelism,
+    assert(docs.rdd.getNumPartitions < spark.sparkContext.defaultParallelism,
       "fixture precondition: single small parquet reads as fewer splits than cores")
     val w = Dedup.widenedBy(docs, col("doc_id"))
     // below-cores input widens to session parallelism…

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Path, Paths}
 
 /** Pins the reference's two documented schema-mismatch failure modes as
@@ -18,15 +16,7 @@ import java.nio.file.{Files, Path, Paths}
   *    are deleted and re-crawled; our engine fails the scan, and the same
   *    delete-partition + re-crawl remedy restores service.
   */
-class SchemaMismatchSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("schema-mismatch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SchemaMismatchSpec extends SparkSuite {
 
   /** Copy every part-*.parquet under `from` into `to` (unique names), so
     * two independently-written schemas land in one directory — the layout

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Curation, Similarity, TextAnalysis}
 import graft.queries.Relational
@@ -14,15 +12,7 @@ import graft.queries.Relational
   * monotonicity of the length layout, the training-slice signal of the
   * LM score, the filter contract of filtered ANN, and conservation of
   * conversions/revenue in attribution. */
-class SelectionOpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("selection-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SelectionOpsSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -15,14 +13,7 @@ import graft.operators.Similarity
   *  - something is actually dropped (the rule isn't vacuously true);
   *  - determinism: two runs return identical keep-sets (md5-seeded
   *    k-means init + rounded means + hash-free assignment). */
-class SemanticDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("semantic-dedup-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SemanticDedupSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -59,12 +50,10 @@ class SemanticDedupSpec extends AnyFunSuite {
     // quadratic per decade; k ∝ n keeps expected cluster size constant
     // and pair volume linear. Pin the derivation end-to-end: the dial
     // changes the number of distinct clusters the keep-set reports.
-    def distinctClusters(target: Int): Int = {
-      spark.conf.set("spark.graft.dedup.semantic.targetClusterSize", target.toString)
-      try Similarity.semanticDedupKmeans(spark, sf).select("cluster")
-        .distinct().count().toInt
-      finally spark.conf.unset("spark.graft.dedup.semantic.targetClusterSize")
-    }
+    def distinctClusters(target: Int): Int =
+      withConf("spark.graft.dedup.semantic.targetClusterSize" -> target.toString) {
+        Similarity.semanticDedupKmeans(spark, sf).select("cluster").distinct().count().toInt
+      }
     // 500 fixture vectors: target 100 → k = 5, target 250 → k = 2
     // (clusters with all members dropped could shrink the observed
     // count, so assert ≤ k and a strict ordering between the dials)
@@ -83,12 +72,11 @@ class SemanticDedupSpec extends AnyFunSuite {
     // pair meets exactly once, at salt = b.vec_id % S — is pinned here by
     // running the oracle-gated query at salt widths 1 (unsalted), 3
     // (non-divisor of the fixture size), and the default 16
-    def run(salt: Int): Seq[(Long, Int)] = {
-      spark.conf.set("spark.graft.dedup.semantic.salt", salt.toString)
-      try SparkEntry.queries("dedup_semantic")(spark, sf).collect()
-        .map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("label")).toSeq.sorted
-      finally spark.conf.unset("spark.graft.dedup.semantic.salt")
-    }
+    def run(salt: Int): Seq[(Long, Int)] =
+      withConf("spark.graft.dedup.semantic.salt" -> salt.toString) {
+        SparkEntry.queries("dedup_semantic")(spark, sf).collect()
+          .map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("label")).toSeq.sorted
+      }
     val unsalted = run(1)
     assert(unsalted.nonEmpty)
     assert(run(3) == unsalted, "salt=3 keep-set diverged from unsalted")
@@ -104,25 +92,23 @@ class SemanticDedupSpec extends AnyFunSuite {
       SparkEntry.queries("dedup_semantic_kmeans")(spark, sf)
       ()
     }
-    spark.conf.set("spark.graft.dedup.semantic.targetClusterSize", "100")
-    try {
+    withConf("spark.graft.dedup.semantic.targetClusterSize" -> "100") {
       val e = intercept[IllegalArgumentException](gated())
       assert(e.getMessage.contains("bakes targetClusterSize=200"),
         s"drift message must name the baked constant, got: ${e.getMessage}")
       assert(e.getMessage.contains("targetClusterSize=100"),
         s"drift message must name the offending conf value, got: ${e.getMessage}")
-    } finally spark.conf.unset("spark.graft.dedup.semantic.targetClusterSize")
-    spark.conf.set("spark.graft.dedup.semantic.tau", "0.42")
-    try intercept[IllegalArgumentException](gated())
-    finally spark.conf.unset("spark.graft.dedup.semantic.tau")
+    }
+    withConf("spark.graft.dedup.semantic.tau" -> "0.42") {
+      intercept[IllegalArgumentException](gated())
+    }
     // defaults restored: the gate constructs (lazily) without error, and
     // the OPERATOR itself still honors a non-default conf — only the
     // oracle-gated entry is pinned to the baked constants
     gated()
-    spark.conf.set("spark.graft.dedup.semantic.targetClusterSize", "100")
-    try assert(Similarity.semanticDedupKmeansDerived(spark, sf).limit(1)
-      .count() >= 0L)
-    finally spark.conf.unset("spark.graft.dedup.semantic.targetClusterSize")
+    withConf("spark.graft.dedup.semantic.targetClusterSize" -> "100") {
+      assert(Similarity.semanticDedupKmeansDerived(spark, sf).limit(1).count() >= 0L)
+    }
   }
 
   test("gated entry fails fast on an off-spec embedding dimension (oracle bakes Dim=64)") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Similarity
 
 /** Pins the learned k-means IVF as an honest upgrade over the per-label
@@ -12,14 +10,7 @@ import graft.operators.Similarity
   * brute force must be at least as good. Also pins determinism: two
   * training runs produce identical centroids (md5-seeded init + rounded
   * means). */
-class SimilarityRecallSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("similarity-recall-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimilarityRecallSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -124,11 +115,9 @@ class SimilarityRecallSpec extends AnyFunSuite {
     // fused RRF list. Measure overlap@20 of hybridSearch at the
     // production ivf_pq dials vs the brute-dense-arm fusion and gate a
     // > 0 floor (RecallCurve records the per-SF values each round).
-    def fused(arm: String): Seq[Long] = {
-      if (arm != "brute") spark.conf.set("spark.graft.hybrid.denseArm", arm)
-      try graft.operators.TextAnalysis.hybridSearch(spark, sf)
+    def fused(arm: String): Seq[Long] = withConf("spark.graft.hybrid.denseArm" -> arm) {
+      graft.operators.TextAnalysis.hybridSearch(spark, sf)
         .collect().map(_.getAs[Long]("doc_id")).toSeq
-      finally spark.conf.unset("spark.graft.hybrid.denseArm")
     }
     val brute = fused("brute")
     val pq = fused("ivf_pq")
@@ -157,11 +146,9 @@ class SimilarityRecallSpec extends AnyFunSuite {
       // the conf-resolved rerank, not literals
       val chosen = Similarity.autoNprobe(n, Similarity.PqCoarseLists,
         Similarity.hybridRerank(spark))
-      def fused(arm: String): Seq[Long] = {
-        if (arm != "brute") spark.conf.set("spark.graft.hybrid.denseArm", arm)
-        try graft.operators.TextAnalysis.hybridSearch(spark, dir)
+      def fused(arm: String): Seq[Long] = withConf("spark.graft.hybrid.denseArm" -> arm) {
+        graft.operators.TextAnalysis.hybridSearch(spark, dir)
           .collect().map(_.getAs[Long]("doc_id")).toSeq
-        finally spark.conf.unset("spark.graft.hybrid.denseArm")
       }
       val brute = fused("brute")
       val overlap = (fused("ivf_pq").toSet & brute.toSet).size.toDouble / brute.size

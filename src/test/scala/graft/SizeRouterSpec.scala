@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.DicomPipeline
 
 /** S11 — size-based compute router, re-expressed as task packing: the
@@ -12,30 +10,17 @@ import graft.pipeline.DicomPipeline
   * ROUTE INVARIANCE: what is computed never depends on how objects were
   * packed into tasks.
   */
-class SizeRouterSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("size-router-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SizeRouterSpec extends SparkSuite {
 
   private val fixtures = graft.queries.DicomQueries.Fixtures
 
-  private val SplitConf = "spark.sql.files.maxPartitionBytes"
+  /** The split-size setting at `bytes`. */
+  private def split(bytes: Long): (String, String) =
+    "spark.sql.files.maxPartitionBytes" -> bytes.toString
 
-  /** `f` with `spark.sql.files.maxPartitionBytes` at `bytes` (None: the
-    * default). */
-  private def withSplit[A](bytes: Option[Long])(f: => A): A = {
-    bytes.foreach(v => spark.conf.set(SplitConf, v.toString))
-    try f finally spark.conf.unset(SplitConf)
-  }
-
-  /** Canonical (rows, errors) snapshot of an extract run. */
-  private def snapshot(split: Option[Long]): (Seq[String], Seq[(String, String)]) =
-    withSplit(split) {
+  /** Canonical (rows, errors) snapshot of an extract run under `conf`. */
+  private def snapshot(conf: (String, String)*): (Seq[String], Seq[(String, String)]) =
+    withConf(conf: _*) {
       val ex = DicomPipeline.extract(spark, fixtures, "bkt", "reg")
       val rows = ex.rows.collect()
         .map(_.values.toSeq.sortBy(_._1).mkString("|")).sorted.toSeq
@@ -45,11 +30,11 @@ class SizeRouterSpec extends AnyFunSuite {
     }
 
   test("route invariance: all-streamed equals all-packed, rows and errors") {
-    val packed = snapshot(None) // default split: fixtures share tasks
+    val packed = snapshot() // default split: fixtures share tasks
     // 1-byte split: every fixture is larger than the split and runs
     // alone in its task — loose .dcm via ranged read, zip/tar/tgz/tbz2
     // via entry-streaming, the empty DICOMDIR to the errors channel
-    val streamed = snapshot(Some(1L))
+    val streamed = snapshot(split(1))
     assert(packed._1.nonEmpty)
     assert(streamed._1 == packed._1, "one object per task changed extracted rows")
     assert(streamed._2 == packed._2, "one object per task changed the error channel")
@@ -111,13 +96,13 @@ class SizeRouterSpec extends AnyFunSuite {
       // break: both layouts must stop at that first failure and agree.
       java.nio.file.Files.write(dir.resolve("bad.zip"), Array.fill[Byte](64)('x'.toByte))
       java.nio.file.Files.write(dir.resolve("broken-twice.zip"), doublyCorruptZip())
-      def stages(split: Option[Long]): Map[String, String] = withSplit(split) {
+      def stages(conf: (String, String)*): Map[String, String] = withConf(conf: _*) {
         val ex = DicomPipeline.extract(spark, dir.toString, "bkt", "reg")
         assert(ex.rows.isEmpty(), "a failing object must contribute no rows")
         ex.errors.collect().map(e => e.source_s3_key.split('/').last -> e.stage).toMap
       }
-      val packed = stages(None)
-      val streamed = stages(Some(1L))
+      val packed = stages()
+      val streamed = stages(split(1))
       assert(streamed == packed, "the two layouts disagree on the error stage")
       assert(packed == Map("bad.zip" -> "expand", "broken-twice.zip" -> "parse"))
     } finally graft.util.Fs.deleteRecursively(dir)
@@ -174,13 +159,12 @@ class SizeRouterSpec extends AnyFunSuite {
         DicomWriter.element(0x7fe0, 0x0010, "OB", new Array[Byte](256 * 1024)))))
       // a 64 KB split and a 1-byte open cost: the small objects fit
       // one task together, the big one fits none
-      spark.conf.set("spark.sql.files.openCostInBytes", "1")
-      val tasks = try withSplit(Some(64L * 1024)) {
+      val tasks = withConf(split(64L * 1024), "spark.sql.files.openCostInBytes" -> "1") {
         DicomPipeline.extract(spark, dir.toString, "bkt", "reg").outcomes.map {
           case Right(rs) => rs.head.values(graft.dicom.Flatten.LineageKey).toString
           case Left(e) => e.source_s3_key
         }.glom().collect().map(_.map(_.split('/').last.takeWhile(_ != ')')).toSet)
-      } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+      }
       assert(tasks.contains(Set("big.dcm")), s"big.dcm shared a task: ${tasks.toSeq}")
       assert(tasks.flatten.toSet.size == 7)
       assert(tasks.exists(_.size > 1), s"small objects were not packed: ${tasks.toSeq}")
@@ -203,9 +187,7 @@ class SizeRouterSpec extends AnyFunSuite {
       val default = both()
       assert(default._1 == default._2, s"default split: (extract, binaryFile) = $default")
       // a split small enough that the layout is many tasks of varied size
-      spark.conf.set("spark.sql.files.openCostInBytes", "1024")
-      val small = try withSplit(Some(64L * 1024))(both())
-        finally spark.conf.unset("spark.sql.files.openCostInBytes")
+      val small = withConf(split(64L * 1024), "spark.sql.files.openCostInBytes" -> "1024")(both())
       assert(small._1 == small._2, s"64 KB split: (extract, binaryFile) = $small")
       assert(small._1 > default._1)
     } finally graft.util.Fs.deleteRecursively(dir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.queries.Relational
 
@@ -18,14 +16,7 @@ import graft.queries.Relational
   *    KLL in Spark) guarantees RANK error ≤ 1/accuracy: the returned
   *    value must lie between the exact quantiles at ranks 0.5 ± 1/1000.
   */
-class SketchBoundsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("sketch-bounds-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SketchBoundsSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -62,7 +53,6 @@ class SketchBoundsSpec extends AnyFunSuite {
 
   test("q33 merged HLL sketches estimate within bounds of the exact distinct count") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val merged = Relational.q33SketchUnion(spark, sf).collect()
       .map(r => r.getAs[String]("event_type") ->
         (r.getAs[Long]("n_days"), r.getAs[Long]("approx_users"))).toMap

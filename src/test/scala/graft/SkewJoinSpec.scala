@@ -1,24 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
-
 /** AQE skew-join handling: a hot join key concentrates one shuffle
   * partition; adaptive execution must split it (skew=true in the final
   * plan) rather than serializing the stage on one reducer — the runtime
   * answer to skew at 100 TB (complementing the manual salting in q19). */
-class SkewJoinSpec extends AnyFunSuite {
+class SkewJoinSpec extends SparkSuite {
 
-  // getOrCreate may return a session shared with other suites — set the
-  // skew-specific knobs at RUNTIME and restore them, so suite order
-  // doesn't leak configuration
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("skew-spec")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val tuned = Map(
+  private val tuned = Seq(
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
@@ -27,20 +15,10 @@ class SkewJoinSpec extends AnyFunSuite {
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.shuffle.partitions" -> "8")
 
-  private def withTunedConf[A](body: => A): A = {
-    val saved = tuned.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    tuned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("hot key triggers AQE skew split; result stays correct") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    withTunedConf {
+    withConf(tuned: _*) {
     // 300k rows, 80% on key 0 → one hot shuffle partition
     val left = spark.range(300000)
       .select((when($"id" % 5 =!= 0, lit(0L)).otherwise($"id" % 100)).as("k"),

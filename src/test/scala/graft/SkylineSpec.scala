@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.queries.Relational
 
 /** The distributed skyline's decomposition claim —
@@ -10,14 +8,7 @@ import graft.queries.Relational
   * right: duplicate (price, size) points (ALL survive), equal-price
   * groups (only the group max survives), and equal sizes across price
   * groups (strictly-cheaper same-size dominates). */
-class SkylineSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("skyline-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkylineSpec extends SparkSuite {
 
   private def naive(rows: Seq[(Long, Double, Int)]): Set[(Long, Double, Int)] =
     rows.filter { case (_, p, s) =>

@@ -1,21 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
-
 /** The JSONL/CSV ingestion gates run over the word-soup sf corpus, which
   * never stresses escaping. This spec runs the same stage→read→digest
   * path over ADVERSARIAL strings — embedded quotes, commas, backslashes,
   * JSON-special characters, unicode — and requires digest parity with a
   * direct parquet read. A broken quote or escape rule flips text_md5. */
-class SourceRoundtripSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("source-roundtrip-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SourceRoundtripSpec extends SparkSuite {
 
   test("JSONL and CSV survive quotes, commas, backslashes, unicode") {
     import spark.implicits._

@@ -1,23 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
-
 /** Streamed-lifecycle index compaction (`stream_text_index_compact`):
   * folding N per-micro-batch posting dirs + a takedown through the
   * union compaction must answer byte-identically to the BATCH takedown
   * lifecycle (`text_search_compact`) — stream-accrued ≡ batch-built ≡
   * fresh survivor index. Micro-batch boundaries and the accrual order
   * must be invisible to the compacted relation. */
-class StreamIndexCompactSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("stream-index-compact-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamIndexCompactSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.Archives
 
 /** The per-object reader's memory contract, on every route: archive
@@ -12,7 +11,7 @@ import graft.ingest.Archives
   * archive ends, so old refs could not clear mid-fold), plus
   * member-semantics parity between the visitor and the collecting
   * `expand`. */
-class StreamedExpansionSpec extends AnyFunSuite {
+class StreamedExpansionSpec extends SparkSuite {
 
   /** A valid ~`size`-byte DICOM member (DICM magic so keepMember
     * accepts it). */
@@ -98,23 +97,17 @@ class StreamedExpansionSpec extends AnyFunSuite {
   }
 
   test("oversized archive routes one-object-per-task and parses members as they stream") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val dir = java.nio.file.Files.createTempDirectory("graft-oversized")
     try {
       val members = (0 until 50).map(i => (f"scan-$i%02d.dcm", member(i, 64 * 1024)))
       java.nio.file.Files.write(dir.resolve("big.zip"), zipOf(members))
       // a small loose file shares no task with the archive
       java.nio.file.Files.write(dir.resolve("loose.dcm"), member(99, 4096))
-      spark.conf.set("spark.sql.files.maxPartitionBytes", (128 * 1024).toString)
-      try {
+      withConf("spark.sql.files.maxPartitionBytes" -> (128 * 1024).toString) {
         val ex = graft.pipeline.DicomPipeline.extract(spark, dir.toString, "t", "l")
         assert(ex.rows.count() == 51L, "50 streamed members + 1 loose object")
         assert(ex.errors.count() == 0L)
-      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      }
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.Dedup
 
 /** Span semantics of [[Dedup.substringSpans]] pinned on crafted
@@ -11,14 +9,7 @@ import graft.operators.Dedup
   * refactor can't silently change them). Filler words are fully
   * disjoint between unrelated docs: any shared 5-gram would create an
   * unintended duplicated window. */
-class SubstringDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("substring-dedup-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SubstringDedupSpec extends SparkSuite {
 
   // doc 0 and doc 1 share one 7-token run (3 overlapping 5-grams →
   // ONE maximal span of 7 tokens); doc 2 repeats its own 5-gram twice

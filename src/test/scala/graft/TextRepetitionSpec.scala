@@ -1,20 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.operators.TextAnalysis
 
 /** Repetition-filter semantics pinned on crafted documents where the
   * fractions are computable by hand (the oracle pins the real corpus;
   * this pins the DEFINITIONS so a refactor can't silently change them). */
-class TextRepetitionSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("text-repetition-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextRepetitionSpec extends SparkSuite {
 
   /** Stage crafted docs as a documents.parquet the operator can read. */
   private lazy val dir: String = {

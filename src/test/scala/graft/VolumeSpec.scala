@@ -1,22 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.DicomPipeline
 
 /** Volume shakeout: the pipeline over hundreds of generated DICOM
   * objects (50× the fixture count) — parallel parse across partitions,
   * dynamic schema union across heterogeneous files, partitioned write,
   * error channel proportions. */
-class VolumeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .appName("volume-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VolumeSpec extends SparkSuite {
 
   test("500 generated objects: rows, schema union, partitions, errors") {
     val dir = java.nio.file.Files.createTempDirectory(

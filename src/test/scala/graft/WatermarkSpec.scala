@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -12,15 +10,7 @@ import org.apache.spark.sql.functions._
   * reference has no ordering guarantees at all (each S3 event is an
   * independent Lambda); this pins the stronger contract our streaming
   * surface offers in its place. */
-class WatermarkSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("watermark-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WatermarkSpec extends SparkSuite {
 
   test("append-mode window closes on watermark; late data is dropped") {
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.DateType
 import graft.pipeline.DicomPipeline
 
@@ -10,15 +8,7 @@ import graft.pipeline.DicomPipeline
   * dictionary-driven types, values must survive the full
   * parse→flatten→finalize trip, and the crawler merge must union two
   * batches' disjoint-ish schemas losslessly. */
-class WideSchemaSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("wide-schema-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WideSchemaSpec extends SparkSuite {
 
   test("500+ distinct dictionary tags become typed columns; crawl merges batches") {
     val width = 520

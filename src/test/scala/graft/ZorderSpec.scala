@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Maintenance
 
@@ -10,14 +8,7 @@ import graft.operators.Maintenance
   * linear sort prunes on one — by writing real parquet twice and
   * counting which files a range predicate could skip from their
   * actual per-file min/max envelopes. */
-class ZorderSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("zorder-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ZorderSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
   // 64 files → 6 z-bits per split → 3 bits (1/8 envelope) per dimension;
