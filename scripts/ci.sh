@@ -30,6 +30,11 @@ if grep -q "Using an existing Spark session" target/ci_test.log; then
   exit 1
 fi
 
+# the benchmark harness's own tests: they compile against the program's
+# API (DicomPipeline.run, Catalog.registerTable, Archives.expand,
+# DicomParser.parse, Flatten.flatten), so a change to it fails here
+(cd perfbench && sbt -batch test)
+
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} \
   sbt -batch "runMain graft.Verify $SF $PWD/$OUT"
 

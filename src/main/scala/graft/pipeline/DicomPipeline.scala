@@ -35,16 +35,18 @@ import graft.util.ForkFreeLocalFileSystem
   *    manifest); each task opens its objects itself and runs the
   *    parse/flatten in executors — at 100 TB this is the linear,
   *    embarrassingly-parallel stage;
-  *  - the only driver interaction is collecting the OBSERVED KEY SET
-  *    (bounded by the static tag dictionary, ~130 keywords — a few KB —
-  *    never row data) to build the batch schema, mirroring the
-  *    reference's per-batch drop-all-null dynamic schema
-  *    (`src/app.py:39-41`);
+  *  - the only driver interaction is ONE single-stage summary pass
+  *    ([[BatchSummary]]): the OBSERVED KEY SET (bounded by the static
+  *    tag dictionary, ~130 keywords — a few KB — never row data) builds
+  *    the batch schema, mirroring the reference's per-batch
+  *    drop-all-null dynamic schema (`src/app.py:39-41`); the rows per
+  *    study date plan the write; an error flag gates the errors write;
   *  - the per-object outcomes are persisted (MEMORY_AND_DISK_SER) so the
-  *    key-scan and the row materialization don't re-read storage;
+  *    summary pass and the row materialization don't re-read storage;
   *  - the partitioned write uses Hive-style `study_date=` layout →
   *    partition-pruned reads for free (Catalyst
-  *    `PruneFileSourcePartitions`).
+  *    `PruneFileSourcePartitions`), one file per date unless a date holds
+  *    more than one core's share of the batch, which is split over cores.
   */
 object DicomPipeline {
 
@@ -370,35 +372,59 @@ object DicomPipeline {
   /** Finalize the batch DataFrame: union of observed NON-NULL keys →
     * columns (this IS the reference's per-batch drop-all-null,
     * `src/app.py:41` — a keyword only becomes a column if some row holds
-    * a value), laid out by [[schemaFor]]. */
+    * a value), laid out by [[schemaFor]]. The keys come from the one
+    * [[BatchSummary]] pass. */
   def toDataFrame(spark: SparkSession, rows: RDD[ImageRow]): DataFrame =
-    framed(spark, rows, rows.flatMap(observedKeys).distinct().collect())
+    framed(spark, rows, rows.aggregate(new BatchSummary)(_ addRow _, _ merge _))
 
-  private def observedKeys(ir: ImageRow): Iterable[String] =
-    ir.values.collect { case (k, v) if v != VrConvert.DNull => k }
+  /** What one pass over a batch tells its finalize step: the observed
+    * non-null keywords (the columns), the rows per study date, as epoch
+    * days (the data write's layout), and whether any object errored
+    * (whether the errors write runs). Its size is bounded by the
+    * dictionary and the date count, never by rows, so each task of the
+    * single-stage `RDD.aggregate` returns one to the driver. Mutable:
+    * `aggregate` gives each task its own copy of the empty summary. */
+  private final class BatchSummary extends Serializable {
+    val keys = scala.collection.mutable.HashSet.empty[String]
+    val dates = scala.collection.mutable.HashMap.empty[Long, Long]
+    var errored = false
 
-  /** Marks an errored object in the key union: no keyword or lineage key
-    * is empty ([[Flatten.flatten]] skips empty keywords). */
-  private val ErroredKey = ""
+    def addRow(ir: ImageRow): BatchSummary = {
+      ir.values.foreach { case (k, v) => if (v != VrConvert.DNull) keys += k }
+      ir.values.get(Flatten.PartitionColCamel)
+        .collect { case VrConvert.DDate(d) => d }
+        .foreach(d => dates(d) = dates.getOrElse(d, 0L) + 1)
+      this
+    }
 
-  /** [[toDataFrame]] of an extraction's rows whose one key-union job also
-    * tells whether any object errored: each error contributes
-    * [[ErroredKey]] before the `distinct`, so the errors write needs no
-    * emptiness job of its own. */
-  private def toDataFrameFlaggingErrors(spark: SparkSession,
-                                        ex: Extracted): (DataFrame, Boolean) = {
-    val keys = ex.outcomes.flatMap {
-      case Right(rs) => rs.flatMap(observedKeys)
-      case Left(_) => Seq(ErroredKey)
-    }.distinct().collect()
-    (framed(spark, ex.rows, keys.filter(_ != ErroredKey)), keys.contains(ErroredKey))
+    def addOutcome(o: Outcome): BatchSummary = {
+      o.fold(_ => errored = true, _.foreach(addRow))
+      this
+    }
+
+    def merge(other: BatchSummary): BatchSummary = {
+      keys ++= other.keys
+      other.dates.foreach { case (d, c) => dates(d) = dates.getOrElse(d, 0L) + c }
+      errored ||= other.errored
+      this
+    }
+  }
+
+  /** [[toDataFrame]] of an extraction's rows, with the summary its one
+    * job gathered over the outcomes. The name keeps `toDataFrame` in the
+    * job's call site, which is how perfbench's per-layer split tells the
+    * key-union job apart. */
+  private def toDataFrameSummarized(spark: SparkSession,
+                                    ex: Extracted): (DataFrame, BatchSummary) = {
+    val summary = ex.outcomes.aggregate(new BatchSummary)(_ addOutcome _, _ merge _)
+    (framed(spark, ex.rows, summary), summary)
   }
 
   /** The rows as Catalyst rows laid out by [[schemaFor]]: no row
     * encoder, so no task generates a serializer for the ~60 columns. */
   private def framed(spark: SparkSession, rows: RDD[ImageRow],
-                     observed: Array[String]): DataFrame = {
-    val keywords = observed.sorted
+                     summary: BatchSummary): DataFrame = {
+    val keywords = summary.keys.toArray.sorted
     GraftFrames.fromInternal(spark,
       rows.map(ir => internalRow(keywords, ir.values)), schemaFor(keywords.toIndexedSeq))
   }
@@ -430,44 +456,62 @@ object DicomPipeline {
     *
     * Neither write runs an emptiness job: every row carries the four
     * lineage strings and a study date, so a batch has columns exactly
-    * when it has rows, and the key union flags errored objects. Both
-    * write through [[ForkFreeLocalFileSystem]]. The errors write runs
-    * only after the data write has succeeded, so a batch whose data write
-    * fails appends no error rows and a retry does not repeat them. */
+    * when it has rows, and the summary pass flags errored objects. The
+    * data write is laid out by [[planned]]. Both write through
+    * [[ForkFreeLocalFileSystem]]. The errors write runs only after the
+    * data write has succeeded, so a batch whose data write fails appends
+    * no error rows and a retry does not repeat them. */
   def write(spark: SparkSession, ex: Extracted, outPath: String,
             errorPath: Option[String]): (DataFrame, DataFrame) =
     try {
-      val (df, errored) = toDataFrameFlaggingErrors(spark, ex)
-      if (df.columns.nonEmpty) {
-        // REBALANCE on the partition column first: without it every scan
-        // task writes one file per date it happens to hold — the 9.5k-object
-        // rehearsal produced 5,251 files for 9,500 rows (measured); with it,
-        // one file per date. The AQE rebalance also SPLITS a skewed date
-        // across tasks instead of funneling it into one, which a plain
-        // repartition(col) would not. SMALL batches skip the shuffle: with
-        // few write tasks the worst case is tasks × dates files — already
-        // bounded — and the extra exchange doubled the fixture-scale write
-        // (0.71 → 1.42 s measured idle-to-idle). The frame's rows map
-        // the extraction's rows one to one, so it has their partitions.
-        val writeTasks = ex.rows.getNumPartitions
-        val arranged =
-          if (writeTasks <= 8) df
-          else df.hint("rebalance",
-            org.apache.spark.sql.functions.col(Flatten.PartitionColSnake))
-        arranged.write.options(ForkFreeLocalFileSystem.WriteOptions)
+      val (df, summary) = toDataFrameSummarized(spark, ex)
+      if (df.columns.nonEmpty)
+        planned(df, summary, spark.sparkContext.defaultParallelism)
+          .write.options(ForkFreeLocalFileSystem.WriteOptions)
           .mode("append")
           .partitionBy(Flatten.PartitionColSnake)
           .option("compression", "snappy")
           .parquet(outPath)
-      }
       val errDf = errorsFrame(spark, ex.errors)
       // REBALANCE lets AQE size the errors write by bytes: one task (one
       // file) for a handful of rows, more at scale — not one task per
       // scan partition
-      if (errored) errorPath.foreach { p =>
+      if (summary.errored) errorPath.foreach { p =>
         errDf.hint("rebalance").write.options(ForkFreeLocalFileSystem.WriteOptions)
           .mode("append").parquet(p)
       }
       (df, errDf)
     } finally ex.outcomes.unpersist(blocking = false)
+
+  /** The data write's layout, planned from the summary: every task
+    * writes one file per date it holds, so rows are placed by date.
+    * Unplaced, every scan task writes a file per date it happens to hold
+    * (the 9.5k-object rehearsal wrote 5,251 files for 9,500 rows); a
+    * rebalance hint leaves the task count to AQE, which sizes it by
+    * shuffle bytes and so writes a whole small batch in ONE task.
+    *
+    * Each core's share is `ceil(rows / cores)` rows. A date holding `c`
+    * rows is cut into `ceil(c / share)` pieces by a hash of each image's
+    * object key and archive path, and its pieces go to consecutive
+    * partitions from the date's hash, over `min(Σ pieces, cores)`
+    * partitions — so a date within its share is one file, and one holding
+    * most of the batch (the imputed 1979-01-01 default of a header-poor
+    * corpus) is written by several cores. Fewer than `cores` dates
+    * exceed a share, which bounds the `CASE` that gives each its pieces.
+    * The plan is a function of the rows alone, so a recomputed task
+    * places its rows where the lost one did. */
+  private def planned(df: DataFrame, summary: BatchSummary, cores: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod, when}
+    val share = math.max(1L, (summary.dates.values.sum + cores - 1) / cores)
+    val pieces = summary.dates.map { case (d, c) => d -> ((c + share - 1) / share).toInt }
+    val parts = math.max(1, math.min(pieces.values.sum, cores))
+    val date = col(Flatten.PartitionColSnake)
+    val piecesOfDate = pieces.filter(_._2 > 1).foldLeft(lit(1)) { case (rest, (d, p)) =>
+      when(date === lit(java.time.LocalDate.ofEpochDay(d)), p).otherwise(rest)
+    }
+    val piece = pmod(hash(col(Tags.snakeCase(Flatten.LineageKey)),
+      col(Tags.snakeCase(Flatten.LineageArchivePath))), piecesOfDate)
+    df.repartitionById(parts,
+      pmod(hash(date).cast(LongType) + piece, lit(parts.toLong)).cast(IntegerType))
+  }
 }

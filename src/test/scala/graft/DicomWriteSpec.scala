@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.pipeline.DicomPipeline
 
 /** The job's two writes cost per byte written, not per process forked or
@@ -10,7 +11,12 @@ import graft.pipeline.DicomPipeline
   *  - the data and errors writes go through `ForkFreeLocalFileSystem`,
   *    so a run forks fewer processes than it writes Parquet files, with
   *    the permission bits a stock Hadoop write sets;
-  *  - the errors write runs only when the key union saw an error, and is
+  *  - one single-stage summary pass finalizes the batch: its keys, its
+  *    rows per study date and whether any object errored;
+  *  - the data write is spread over the session's cores with one file
+  *    per study date, and a date holding more than one core's share of
+  *    the rows is split over several;
+  *  - the errors write runs only when the summary saw an error, and is
   *    rebalanced into one file for a handful of rows however many scan
   *    partitions they came from. */
 class DicomWriteSpec extends SparkSuite {
@@ -19,9 +25,13 @@ class DicomWriteSpec extends SparkSuite {
     Files.createTempDirectory(Paths.get("target"), "dicomwrite").toAbsolutePath
 
   private def dcm(i: Int, dates: Int, extra: Seq[Array[Byte]] = Nil): Array[Byte] =
+    dcmOn(i, i % dates, extra)
+
+  /** Object `i`, dated `day` days after 2024-01-01. */
+  private def dcmOn(i: Int, day: Int, extra: Seq[Array[Byte]] = Nil): Array[Byte] =
     DicomWriter.file(Seq(
       DicomWriter.strElement(0x0008, 0x0020, "DA",
-        java.time.LocalDate.of(2024, 1, 1).plusDays(i % dates).toString.replace("-", "")),
+        java.time.LocalDate.of(2024, 1, 1).plusDays(day).toString.replace("-", "")),
       DicomWriter.strElement(0x0008, 0x0060, "CS", "CT"),
       DicomWriter.strElement(0x0020, 0x000d, "UI", s"1.2.3.$i"),
       DicomWriter.strElement(0x0020, 0x0013, "IS", i.toString)) ++ extra)
@@ -41,6 +51,43 @@ class DicomWriteSpec extends SparkSuite {
     def of(ps: Seq[Path]) =
       ps.map(p => PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).toSet
     (of(files), of(dirs))
+  }
+
+  /** Parquet files per `study_date=` directory under `data`. */
+  private def filesPerDate(data: Path): Map[String, Int] =
+    under(data).filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("study_date="))
+      .map(d => d.getFileName.toString.stripPrefix("study_date=") -> parquetFiles(d)).toMap
+
+  /** The jobs `body` runs, in order, each as its stages' (id, task count)
+    * sorted by id — a job's last stage is its result stage. A marker job
+    * run afterwards drains the asynchronous listener bus. */
+  private def jobsDuring(body: => Unit): Seq[Seq[(Int, Int)]] = {
+    val marker = "dicomwrite-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[(Int, Int)])]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker))
+          drained.countDown()
+        else jobs.add(j.jobId -> j.stageInfos.map(s => s.stageId -> s.numTasks).sortBy(_._1))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "the listener bus did not drain")
+    } finally sc.removeSparkListener(l)
+    jobs.asScala.toSeq.sortBy(_._1).map(_._2)
+  }
+
+  /** Writes `n` objects under `dir/in`, object `i` dated by `day(i)`. */
+  private def corpus(dir: Path, n: Int)(day: Int => Int): Path = {
+    val in = dir.resolve("in")
+    Files.createDirectories(in)
+    (0 until n).foreach(i => Files.write(in.resolve(f"obj-$i%04d.dcm"), dcmOn(i, day(i))))
+    in
   }
 
   /** Processes (and threads) forked on this machine since boot. */
@@ -148,6 +195,54 @@ class DicomWriteSpec extends SparkSuite {
       // the errors write follows a successful data write only, so a retried
       // batch does not append its error rows twice
       assert(!Files.exists(dir.resolve("errors")))
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
+  test("the data write spreads 30 dates over the session's cores, one file per date") {
+    val dir = tmp()
+    try {
+      val in = corpus(dir, 600)(_ % 30)
+      val data = dir.resolve("data")
+      val jobs = jobsDuring(DicomPipeline.run(spark, in.toString, data.toString))
+      val writeTasks = jobs.last.last._2
+      info(s"the data write's result stage ran $writeTasks tasks")
+      assert(writeTasks > 1 && writeTasks <= spark.sparkContext.defaultParallelism)
+      val perDate = filesPerDate(data)
+      assert(perDate.size == 30 && perDate.values.forall(_ == 1), perDate.toString)
+      assert(spark.read.parquet(data.toString).count() == 600)
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
+  test("a date holding half the batch is split over several files, every other date is one") {
+    val dir = tmp()
+    try {
+      // objects 0..299 share day 0; the other 300 spread over days 1..29
+      val in = corpus(dir, 600)(i => if (i < 300) 0 else 1 + i % 29)
+      val data = dir.resolve("data")
+      DicomPipeline.run(spark, in.toString, data.toString)
+      val perDate = filesPerDate(data)
+      assert(perDate.size == 30, perDate.toString)
+      assert(perDate("2024-01-01") >= 2, perDate.toString)
+      assert((perDate - "2024-01-01").values.forall(_ == 1), perDate.toString)
+      val rows = spark.read.parquet(data.toString)
+      assert(rows.count() == 600)
+      assert(rows.filter("study_date = DATE'2024-01-01'").count() == 300)
+    } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
+  test("the key union is one single-stage job, and a run plans no more jobs than the shuffled union did") {
+    val dir = tmp()
+    try {
+      val in = corpus(dir, 600)(_ % 30)
+      Files.write(in.resolve("bad.dcm"), "not a DICOM object".getBytes("UTF-8"))
+      val jobs = jobsDuring(DicomPipeline.run(spark, in.toString,
+        dir.resolve("data").toString, Some(dir.resolve("errors").toString)))
+      info(s"${jobs.size} jobs: ${jobs.map(_.size).mkString(", ")} stages")
+      assert(jobs.head.size == 1, s"the key-union job ran ${jobs.head.size} stages")
+      // a distinct over the keys, a rebalanced data write and a rebalanced
+      // errors write planned 5 jobs on this batch
+      assert(jobs.size <= 5)
+      assert(spark.read.parquet(dir.resolve("errors").toString).count() == 1)
     } finally graft.util.Fs.deleteRecursively(dir)
   }
 }

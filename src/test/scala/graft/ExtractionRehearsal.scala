@@ -48,7 +48,8 @@ object ExtractionRehearsal {
     val input = scratch.resolve("input")
     val out = scratch.resolve("out")
     val err = scratch.resolve("err")
-    Seq(input, out, err).foreach(graft.util.Fs.deleteRecursively)
+    val phased = scratch.resolve("out_phased")
+    Seq(input, out, err, phased).foreach(graft.util.Fs.deleteRecursively)
     java.nio.file.Files.createDirectories(input)
 
     // --- generate: nLoose loose .dcm + nZips zip archives of perZip each,
@@ -112,14 +113,8 @@ object ExtractionRehearsal {
     val (ex, exSec) = phase("extract+persist") {
       ex0.rows.count(); ex0
     }
-    val (df0, finSec) = phase("finalize (toDataFrame)") {
-      graft.pipeline.DicomPipeline.toDataFrame(spark, ex.rows)
-    }
-    val (_, wrSec) = phase("partitioned write") {
-      df0.hint("rebalance",
-          org.apache.spark.sql.functions.col(graft.dicom.Flatten.PartitionColSnake))
-        .write.mode("overwrite").partitionBy(graft.dicom.Flatten.PartitionColSnake)
-        .option("compression", "snappy").parquet(scratch.resolve("out_phased").toString)
+    val (_, wrSec) = phase("finalize + write") {
+      graft.pipeline.DicomPipeline.write(spark, ex, phased.toString, None)
     }
     graft.util.Fs.deleteRecursively(out)
 
@@ -190,7 +185,7 @@ object ExtractionRehearsal {
       s""""delta_objects":$nDeltaObjects,"delta_images":$dImages,""" +
       s""""delta_construct_sec":${fmt(dConsSec)},"delta_extract_sec":${fmt(dExSec)},""" +
       s""""objects_per_sec":${fmt(nObjects / wall)},"images_per_sec":${fmt(nImages / wall)},""" +
-      s""""extract_sec":${fmt(exSec)},"finalize_sec":${fmt(finSec)},"write_sec":${fmt(wrSec)},""" +
+      s""""extract_sec":${fmt(exSec)},"finalize_write_sec":${fmt(wrSec)},""" +
       s""""out_files":$outFiles,"out_partitions":$partitions,""" +
       s""""task_ms_p50":${fmt(pct(0.5))},"task_ms_p95":${fmt(pct(0.95))},"task_ms_max":${fmt(pct(1.0))},"n_tasks":${ds.length}}"""
     println(json)

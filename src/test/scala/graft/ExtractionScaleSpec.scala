@@ -13,9 +13,9 @@ package graft
   *     directory), pinned the same way: every DICOM write passes the
   *     fork-free writer options.
   *  2. the dynamic partition write must not explode into
-  *     files-per-(task × date): a ~500-object run (enough write tasks to
-  *     cross the rebalance threshold) must land EXACTLY one file per
-  *     study_date partition.
+  *     files-per-(task × date): a ~500-object run over many scan tasks,
+  *     no date above one core's share of the rows, must land EXACTLY one
+  *     file per study_date partition.
   *  3. the batch frames are built from Catalyst rows: a row encoder's
   *     serializer is generated per task, which cost more than the
   *     extraction itself (BENCH_NOTES.md). A source-shape guard too.
