@@ -150,10 +150,6 @@ object Dedup {
     * exchange, so the expensive expressions evaluate post-shuffle on
     * every core (plan-pinned in ScaleGuardSpec). */
   private[graft] def widened(df: DataFrame): DataFrame = {
-    // dial: spark.graft.scan.widen (default on) — off restores the
-    // input's native width, the A/B lever for measuring the rule
-    if (!df.sparkSession.conf.get("spark.graft.scan.widen", "true").toBoolean)
-      return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
@@ -162,8 +158,8 @@ object Dedup {
     * whose downstream partial aggregation depends on co-locating rows of
     * one key (e.g. the prefix-join probe sides: all of doc b's token rows
     * must share a map task so the partial distinct collapses a pair's
-    * duplicate emissions before the exchange). Same adaptive rule and
-    * dial as [[widened]]: widen ONLY a below-cores input; pass-through at
+    * duplicate emissions before the exchange). Same adaptive rule as
+    * [[widened]]: widen ONLY a below-cores input; pass-through at
     * scale, so no exchange is ever added to a production-width relation.
     *
     * Why this exists (r17 finding): localCheckpoint MATERIALIZES whatever
@@ -175,8 +171,6 @@ object Dedup {
     * checkpoint must re-widen. */
   private[graft] def widenedBy(df: DataFrame,
                                key: org.apache.spark.sql.Column): DataFrame = {
-    if (!df.sparkSession.conf.get("spark.graft.scan.widen", "true").toBoolean)
-      return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p, key) else df
   }
@@ -381,6 +375,9 @@ object Dedup {
     incrementalPairs(s, all.filter(!isBatch), all.filter(isBatch))
   }
 
+  /** False-positive rate of [[bloomPruneByBatch]]'s filter. */
+  private val BloomFpp = 0.01
+
   /** BLOOM RUNTIME FILTER for the incremental candidate join: a bloom
     * built over the BATCH side's (band, band_hash) keys, applied to the
     * INDEX band relation before the equi-join. At 100 TB the index band
@@ -395,20 +392,16 @@ object Dedup {
     * positive only passes a row the join drops anyway, and false
     * negatives are impossible (`mightContain` never rejects an inserted
     * key) — and hash-gated: `dedup_incremental`/`dedup_incremental_idx`
-    * compare against the DuckDB full-run-restricted oracle. Dials:
-    * `spark.graft.dedup.index.bloom.enabled` (default true),
-    * `spark.graft.dedup.index.bloom.fpp` (default 0.01). */
+    * compare against the DuckDB full-run-restricted oracle. The
+    * false-positive rate is fixed at [[BloomFpp]]. */
   private[graft] def bloomPruneByBatch(s: SparkSession, indexBands: DataFrame,
                                 batchBands: DataFrame): DataFrame = {
-    if (!s.conf.get("spark.graft.dedup.index.bloom.enabled", "true").toBoolean)
-      return indexBands
-    val fpp = s.conf.get("spark.graft.dedup.index.bloom.fpp", "0.01").toDouble
     // one 64-bit key per band row; bandsOf emits exactly 4 rows/doc, so
     // the cached-relation count is the exact expectedNumItems bound
     val key = xxhash64(col("band"), col("band_hash"))
     val n = batchBands.count()
     if (n == 0L) return indexBands.filter(lit(false)) // empty batch: no candidates
-    val bloom = batchBands.stat.bloomFilter(key, n, fpp)
+    val bloom = batchBands.stat.bloomFilter(key, n, BloomFpp)
     val bc = s.sparkContext.broadcast(bloom)
     val mightContain = udf((h: Long) => bc.value.mightContainLong(h))
     indexBands.filter(mightContain(key))

@@ -23,9 +23,10 @@ import graft.pipeline.DicomPipeline
   * invisible) and its per-object reader
   * ([[graft.pipeline.DicomPipeline.processObject]] over the stored
   * object: 10 MB range for loose `.dcm`, archives streamed member by
-  * member), schema inferred from a bounded file sample (or
-  * distributed over executors — never a full driver-side corpus parse),
-  * input partitions size-packed under the session's
+  * member), schema inferred from a bounded file sample (the first
+  * [[DicomSourceUtil.InferSampleFiles]] productive files by path — never
+  * a full corpus parse; `.schema(...)` gives an exact schema), input
+  * partitions size-packed under the session's
   * `spark.sql.files.maxPartitionBytes`, and REQUIRED-COLUMN PUSHDOWN: a
   * `SELECT modality FROM ...` only *converts* the requested tags (the
   * binary scan still walks element headers — bounded by the
@@ -37,9 +38,7 @@ import graft.pipeline.DicomPipeline
   *  - `failOnError` (default false): unparsable objects are skipped,
   *    matching a read-surface's permissive mode (the ETL pipeline keeps
   *    its error side-channel semantics);
-  *  - `inferSampleFiles` (default 64): schema-inference sample bound;
-  *  - `inferMode` (`sample` | `full`): `full` distributes full-corpus
-  *    inference over executors.
+  *  - `paths` (JSON array): multi-path loads.
   */
 class DicomDataSource extends TableProvider with DataSourceRegister {
 
@@ -49,10 +48,7 @@ class DicomDataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     DicomSourceUtil.inferSchema(
       DicomSourceUtil.pathsOf(options.get("path"), options.get("paths")),
-      DicomSourceUtil.sessionConf(),
-      sampleFiles = options.getInt("inferSampleFiles",
-        DicomSourceUtil.DefaultInferSampleFiles),
-      distributed = "full".equalsIgnoreCase(options.getOrDefault("inferMode", "sample")))
+      DicomSourceUtil.sessionConf())
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table =
@@ -134,65 +130,41 @@ object DicomSourceUtil {
         else Nil
     }
 
-  /** Default file-sample size for schema inference. */
-  val DefaultInferSampleFiles = 64
+  /** Productive-file bound of schema inference. */
+  val InferSampleFiles = 64
 
   /** Schema inference: union of observed keywords, laid out exactly as
     * the ETL table lays them out ([[DicomPipeline.schemaFor]]).
     *
-    * Scale design: the driver NEVER parses the whole corpus. The default
-    * infers from a bounded sample (`inferSampleFiles`, first N by path
-    * order — deterministic); `inferMode=full` distributes full-corpus
-    * inference over executors (one flatMap over the file list, collecting
-    * only the observed KEYWORD set — bounded by the ~130-entry static
-    * dictionary, never row data). A user schema (`.schema(...)`) skips
-    * inference entirely and is the recommended path for repeated reads. */
+    * Scale design: the driver NEVER parses the whole corpus. It infers
+    * from a bounded sample — the first `sampleFiles` productive files by
+    * path order, so the result is deterministic. A user schema
+    * (`.schema(...)`) skips inference entirely: it is the way to an
+    * exact schema over a corpus whose columns the sample may miss, and
+    * the recommended path for repeated reads. */
   def inferSchema(paths: Seq[String], conf: Configuration,
-                  sampleFiles: Int = DefaultInferSampleFiles,
-                  distributed: Boolean = false): StructType = {
+                  sampleFiles: Int = InferSampleFiles): StructType = {
     // the pipeline's own walk: the source reads exactly what the job reads
     val files = paths.flatMap(DicomPipeline.walkFiles(conf, _)).map(_._1)
-    // An explicit full-corpus request must not silently degrade to the
-    // bounded sample: without an active session the distributed pass
-    // cannot run, and a partial schema would look complete.
-    if (distributed && SparkSession.getActiveSession.isEmpty)
-      throw new IllegalStateException(
-        "dicom inferMode=full requires an active SparkSession (the " +
-        "full-corpus pass runs on executors); start a session or drop " +
-        "to the bounded-sample default")
-    val keys: Seq[String] =
-      if (distributed) {
-        val sc = SparkSession.active.sparkContext
-        val sconf = sc.broadcast(new SerializableHadoopConf(conf))
-        val parts = math.max(1, math.min(files.size, sc.defaultParallelism * 4))
-        sc.parallelize(files, parts)
-          .flatMap(f => rowsOf(f, sconf.value.value, failOnError = false)
-            .iterator.flatMap(_.collect {
-              case (k, v) if v != VrConvert.DNull => k
-            }).toSet)
-          .distinct().collect().toSeq
-      } else {
-        // The bound counts PRODUCTIVE files (≥1 row): a corpus whose first
-        // N paths are non-DICOM clutter (READMEs, empty DICOMDIRs) must
-        // not infer an empty schema. A hard cap on files *examined* keeps
-        // the driver bounded even if nothing parses.
-        val want = math.max(1, sampleFiles)
-        val examineCap = math.max(want * 16, 512)
-        val keySet = scala.collection.mutable.Set.empty[String]
-        var productive = 0
-        var examined = 0
-        val it = files.sorted.iterator
-        while (productive < want && examined < examineCap && it.hasNext) {
-          val rs = rowsOf(it.next(), conf, failOnError = false)
-          examined += 1
-          if (rs.nonEmpty) productive += 1
-          rs.foreach(_.foreach { case (k, v) =>
-            if (v != VrConvert.DNull) keySet += k
-          })
-        }
-        keySet.toSeq
-      }
-    DicomPipeline.schemaFor(keys)
+    // The bound counts PRODUCTIVE files (≥1 row): a corpus whose first
+    // N paths are non-DICOM clutter (READMEs, empty DICOMDIRs) must
+    // not infer an empty schema. A hard cap on files *examined* keeps
+    // the driver bounded even if nothing parses.
+    val want = math.max(1, sampleFiles)
+    val examineCap = math.max(want * 16, 512)
+    val keys = scala.collection.mutable.Set.empty[String]
+    var productive = 0
+    var examined = 0
+    val it = files.sorted.iterator
+    while (productive < want && examined < examineCap && it.hasNext) {
+      val rs = rowsOf(it.next(), conf, failOnError = false)
+      examined += 1
+      if (rs.nonEmpty) productive += 1
+      rs.foreach(_.foreach { case (k, v) =>
+        if (v != VrConvert.DNull) keys += k
+      })
+    }
+    DicomPipeline.schemaFor(keys.toSeq)
   }
 
   /** snake_case column name → original keyword (inverse of the sanitize

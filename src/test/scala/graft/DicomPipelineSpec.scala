@@ -65,21 +65,28 @@ class DicomPipelineSpec extends SparkSuite {
   }
 
   test("dicom_partitioned_sql: standing-catalog reuse ≡ fresh-table-per-call, repeat call stable") {
-    // the reuse path (default) clears + fully re-extracts the data but
-    // keeps the registration; the A/B arm re-DDLs a fresh random table
-    // each call — both must produce identical rows, and a SECOND reuse
-    // call (registration now standing) must reproduce them again
-    val viaReuse = graft.queries.DicomQueries.partitionedSql(spark, "")
+    // the standing entry clears + fully re-extracts the data but keeps
+    // the registration; the reference re-DDLs a fresh table over a fresh
+    // directory — both must produce identical rows, and a SECOND
+    // standing call (registration now standing) must reproduce them again
+    val standing = graft.queries.DicomQueries.partitionedSql(spark, "")
       .collect().map(_.toString)
     val again = graft.queries.DicomQueries.partitionedSql(spark, "")
       .collect().map(_.toString)
-    withConf("spark.graft.dicom.catalogReuse" -> "false") {
-      val fresh = graft.queries.DicomQueries.partitionedSql(spark, "")
-        .collect().map(_.toString)
-      assert(viaReuse.nonEmpty && viaReuse.sameElements(fresh),
-        "standing-catalog path drifted from the fresh-table path")
-      assert(again.sameElements(fresh), "second reuse call drifted")
-    }
+    val out = tmp()
+    DicomPipeline.run(spark, fixtures, s"$out/data", Some(s"$out/errors"),
+      "ref-bucket", "ref-region")
+    Catalog.registerTable(spark, s"$out/data", "dicom_db", "dicom_metadata_fresh")
+    val fresh = spark.sql(
+      """SELECT date_format(study_date, 'yyyy-MM-dd') AS study_date,
+        |       count(*) AS n_images,
+        |       count(DISTINCT sopinstance_uid) AS n_instances
+        |FROM dicom_db.dicom_metadata_fresh
+        |GROUP BY study_date ORDER BY study_date""".stripMargin)
+      .collect().map(_.toString)
+    assert(standing.nonEmpty && standing.sameElements(fresh),
+      "standing-catalog path drifted from the fresh-table path")
+    assert(again.sameElements(fresh), "second standing call drifted")
   }
 
   test("crawler merges divergent per-batch schemas") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** DataSource V2 `format("dicom")`: schema inference, reading, column
   * pruning pushdown, permissive error handling. */
 class DicomSourceSpec extends SparkSuite {
@@ -138,7 +136,7 @@ class DicomSourceSpec extends SparkSuite {
   }
 
   test("small read uses few partitions, not one per file") {
-    assert(df.rdd.getNumPartitions <= 2) // 6 files, ~5 MB total, 128 MB cap
+    assert(df.rdd.getNumPartitions <= 2) // 7 objects, ~2 MB total, 128 MB cap
   }
 
   test("spark.sql.files.maxPartitionBytes sizes the read: at 1 byte each object plans alone") {
@@ -195,31 +193,13 @@ class DicomSourceSpec extends SparkSuite {
     assert(strict.select("modality").collect().map(_.getString(0)).toSeq == Seq("CT"))
   }
 
-  test("schema inference: distributed full pass matches driver sample; sample is bounded") {
+  test("schema inference: the read infers from the bounded sample") {
     import graft.sources.DicomSourceUtil
     val conf = spark.sparkContext.hadoopConfiguration
     val sampled = DicomSourceUtil.inferSchema(Seq(fixtures), conf)
-    val full = DicomSourceUtil.inferSchema(Seq(fixtures), conf, distributed = true)
-    assert(sampled == full) // fixture set fits in one sample window
+    assert(sampled == df.schema) // the read path infers the same sample
     val one = DicomSourceUtil.inferSchema(Seq(fixtures), conf, sampleFiles = 1)
     assert(one.fieldNames.nonEmpty)
     assert(one.fieldNames.toSet.subsetOf(sampled.fieldNames.toSet))
-    // the option path end-to-end
-    val dfFull = spark.read.format("dicom")
-      .option("inferMode", "full").load(fixtures)
-    assert(dfFull.count() == 10)
-  }
-
-  test("inferMode=full without an active session fails fast, never silent sample") {
-    import graft.sources.DicomSourceUtil
-    val conf = spark.sparkContext.hadoopConfiguration
-    val prev = SparkSession.getActiveSession
-    SparkSession.clearActiveSession()
-    try {
-      val e = intercept[IllegalStateException] {
-        DicomSourceUtil.inferSchema(Seq(fixtures), conf, distributed = true)
-      }
-      assert(e.getMessage.contains("inferMode=full"))
-    } finally prev.foreach(SparkSession.setActiveSession)
   }
 }

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * run as `sbt "Test/runMain graft.<Name>"`; every main builds its
   * session through [[graft.util.LocalSession]], every spec through
   * [[SparkSuite]]; no `println` debug
-  * switch comes back; the native functions have one registry. A source
-  * guard, because the defect IS the shape. */
+  * switch comes back; the native functions have one registry; every
+  * `spark.graft.*` setting read has a CONFIG.md row and no row outlives
+  * its setting. A source guard, because the defect IS the shape. */
 class ProductionJarSpec extends AnyFunSuite {
 
   /** (path relative to `root`, text) of every Scala file under `root`. */
@@ -62,6 +63,23 @@ class ProductionJarSpec extends AnyFunSuite {
       val hits = all.collect { case (f, text) if text.contains(sw) => f }
       assert(hits.isEmpty, s"debug switch $sw is back in $hits")
     }
+  }
+
+  test("every spark.graft setting src/main reads has a CONFIG.md row, and every row is read") {
+    // split so this file does not match itself
+    val setting = "spark" + """\.graft\.[A-Za-z][\w.]*"""
+    val quoted = ("\"(" + setting + ")\"").r
+    val read = sources("src/main/scala").flatMap { case (_, text) =>
+      quoted.findAllMatchIn(code(text)).map(_.group(1))
+    }.toSet
+    // the first cell of each CONFIG.md table row names what it documents
+    val named = ("`(" + setting + ")`").r
+    val documented = Files.readAllLines(Paths.get("CONFIG.md")).asScala
+      .filter(_.startsWith("|")).flatMap { row =>
+        named.findAllMatchIn(row.split('|')(1)).map(_.group(1))
+      }.toSet
+    assert((read -- documented).isEmpty, s"read but not in CONFIG.md: ${(read -- documented).toSeq.sorted}")
+    assert((documented -- read).isEmpty, s"in CONFIG.md but read nowhere: ${(documented -- read).toSeq.sorted}")
   }
 
   /** The argument text of every `fn(` call in `c`, up to its matching

@@ -189,10 +189,9 @@ object ScaleRehearsal {
     // count() would be answered from parquet footers alone)
     val (_, docsScanBytes, _) = bytesReadDuring(
       sf1docs.agg(sum(length(col("text")))).head())
-    // each batch width runs as a bloom on/off A/B: the runtime filter's
-    // claim is shuffle-volume reduction on the index side, so record
-    // shuffle-write bytes alongside wall + input bytes for both arms.
-    // `smj` arms disable AUTO broadcast (explicit broadcast() hints in
+    // the bloom runtime filter's claim is shuffle-volume reduction on
+    // the index side, so each batch width records shuffle-write bytes
+    // alongside wall + input bytes. `smj` arms disable AUTO broadcast (explicit broadcast() hints in
     // the verify stage survive) — the production condition where the
     // daily batch bands exceed the broadcast threshold and the
     // candidate join becomes a real exchange; at fixture scale Spark
@@ -200,25 +199,21 @@ object ScaleRehearsal {
     // which is itself worth recording (the bloom's two driver jobs are
     // its only cost there)
     def day2(label: String, batch: org.apache.spark.sql.DataFrame,
-             bloom: Boolean, smj: Boolean = false): (String, Double, Long, Long, Long) = {
-      spark.conf.set("spark.graft.dedup.index.bloom.enabled", bloom.toString)
+             smj: Boolean = false): (String, Double, Long, Long, Long) = {
       val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       if (smj) spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val t0 = System.nanoTime()
       // restore in finally: one failed arm must not leave broadcast
-      // joins globally disabled (or the bloom pinned) for every
-      // remaining measurement in the run
+      // joins globally disabled for every remaining measurement in
+      // the run
       val (n, bytes, shufBytes) =
         try bytesReadDuring {
           graft.operators.Dedup.incrementalPairsFromIndex(spark, idxDir, batch).count()
-        } finally {
-          spark.conf.unset("spark.graft.dedup.index.bloom.enabled")
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-        }
+        } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       val sec = (System.nanoTime() - t0) / 1e9
       graft.operators.Dedup.unpersistIntermediates(spark)
       spark.catalog.clearCache()
-      val tag = s"$label${if (smj) "_smj" else ""}${if (bloom) "" else "_nobloom"}"
+      val tag = s"$label${if (smj) "_smj" else ""}"
       System.err.println(f"[rehearsal] day2 $tag%-26s ${fmt(sec)}s  $n rows  ${bytes / 1048576}%d MiB read  " +
         f"${shufBytes / 1048576}%d MiB shuffled " +
         f"(index: bands ${bandsBytes / 1048576}%d MiB + sets ${setsBytes / 1048576}%d MiB; one docs scan ${docsScanBytes / 1048576}%d MiB)")
@@ -226,14 +221,10 @@ object ScaleRehearsal {
     }
     val batch0p1 = sf1docs.filter(pmod(col("doc_id"), lit(1000)) === lit(7))
     val day2Rows = Seq(
-      day2("batch_10pct", sf1docs.filter(isBatch10), bloom = true),
-      day2("batch_10pct", sf1docs.filter(isBatch10), bloom = false),
-      day2("batch_10pct", sf1docs.filter(isBatch10), bloom = true, smj = true),
-      day2("batch_10pct", sf1docs.filter(isBatch10), bloom = false, smj = true),
-      day2("batch_0p1pct", batch0p1, bloom = true),
-      day2("batch_0p1pct", batch0p1, bloom = false),
-      day2("batch_0p1pct", batch0p1, bloom = true, smj = true),
-      day2("batch_0p1pct", batch0p1, bloom = false, smj = true))
+      day2("batch_10pct", sf1docs.filter(isBatch10)),
+      day2("batch_10pct", sf1docs.filter(isBatch10), smj = true),
+      day2("batch_0p1pct", batch0p1),
+      day2("batch_0p1pct", batch0p1, smj = true))
     System.err.println(f"[rehearsal] day2 index build+write: ${fmt(buildSec)}s")
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(idxDir))
 
