@@ -21,7 +21,22 @@ SF=${1:-/root/testdata/sf0.01}
 OUT=target/ci_verify
 
 mkdir -p target
+# the per-process std-* and per-call run* directories the DICOM queries
+# make under target/dicomq are swept at JVM exit
+dicomq_scratch() {
+  local d
+  for d in target/dicomq/std-* target/dicomq/run*; do
+    [[ -d "$d" ]] && echo "$d"
+  done
+  return 0
+}
+dicomq_before=$(dicomq_scratch)
 sbt -batch test 2>&1 | tee target/ci_test.log
+dicomq_left=$(comm -13 <(echo "$dicomq_before" | sort) <(dicomq_scratch | sort))
+if [[ -n "$dicomq_left" ]]; then
+  echo "the test JVM left scratch directories behind:" $dicomq_left >&2
+  exit 1
+fi
 # every spec shares SparkSuite's one session: Spark prints this line when
 # a getOrCreate with options finds a session already running
 if grep -q "Using an existing Spark session" target/ci_test.log; then

@@ -1,48 +1,102 @@
 package graft.pipeline
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+import graft.dicom.Flatten
 
 /** Catalog registration + schema-evolution "crawler" analog.
   *
-  * The reference registers `dicom_db.dicom_metadata` in Glue
-  * (`deploy/serverless.yml:509-536`), exposes new partitions via
-  * `MSCK REPAIR TABLE` (README.md:104-106), and evolves the schema with a
+  * The reference's write step registers its own partitions: awswrangler
+  * calls Glue `BatchCreatePartition` (`deploy/serverless.yml:391-397`);
+  * the reference README's partition repair (README.md:104-106) and a
   * Glue crawler configured `CombineCompatibleSchemas`
-  * (`deploy/serverless.yml:466-479`). Spark-native equivalents:
-  * external parquet table + `MSCK REPAIR`, and a footer-merge
-  * re-registration pass.
+  * (`deploy/serverless.yml:466-479`) are the manual fallbacks.
+  * Spark-native equivalents: an external parquet table created with its
+  * schema and partition column stated, its partitions added from one
+  * listing of the table root — registration reads metadata only and
+  * runs no Spark job — and a footer-merge re-registration pass.
   */
 object Catalog {
 
-  /** Register the partitioned output as an external table and discover
-    * its partitions (`MSCK REPAIR TABLE` is native Spark SQL). The schema
-    * comes from one sampled footer; [[crawl]] merges them all. */
+  /** Register the partitioned output as an external table with all its
+    * `study_date=` partitions. The schema is the footer of the first
+    * visible file under the earliest date, read on the driver (no Spark
+    * job); [[crawl]] merges them all. */
   def registerTable(spark: SparkSession, location: String,
-                    db: String = "dicom_db", table: String = "dicom_metadata"): Unit =
-    register(spark, location, db, table, mergeSchema = false)
+                    db: String = "dicom_db", table: String = "dicom_metadata"): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val parts = partitions(conf, location)
+    val first = parts.iterator.flatMap(p => visible(p.getFileSystem(conf), p)).find(_.isFile)
+      .getOrElse(throw new IllegalArgumentException(s"no data files under $location"))
+    register(spark, location, footerSchema(spark, first.getPath), parts, db, table)
+  }
 
   /** Crawler analog: merge all parquet footers under `location`
     * (CombineCompatibleSchemas) and re-register the table with the
     * evolved schema. Returns the registered table. */
   def crawl(spark: SparkSession, location: String,
             db: String = "dicom_db", table: String = "dicom_metadata"): DataFrame = {
-    register(spark, location, db, table, mergeSchema = true)
+    val parts = partitions(spark.sparkContext.hadoopConfiguration, location)
+    val merged = spark.read.option("mergeSchema", "true").parquet(location).schema
+    register(spark, location, merged, parts, db, table)
     spark.table(s"$db.$table")
   }
 
-  private def register(spark: SparkSession, location: String,
-                       db: String, table: String, mergeSchema: Boolean): Unit = {
+  /** (Re)create `db.table` over `location` with `schema`'s columns and a
+    * DATE `study_date` partition column, then add `parts` in one
+    * statement. Stating the schema and the partition column keeps
+    * `CREATE TABLE` from listing or reading the files. */
+  private def register(spark: SparkSession, location: String, schema: StructType,
+                       parts: Seq[Path], db: String, table: String): Unit = {
+    val col = Flatten.PartitionColSnake
+    val columns = StructType(schema.filterNot(_.name.equalsIgnoreCase(col)))
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     spark.sql(s"DROP TABLE IF EXISTS $db.$table")
-    // Spark 4 requires an explicit column list to state PARTITIONED BY;
-    // omitting the clause lets partitioning be inferred from the Hive
-    // layout (study_date=... directories).
-    val options = if (mergeSchema) "OPTIONS (mergeSchema 'true') " else ""
     spark.sql(
-      s"""CREATE TABLE $db.$table
-         |USING PARQUET
-         |${options}LOCATION '$location'""".stripMargin)
-    spark.sql(s"MSCK REPAIR TABLE $db.$table")
+      s"""CREATE TABLE $db.$table (${columns.toDDL}, $col DATE)
+         |USING PARQUET PARTITIONED BY ($col)
+         |LOCATION '$location'""".stripMargin)
+    val specs = parts.map { p =>
+      val value = ExternalCatalogUtils.unescapePathName(p.getName.stripPrefix(s"$col="))
+      s"PARTITION ($col = '$value')"
+    }
+    spark.sql(s"ALTER TABLE $db.$table ADD IF NOT EXISTS ${specs.mkString(" ")}")
+  }
+
+  /** The visible `study_date=` directories directly under `location`, in
+    * date order, from one driver listing; hidden entries
+    * ([[DicomPipeline.hiddenName]]: `_temporary`, `.staging`, `_SUCCESS`)
+    * are never partitions. A location without one fails, naming it. */
+  private def partitions(conf: Configuration, location: String): Seq[Path] = {
+    val root = new Path(location)
+    val parts = visible(root.getFileSystem(conf), root)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"${Flatten.PartitionColSnake}="))
+      .map(_.getPath)
+    require(parts.nonEmpty, s"no ${Flatten.PartitionColSnake}= partitions under $location")
+    parts
+  }
+
+  /** `dir`'s visible entries, by name. */
+  private def visible(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filterNot(st => DicomPipeline.hiddenName(st.getPath.getName))
+      .sortBy(_.getPath.getName)
+
+  /** The row schema of one parquet file, from its footer alone, read the
+    * way Spark's own inference reads a footer: the Spark row-metadata
+    * key (`org.apache.spark.sql.parquet.row.metadata`) when the file
+    * carries it, else the schema converted from its parquet types. */
+  private def footerSchema(spark: SparkSession, file: Path): StructType = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try ParquetFileFormat.readSchemaFromFooter(new Footer(file, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
   }
 
   /** Small-file compaction for one Hive partition directory — the

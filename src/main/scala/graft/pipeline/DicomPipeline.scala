@@ -1,14 +1,17 @@
 package graft.pipeline
 
 import java.io.InputStream
+import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, GraftFrames, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
@@ -61,7 +64,8 @@ object DicomPipeline {
   type Outcome = Either[DicomError, Seq[ImageRow]]
 
   /** Per-object outcomes of an extraction, split into the row and error
-    * channels. [[write]] releases `outcomes` when it is persisted. */
+    * channels. [[write]] persists `outcomes` if they are not yet, and
+    * releases them. */
   final case class Extracted(outcomes: RDD[Outcome]) {
     lazy val rows: RDD[ImageRow] =
       outcomes.flatMap { case Right(rs) => rs; case Left(_) => Nil }
@@ -130,7 +134,7 @@ object DicomPipeline {
     * plus the file index's data-path check): `_`-prefixed without `=`,
     * `.`-prefixed, or an in-flight `._COPYING_` upload. A `_key=value`
     * partition directory stays visible. */
-  private def hiddenName(name: String): Boolean =
+  private[graft] def hiddenName(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
       name.endsWith("._COPYING_")
 
@@ -244,8 +248,9 @@ object DicomPipeline {
     * listing stores wholesale, so Spark-job detritus WILL appear in
     * them; a corpus deliberately rooted under a dot-directory must be
     * inventoried with paths relative to that root). Nothing is
-    * persisted. ManifestSpec pins rows+errors equality against
-    * [[extract]] on the same corpus.
+    * persisted here; [[write]] persists the outcomes for its passes.
+    * ManifestSpec pins rows+errors equality against [[extract]] on the
+    * same corpus.
     *
     * Partitioning: objects up to `spark.sql.files.maxPartitionBytes`
     * pack many-per-task, task count sized by manifest byte totals (≈ that
@@ -379,15 +384,17 @@ object DicomPipeline {
 
   /** What one pass over a batch tells its finalize step: the observed
     * non-null keywords (the columns), the rows per study date, as epoch
-    * days (the data write's layout), and whether any object errored
-    * (whether the errors write runs). Its size is bounded by the
-    * dictionary and the date count, never by rows, so each task of the
+    * days (the data write's layout), and the extraction partitions that
+    * hold an error with the errors' UTF-8 bytes (the errors write's
+    * input and size). Its size is bounded by the dictionary, the date
+    * count and the partition count, never by rows, so each task of the
     * single-stage `RDD.aggregate` returns one to the driver. Mutable:
     * `aggregate` gives each task its own copy of the empty summary. */
   private final class BatchSummary extends Serializable {
     val keys = scala.collection.mutable.HashSet.empty[String]
     val dates = scala.collection.mutable.HashMap.empty[Long, Long]
-    var errored = false
+    val errorParts = scala.collection.mutable.HashSet.empty[Int]
+    var errorBytes = 0L
 
     def addRow(ir: ImageRow): BatchSummary = {
       ir.values.foreach { case (k, v) => if (v != VrConvert.DNull) keys += k }
@@ -397,15 +404,23 @@ object DicomPipeline {
       this
     }
 
+    /** Runs in the task that reads the outcome's partition. */
     def addOutcome(o: Outcome): BatchSummary = {
-      o.fold(_ => errored = true, _.foreach(addRow))
+      o.fold(addError, _.foreach(addRow))
       this
+    }
+
+    private def addError(e: DicomError): Unit = {
+      errorParts += TaskContext.getPartitionId()
+      errorBytes += Seq(e.source_s3_key, e.stage, e.error)
+        .map(s => if (s == null) 0 else s.getBytes(StandardCharsets.UTF_8).length).sum
     }
 
     def merge(other: BatchSummary): BatchSummary = {
       keys ++= other.keys
       other.dates.foreach { case (d, c) => dates(d) = dates.getOrElse(d, 0L) + c }
-      errored ||= other.errored
+      errorParts ++= other.errorParts
+      errorBytes += other.errorBytes
       this
     }
   }
@@ -457,16 +472,24 @@ object DicomPipeline {
     * micro-batch. Returns (data, errors) as written; both are lazy, so
     * using them afterwards re-extracts.
     *
-    * Neither write runs an emptiness job: every row carries the four
-    * lineage strings and a study date, so a batch has columns exactly
-    * when it has rows, and the summary pass flags errored objects. The
-    * data write is laid out by [[planned]]. Both write through
-    * [[ForkFreeLocalFileSystem]]. The errors write runs only after the
-    * data write has succeeded, so a batch whose data write fails appends
-    * no error rows and a retry does not repeat them. */
+    * The outcomes are persisted for the write's passes if the
+    * extraction did not persist them ([[extractFromManifest]]), so each
+    * object is read once. Neither write runs an emptiness job: every row
+    * carries the four lineage strings and a study date, so a batch has
+    * columns exactly when it has rows, and the summary pass records the
+    * partitions that hold errors. The data write is laid out by
+    * [[planned]]. The errors write reads only the partitions holding
+    * errors, narrowed to one task per advisory partition size
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) of error bytes:
+    * one job, no shuffle, and one file for a handful of rows. Both write
+    * through [[ForkFreeLocalFileSystem]]. The errors write runs only
+    * after the data write has succeeded, so a batch whose data write
+    * fails appends no error rows and a retry does not repeat them. */
   def write(spark: SparkSession, ex: Extracted, outPath: String,
             errorPath: Option[String]): (DataFrame, DataFrame) =
     try {
+      if (ex.outcomes.getStorageLevel == StorageLevel.NONE)
+        ex.outcomes.persist(StorageLevel.MEMORY_AND_DISK_SER)
       val (df, summary) = toDataFrameSummarized(spark, ex)
       if (df.columns.nonEmpty)
         planned(df, summary, spark.sparkContext.defaultParallelism)
@@ -475,15 +498,16 @@ object DicomPipeline {
           .partitionBy(Flatten.PartitionColSnake)
           .option("compression", "snappy")
           .parquet(outPath)
-      val errDf = errorsFrame(spark, ex.errors)
-      // REBALANCE lets AQE size the errors write by bytes: one task (one
-      // file) for a handful of rows, more at scale — not one task per
-      // scan partition
-      if (summary.errored) errorPath.foreach { p =>
-        errDf.hint("rebalance").write.options(ForkFreeLocalFileSystem.WriteOptions)
+      if (summary.errorParts.nonEmpty) errorPath.foreach { p =>
+        val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+        val tasks = math.min(summary.errorParts.size,
+          math.max(1L, (summary.errorBytes + advisory - 1) / advisory)).toInt
+        val held = PartitionPruningRDD.create(ex.errors, summary.errorParts.toSet)
+        errorsFrame(spark, held.coalesce(tasks))
+          .write.options(ForkFreeLocalFileSystem.WriteOptions)
           .mode("append").parquet(p)
       }
-      (df, errDf)
+      (df, errorsFrame(spark, ex.errors))
     } finally ex.outcomes.unpersist(blocking = false)
 
   /** The data write's layout, planned from the summary: every task

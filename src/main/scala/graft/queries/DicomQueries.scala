@@ -28,9 +28,13 @@ object DicomQueries {
   private def newToday: org.apache.spark.sql.Column =
     pmod(abs(hash(element_at(split(col("path"), "/"), -1))), lit(3)) === 0
 
+  /** A fresh `run*` directory under the engine scratch root, swept at
+    * exit. */
   private def scratch(s: SparkSession): String = {
     val base = graft.util.Fs.scratchDir(s, "dicomq")
-    java.nio.file.Files.createTempDirectory(base, "run").toAbsolutePath.toString
+    val dir = java.nio.file.Files.createTempDirectory(base, "run").toAbsolutePath
+    graft.util.Fs.deleteOnExit(dir)
+    dir.toString
   }
 
   /** Full extraction (route→expand→parse→flatten→finalize) over all 7
@@ -107,19 +111,18 @@ object DicomQueries {
       .orderBy($"source_key")
   }
 
-  /** E3 path: partitioned write → catalog registration → MSCK → pruned
-    * SQL aggregation by partition.
+  /** E3 path: partitioned write → catalog registration (table and
+    * partitions) → pruned SQL aggregation by partition.
     *
     * The catalog entry is a STANDING object, as a warehouse's is — the
     * table is created once and each pipeline run refreshes its data, it
     * is not re-DDL'd per batch. The entry writes to a stable
     * per-process location (cleared first, so every run still pays the
-    * full extraction + partitioned write) and registers the table on
-    * first use only; later calls in the process skip
-    * CREATE/DROP/MSCK — the ~1 s/pass DDL constant the r6 bench notes
-    * measured. The partition SET is deterministic (fixture study
-    * dates), so the standing registration stays valid across data
-    * refreshes — exactly when MSCK re-repair would be a no-op.
+    * full extraction + partitioned write; swept at exit) and registers
+    * the table on first use only; later calls in the process skip
+    * DROP/CREATE/ADD PARTITION. The partition SET is deterministic
+    * (fixture study dates), so the standing registration stays valid
+    * across data refreshes — re-adding the partitions would be a no-op.
     * DicomPipelineSpec pins the standing result against a freshly
     * registered table. */
   def partitionedSql(s: SparkSession, dir: String): DataFrame = {
@@ -127,8 +130,9 @@ object DicomQueries {
     // per-process standing location: two JVMs on one checkout (bench
     // alongside tests) must not race on deleteRecursively + rewrite
     // of a shared data dir one of them is querying
-    val out = graft.util.Fs.scratchDir(s, "dicomq")
-      .resolve(s"std-${ProcessHandle.current.pid}").toString
+    val std = graft.util.Fs.scratchDir(s, "dicomq").resolve(s"std-${ProcessHandle.current.pid}")
+    graft.util.Fs.deleteOnExit(std)
+    val out = std.toString
     val table = "dicom_metadata_std"
     // refresh-in-place: the write below appends to empty
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(s"$out/data"))
@@ -140,7 +144,7 @@ object DicomQueries {
     else
       // data was refreshed in place under the standing registration:
       // drop the cached file listing (lazy re-list on next query) —
-      // the cheap production refresh, vs re-running DROP/CREATE/MSCK
+      // the cheap production refresh, vs re-registering
       s.sql(s"REFRESH TABLE dicom_db.$table")
     s.sql(
       s"""SELECT date_format(study_date, 'yyyy-MM-dd') AS study_date,

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.pipeline.DicomPipeline
 
 /** The job's two writes cost per byte written, not per process forked or
@@ -12,13 +11,14 @@ import graft.pipeline.DicomPipeline
   *    so a run forks fewer processes than it writes Parquet files, with
   *    the permission bits a stock Hadoop write sets;
   *  - one single-stage summary pass finalizes the batch: its keys, its
-  *    rows per study date and whether any object errored;
+  *    rows per study date and the partitions that hold errors;
   *  - the data write is spread over the session's cores with one file
   *    per study date, and a date holding more than one core's share of
   *    the rows is split over several;
-  *  - the errors write runs only when the summary saw an error, and is
-  *    rebalanced into one file for a handful of rows however many scan
-  *    partitions they came from. */
+  *  - the errors write runs only when the summary saw an error, reads
+  *    only the partitions holding one, and writes one file for a
+  *    handful of rows however many scan partitions they came from;
+  *  - every route reads each object once per write. */
 class DicomWriteSpec extends SparkSuite {
 
   private def tmp(): Path =
@@ -57,30 +57,6 @@ class DicomWriteSpec extends SparkSuite {
   private def filesPerDate(data: Path): Map[String, Int] =
     under(data).filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("study_date="))
       .map(d => d.getFileName.toString.stripPrefix("study_date=") -> parquetFiles(d)).toMap
-
-  /** The jobs `body` runs, in order, each as its stages' (id, task count)
-    * sorted by id — a job's last stage is its result stage. A marker job
-    * run afterwards drains the asynchronous listener bus. */
-  private def jobsDuring(body: => Unit): Seq[Seq[(Int, Int)]] = {
-    val marker = "dicomwrite-marker"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[(Int, Int)])]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker))
-          drained.countDown()
-        else jobs.add(j.jobId -> j.stageInfos.map(s => s.stageId -> s.numTasks).sortBy(_._1))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "the listener bus did not drain")
-    } finally sc.removeSparkListener(l)
-    jobs.asScala.toSeq.sortBy(_._1).map(_._2)
-  }
 
   /** Writes `n` objects under `dir/in`, object `i` dated by `day(i)`. */
   private def corpus(dir: Path, n: Int)(day: Int => Int): Path = {
@@ -239,10 +215,51 @@ class DicomWriteSpec extends SparkSuite {
         dir.resolve("data").toString, Some(dir.resolve("errors").toString)))
       info(s"${jobs.size} jobs: ${jobs.map(_.size).mkString(", ")} stages")
       assert(jobs.head.size == 1, s"the key-union job ran ${jobs.head.size} stages")
-      // a distinct over the keys, a rebalanced data write and a rebalanced
-      // errors write planned 5 jobs on this batch
-      assert(jobs.size <= 5)
+      // the summary, the data write's shuffle and result jobs, and one
+      // errors job
+      assert(jobs.size == 4)
+      // the one error sits in one extraction partition: the errors job is
+      // one stage of one task, not a scan of every partition
+      assert(jobs.last == Seq(jobs.last.head._1 -> 1), s"the errors job ran ${jobs.last}")
       assert(spark.read.parquet(dir.resolve("errors").toString).count() == 1)
     } finally graft.util.Fs.deleteRecursively(dir)
+  }
+
+  test("a write over the manifest route opens each object once") {
+    val dir = tmp()
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.count.impl", classOf[DicomWriteSpec.CountingFs].getName)
+    try {
+      val in = corpus(dir, 40)(_ % 4)
+      Files.write(in.resolve("bad.dcm"), "not a DICOM object".getBytes("UTF-8"))
+      DicomWriteSpec.opens.clear()
+      val ex = DicomPipeline.extractFromManifest(spark,
+        DicomPipeline.manifestOf(spark, s"count://$in"))
+      DicomPipeline.write(spark, ex, dir.resolve("data").toString,
+        Some(dir.resolve("errors").toString))
+      val opens = DicomWriteSpec.opens.asScala.toMap
+      assert(opens.size == 41 && opens.values.forall(_ == 1),
+        s"objects by opens: ${opens.values.groupBy(identity).map { case (k, v) => k -> v.size }}")
+      assert(spark.read.parquet(dir.resolve("data").toString).count() == 40)
+      assert(spark.read.parquet(dir.resolve("errors").toString).count() == 1)
+    } finally {
+      conf.unset("fs.count.impl")
+      graft.util.Fs.deleteRecursively(dir)
+    }
+  }
+}
+
+object DicomWriteSpec {
+
+  /** Opens per object path through [[CountingFs]]. */
+  val opens = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+
+  /** The local filesystem under the `count:` scheme, counting opens. */
+  final class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("count:///")
+    override def open(p: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+      opens.merge(p.toUri.getPath, 1, _ + _)
+      super.open(p, bufferSize)
+    }
   }
 }

@@ -27,6 +27,32 @@ trait SparkSuite extends AnyFunSuite {
       case (k, None)    => spark.conf.unset(k)
     }
   }
+
+  /** The jobs `body` runs, in order, each as its stages' (id, task count)
+    * sorted by id — a job's last stage is its result stage. A marker job
+    * run afterwards drains the asynchronous listener bus. */
+  protected def jobsDuring(body: => Unit): Seq[Seq[(Int, Int)]] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "jobs-during-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[(Int, Int)])]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker))
+          drained.countDown()
+        else jobs.add(j.jobId -> j.stageInfos.map(s => s.stageId -> s.numTasks).sortBy(_._1))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "the listener bus did not drain")
+    } finally sc.removeSparkListener(l)
+    jobs.asScala.toSeq.sortBy(_._1).map(_._2)
+  }
 }
 
 object SparkSuite {
