@@ -21,12 +21,13 @@ SF=${1:-/root/testdata/sf0.01}
 OUT=target/ci_verify
 
 mkdir -p target
-# the per-process std-* and per-call run* directories the DICOM queries
-# make under target/dicomq are swept at JVM exit
+# every entry under target/dicomq is gone once the test JVM exits: the
+# stream drains delete theirs in a finally, and the DICOM queries' per-
+# process and per-call directories are swept at JVM exit
 dicomq_scratch() {
   local d
-  for d in target/dicomq/std-* target/dicomq/run*; do
-    [[ -d "$d" ]] && echo "$d"
+  for d in target/dicomq/* target/dicomq/.[!.]*; do
+    [[ -e "$d" ]] && echo "$d"
   done
   return 0
 }

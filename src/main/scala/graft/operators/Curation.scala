@@ -705,16 +705,15 @@ object Curation {
     * full vocabulary lives in the distributed weight relation, but the
     * artifact a streaming scorer ships to every task is a fixed-size
     * table (the fastText-style quantize-and-ship step), so scoring
-    * state is O(cap) regardless of corpus growth. */
+    * state is O(cap) regardless of corpus growth. The oracles and the
+    * driver gate run the default cap. */
   def writeNbModel(s: SparkSession, dir: String, path: String,
-                   cap: Int = -1): Unit = {
+                   cap: Int = 4096): Unit = {
     import s.implicits._
-    // dial: spark.graft.nb.cap (oracle + driver gate run the default)
-    val c = if (cap > 0) cap else s.conf.get("spark.graft.nb.cap", "4096").toInt
     val (_, _, lw, pri) = nbCore(s, dir)
     // independent writes off the shared checkpointed grain (§2.6)
     graft.util.Par.run(Seq(
-      () => lw.orderBy(abs($"wq").desc, $"w").limit(c)
+      () => lw.orderBy(abs($"wq").desc, $"w").limit(cap)
         .coalesce(1).write.mode("overwrite").parquet(s"$path/weights"),
       () => pri.coalesce(1).write.mode("overwrite").parquet(s"$path/prior")))
     Dedup.unpersistIntermediates(s)
@@ -797,9 +796,8 @@ object Curation {
     * `corpus_nb_day2` oracle's claim (append ≡ rebuild, the persisted-
     * index family convention applied to a learned model). */
   def deriveNbModel(s: SparkSession, countsPath: String, modelPath: String,
-                    cap: Int = -1): Unit = {
+                    cap: Int = 4096): Unit = {
     import s.implicits._
-    val c = if (cap > 0) cap else s.conf.get("spark.graft.nb.cap", "4096").toInt
     val cby = s.read.parquet(s"$countsPath/cby")
       .groupBy($"w").agg(sum($"c1").as("c1"), sum($"c0").as("c0"))
     val tots = s.read.parquet(s"$countsPath/cls")
@@ -812,7 +810,7 @@ object Curation {
     // weights and prior are independent consumers of the merged counts —
     // two small write jobs submitted concurrently (§2.6)
     graft.util.Par.run(Seq(
-      () => lw.orderBy(abs($"wq").desc, $"w").limit(c)
+      () => lw.orderBy(abs($"wq").desc, $"w").limit(cap)
         .coalesce(1).write.mode("overwrite").parquet(s"$modelPath/weights"),
       () => pri.coalesce(1).write.mode("overwrite").parquet(s"$modelPath/prior")))
   }

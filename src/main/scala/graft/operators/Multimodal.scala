@@ -905,6 +905,10 @@ object Multimodal {
       .orderBy($"path")
   }
 
+  /** [[assetNeighbors]]' LSH geometry: tables × bucket bits per table. */
+  private val AssetLshTables = 8
+  private val AssetLshBits = 2
+
   /** Multimodal → embedding → similarity, composed end-to-end: embed
     * every asset ([[pseudoEmbed]]) and rank each asset's top-k nearest
     * LSH-bucket neighbors by cosine — the full "ingest binaries, index
@@ -921,23 +925,21 @@ object Multimodal {
     *    WindowGroupLimit map-side pruning (plan pinned in
     *    PlanQualitySpec).
     *
-    * Geometry: `spark.graft.mm.lsh.{tables,bits}` (default 8×2). The
-    * default favors recall — pseudo-embeddings are near-orthogonal, so a
+    * Geometry: [[AssetLshTables]] × [[AssetLshBits]] (8×2). It favors
+    * recall — pseudo-embeddings are near-orthogonal, so a
     * pair survives ≥1 of 8 two-bit tables w.p. ~1-(3/4)^8 ≈ 0.90 — which
     * is what a top-k pin over a fixture-sized corpus needs; a 10⁹-asset
-    * corpus turns bits up (smaller buckets) exactly as the
-    * [[Similarity]] dials document. */
+    * corpus needs more bits (smaller buckets), as the [[Similarity]]
+    * dials document. */
   def assetNeighbors(s: SparkSession, dirs: Seq[String], k: Int = 3): DataFrame = {
     import s.implicits._
     val embedded = Dedup.tracked(pseudoEmbed(s, dirs)
       .select($"path", $"embedding",
         sqrt(dot($"embedding", $"embedding")).as("nrm")))
-    val tables = s.conf.get("spark.graft.mm.lsh.tables", "8").toInt
-    val bits = s.conf.get("spark.graft.mm.lsh.bits", "2").toInt
     // tracked too: the symmetric union references the candidate relation
     // twice — uncached, the whole bucket-join subtree would run per side
     val cand = Dedup.tracked(Similarity.lshBucketedPairs(
-      embedded, "path", tables, bits, scale = 6, minSim = None))
+      embedded, "path", AssetLshTables, AssetLshBits, scale = 6, minSim = None))
     Similarity.topKNeighbors(s, cand, "id_a", "id_b", "path", k)
   }
 

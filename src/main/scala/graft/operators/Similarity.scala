@@ -1065,34 +1065,15 @@ object Similarity {
     // pqM+1 slices (~one corpus copy in float) instead of one at a time;
     // bound the pool below pqM+1 if slice size × pqM approaches executor
     // storage memory at large scale.
-    val pool = daemonPool(pqM + 1)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val bookFs = (0 until pqM).map { m =>
-        scala.concurrent.Future(kmeansOnVecs(s,
-          e.map { case (id, v) => (id, java.util.Arrays.copyOfRange(v, m * sub, (m + 1) * sub)) },
-          ksub, iters = 3))
-      }
+    val trained = graft.util.Par.map((0 until pqM).map { m => () =>
+      kmeansOnVecs(s,
+        e.map { case (id, v) => (id, java.util.Arrays.copyOfRange(v, m * sub, (m + 1) * sub)) },
+        ksub, iters = 3)
+    } :+ (() =>
       // coarse quantizer over the unit vectors (reuses the same trainer)
-      val coarseF = scala.concurrent.Future(
-        kmeansOnVecs(s, e, k = PqCoarseLists, iters = 3))
-      val wait = scala.concurrent.duration.Duration(10, "min")
-      val books: Array[Array[Array[Double]]] =
-        bookFs.map(scala.concurrent.Await.result(_, wait)).toArray
-      PqModel(books, scala.concurrent.Await.result(coarseF, wait))
-    } finally pool.shutdownNow()
+      kmeansOnVecs(s, e, k = PqCoarseLists, iters = 3)))
+    PqModel(trained.init.toArray, trained.last)
   }
-
-  /** Fixed pool of DAEMON threads for the concurrent-training blocks
-    * (ADVICE r16): if an Await times out or a training throws, the
-    * orphaned threads must neither hold the JVM alive (daemon) nor keep
-    * grinding (the failure path's shutdownNow interrupts them); on the
-    * success path every future is already complete, so shutdownNow
-    * degenerates to shutdown. */
-  private def daemonPool(n: Int): java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(n,
-      (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
 
   /** The PQ tier's coarse list count — shared with [[autoNprobe]]'s
     * callers so the geometry-driven probe dial sees the index geometry
@@ -1277,20 +1258,12 @@ object Similarity {
     // independent per-subspace trainings submitted concurrently — the
     // trainPq pattern (guide §2.6): same integer arithmetic per slice,
     // bit-identical books, wall-clock = the longest chain not the sum
-    val pool = daemonPool(pqM)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val books: Array[Array[Array[Long]]] =
-      try {
-        val fs = (0 until pqM).map { m =>
-          scala.concurrent.Future(quantizedKmeansCentroids(s,
-            data.map { case (id, q) =>
-              (id, java.util.Arrays.copyOfRange(q, m * sub, (m + 1) * sub)) },
-            ksub, iters))
-        }
-        fs.map(scala.concurrent.Await.result(_,
-          scala.concurrent.duration.Duration(10, "min"))).toArray
-      } finally pool.shutdownNow()
+    val books: Array[Array[Array[Long]]] = graft.util.Par.map((0 until pqM).map { m => () =>
+      quantizedKmeansCentroids(s,
+        data.map { case (id, q) =>
+          (id, java.util.Arrays.copyOfRange(q, m * sub, (m + 1) * sub)) },
+        ksub, iters)
+    }).toArray
     val qv = data.filter(_._1 == 0L).head(1).headOption.getOrElse(
       sys.error("sim_pq_exact: query vector vec_id=0 absent from the " +
         "quantized corpus (missing or zero-norm) — the learned entries " +

@@ -43,9 +43,11 @@ import graft.util.ForkFreeLocalFileSystem
   *    tag dictionary, ~130 keywords — a few KB — never row data) builds
   *    the batch schema, mirroring the reference's per-batch
   *    drop-all-null dynamic schema (`src/app.py:39-41`); the rows per
-  *    study date plan the write; an error flag gates the errors write;
-  *  - the per-object outcomes are persisted (MEMORY_AND_DISK_SER) so the
-  *    summary pass and the row materialization don't re-read storage;
+  *    study date plan the write; the partitions holding errors are the
+  *    errors write's input;
+  *  - [[write]] persists the per-object outcomes (MEMORY_AND_DISK_SER)
+  *    so the summary pass and the writes don't re-read storage, and
+  *    releases them;
   *  - the partitioned write uses Hive-style `study_date=` layout →
   *    partition-pruned reads for free (Catalyst
   *    `PruneFileSourcePartitions`), one file per date unless a date holds
@@ -64,8 +66,8 @@ object DicomPipeline {
   type Outcome = Either[DicomError, Seq[ImageRow]]
 
   /** Per-object outcomes of an extraction, split into the row and error
-    * channels. [[write]] persists `outcomes` if they are not yet, and
-    * releases them. */
+    * channels. No extraction route persists `outcomes`: [[write]] does,
+    * for its passes, and releases them. */
   final case class Extracted(outcomes: RDD[Outcome]) {
     lazy val rows: RDD[ImageRow] =
       outcomes.flatMap { case Right(rs) => rs; case Left(_) => Nil }
@@ -181,9 +183,8 @@ object DicomPipeline {
     * held whole — a loose `.dcm` reads at most its 10 MB range, archives
     * stream member by member. Zero-length objects (the reference's empty
     * `DICOMDIR` failure fixture) are packed like any other and reach
-    * the errors channel. The per-object outcomes are persisted
-    * (MEMORY_AND_DISK_SER) so the key scan and the row materialization
-    * don't re-read storage; [[write]] releases them. */
+    * the errors channel. Nothing is persisted here; [[write]] persists
+    * the outcomes for its passes. */
   def extract(spark: SparkSession, inputPath: String,
               bucket: String = "local", region: String = "local"): Extracted = {
     val files = walkFiles(spark.sparkContext.hadoopConfiguration, inputPath)
@@ -191,7 +192,7 @@ object DicomPipeline {
     val splitBytes = FilePartition.maxSplitBytes(spark, files.map(_._2 + openCost).sum)
     val tasks = DicomSourceUtil.packPartitions(files, splitBytes, openCost)
     val paths = spark.sparkContext.parallelize(tasks, math.max(1, tasks.size)).flatMap(identity)
-    Extracted(readObjects(paths, bucket, region).persist(StorageLevel.MEMORY_AND_DISK_SER))
+    Extracted(readObjects(paths, bucket, region))
   }
 
   /** Local/HDFS convenience builder for [[extractFromManifest]]: the same
@@ -288,10 +289,9 @@ object DicomPipeline {
   /** [[extract]] over a DataFrame whose first column holds object paths —
     * the streaming foreachBatch's entry (the `binaryFile` stream's `path`
     * column: the stream discovers objects, the reader opens them).
-    * Persisted like [[extract]]'s. */
+    * Nothing is persisted here, as in [[extract]]. */
   def extractFromPaths(paths: DataFrame, bucket: String, region: String): Extracted =
-    Extracted(readObjects(paths.rdd.map(_.getString(0)), bucket, region)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER))
+    Extracted(readObjects(paths.rdd.map(_.getString(0)), bucket, region))
 
   /** The PN struct type (7 string fields, `tags.py:56-65` order). */
   val pnStruct: StructType = StructType(Seq(
@@ -374,13 +374,14 @@ object DicomPipeline {
     StructType(keywords.sorted.map(kw =>
       StructField(Tags.snakeCase(kw), sparkTypeFor(kw), nullable = true)))
 
-  /** Finalize the batch DataFrame: union of observed NON-NULL keys →
-    * columns (this IS the reference's per-batch drop-all-null,
-    * `src/app.py:41` — a keyword only becomes a column if some row holds
-    * a value), laid out by [[schemaFor]]. The keys come from the one
-    * [[BatchSummary]] pass. */
-  def toDataFrame(spark: SparkSession, rows: RDD[ImageRow]): DataFrame =
-    framed(spark, rows, rows.aggregate(new BatchSummary)(_ addRow _, _ merge _))
+  /** Finalize an extraction's rows as a DataFrame: union of observed
+    * NON-NULL keys → columns (this IS the reference's per-batch
+    * drop-all-null, `src/app.py:41` — a keyword only becomes a column if
+    * some row holds a value), laid out by [[schemaFor]]. The keys come
+    * from the one [[BatchSummary]] pass [[write]] runs too. Nothing is
+    * persisted: the summary pass and the frame each read storage. */
+  def toDataFrame(spark: SparkSession, ex: Extracted): DataFrame =
+    toDataFrameSummarized(spark, ex, ex.rows)._1
 
   /** What one pass over a batch tells its finalize step: the observed
     * non-null keywords (the columns), the rows per study date, as epoch
@@ -396,12 +397,11 @@ object DicomPipeline {
     val errorParts = scala.collection.mutable.HashSet.empty[Int]
     var errorBytes = 0L
 
-    def addRow(ir: ImageRow): BatchSummary = {
+    private def addRow(ir: ImageRow): Unit = {
       ir.values.foreach { case (k, v) => if (v != VrConvert.DNull) keys += k }
       ir.values.get(Flatten.PartitionColCamel)
         .collect { case VrConvert.DDate(d) => d }
         .foreach(d => dates(d) = dates.getOrElse(d, 0L) + 1)
-      this
     }
 
     /** Runs in the task that reads the outcome's partition. */
@@ -425,17 +425,14 @@ object DicomPipeline {
     }
   }
 
-  /** [[toDataFrame]] of an extraction's rows, with the summary its one
-    * job gathered over the outcomes. The name keeps `toDataFrame` in the
+  /** `rows` framed by the summary one job gathers over the extraction's
+    * outcomes, and that summary. The name keeps `toDataFrame` in the
     * job's call site, which is how perfbench's per-layer split tells the
-    * key-union job apart. The frame reads the rows in at most one task
-    * per core: its only reader is the planned write's shuffle, whose map
-    * side then pays each task's overhead once per core, not once per
-    * extraction task (a 0.1 s cut in the benchmark's 600-object ingest). */
-  private def toDataFrameSummarized(spark: SparkSession,
-                                    ex: Extracted): (DataFrame, BatchSummary) = {
+    * key-union job apart. */
+  private def toDataFrameSummarized(spark: SparkSession, ex: Extracted,
+                                    rows: RDD[ImageRow]): (DataFrame, BatchSummary) = {
     val summary = ex.outcomes.aggregate(new BatchSummary)(_ addOutcome _, _ merge _)
-    (framed(spark, ex.rows.coalesce(spark.sparkContext.defaultParallelism), summary), summary)
+    (framed(spark, rows, summary), summary)
   }
 
   /** The rows as Catalyst rows laid out by [[schemaFor]]: no row
@@ -472,12 +469,15 @@ object DicomPipeline {
     * micro-batch. Returns (data, errors) as written; both are lazy, so
     * using them afterwards re-extracts.
     *
-    * The outcomes are persisted for the write's passes if the
-    * extraction did not persist them ([[extractFromManifest]]), so each
-    * object is read once. Neither write runs an emptiness job: every row
-    * carries the four lineage strings and a study date, so a batch has
-    * columns exactly when it has rows, and the summary pass records the
-    * partitions that hold errors. The data write is laid out by
+    * The outcomes are persisted for the write's passes (no extraction
+    * route persists them), so each object is read once. The data frame
+    * reads the persisted rows in at most one task per core: its only
+    * reader is the planned write's shuffle, whose map side then pays
+    * each task's overhead once per core, not once per extraction task (a
+    * 0.1 s cut in the benchmark's 600-object ingest). Neither write runs
+    * an emptiness job: every row carries the four lineage strings and a
+    * study date, so a batch has columns exactly when it has rows, and the
+    * summary pass records the partitions that hold errors. The data write is laid out by
     * [[planned]]. The errors write reads only the partitions holding
     * errors, narrowed to one task per advisory partition size
     * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) of error bytes:
@@ -490,7 +490,8 @@ object DicomPipeline {
     try {
       if (ex.outcomes.getStorageLevel == StorageLevel.NONE)
         ex.outcomes.persist(StorageLevel.MEMORY_AND_DISK_SER)
-      val (df, summary) = toDataFrameSummarized(spark, ex)
+      val (df, summary) = toDataFrameSummarized(spark, ex,
+        ex.rows.coalesce(spark.sparkContext.defaultParallelism))
       if (df.columns.nonEmpty)
         planned(df, summary, spark.sparkContext.defaultParallelism)
           .write.options(ForkFreeLocalFileSystem.WriteOptions)

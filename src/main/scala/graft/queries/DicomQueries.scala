@@ -41,7 +41,7 @@ object DicomQueries {
     * fixture objects: 10 images, deterministic projection. */
   def extractFlat(s: SparkSession, dir: String): DataFrame = {
     val df = DicomPipeline.toDataFrame(s,
-      DicomPipeline.extract(s, Fixtures, "ref-bucket", "ref-region").rows)
+      DicomPipeline.extract(s, Fixtures, "ref-bucket", "ref-region"))
     flatProjection(s, df)
   }
 
@@ -54,7 +54,7 @@ object DicomQueries {
   def manifestExtract(s: SparkSession, dir: String): DataFrame = {
     val manifest = DicomPipeline.manifestOf(s, Fixtures)
     val df = DicomPipeline.toDataFrame(s,
-      DicomPipeline.extractFromManifest(s, manifest, "ref-bucket", "ref-region").rows)
+      DicomPipeline.extractFromManifest(s, manifest, "ref-bucket", "ref-region"))
     flatProjection(s, df)
   }
 
@@ -78,7 +78,7 @@ object DicomQueries {
           .otherwise(col("length")))
     val delta = DicomPipeline.manifestDelta(manifest, processed)
     val df = DicomPipeline.toDataFrame(s,
-      DicomPipeline.extractFromManifest(s, delta, "ref-bucket", "ref-region").rows)
+      DicomPipeline.extractFromManifest(s, delta, "ref-bucket", "ref-region"))
     flatProjection(s, df)
   }
 
@@ -321,7 +321,7 @@ object DicomQueries {
     if (!markerOk) {
       val standingFlat = flatProjection(s, DicomPipeline.toDataFrame(s,
         DicomPipeline.extractFromManifest(s, standingM,
-          "ref-bucket", "ref-region").rows))
+          "ref-bucket", "ref-region")))
       persistStandingFunnel(s, standingFlat, base.toString)
       java.nio.file.Files.createDirectories(base)
       java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
@@ -331,7 +331,7 @@ object DicomQueries {
     }
     val deltaFlat = flatProjection(s, DicomPipeline.toDataFrame(s,
       DicomPipeline.extractFromManifest(s, deltaM,
-        "ref-bucket", "ref-region").rows))
+        "ref-bucket", "ref-region")))
     funnelDeltaFromPersisted(s, base.toString, deltaFlat)
   }
 
@@ -361,9 +361,9 @@ object DicomQueries {
     val (standing, delta) = dayTwoManifests(s)
     val standingRaw = DicomPipeline.toDataFrame(s,
       DicomPipeline.extractFromManifest(s, standing,
-        "ref-bucket", "ref-region").rows)
+        "ref-bucket", "ref-region"))
     val deltaRaw = DicomPipeline.toDataFrame(s,
-      DicomPipeline.extractFromManifest(s, delta, "ref-bucket", "ref-region").rows)
+      DicomPipeline.extractFromManifest(s, delta, "ref-bucket", "ref-region"))
     (standingRaw, deltaRaw)
   }
 

@@ -1,116 +1,195 @@
 package graft.queries
 
+import java.nio.file.{Files, Path, Paths}
 import graft.functions.GraftFunctions.dot
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.DicomStream
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Streaming-semantics queries (SURVEY.md §2.5): the event-per-object
   * ingest as a checkpointed Structured Streaming run over a scratch copy
-  * of the reference fixtures. Deterministic → rows-only driver check. */
+  * of the reference fixtures. Deterministic → rows-only driver check.
+  * Every entry is one finite [[drain]]. */
 object StreamQueries {
 
-  /** Drain-and-release for the finite streaming queries: materialize the
-    * (small, already-driver-resident — memory sinks hold every emitted
-    * row in the driver anyway) result, then drop the sink temp view and
-    * delete the scratch input copies, so repeated invocations (bench
-    * passes, long sessions) accumulate neither driver tables nor disk
-    * copies. The schema is captured from the result itself — never
-    * hand-maintained. */
-  private def materializeAndRelease(
-      s: SparkSession, result: DataFrame,
-      dropView: Option[String], deleteDirs: Seq[java.nio.file.Path]): DataFrame = {
-    val schema = result.schema
-    val rows = result.collect().toSeq
-    dropView.foreach(s.catalog.dropTempView(_))
-    deleteDirs.foreach(graft.util.Fs.deleteRecursively)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.asJava, schema)
+  /** `spark.sql.shuffle.partitions` of the drains [[withStreamPartitions]]
+    * wraps. */
+  private val StreamPartitions = 8
+
+  /** State partitions of the `stream_neardup_ttl_expiry` drain only
+    * ([[streamNearDupTtlExpiry]]). */
+  private val TtlExpiryPartitions = 2
+
+  /** `stream_heavy_hitters`' Misra-Gries geometry: words are hashed over
+    * `HhShards` shards, each carrying one summary of `HhM` counters.
+    * Counts are exact while no shard sees more than `HhM` distinct words,
+    * so the entry shares the batch query's oracle. */
+  private val HhShards = 8
+  private val HhM = 4096
+
+  /** One finite drain's scratch and sink, handed to the body of [[drain]]:
+    * `root` is a fresh directory under the scratch root's `dicomq`
+    * (`target/dicomq` by default) that holds the
+    * staged input, any sink files and the checkpoint; `view` names the
+    * memory sink. A drain runs one query. */
+  private[graft] final class Drain private[StreamQueries] (
+      s: SparkSession, val root: Path, val view: String) {
+
+    /** State-operator footprint of the drained query: (state rows, state
+      * bytes as the provider reports them). */
+    private[StreamQueries] var stateFootprint: Option[(Long, Long)] = None
+
+    def path(sub: String): String = root.resolve(sub).toString
+
+    /** Stage a copy of the testdata table `file` of `dir` under this
+      * drain (once per table) and read the copy as a stream, with the
+      * table's own schema. */
+    def input(dir: String, file: String): DataFrame = {
+      val src = Paths.get(s"$dir/$file")
+      val in = root.resolve(file)
+      if (!Files.exists(in)) stage(src, in)
+      s.readStream.schema(s.read.parquet(src.toString).schema).parquet(in.toString)
+    }
+
+    /** Write `df` as 8 arrival files and stream them one per micro-batch,
+      * so the sink sees the corpus arrive over several batches. */
+    def arrivals(df: DataFrame): DataFrame = {
+      df.repartition(8).write.parquet(path("arrivals"))
+      s.readStream.schema(df.schema).option("maxFilesPerTrigger", "1")
+        .parquet(path("arrivals"))
+    }
+
+    /** Drain `stream` into the memory sink in output `mode`; returns the
+      * sink's table. */
+    def memory(mode: String, stream: Dataset[_]): DataFrame = {
+      run(stream.toDF().writeStream.format("memory").outputMode(mode).queryName(view))
+      s.table(view)
+    }
+
+    /** Drain `stream` through `write`, called on the driver with each
+      * micro-batch and its id. */
+    def batches(stream: DataFrame)(write: (DataFrame, Long) => Unit): Unit =
+      run(stream.writeStream.foreachBatch(write))
+
+    private def run(w: DataStreamWriter[_]): Unit = {
+      val q = w.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", path("ckpt")).start()
+      try q.awaitTermination() finally q.stop()
+      stateFootprint = Option(q.lastProgress).flatMap(_.stateOperators.headOption)
+        .map(op => (op.numRowsTotal, op.memoryUsedBytes))
+    }
   }
 
-
-  /** Run `f` with `spark.sql.shuffle.partitions` temporarily lowered to
-    * `spark.graft.stream.shufflePartitions` (default 8): every stateful
-    * streaming operator creates one state-store partition per shuffle
-    * partition PER MICRO-BATCH, so the finite drains here were paying
-    * 32-way task fan-out times the batch count on kilobyte-scale state.
-    * The session value is snapshotted at stream start, so scoping the
-    * override around construction+drain is sufficient and the batch
-    * session setting is restored afterwards (these finite-drain helpers
-    * run serially — Bench and Verify invoke one query at a time). */
-  private def withStreamPartitions[A](s: SparkSession)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, s.conf.get("spark.graft.stream.shufflePartitions", "8"))
-    try f finally s.conf.set(key, prev)
+  /** The finite drain every entry runs — the analog of the reference's
+    * one Lambda run per `ObjectCreated` event (`src/app.py:97-108`):
+    * `body` stages its input under the [[Drain]]'s fresh scratch root,
+    * drains one stream on `Trigger.AvailableNow()` into its sink and
+    * folds the sink into the result, which is collected here (a finite
+    * drain's result is small and driver-resident — a memory sink holds
+    * every emitted row in the driver anyway). Then, in a `finally`, so a
+    * failed drain releases them too, the memory sink's view is dropped
+    * and the scratch root (staged input, sink files, checkpoint) and
+    * `release` are deleted: repeated invocations (bench passes, long
+    * sessions) accumulate neither driver tables nor disk copies. `view`
+    * names the memory sink; by default `stream_<prefix>_<random>`. */
+  private[graft] def drain(s: SparkSession, prefix: String,
+      view: Option[String] = None, release: Seq[Path] = Nil)(
+      body: Drain => DataFrame): DataFrame = {
+    val root = Files.createTempDirectory(
+      graft.util.Fs.scratchDir(s, "dicomq"), prefix).toAbsolutePath
+    val d = new Drain(s, root, view.getOrElse(s"stream_${prefix}_" +
+      java.lang.Long.toHexString(java.util.concurrent.ThreadLocalRandom.current().nextLong()).take(8)))
+    try {
+      val result = body(d)
+      val rows = result.collect()
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+    } finally {
+      s.catalog.dropTempView(d.view)
+      (root +: release).foreach(graft.util.Fs.deleteRecursively)
+    }
   }
 
-  /** Stage a scratch copy of one testdata parquet under target/dicomq and
-    * mint a unique memory-sink view name — the shared preamble of every
-    * finite readStream query. Returns (inputDir, viewName); pass both back
-    * through [[materializeAndRelease]]. */
-  private def stageInput(s: SparkSession, dir: String, file: String, prefix: String): (java.nio.file.Path, String) = {
-    val base = graft.util.Fs.scratchDir(s, "dicomq")
-    val in = java.nio.file.Files.createTempDirectory(base, prefix).toAbsolutePath
-    val src = java.nio.file.Paths.get(s"$dir/$file")
-    // the driver's testdata tables are single files, but Spark-written
-    // tables (e.g. the sf1 rehearsal corpus) are DIRECTORIES of part
-    // files — a plain copy would stage an empty dir and the stream
-    // would silently drain zero rows. Part files go DIRECTLY under the
-    // staged dir: the file stream source lists the dir it is given and
-    // does not recurse into a nested `<table>.parquet/` level.
-    if (java.nio.file.Files.isDirectory(src)) {
-      // recurse: a PARTITIONED Spark table nests part files under
-      // date=.../ levels — flatten every data file directly into the
-      // staged dir (names uniquified with a depth-order counter so
-      // same-named parts from different partitions can't collide)
-      val walk = java.nio.file.Files.walk(src)
+  /** Copy the table `src` into the directory `in`. The driver's testdata
+    * tables are single files, but Spark-written tables (e.g. the sf1
+    * rehearsal corpus) are DIRECTORIES of part files, possibly nested
+    * under `date=…/` partition levels. The file stream source lists the
+    * directory it is given and does not recurse, so every data file goes
+    * directly under `in`, named with a depth-order counter so same-named
+    * parts of different partitions cannot collide. */
+  private def stage(src: Path, in: Path): Unit = {
+    Files.createDirectories(in)
+    if (Files.isDirectory(src)) {
+      val walk = Files.walk(src)
       var staged = 0
       try {
         val it = walk.iterator()
         while (it.hasNext) {
           val p = it.next()
-          if (java.nio.file.Files.isRegularFile(p) &&
+          if (Files.isRegularFile(p) &&
               !p.getFileName.toString.startsWith("_") &&
               !p.getFileName.toString.startsWith(".")) {
-            java.nio.file.Files.copy(p, in.resolve(f"$staged%05d_" + p.getFileName.toString))
+            Files.copy(p, in.resolve(f"$staged%05d_" + p.getFileName.toString))
             staged += 1
           }
         }
       } finally walk.close() // Files.walk leaks directory fds otherwise
       require(staged > 0,
-        s"stageInput: no data files found under $src — the stream would silently drain zero rows")
-    } else java.nio.file.Files.copy(src, in.resolve(file))
-    val name = s"stream_${prefix}_" + java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong()).take(8)
-    (in, name)
+        s"stage: no data files found under $src — the stream would silently drain zero rows")
+    } else Files.copy(src, in.resolve(src.getFileName))
   }
+
+  /** Run `f` with the session settings `kvs`, then give each key back its
+    * previous value, or unset it. Streams snapshot the session's settings
+    * when they start, so scoping an override around a drain is
+    * sufficient; the drains run serially (Bench and Verify invoke one
+    * query at a time). */
+  private def withSessionConf[A](s: SparkSession, kvs: (String, String)*)(f: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
+  /** Run `f` with `spark.sql.shuffle.partitions` lowered to
+    * [[StreamPartitions]] (8): every stateful streaming operator creates
+    * one state-store partition per shuffle partition PER MICRO-BATCH, so
+    * at the batch session's value the finite drains here would pay its
+    * task fan-out times the batch count on kilobyte-scale state. */
+  private def withStreamPartitions[A](s: SparkSession)(f: => A): A =
+    withSessionConf(s, "spark.sql.shuffle.partitions" -> StreamPartitions.toString)(f)
 
   /** Drain an AvailableNow binaryFile stream of (2 loose + 1 zip) fixture
     * objects through the SAME extraction as the batch path; return
     * per-source-object image counts read back from the partitioned sink. */
   def streamIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = graft.util.Fs.scratchDir(s, "dicomq")
-    val out = java.nio.file.Files.createTempDirectory(base, "stream").toAbsolutePath.toString
-    val in = s"$out/in"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    Seq("example-0", "example-6", "example.zip").foreach { f =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"${DicomQueries.Fixtures}/$f"),
-        java.nio.file.Paths.get(s"$in/$f"))
-    }
-    val q = graft.streaming.DicomStream.start(
-      s, in, s"$out/data", s"$out/errors", s"$out/ckpt")
-    q.awaitTermination()
-    materializeAndRelease(s,
-      s.read.parquet(s"$out/data")
-        .groupBy(element_at(split($"source_s3_key", "/"), -1).as("source_key"))
+    val objects = Seq("example-0", "example-6", "example.zip")
+      .map(f => Paths.get(s"${DicomQueries.Fixtures}/$f"))
+    dicomDrain(s, "stream", objects, maxFilesPerTrigger = None) { sunk =>
+      sunk.groupBy(element_at(split($"source_s3_key", "/"), -1).as("source_key"))
         .agg(count(lit(1)).as("n_images"))
-        .orderBy($"source_key"),
-      dropView = None,
-      deleteDirs = Seq(java.nio.file.Paths.get(out)))
+        .orderBy($"source_key")
+    }
   }
+
+  /** Stage `objects` as the input of one [[graft.streaming.DicomStream]]
+    * drain and fold its partitioned parquet sink. The sink is read with
+    * merged schemas: each micro-batch writes the columns its own objects
+    * observe. */
+  private def dicomDrain(s: SparkSession, prefix: String, objects: Seq[Path],
+      maxFilesPerTrigger: Option[Int])(fold: DataFrame => DataFrame): DataFrame =
+    drain(s, prefix) { d =>
+      val in = Files.createDirectories(d.root.resolve("in"))
+      objects.foreach(p => Files.copy(p, in.resolve(p.getFileName)))
+      d.batches(DicomStream.objects(s, in.toString, maxFilesPerTrigger))(
+        DicomStream.writeBatch(d.path("data"), d.path("errors")))
+      fold(s.read.option("mergeSchema", "true").parquet(d.path("data")))
+    }
 
   /** STREAMING DICOM→CORPUS FUNNEL — the live twin of
     * [[graft.queries.DicomQueries.corpusFunnel]], closing the end-to-end
@@ -133,25 +212,12 @@ object StreamQueries {
     * one dedup exchange — the exact batch-funnel plan over yesterday's
     * standing sink instead of a re-extraction. */
   def streamCorpusFunnel(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.util.Fs.scratchDir(s, "dicomq"), "sfunnel").toAbsolutePath
-    try {
-      val in = base.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      import scala.jdk.CollectionConverters._
-      val src = java.nio.file.Paths.get(DicomQueries.Fixtures)
-      val ls = java.nio.file.Files.list(src)
-      try ls.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-        .foreach(p => java.nio.file.Files.copy(p, in.resolve(p.getFileName)))
+    import scala.jdk.CollectionConverters._
+    val ls = Files.list(Paths.get(DicomQueries.Fixtures))
+    val objects = try ls.iterator().asScala.filter(Files.isRegularFile(_)).toList
       finally ls.close()
-      val q = graft.streaming.DicomStream.start(
-        s, in.toString, s"$base/data", s"$base/errors", s"$base/ckpt",
-        maxFilesPerTrigger = Some(1))
-      q.awaitTermination()
-      val sunk = s.read.option("mergeSchema", "true").parquet(s"$base/data")
-      materializeAndRelease(s, DicomQueries.funnelFromRaw(s, sunk),
-        dropView = None, deleteDirs = Seq.empty)
-    } finally graft.util.Fs.deleteRecursively(base)
+    dicomDrain(s, "sfunnel", objects, maxFilesPerTrigger = Some(1))(
+      DicomQueries.funnelFromRaw(s, _))
   }
 
   /** STREAMED DAY-2 FUNNEL DELTA — the live twin of
@@ -172,31 +238,18 @@ object StreamQueries {
     * standing sink's hash/band relations plus only the new micro-batch
     * dirs. */
   def streamCorpusFunnelDelta(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.util.Fs.scratchDir(s, "dicomq"), "sfdelta").toAbsolutePath
-    try {
-      val in = base.resolve("in")
-      java.nio.file.Files.createDirectories(in)
-      val (standingManifest, deltaManifest) = DicomQueries.dayTwoManifests(s)
-      // the delta manifest is fixture-sized (a handful of rows) — the
-      // driver stages those objects into the stream source, exactly the
-      // event notifications a deployment would receive
-      deltaManifest.select("path").collect().foreach { r =>
-        val p = java.nio.file.Paths.get(new java.net.URI(r.getString(0)))
-        java.nio.file.Files.copy(p, in.resolve(p.getFileName))
-      }
-      val q = graft.streaming.DicomStream.start(
-        s, in.toString, s"$base/data", s"$base/errors", s"$base/ckpt",
-        maxFilesPerTrigger = Some(1))
-      q.awaitTermination()
+    val (standingManifest, deltaManifest) = DicomQueries.dayTwoManifests(s)
+    // the delta manifest is fixture-sized (a handful of rows) — the
+    // driver stages those objects into the stream source, exactly the
+    // event notifications a deployment would receive
+    val objects = deltaManifest.select("path").collect().toSeq
+      .map(r => Paths.get(new java.net.URI(r.getString(0))))
+    dicomDrain(s, "sfdelta", objects, maxFilesPerTrigger = Some(1)) { sunk =>
       val standingRaw = graft.pipeline.DicomPipeline.toDataFrame(s,
         graft.pipeline.DicomPipeline.extractFromManifest(
-          s, standingManifest, "ref-bucket", "ref-region").rows)
-      val sunk = s.read.option("mergeSchema", "true").parquet(s"$base/data")
-      materializeAndRelease(s,
-        DicomQueries.funnelDeltaFromRaw(s, standingRaw, sunk),
-        dropView = None, deleteDirs = Seq.empty)
-    } finally graft.util.Fs.deleteRecursively(base)
+          s, standingManifest, "ref-bucket", "ref-region"))
+      DicomQueries.funnelDeltaFromRaw(s, standingRaw, sunk)
+    }
   }
 
   /** The streaming twin of `Relational.eventsNs`: whatever physical
@@ -223,21 +276,12 @@ object StreamQueries {
     * correctness-gated. Exact integer ns bucket math as in q14. */
   def streamEventsWindow(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "events.parquet", "win")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val q = withTsNs(s.readStream.schema(schema).parquet(in.toString))
-      .groupBy((expr("ts div 300000000000") * 300).as("bucket"), $"event_type")
-      .agg(count(lit(1)).as("n_events"), round(sum($"value"), 2).as("sum_value"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    materializeAndRelease(s,
-      s.table(name).orderBy($"bucket", $"event_type"),
-      dropView = Some(name), deleteDirs = Seq(in))
+    drain(s, "win") { d =>
+      d.memory("complete", withTsNs(d.input(dir, "events.parquet"))
+          .groupBy((expr("ts div 300000000000") * 300).as("bucket"), $"event_type")
+          .agg(count(lit(1)).as("n_events"), round(sum($"value"), 2).as("sum_value")))
+        .orderBy($"bucket", $"event_type")
+    }
   }
 
   /** One changelog op for the streaming CDC operator. */
@@ -259,8 +303,6 @@ object StreamQueries {
     * TTL eviction for retired keys, the [[streamNearDupTtl]] pattern). */
   def streamCdcLatest(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "lineitem.parquet", "cdc")
-    val schema = s.read.parquet(s"$dir/lineitem.parquet").schema
 
     // the winning op under cdc_merge's total order: larger seq wins;
     // equal seq → LEXICALLY SMALLER (op, price, qty) wins (that is the
@@ -282,39 +324,32 @@ object StreamQueries {
       st
     }
 
-    val q = s.readStream.schema(schema).parquet(in.toString)
-      .select($"l_orderkey".as("key"),
-        $"l_linenumber".cast("long").as("seq"),
-        when($"l_returnflag" === "R", "D").otherwise("U").as("op"),
-        (floor($"l_extendedprice" * (lit(1.0) - $"l_discount") * 100
-           + 0.5).cast("double") / 100).as("price"),
-        $"l_quantity".as("qty"))
-      .as[CdcOp]
-      .groupByKey(_.key)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(s, "cdc") { d =>
+      val emitted = d.memory("update", d.input(dir, "lineitem.parquet")
+        .select($"l_orderkey".as("key"),
+          $"l_linenumber".cast("long").as("seq"),
+          when($"l_returnflag" === "R", "D").otherwise("U").as("op"),
+          (floor($"l_extendedprice" * (lit(1.0) - $"l_discount") * 100
+             + 0.5).cast("double") / 100).as("price"),
+          $"l_quantity".as("qty"))
+        .as[CdcOp]
+        .groupByKey(_.key)
+        .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update))
 
-    // final winner per key = best emission under the same total order
-    // (the carried state only ever "improves", so this equals the last
-    // emission — selected deterministically, not by sink row order)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"key")
-      .orderBy($"seq".desc, $"op", $"price", $"qty")
-    val latest = s.table(name)
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-      .select($"key", $"op", $"price".as("new_price"), $"qty".as("new_qty"))
+      // final winner per key = best emission under the same total order
+      // (the carried state only ever "improves", so this equals the last
+      // emission — selected deterministically, not by sink row order)
+      val w = Window.partitionBy($"key")
+        .orderBy($"seq".desc, $"op", $"price", $"qty")
+      val latest = emitted
+        .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
+        .select($"key", $"op", $"price".as("new_price"), $"qty".as("new_qty"))
 
-    val base = s.read.parquet(s"$dir/orders.parquet")
-      .filter($"o_orderkey" % 4 =!= 0)
-      .select($"o_orderkey".as("key"),
-              $"o_orderstatus".as("base_status"),
-              round($"o_totalprice", 2).as("base_price"))
-    materializeAndRelease(s,
+      val base = s.read.parquet(s"$dir/orders.parquet")
+        .filter($"o_orderkey" % 4 =!= 0)
+        .select($"o_orderkey".as("key"),
+                $"o_orderstatus".as("base_status"),
+                round($"o_totalprice", 2).as("base_price"))
       base.join(latest, Seq("key"), "full_outer")
         .filter($"op".isNull || $"op" === "U")
         .select(
@@ -326,8 +361,8 @@ object StreamQueries {
             .as("price"),
           when($"op".isNull, lit(null).cast("double")).otherwise($"new_qty")
             .as("qty"))
-        .orderBy($"key"),
-      dropView = Some(name), deleteDirs = Seq(in))
+        .orderBy($"key")
+    }
   }
 
   /** Per-user event shape for the stateful operator (ts is epoch-ns long
@@ -345,8 +380,6 @@ object StreamQueries {
     * exactly the batch window's ordering. */
   def streamSessionize(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "events.parquet", "sess")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
 
     def update(uid: Long, events: Iterator[UserEvent],
                state: GroupState[SessionState]): Iterator[UserSessions] = {
@@ -360,28 +393,18 @@ object StreamQueries {
       Iterator.single(UserSessions(uid, st.nSessions, st.nEvents))
     }
 
-    val q = withTsNs(s.readStream.schema(schema).parquet(in.toString))
-      .select($"event_id", $"ts", $"user_id").as[UserEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // update-mode memory sink: keep each user's LAST emission (= final state)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id")
-      .orderBy($"n_events".desc)
-    materializeAndRelease(s,
-      s.table(name)
+    drain(s, "sess") { d =>
+      // update-mode memory sink: keep each user's LAST emission (= final state)
+      val w = Window.partitionBy($"user_id").orderBy($"n_events".desc)
+      d.memory("update", withTsNs(d.input(dir, "events.parquet"))
+          .select($"event_id", $"ts", $"user_id").as[UserEvent]
+          .groupByKey(_.user_id)
+          .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update))
         .withColumn("rn", row_number().over(w))
         .filter($"rn" === 1)
         .select($"user_id", $"n_sessions", $"n_events")
-        .orderBy($"user_id"),
-      dropView = Some(name), deleteDirs = Seq(in))
+        .orderBy($"user_id")
+    }
   }
 
   /** STREAMING DEDUPLICATION (`dropDuplicates` state store): the
@@ -410,24 +433,15 @@ object StreamQueries {
     * first occurrence) are pinned across micro-batches in WatermarkSpec. */
   def streamDedupWatermarked(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "events.parquet", "wmdedup")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val q = withTsNs(s.readStream.schema(schema).parquet(in.toString))
-      .select($"user_id", $"event_type",
-        timestamp_micros(expr("ts div 1000")).as("event_time"))
-      .withWatermark("event_time", "1 hour")
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select($"user_id", $"event_type")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    materializeAndRelease(s,
-      s.table(name).orderBy($"user_id", $"event_type"),
-      dropView = Some(name), deleteDirs = Seq(in))
+    drain(s, "wmdedup") { d =>
+      d.memory("append", withTsNs(d.input(dir, "events.parquet"))
+          .select($"user_id", $"event_type",
+            timestamp_micros(expr("ts div 1000")).as("event_time"))
+          .withWatermark("event_time", "1 hour")
+          .dropDuplicatesWithinWatermark("user_id", "event_type")
+          .select($"user_id", $"event_type"))
+        .orderBy($"user_id", $"event_type")
+    }
   }
 
   /** STREAM–STREAM INTERVAL JOIN: errors and clicks arrive as two
@@ -450,11 +464,10 @@ object StreamQueries {
     * condition shared by the INNER and LEFT OUTER stream–stream joins —
     * one builder so the twins (and their paired oracles' CTEs) can
     * never drift on the interval, the delay, or the timestamp grain. */
-  private def errorClickSides(s: SparkSession, in: java.nio.file.Path)
+  private def errorClickSides(s: SparkSession, d: Drain, dir: String)
       : (DataFrame, DataFrame, org.apache.spark.sql.Column) = {
     import s.implicits._
-    val schema = s.read.parquet(in.toString).schema
-    def side(): DataFrame = withTsNs(s.readStream.schema(schema).parquet(in.toString))
+    def side(): DataFrame = withTsNs(d.input(dir, "events.parquet"))
     val errors = side()
       .filter($"event_type" === "error")
       .select($"event_id", $"user_id",
@@ -473,24 +486,13 @@ object StreamQueries {
 
   def streamStreamJoin(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "events.parquet", "ssjoin")
-    val (errors, clicks, cond) = errorClickSides(s, in)
-    val q = errors
-      .join(clicks, cond)
-      .select($"event_id")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    materializeAndRelease(s,
-      s.table(name)
+    drain(s, "ssjoin") { d =>
+      val (errors, clicks, cond) = errorClickSides(s, d, dir)
+      d.memory("append", errors.join(clicks, cond).select($"event_id"))
         .groupBy($"event_id")
         .agg(count(lit(1)).as("n_prior_clicks"))
-        .orderBy($"event_id"),
-      dropView = Some(name), deleteDirs = Seq(in))
+        .orderBy($"event_id")
+    }
   }
 
   /** WATERMARKED LEFT OUTER STREAM–STREAM JOIN — the state-CLOSURE
@@ -511,24 +513,13 @@ object StreamQueries {
     * precisely the rows the INNER twin (`stream_stream_join`) omits. */
   def streamStreamOuter(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "events.parquet", "ssouter")
-    val (errors, clicks, cond) = errorClickSides(s, in)
-    val q = errors
-      .join(clicks, cond, "left_outer")
-      .select($"event_id", $"c_user")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    materializeAndRelease(s,
-      s.table(name)
+    drain(s, "ssouter") { d =>
+      val (errors, clicks, cond) = errorClickSides(s, d, dir)
+      d.memory("append", errors.join(clicks, cond, "left_outer").select($"event_id", $"c_user"))
         .groupBy($"event_id")
         .agg(count($"c_user").as("n_prior_clicks"))
-        .orderBy($"event_id"),
-      dropView = Some(name), deleteDirs = Seq(in))
+        .orderBy($"event_id")
+    }
   }
 
   /** STREAM–STATIC ENRICHMENT JOIN: the event stream joined to the
@@ -541,46 +532,28 @@ object StreamQueries {
     * batch join + rollup, which is the DuckDB oracle. */
   def streamStaticJoin(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "events.parquet", "enrich")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
     val dim = broadcast(
       s.read.parquet(s"$dir/customer.parquet")
         .select($"c_custkey", $"c_mktsegment"))
-    val q = s.readStream.schema(schema).parquet(in.toString)
-      .filter($"event_type" === "purchase")
-      .join(dim, $"user_id" === $"c_custkey")
-      .groupBy($"c_mktsegment")
-      .agg(count(lit(1)).as("n_purchases"),
-        round(sum($"value"), 2).as("sum_value"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    materializeAndRelease(s,
-      s.table(name).orderBy($"c_mktsegment"),
-      dropView = Some(name), deleteDirs = Seq(in))
+    drain(s, "enrich") { d =>
+      d.memory("complete", d.input(dir, "events.parquet")
+          .filter($"event_type" === "purchase")
+          .join(dim, $"user_id" === $"c_custkey")
+          .groupBy($"c_mktsegment")
+          .agg(count(lit(1)).as("n_purchases"),
+            round(sum($"value"), 2).as("sum_value")))
+        .orderBy($"c_mktsegment")
+    }
   }
 
   def streamDedup(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "documents.parquet", "dedup")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val q = s.readStream.schema(schema).parquet(in.toString)
-      .select(md5($"text").as("text_hash"))
-      .dropDuplicates("text_hash")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    materializeAndRelease(s,
-      s.table(name).orderBy($"text_hash"),
-      dropView = Some(name), deleteDirs = Seq(in))
+    drain(s, "dedup") { d =>
+      d.memory("append", d.input(dir, "documents.parquet")
+          .select(md5($"text").as("text_hash"))
+          .dropDuplicates("text_hash"))
+        .orderBy($"text_hash")
+    }
   }
 
   case class BandRow(doc_id: Long, band: Int, band_hash: String)
@@ -650,13 +623,12 @@ object StreamQueries {
     * (`GroupStateTimeout.ProcessingTimeTimeout`) exactly like the
     * watermarked exact dedup; the finite drain here keeps NoTimeout. */
   def streamNearDup(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    val (in, name) = stageInput(s, dir, "documents.parquet", "neardup")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    nearDupDrain(s, s.readStream.schema(schema).parquet(in.toString),
-      name, deleteDirs = Seq(in))
+    nearDupDrainOf(s, "neardup")(d => nearDupHits(s, d.input(dir, "documents.parquet")))
   }
 
-  /** State-operator footprint of the LAST [[nearDupDrain]] on this JVM:
+  /** State-operator footprint of the LAST near-dup drain on this JVM
+    * ([[nearDupDrain]], its TTL, indexed and embedding twins, and
+    * [[streamCorpusPipeline]]):
     * (state rows = live buckets, state bytes as the provider reports
     * them). Written after every drain for the scale rehearsal and
     * NearDupStreamSpec — a query-progress side-channel, never consumed
@@ -671,23 +643,10 @@ object StreamQueries {
     * SPILLS: RocksDB keeps the working set on local disk with an
     * in-heap block cache, where the default HDFSBackedStateStoreProvider
     * pins every version of every partition's map in executor heap. */
-  private[graft] def withRocksDbState[A](s: SparkSession)(f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  private[graft] def withRocksDbState[A](s: SparkSession)(f: => A): A =
+    withSessionConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
 
-  /** The bands→bucket-state→drain core of [[streamNearDup]], taking any
-    * streaming documents frame — exposed so NearDupStreamSpec can drive
-    * it with a multi-file `maxFilesPerTrigger=1` source and pin the
-    * cross-batch first-seen semantics. Runs on RocksDB state
-    * ([[withRocksDbState]]). */
   /** The bands→bucket-state pipeline of [[nearDupDrain]] as an UNSUNK
     * Dataset — split out so NearDupRestartSpec can attach its own
     * checkpointed foreachBatch sink and drive stop → restart (the
@@ -713,37 +672,32 @@ object StreamQueries {
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
   }
 
+  /** The bands→bucket-state→drain core of [[streamNearDup]], taking any
+    * streaming documents frame — exposed so NearDupStreamSpec can drive
+    * it with a multi-file `maxFilesPerTrigger=1` source and pin the
+    * cross-batch first-seen semantics. Runs on RocksDB state
+    * ([[withRocksDbState]]). */
   private[graft] def nearDupDrain(s: SparkSession, stream: DataFrame,
       name: String, deleteDirs: Seq[java.nio.file.Path]): DataFrame =
-    drainNearDupHits(s, nearDupHits(s, stream), name, deleteDirs)
+    nearDupDrainOf(s, "neardup", Some(name), deleteDirs)(_ => nearDupHits(s, stream))
 
-  /** Sink-and-fold tail shared by [[nearDupDrain]] and
-    * [[streamNearDupIndexed]]: drain `hits` through a memory sink under
-    * the RocksDB provider, fold min(owner) per doc. */
-  private def drainNearDupHits(s: SparkSession,
-      hits: org.apache.spark.sql.Dataset[NearDupHit],
-      name: String, deleteDirs: Seq[java.nio.file.Path]): DataFrame = withRocksDbState(s) {
-    import s.implicits._
-    val q = hits
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // record the state-operator footprint (rows = live buckets) before
-    // the query object goes away — the rehearsal's state-growth evidence
-    lastNearDupState = Option(q.lastProgress)
-      .flatMap(p => p.stateOperators.headOption)
-      .map(op => (op.numRowsTotal, op.memoryUsedBytes))
-    materializeAndRelease(s,
-      s.table(name)
-        .groupBy($"doc_id")
-        .agg(min($"near_dup_of").as("near_dup_of"))
-        .orderBy($"doc_id"),
-      dropView = Some(name), deleteDirs = deleteDirs)
+  /** The drain shared by the near-dup filters: drain `hits` through a
+    * memory sink under the RocksDB provider, record the state footprint
+    * in [[lastNearDupState]], fold min(owner) per doc. */
+  private def nearDupDrainOf(s: SparkSession, prefix: String,
+      view: Option[String] = None, release: Seq[Path] = Nil)(
+      hits: Drain => Dataset[NearDupHit]): DataFrame = withRocksDbState(s) {
+    drain(s, prefix, view, release) { d =>
+      val emitted = d.memory("update", hits(d))
+      // the rehearsal's state-growth evidence (rows = live buckets)
+      lastNearDupState = d.stateFootprint
+      firstOwners(emitted, "near_dup_of")
+    }
   }
+
+  /** Fold an owner filter's hits to the least reported owner per doc. */
+  private def firstOwners(hits: DataFrame, owner: String): DataFrame =
+    hits.groupBy(col("doc_id")).agg(min(col(owner)).as(owner)).orderBy(col("doc_id"))
 
   /** DAY-2 STREAMING NEAR-DUP — the streaming filter WARM-STARTED from
     * the persisted day-1 index: the same `writeIndex` artifact the
@@ -772,21 +726,15 @@ object StreamQueries {
     * half of the artifact is untouched — band-collision semantics need
     * no Jaccard verify, matching [[streamNearDup]]. */
   def streamNearDupIndexed(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    import s.implicits._
     val all = s.read.parquet(s"$dir/documents.parquet")
     val isBatch = pmod(col("doc_id"), lit(10)) === lit(7)
-    val base = graft.util.Fs.scratchDir(s, "dicomq")
-    val root = java.nio.file.Files.createTempDirectory(base, "neardupidx").toAbsolutePath
-    val idx = root.resolve("index").toString
-    val in = root.resolve("stream").toString
-    // day-1: the SAME persisted artifact the batch incremental path reads
-    graft.operators.Dedup.writeIndex(s, all.filter(!isBatch), idx)
-    all.filter(isBatch).coalesce(1).write.parquet(in)
-    val name = "stream_neardupidx_" + java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong()).take(8)
-    val hits = nearDupHitsIndexed(s,
-      s.readStream.schema(all.schema).parquet(in), s"$idx/bands")
-    drainNearDupHits(s, hits, name, deleteDirs = Seq(root))
+    nearDupDrainOf(s, "neardupidx") { d =>
+      // day-1: the SAME persisted artifact the batch incremental path reads
+      graft.operators.Dedup.writeIndex(s, all.filter(!isBatch), d.path("index"))
+      all.filter(isBatch).coalesce(1).write.parquet(d.path("stream"))
+      nearDupHitsIndexed(s,
+        s.readStream.schema(all.schema).parquet(d.path("stream")), d.path("index/bands"))
+    }
   }
 
   /** The warm-started bands→bucket-state pipeline of
@@ -844,35 +792,34 @@ object StreamQueries {
     * the next arrival becomes the new owner and reports NOTHING — old
     * content has aged out of "what was already accepted". */
   def streamNearDupTtl(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    val (in, name) = stageInput(s, dir, "documents.parquet", "neardupttl")
-    val batchRead = s.read.parquet(s"$dir/documents.parquet")
     // the gate's oracle-equality contract requires that NOTHING expires
     // mid-drain, so the horizon is DERIVED from the corpus's synthetic
     // event-time span (doc_id seconds) plus 48 h of slack — a fixed
     // horizon would silently start expiring (and hash-diverging) the
     // moment a larger corpus's span crossed it
-    val spanMs = 1000L * batchRead
+    val spanMs = 1000L * s.read.parquet(s"$dir/documents.parquet")
       .agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
-    nearDupDrainTtl(s,
-      s.readStream.schema(batchRead.schema).parquet(in.toString)
-        .withColumn("event_time",
-          timestamp_seconds(lit(1700000000L) + col("doc_id"))),
-      name, horizonMs = spanMs + 48L * 3600 * 1000, deleteDirs = Seq(in))
+    nearDupDrainOf(s, "neardupttl") { d =>
+      nearDupHitsTtl(s,
+        d.input(dir, "documents.parquet")
+          .withColumn("event_time", timestamp_seconds(lit(1700000000L) + col("doc_id"))),
+        horizonMs = spanMs + 48L * 3600 * 1000)
+    }
   }
 
   /** TTL near-dup with expiry PROVABLY FIRING mid-drain — the
     * oracle-gated hardening of [[streamNearDupTtl]] (whose gate horizon
-    * deliberately outlives the corpus). The corpus replays as 4
+    * deliberately outlives the corpus). The corpus replays as 8
     * doc_id-range micro-batches (event time = epoch + doc_id seconds,
-    * so range order IS event-time order) with horizon = ONE batch width
+    * so range order IS event-time order) with horizon = ONE range width
     * — buckets idle for ≥ 2 batches expire once the watermark passes,
     * and their next arrival re-admits silently as the new owner.
     *
-    * Why 4 and not "8 files drained 2 per trigger": the oracle's closed
-    * form encodes the watermark-checkpoint GEOMETRY, and coalescing
-    * file batches changes it — a bucket whose consecutive members sit
-    * exactly 3 narrow ranges apart expires under 8 checkpoints but
-    * would never see an intermediate merged batch, turning a silent
+    * Why 8 one-range files and not fewer, wider micro-batches: the
+    * oracle's closed form encodes the watermark-checkpoint GEOMETRY, and
+    * coalescing ranges changes it — a bucket whose consecutive members
+    * sit exactly 3 ranges apart expires under 8 checkpoints but would
+    * never see an intermediate merged batch, turning a silent
     * re-admission into a reported near-dup. So the RANGE WIDTH is the
     * dial (query and oracle move together), not the files-per-trigger.
     *
@@ -885,33 +832,17 @@ object StreamQueries {
     * timeout fires at `prev + horizon`, so the two horizons compound);
     * every non-opening member reports its epoch's opener. The Spark
     * side computes NOTHING from that formula — it runs the real
-    * EventTimeTimeout state machine; the driver hash-compares the two. */
-  def streamNearDupTtlExpiry(s: SparkSession, dir: String): DataFrame = {
-    // this drain pays per-micro-batch per-partition state-store commits
-    // 8 times over — with RocksDB that is 8 × partitions store
-    // opens/commits for a few thousand tiny state rows. Run the state
-    // on FEWER partitions than the stream default (hash partitioning of
-    // keys cannot change per-key outputs, so the gate hash is
-    // invariant); serial-only conf mutation like withStreamPartitions.
-    val key = "spark.sql.shuffle.partitions"
-    val ckKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = s.conf.get(key)
-    val prevCk = s.conf.getOption(ckKey)
-    s.conf.set(key, s.conf.get("spark.graft.stream.ttlExpiryPartitions", "2"))
-    // 8 micro-batches × per-partition commits: full-snapshot RocksDB
-    // checkpoints dominate; changelog checkpointing writes the delta
-    s.conf.set(ckKey, "true")
-    try streamNearDupTtlExpiryBody(s, dir)
-    finally {
-      s.conf.set(key, prev)
-      prevCk match {
-        case Some(v) => s.conf.set(ckKey, v)
-        case None    => s.conf.unset(ckKey)
-      }
-    }
-  }
-
-  private def streamNearDupTtlExpiryBody(s: SparkSession, dir: String): DataFrame = {
+    * EventTimeTimeout state machine; the driver hash-compares the two.
+    *
+    * The drain pays per-micro-batch per-partition state-store commits 8
+    * times over on a few thousand tiny state rows, so its state runs on
+    * [[TtlExpiryPartitions]] (2) partitions instead of the drains' 8
+    * (hash partitioning of keys cannot change per-key outputs, so the
+    * gate hash is invariant), with RocksDB changelog checkpointing:
+    * full-snapshot checkpoints would dominate its commits. */
+  def streamNearDupTtlExpiry(s: SparkSession, dir: String): DataFrame = withSessionConf(s,
+      "spark.sql.shuffle.partitions" -> TtlExpiryPartitions.toString,
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
     val batchRead = s.read.parquet(s"$dir/documents.parquet")
     val maxId = batchRead.agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
     // 8 range batches: the count is load-bearing twice over — the
@@ -923,47 +854,40 @@ object StreamQueries {
     // per micro-batch, so the trim lever is per-batch cost, not count.
     val nBatches = 8
     val w = (maxId + nBatches) / nBatches // = ceil((maxId+1)/nBatches)
-    val base = graft.util.Fs.scratchDir(s, "dicomq")
-    val in = java.nio.file.Files.createTempDirectory(base, "neardupexp").toAbsolutePath
-    // stage all 8 range files in ONE write job (a dynamic-partitioned
-    // write keyed on the range index — repartition on the key first so
-    // each range lands as exactly one part file) instead of 8 separate
-    // filter+coalesce jobs: same files, 1/8th the job-scheduling
-    // machinery. The 8-micro-batch DRAIN is untouched — merging ranges
-    // into fewer micro-batches is NOT hash-preserving (a bucket whose
-    // consecutive members sit exactly 3 ranges apart expires under 8
-    // batches but would never see an intermediate merged batch, turning
-    // a silent re-admission into a reported near-dup).
-    val tmp = java.nio.file.Files.createTempDirectory(base, "neardupexpb")
-    try {
+    nearDupDrainOf(s, "neardupexp") { d =>
+      val in = Files.createDirectories(d.root.resolve("in"))
+      // stage all 8 range files in ONE write job (a dynamic-partitioned
+      // write keyed on the range index — repartition on the key first so
+      // each range lands as exactly one part file) instead of 8 separate
+      // filter+coalesce jobs: same files, 1/8th the job-scheduling
+      // machinery
       batchRead.withColumn("b", expr(s"doc_id div $w"))
         .repartition(nBatches, col("b"))
-        .write.partitionBy("b").parquet(tmp.resolve("out").toString)
+        .write.partitionBy("b").parquet(d.path("ranges"))
       (0 until nBatches).foreach { i =>
-        val bDir = tmp.resolve("out").resolve(s"b=$i")
+        val bDir = d.root.resolve("ranges").resolve(s"b=$i")
         // dense doc_ids make every range non-empty; a missing range dir
         // would silently drop a dataless micro-batch (and its timeout
         // checkpoint) — fail loudly instead
-        require(java.nio.file.Files.isDirectory(bDir),
+        require(Files.isDirectory(bDir),
           s"range $i of $nBatches produced no file — doc_id space not dense?")
-        val part = java.nio.file.Files.list(bDir)
-          .filter(_.toString.endsWith(".parquet")).findFirst().get()
+        val ls = Files.list(bDir)
+        val part = try ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
+          finally ls.close()
         val dest = in.resolve(f"part-$i%04d.parquet")
-        java.nio.file.Files.copy(part, dest)
+        Files.copy(part, dest)
         // explicit strictly-increasing mtimes: the file source orders
         // by modification time, and sub-ms writes could otherwise tie
-        java.nio.file.Files.setLastModifiedTime(dest,
+        Files.setLastModifiedTime(dest,
           java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
       }
-    } finally graft.util.Fs.deleteRecursively(tmp)
-    val name = "stream_neardupexp_" + java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong()).take(8)
-    val stream = s.readStream.schema(batchRead.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(in.toString)
-      .withColumn("event_time",
-        timestamp_seconds(lit(1700000000L) + col("doc_id")))
-    nearDupDrainTtl(s, stream, name, horizonMs = w * 1000L, deleteDirs = Seq(in))
+      nearDupHitsTtl(s,
+        s.readStream.schema(batchRead.schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(in.toString)
+          .withColumn("event_time", timestamp_seconds(lit(1700000000L) + col("doc_id"))),
+        horizonMs = w * 1000L)
+    }
   }
 
   /** The TTL drain core ([[streamNearDupTtl]]), exposed for the
@@ -972,7 +896,14 @@ object StreamQueries {
     * horizon. Runs on RocksDB state like the NoTimeout drain. */
   private[graft] def nearDupDrainTtl(s: SparkSession, stream: DataFrame,
       name: String, horizonMs: Long,
-      deleteDirs: Seq[java.nio.file.Path]): DataFrame = withRocksDbState(s) {
+      deleteDirs: Seq[java.nio.file.Path]): DataFrame =
+    nearDupDrainOf(s, "neardupttl", Some(name), deleteDirs)(_ => nearDupHitsTtl(s, stream, horizonMs))
+
+  /** The EventTimeTimeout bands→bucket-state pipeline of
+    * [[nearDupDrainTtl]]: each bucket expires `horizonMs` of event time
+    * after its newest member. */
+  private def nearDupHitsTtl(s: SparkSession, stream: DataFrame,
+      horizonMs: Long): Dataset[NearDupHit] = {
     import s.implicits._
     def update(key: (Int, String), rows: Iterator[BandRowTs],
                state: GroupState[Long]): Iterator[NearDupHit] = {
@@ -997,7 +928,7 @@ object StreamQueries {
     // threaded; fan the raw docs out first (tiny rows — the exchange is
     // kilobytes) so the md5 work uses the cores. Round-robin keeps the
     // spread even; per-key semantics are partition-invariant.
-    val q0 = nearDupBands(
+    nearDupBands(
         stream.repartition(8)
           .withWatermark("event_time", s"${horizonMs / 1000} seconds"),
         passthrough = Seq("event_time"))
@@ -1005,33 +936,6 @@ object StreamQueries {
       .groupByKey(r => (r.band, r.band_hash))
       .flatMapGroupsWithState(
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-    // a finite memory-sink drain has no durability story to protect —
-    // its checkpoint (offset/commit WAL fsyncs + RocksDB uploads, paid
-    // once per micro-batch × 9 batches) can live on tmpfs when the box
-    // has one. Real deployments point checkpointLocation at durable
-    // storage; this is harness plumbing, not operator semantics.
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckDir =
-      if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-        Some(java.nio.file.Files.createTempDirectory(shm, "graft-ttl-ck"))
-      else None
-    val q = ckDir.fold(q0)(d => q0.option("checkpointLocation", d.toString)).start()
-    try q.awaitTermination()
-    finally ckDir.foreach(graft.util.Fs.deleteRecursively)
-    lastNearDupState = Option(q.lastProgress)
-      .flatMap(p => p.stateOperators.headOption)
-      .map(op => (op.numRowsTotal, op.memoryUsedBytes))
-    materializeAndRelease(s,
-      s.table(name)
-        .groupBy($"doc_id")
-        .agg(min($"near_dup_of").as("near_dup_of"))
-        .orderBy($"doc_id"),
-      dropView = Some(name), deleteDirs = deleteDirs)
   }
 
   /** BUILT-IN SESSION WINDOWS: the engine-native twin of
@@ -1053,25 +957,15 @@ object StreamQueries {
     * numbers equal q15's. */
   def streamSessionWindow(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "events.parquet", "sesswin")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val q = withTsNs(s.readStream.schema(schema).parquet(in.toString))
-      .select($"user_id", timestamp_micros(expr("ts div 1000")).as("event_time"))
-      .groupBy(session_window($"event_time", "1800000001 microseconds"), $"user_id")
-      .agg(count(lit(1)).as("n_ev"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    materializeAndRelease(s,
-      s.table(name)
+    drain(s, "sesswin") { d =>
+      d.memory("complete", withTsNs(d.input(dir, "events.parquet"))
+          .select($"user_id", timestamp_micros(expr("ts div 1000")).as("event_time"))
+          .groupBy(session_window($"event_time", "1800000001 microseconds"), $"user_id")
+          .agg(count(lit(1)).as("n_ev")))
         .groupBy($"user_id")
         .agg(count(lit(1)).as("n_sessions"), sum($"n_ev").as("n_events"))
-        .orderBy($"user_id"),
-      dropView = Some(name), deleteDirs = Seq(in))
+        .orderBy($"user_id")
+    }
   }
 
   /** One token routed to its word-shard (shard = hash(word) mod S, so a
@@ -1084,22 +978,6 @@ object StreamQueries {
   case class ShardHHEmit(shard: Int, n_seen: Long, words: Array[String],
                          counts: Array[Long], err: Long)
 
-  /** STREAMING HEAVY HITTERS: the bounded-state online twin of the
-    * batch `text_heavy_hitters`. Tokens route to word-shards
-    * (shard = hash(word) mod S — a word's count never splits), and each
-    * shard carries ONE Misra-Gries summary as flatMapGroupsWithState
-    * state: live state is S × O(m) counters regardless of how much
-    * stream has passed, the bound that makes corpus-scale online top-k
-    * possible at all. At drain the final per-shard summaries union
-    * (shards partition the vocabulary — no cross-shard merge) into the
-    * global top-20.
-    *
-    * Exactness contract: counts are EXACT while no shard ever trims
-    * (per-shard distinct words ≤ m — the fixture's vocabulary is far
-    * under it, so this finite drain shares the batch query's DuckDB
-    * oracle verbatim); a vocabulary overflowing m degrades to the
-    * documented Misra-Gries lower bounds with a per-shard err, the
-    * guarantee MisraGriesSpec pins on the shared core. */
   /** The stateful CORE of [[streamHeavyHitters]], exposed so the
     * restart spec can drive it against an explicit checkpoint: shard
     * the streamed documents' tokens and carry one Misra-Gries summary
@@ -1137,35 +1015,43 @@ object StreamQueries {
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
   }
 
-  def streamHeavyHitters(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    import s.implicits._
-    val m = s.conf.get("spark.graft.stream.hh.m", "4096").toInt
-    val shards = s.conf.get("spark.graft.stream.hh.shards", "8").toInt
-    val (in, name) = stageInput(s, dir, "documents.parquet", "hh")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val q = hhSummaries(s, s.readStream.schema(schema).parquet(in.toString),
-        m, shards)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // update-mode memory sink: keep each shard's LAST emission (final
-    // state), union the disjoint summaries, global exact top-20
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"shard").orderBy($"n_seen".desc)
-    materializeAndRelease(s,
-      s.table(name)
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
-        .select(explode(arrays_zip($"words", $"counts")).as("wc"))
-        .select($"wc.words".as("word"), $"wc.counts".as("n"))
-        .orderBy($"n".desc, $"word")
-        .limit(20),
-      dropView = Some(name), deleteDirs = Seq(in))
-  }
+  /** STREAMING HEAVY HITTERS: the bounded-state online twin of the
+    * batch `text_heavy_hitters`. Tokens route to word-shards
+    * (shard = hash(word) mod S — a word's count never splits), and each
+    * shard carries ONE Misra-Gries summary as flatMapGroupsWithState
+    * state: live state is S × O(m) counters regardless of how much
+    * stream has passed, the bound that makes corpus-scale online top-k
+    * possible at all. At drain the final per-shard summaries union
+    * (shards partition the vocabulary — no cross-shard merge) into the
+    * global top-20. S = [[HhShards]] (8) and m = [[HhM]] (4096).
+    *
+    * Exactness contract: counts are EXACT while no shard ever trims
+    * (per-shard distinct words ≤ m — the fixture's vocabulary is far
+    * under it, so this finite drain shares the batch query's DuckDB
+    * oracle verbatim); a vocabulary overflowing m degrades to the
+    * documented Misra-Gries lower bounds with a per-shard err, the
+    * guarantee MisraGriesSpec pins on the shared core and, through
+    * [[heavyHitters]] with a small m, on this drain. */
+  def streamHeavyHitters(s: SparkSession, dir: String): DataFrame = heavyHitters(s, dir, HhM)
+
+  /** [[streamHeavyHitters]] with `m` counters per shard summary — a
+    * small `m` drives a trimming drain (MisraGriesSpec). */
+  private[graft] def heavyHitters(s: SparkSession, dir: String, m: Int): DataFrame =
+    withStreamPartitions(s) {
+      import s.implicits._
+      drain(s, "hh") { d =>
+        // update-mode memory sink: keep each shard's LAST emission (final
+        // state), union the disjoint summaries, global exact top-20
+        val w = Window.partitionBy($"shard").orderBy($"n_seen".desc)
+        d.memory("update", hhSummaries(s, d.input(dir, "documents.parquet"), m, HhShards))
+          .withColumn("rn", row_number().over(w))
+          .filter($"rn" === 1)
+          .select(explode(arrays_zip($"words", $"counts")).as("wc"))
+          .select($"wc.words".as("word"), $"wc.counts".as("n"))
+          .orderBy($"n".desc, $"word")
+          .limit(20)
+      }
+    }
 
   /** STREAMING WINDOWED PERCENTILES, append mode: exact p50/p95/p99 of
     * `value` per 1-hour event-time window, emitted only when the 1-hour
@@ -1191,31 +1077,21 @@ object StreamQueries {
     * pass through untouched bit-for-bit. */
   def streamQuantiles(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "events.parquet", "quant")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val q = withTsNs(s.readStream.schema(schema).parquet(in.toString))
-      .select(timestamp_micros(expr("ts div 1000")).as("event_time"), $"value")
-      .withWatermark("event_time", "1 hour")
-      .groupBy(window($"event_time", "1 hour"))
-      .agg(sort_array(collect_list($"value")).as("vals"))
-      .select(
-        expr("unix_micros(window.start) div 1000000").as("win_start"),
-        $"vals")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     def pick(qf: Double) =
       expr(s"vals[cast(floor($qf * (size(vals) - 1)) as int)]")
-    materializeAndRelease(s,
-      s.table(name)
+    drain(s, "quant") { d =>
+      d.memory("append", withTsNs(d.input(dir, "events.parquet"))
+          .select(timestamp_micros(expr("ts div 1000")).as("event_time"), $"value")
+          .withWatermark("event_time", "1 hour")
+          .groupBy(window($"event_time", "1 hour"))
+          .agg(sort_array(collect_list($"value")).as("vals"))
+          .select(
+            expr("unix_micros(window.start) div 1000000").as("win_start"),
+            $"vals"))
         .select($"win_start", size($"vals").cast("long").as("n"),
           pick(0.5).as("p50"), pick(0.95).as("p95"), pick(0.99).as("p99"))
-        .orderBy($"win_start"),
-      dropView = Some(name), deleteDirs = Seq(in))
+        .orderBy($"win_start")
+    }
   }
 
   case class SigRow(id: Long, nm: String, sig: String)
@@ -1267,10 +1143,7 @@ object StreamQueries {
     * signature STRINGS (not hashes): collisions would merge buckets and
     * silently diverge from the string-keyed oracle. */
   def streamEditDup(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    val (in, name) = stageInput(s, dir, "customer.parquet", "editdup")
-    val schema = s.read.parquet(s"$dir/customer.parquet").schema
-    editDupDrain(s, s.readStream.schema(schema).parquet(in.toString),
-      name, deleteDirs = Seq(in))
+    editDupDrainOf(s, "editdup")(d => editDupHits(s, d.input(dir, "customer.parquet")))
   }
 
   /** The signatures→owner-state pipeline of [[editDupDrain]] as an
@@ -1307,24 +1180,15 @@ object StreamQueries {
     * drive it one file per trigger and pin the cross-batch first-seen
     * semantics. */
   private[graft] def editDupDrain(s: SparkSession, stream: DataFrame,
-      name: String, deleteDirs: Seq[java.nio.file.Path]): DataFrame = {
-    import s.implicits._
-    val q = withRocksDbState(s) {
-      editDupHits(s, stream)
-        .writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    materializeAndRelease(s,
-      s.table(name)
-        .groupBy($"doc_id")
-        .agg(min($"dup_of").as("dup_of"))
-        .orderBy($"doc_id"),
-      dropView = Some(name), deleteDirs = deleteDirs)
+      name: String, deleteDirs: Seq[java.nio.file.Path]): DataFrame =
+    editDupDrainOf(s, "editdup", Some(name), deleteDirs)(_ => editDupHits(s, stream))
+
+  /** The drain shared by the edit-dup filters: drain `hits` through a
+    * memory sink under the RocksDB provider, fold min(owner) per id. */
+  private def editDupDrainOf(s: SparkSession, prefix: String,
+      view: Option[String] = None, release: Seq[Path] = Nil)(
+      hits: Drain => Dataset[EditDupHit]): DataFrame = withRocksDbState(s) {
+    drain(s, prefix, view, release)(d => firstOwners(d.memory("update", hits(d)), "dup_of"))
   }
 
   case class SigRowTs(id: Long, nm: String, sig: String,
@@ -1343,15 +1207,14 @@ object StreamQueries {
     * owner, no report) are pinned on crafted batches in
     * EditDupStreamSpec's TTL test. */
   def streamEditDupTtl(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    val (in, name) = stageInput(s, dir, "customer.parquet", "editdupttl")
-    val batchRead = s.read.parquet(s"$dir/customer.parquet")
-    val spanMs = 1000L * batchRead
+    val spanMs = 1000L * s.read.parquet(s"$dir/customer.parquet")
       .agg(coalesce(max(col("c_custkey")), lit(0L))).head().getLong(0)
-    val stream = s.readStream.schema(batchRead.schema).parquet(in.toString)
-      .withColumn("event_time",
-        timestamp_seconds(lit(1700000000L) + col("c_custkey")))
-    editDupDrainTtl(s, stream, name,
-      horizonMs = spanMs + 48L * 3600 * 1000, deleteDirs = Seq(in))
+    editDupDrainOf(s, "editdupttl") { d =>
+      editDupHitsTtl(s,
+        d.input(dir, "customer.parquet")
+          .withColumn("event_time", timestamp_seconds(lit(1700000000L) + col("c_custkey"))),
+        horizonMs = spanMs + 48L * 3600 * 1000)
+    }
   }
 
   /** The TTL drain core behind [[streamEditDupTtl]], exposed for the
@@ -1360,7 +1223,14 @@ object StreamQueries {
     * horizon. RocksDB state like every stateful drain here. */
   private[graft] def editDupDrainTtl(s: SparkSession, stream: DataFrame,
       name: String, horizonMs: Long,
-      deleteDirs: Seq[java.nio.file.Path]): DataFrame = withRocksDbState(s) {
+      deleteDirs: Seq[java.nio.file.Path]): DataFrame =
+    editDupDrainOf(s, "editdupttl", Some(name), deleteDirs)(_ => editDupHitsTtl(s, stream, horizonMs))
+
+  /** The EventTimeTimeout signatures→owner-state pipeline of
+    * [[editDupDrainTtl]]: each signature's owner expires `horizonMs` of
+    * event time after its newest carrier. */
+  private def editDupHitsTtl(s: SparkSession, stream: DataFrame,
+      horizonMs: Long): Dataset[EditDupHit] = {
     import s.implicits._
     def update(key: String, rows: Iterator[SigRowTs],
                state: GroupState[(Long, String)]): Iterator[EditDupHit] = {
@@ -1379,7 +1249,7 @@ object StreamQueries {
         out.result().iterator
       }
     }
-    val q = stream
+    stream
       .withWatermark("event_time", s"${horizonMs / 1000} seconds")
       .select($"c_custkey".as("id"), $"c_name".as("nm"),
         explode(expr(graft.operators.Dedup.deletionSigExpr("c_name"))).as("sig"),
@@ -1388,19 +1258,6 @@ object StreamQueries {
       .groupByKey(_.sig)
       .flatMapGroupsWithState(
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    materializeAndRelease(s,
-      s.table(name)
-        .groupBy($"doc_id")
-        .agg(min($"dup_of").as("dup_of"))
-        .orderBy($"doc_id"),
-      dropView = Some(name), deleteDirs = deleteDirs)
   }
 
   /** STREAMING CORPUS CURATION — the ingest-side quality/langid gate: a
@@ -1452,19 +1309,11 @@ object StreamQueries {
 
   def streamCorpusQualityGate(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val (in, name) = stageInput(s, dir, "documents.parquet", "corpusgate")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val q = qualityGated(s.readStream.schema(schema).parquet(in.toString))
-      .select($"doc_id", $"n_tokens", $"mean_tok_len", $"punct_ratio", $"pred_lang")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    materializeAndRelease(s, s.table(name).orderBy($"doc_id"),
-      dropView = Some(name), deleteDirs = Seq(in))
+    drain(s, "corpusgate") { d =>
+      d.memory("append", qualityGated(d.input(dir, "documents.parquet"))
+          .select($"doc_id", $"n_tokens", $"mean_tok_len", $"punct_ratio", $"pred_lang"))
+        .orderBy($"doc_id")
+    }
   }
 
   /** STREAMING MODEL-BASED SCORING — the "train offline, score online"
@@ -1489,19 +1338,11 @@ object StreamQueries {
   def streamCorpusNbScore(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
     val model = graft.operators.Curation.nbModelPath(s, dir)
-    val (in, name) = stageInput(s, dir, "documents.parquet", "nbscore")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val src = s.readStream.schema(schema).parquet(in.toString)
-    val q = graft.operators.Curation.nbScoreBatch(s, src, model)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    materializeAndRelease(s, s.table(name).orderBy($"doc_id"),
-      dropView = Some(name), deleteDirs = Seq(in))
+    drain(s, "nbscore") { d =>
+      d.memory("append", graft.operators.Curation.nbScoreBatch(
+          s, d.input(dir, "documents.parquet"), model))
+        .orderBy($"doc_id")
+    }
   }
 
   /** CONTINUOUS MODEL MAINTENANCE — the streaming twin of
@@ -1526,38 +1367,20 @@ object StreamQueries {
     * retraining from the corpus. */
   def streamCorpusNbRefresh(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.util.Fs.scratchDir(s, "nbmodel"), "stream").toAbsolutePath
-    try {
-      val docsDf = s.read.parquet(s"$dir/documents.parquet")
+    val docsDf = s.read.parquet(s"$dir/documents.parquet")
+    drain(s, "nbrefresh") { d =>
+      val counts = d.path("counts")
       // day-0 baseline: all-zero counts, additive-neutral — also what
       // makes an EMPTY corpus well-defined (zero arrival files → zero
       // micro-batches → without this the derive would find no artifact)
-      graft.operators.Curation.writeNbCountsBatch(
-        s, docsDf.limit(0), s"$base/counts", batchId = -1L)
-      // 8 arrival files so counts genuinely accrue across micro-batches
-      docsDf.repartition(8).write.mode("overwrite").parquet(s"$base/arrivals")
-      val src = s.readStream.schema(docsDf.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/arrivals")
+      graft.operators.Curation.writeNbCountsBatch(s, docsDf.limit(0), counts, batchId = -1L)
       // batchId-keyed OVERWRITE sink: a replayed micro-batch (the
       // at-least-once case under a checkpointed restart) rewrites its
       // own batch=<id> location instead of appending duplicate counts
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Curation.writeNbCountsBatch(
-            s, batch, s"$base/counts", batchId)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.operators.Curation.deriveNbModel(s, s"$base/counts", s"$base/model")
-      // materialize before the finally-delete of the model artifact
-      // (driver-bounded: one integer score row per document)
-      materializeAndRelease(s,
-        graft.operators.Curation.nbScoreBatch(s, docsDf, s"$base/model")
-          .orderBy($"doc_id"),
-        dropView = None, deleteDirs = Seq.empty)
-    } finally graft.util.Fs.deleteRecursively(base)
+      d.batches(d.arrivals(docsDf))(graft.operators.Curation.writeNbCountsBatch(s, _, counts, _))
+      graft.operators.Curation.deriveNbModel(s, counts, d.path("model"))
+      graft.operators.Curation.nbScoreBatch(s, docsDf, d.path("model")).orderBy($"doc_id")
+    }
   }
 
   /** STREAMING TEXT-INDEX MAINTENANCE — the search-index twin of
@@ -1580,44 +1403,29 @@ object StreamQueries {
     * shape that keeps a live 100 TB ingest's search index current
     * without ever re-indexing the corpus. */
   def streamTextIndexRefresh(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.util.Fs.scratchDir(s, "textidx"), "stream").toAbsolutePath
-    try {
-      val parts = streamTextIndexDirs(s, dir, base)
-      materializeAndRelease(s,
-        graft.operators.TextAnalysis.searchViaIndexPaths(
-          s, parts, Seq("agg", "join")),
-        dropView = None, deleteDirs = Seq.empty)
-    } finally graft.util.Fs.deleteRecursively(base)
+    drain(s, "textidx") { d =>
+      graft.operators.TextAnalysis.searchViaIndexPaths(
+        s, streamTextIndexDirs(s, dir, d), Seq("agg", "join"))
+    }
   }
 
   /** The arrival half shared by [[streamTextIndexRefresh]] and
-    * [[streamTextIndexCompact]]: stage the corpus as 8 arrival files,
-    * stream them one per micro-batch into batchId-keyed posting dirs at
-    * `base/idx/b<id>` (plus the day-0 empty baseline), and return the
+    * [[streamTextIndexCompact]]: stream the corpus's 8 arrival files one
+    * per micro-batch into batchId-keyed posting dirs at `idx/b<id>` of
+    * the drain (plus the day-0 empty baseline), and return the
     * accumulated posting-dir paths sorted for a deterministic union. */
-  private def streamTextIndexDirs(s: SparkSession, dir: String,
-      base: java.nio.file.Path): Seq[String] = {
+  private def streamTextIndexDirs(s: SparkSession, dir: String, d: Drain): Seq[String] = {
     val docsDf = s.read.parquet(s"$dir/documents.parquet")
     // day-0 baseline: an empty posting dir keeps the post-drain probe
     // well-defined when zero arrival files mean zero micro-batches
-    graft.operators.TextAnalysis.writePositionalIndexOf(
-      s, docsDf.limit(0), s"$base/idx/b-1")
-    docsDf.repartition(8).write.mode("overwrite").parquet(s"$base/arrivals")
-    val src = s.readStream.schema(docsDf.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/arrivals")
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextAnalysis.writePositionalIndexOf(
-          s, batch, s"$base/idx/b$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    graft.operators.TextAnalysis.writePositionalIndexOf(s, docsDf.limit(0), d.path("idx/b-1"))
+    d.batches(d.arrivals(docsDf)) { (batch, batchId) =>
+      graft.operators.TextAnalysis.writePositionalIndexOf(s, batch, d.path(s"idx/b$batchId"))
+    }
     // the union reads every batch's posting files (the deterministic
     // b<batchId> names dedup replays by construction)
     import scala.jdk.CollectionConverters._
-    val ls = java.nio.file.Files.list(base.resolve("idx"))
+    val ls = Files.list(d.root.resolve("idx"))
     try ls.iterator().asScala.map(_.toString)
       .filterNot(_.endsWith("_doclen")).toSeq.sorted finally ls.close()
   }
@@ -1644,19 +1452,14 @@ object StreamQueries {
     * tunes against the accrual curve ScaleRehearsal measures. */
   def streamTextIndexCompact(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.util.Fs.scratchDir(s, "textidx"), "streamc").toAbsolutePath
-    try {
-      val parts = streamTextIndexDirs(s, dir, base)
+    drain(s, "textidxc") { d =>
+      val parts = streamTextIndexDirs(s, dir, d)
       val retired = s.read.parquet(s"$dir/documents.parquet")
         .filter(pmod($"doc_id", lit(17)) === lit(5)).select($"doc_id")
-      graft.operators.TextAnalysis.compactPositionalIndex(
-        s, parts, retired, s"$base/compacted")
-      materializeAndRelease(s,
-        graft.operators.TextAnalysis.searchViaIndexPaths(
-          s, Seq(s"$base/compacted"), Seq("agg", "join")),
-        dropView = None, deleteDirs = Seq.empty)
-    } finally graft.util.Fs.deleteRecursively(base)
+      graft.operators.TextAnalysis.compactPositionalIndex(s, parts, retired, d.path("compacted"))
+      graft.operators.TextAnalysis.searchViaIndexPaths(
+        s, Seq(d.path("compacted")), Seq("agg", "join"))
+    }
   }
 
   /** STREAMING ANN-INDEX MAINTENANCE — the PQ twin of
@@ -1682,43 +1485,29 @@ object StreamQueries {
     * exact rerank. Production dials then trade recall for cost without
     * touching any of the gated machinery. */
   def streamPqIndexRefresh(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.util.Fs.scratchDir(s, "pqidx"), "stream").toAbsolutePath
-    try {
-      streamPqCodes(s, dir, base)
-      materializeAndRelease(s,
-        graft.operators.Similarity.pqTopkFromIndex(
-          s, dir, s"$base/idx", nprobe = 1000, rerank = 1000000),
-        dropView = None, deleteDirs = Seq.empty)
-    } finally graft.util.Fs.deleteRecursively(base)
+    drain(s, "pqidx") { d =>
+      streamPqCodes(s, dir, d)
+      graft.operators.Similarity.pqTopkFromIndex(
+        s, dir, d.path("idx"), nprobe = 1000, rerank = 1000000)
+    }
   }
 
   /** Shared arrival stage of [[streamPqIndexRefresh]] /
-    * [[streamPqIndexCompact]]: day-0 codebook sidecar at `base/idx`,
-    * then 8 micro-batches of vectors encoded against the frozen sidecar
-    * into batchId-keyed `codes/batch=<id>` partitions (idempotent
+    * [[streamPqIndexCompact]]: day-0 codebook sidecar at `idx` of the
+    * drain, then 8 micro-batches of vectors encoded against the frozen
+    * sidecar into batchId-keyed `codes/batch=<id>` partitions (idempotent
     * overwrite under at-least-once replay). */
-  private def streamPqCodes(s: SparkSession, dir: String,
-      base: java.nio.file.Path): Unit = {
-    graft.operators.Similarity.writePqCodebooks(s, dir, s"$base/idx")
+  private def streamPqCodes(s: SparkSession, dir: String, d: Drain): Unit = {
+    val idx = d.path("idx")
+    graft.operators.Similarity.writePqCodebooks(s, dir, idx)
     // load the frozen day-0 sidecar ONCE for the whole drain: every
     // micro-batch encodes against the same immutable coordinate system,
     // so a per-batch parquet read + collect of the identical model was
     // pure fixed cost (a restarted drain in a fresh process still reads
     // the persisted artifact here, at stream start)
-    val model = graft.operators.Similarity.readPqModel(s, s"$base/idx")
-    val embDf = s.read.parquet(s"$dir/embeddings.parquet")
-    embDf.repartition(8).write.mode("overwrite").parquet(s"$base/arrivals")
-    val src = s.readStream.schema(embDf.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/arrivals")
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity.writePqCodesBatchWith(
-          s, model, s"$base/idx", batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val model = graft.operators.Similarity.readPqModel(s, idx)
+    d.batches(d.arrivals(s.read.parquet(s"$dir/embeddings.parquet")))(
+      graft.operators.Similarity.writePqCodesBatchWith(s, model, idx, _, _))
   }
 
   /** STREAMED PQ-INDEX COMPACTION — the vector twin of
@@ -1748,19 +1537,14 @@ object StreamQueries {
     * additionally pinned in StreamIndexCompactSpec. */
   def streamPqIndexCompact(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory(
-      graft.util.Fs.scratchDir(s, "pqidx"), "streamc").toAbsolutePath
-    try {
-      streamPqCodes(s, dir, base)
+    drain(s, "pqidxc") { d =>
+      streamPqCodes(s, dir, d)
       val retired = s.read.parquet(s"$dir/embeddings.parquet")
         .filter(pmod($"vec_id", lit(17)) === lit(5)).select($"vec_id")
-      graft.operators.Similarity.compactPqIndex(
-        s, s"$base/idx", retired, s"$base/compacted")
-      materializeAndRelease(s,
-        graft.operators.Similarity.pqTopkFromIndex(
-          s, dir, s"$base/compacted", nprobe = 1000, rerank = 1000000),
-        dropView = None, deleteDirs = Seq.empty)
-    } finally graft.util.Fs.deleteRecursively(base)
+      graft.operators.Similarity.compactPqIndex(s, d.path("idx"), retired, d.path("compacted"))
+      graft.operators.Similarity.pqTopkFromIndex(
+        s, dir, d.path("compacted"), nprobe = 1000, rerank = 1000000)
+    }
   }
 
   case class PipeBandRow(doc_id: Long, score_q: Long, band: Int, band_hash: String)
@@ -1826,28 +1610,17 @@ object StreamQueries {
   def streamCorpusPipeline(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
     import s.implicits._
     val model = graft.operators.Curation.nbModelPath(s, dir)
-    val (in, name) = stageInput(s, dir, "documents.parquet", "corpuspipe")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val owned = pipelineOwned(s, s.readStream.schema(schema).parquet(in.toString), model)
     withRocksDbState(s) {
-      val q = owned.writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastNearDupState = Option(q.lastProgress)
-        .flatMap(p => p.stateOperators.headOption)
-        .map(op => (op.numRowsTotal, op.memoryUsedBytes))
-      materializeAndRelease(s,
-        s.table(name)
+      drain(s, "corpuspipe") { d =>
+        val owned = d.memory("update", pipelineOwned(s, d.input(dir, "documents.parquet"), model))
+        lastNearDupState = d.stateFootprint
+        owned
           .groupBy($"doc_id")
           .agg(max($"score_q").as("score_q"), min($"owner").as("owner"))
           .filter($"owner" === $"doc_id")
           .select($"doc_id", $"score_q")
-          .orderBy($"doc_id"),
-        dropView = Some(name), deleteDirs = Seq(in))
+          .orderBy($"doc_id")
+      }
     }
   }
 
@@ -1878,11 +1651,8 @@ object StreamQueries {
     * the owner the bucket min, which is the closed form the DuckDB
     * oracle states. */
   def streamEmbedNearDup(s: SparkSession, dir: String): DataFrame = withStreamPartitions(s) {
-    val (in, name) = stageInput(s, dir, "embeddings.parquet", "embneardup")
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    embedNearDupDrain(s,
-      s.readStream.schema(schema).parquet(in.toString),
-      name, deleteDirs = Seq(in))
+    nearDupDrainOf(s, "embneardup")(d => embedNearDupHits(s, d.input(dir, "embeddings.parquet")))
+      .withColumnRenamed("doc_id", "vec_id")
   }
 
   /** The buckets→owner-state core of [[streamEmbedNearDup]], exposed
@@ -1890,7 +1660,12 @@ object StreamQueries {
     * state-bound assertions). τ = 0.3; rounding (HALF_UP to 4) matches
     * both engines' `round(x, 4)`. */
   private[graft] def embedNearDupDrain(s: SparkSession, stream: DataFrame,
-      name: String, deleteDirs: Seq[java.nio.file.Path]): DataFrame = withRocksDbState(s) {
+      name: String, deleteDirs: Seq[java.nio.file.Path]): DataFrame =
+    nearDupDrainOf(s, "embneardup", Some(name), deleteDirs)(_ => embedNearDupHits(s, stream))
+      .withColumnRenamed("doc_id", "vec_id")
+
+  /** The buckets→owner-state pipeline of [[embedNearDupDrain]]. */
+  private def embedNearDupHits(s: SparkSession, stream: DataFrame): Dataset[NearDupHit] = {
     import s.implicits._
     val tau = BigDecimal(0.3)
     def cos(a: VecOwner, v: VecBucketRow): BigDecimal = {
@@ -1913,7 +1688,7 @@ object StreamQueries {
       state.update(owner)
       out.result().iterator
     }
-    val q = stream
+    stream
       .select(col("vec_id"), col("embedding"),
         sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
       // zero-norm vectors have no direction to compare — drop them before
@@ -1928,22 +1703,5 @@ object StreamQueries {
       .as[VecBucketRow]
       .groupByKey(r => (r.t, r.bucket))
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastNearDupState = Option(q.lastProgress)
-      .flatMap(p => p.stateOperators.headOption)
-      .map(op => (op.numRowsTotal, op.memoryUsedBytes))
-    materializeAndRelease(s,
-      s.table(name)
-        .groupBy($"doc_id")
-        .agg(min($"near_dup_of").as("near_dup_of"))
-        .select($"doc_id".as("vec_id"), $"near_dup_of")
-        .orderBy($"vec_id"),
-      dropView = Some(name), deleteDirs = deleteDirs)
   }
 }

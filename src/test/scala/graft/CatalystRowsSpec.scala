@@ -77,7 +77,7 @@ class CatalystRowsSpec extends SparkSuite {
     withCorpus { dir =>
       val ex = DicomPipeline.extract(spark, dir.toString, "bkt", "reg")
       assert(ex.errors.isEmpty())
-      val df = DicomPipeline.toDataFrame(spark, ex.rows)
+      val df = DicomPipeline.toDataFrame(spark, ex)
       val (now, old) = (cells(df), cells(oracle(ex.rows, df.columns.toSeq)))
       assert(now.size == 4 * df.columns.length)
       val gap = ("d.dcm", "study_date")
@@ -94,25 +94,23 @@ class CatalystRowsSpec extends SparkSuite {
       assert(now(("b.dcm", "referenced_study_sequence")) == "{}")
       assert(now(("b.dcm", "study_date")) == """{"study_date":"1979-01-01"}""")
       assert(now(("c.dcm", "study_date")) == """{"study_date":"1500-01-01"}""")
-      ex.outcomes.unpersist()
     }
   }
 
   test("the format(\"dicom\") source reads the values toDataFrame builds") {
     withCorpus { dir =>
       val ex = DicomPipeline.extract(spark, dir.toString, "dicom-source", "local")
-      val df = DicomPipeline.toDataFrame(spark, ex.rows)
+      val df = DicomPipeline.toDataFrame(spark, ex)
       val source = spark.read.format("dicom").load(dir.toString)
       assert(source.columns.toSeq == df.columns.toSeq)
       assert(cells(source) == cells(df))
-      ex.outcomes.unpersist()
     }
   }
 
   test("the format(\"dicom\") source reads PN subfields, as toDataFrame builds them") {
     withCorpus { dir =>
       val ex = DicomPipeline.extract(spark, dir.toString, "dicom-source", "local")
-      val df = DicomPipeline.toDataFrame(spark, ex.rows)
+      val df = DicomPipeline.toDataFrame(spark, ex)
       val source = spark.read.format("dicom").load(dir.toString)
       // nested schema pruning hands the scan builder pruned structs
       val cols = Seq("source_s3_key", "patient_name.given_name", "patient_name.family_name",
@@ -124,7 +122,6 @@ class CatalystRowsSpec extends SparkSuite {
       assert(subfields(source) == expected)
       assert(source.where(col("patient_name.given_name") === "Rick")
         .select("patient_name.family_name").collect().map(_.getString(0)).toSeq == Seq("Roe"))
-      ex.outcomes.unpersist()
     }
   }
 

@@ -14,7 +14,7 @@ class DicomPipelineSpec extends SparkSuite {
       java.nio.file.Paths.get("target"), "dicomspec").toAbsolutePath.toString
 
   private lazy val extracted = DicomPipeline.extract(spark, fixtures, "bkt", "reg")
-  private lazy val df = DicomPipeline.toDataFrame(spark, extracted.rows)
+  private lazy val df = DicomPipeline.toDataFrame(spark, extracted)
 
   test("extraction yields 10 images (2 loose + 2/zip + 2/tar + 2/tgz + 2/tbz2)") {
     assert(df.count() == 10)
@@ -226,6 +226,15 @@ class DicomPipelineSpec extends SparkSuite {
     q.awaitTermination()
     assert(spark.read.parquet(s"$out/stream").count() == 2)
     assert((persisted -- before).isEmpty, "micro-batches left their intermediates persisted")
+  }
+
+  test("the extraction queries that never write leave no persisted RDDs behind") {
+    // only DicomPipeline.write persists an extraction, and it releases it
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    assert(graft.queries.DicomQueries.extractFlat(spark, "").count() == 10)
+    assert(graft.queries.DicomQueries.errors(spark, "").count() == 1)
+    assert((persisted -- before).isEmpty, "extractFlat or errors left an extraction persisted")
   }
 
   test("incompatible per-batch schemas FAIL the crawl (SURVEY §1.4 error semantics)") {

@@ -78,7 +78,7 @@ class DicomSourceSpec extends SparkSuite {
       val strict = spark.read.format("dicom").option("failOnError", "true").load(dir.toString)
       assert((pipeline.rows.count(), source.count(), strict.count()) == ((1L, 1L, 1L)))
       assert(source.columns.toSeq ==
-        graft.pipeline.DicomPipeline.toDataFrame(spark, pipeline.rows).columns.toSeq,
+        graft.pipeline.DicomPipeline.toDataFrame(spark, pipeline).columns.toSeq,
         "format(\"dicom\") and the ETL table disagree on column order")
     } finally graft.util.Fs.deleteRecursively(dir)
   }

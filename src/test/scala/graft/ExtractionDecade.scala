@@ -243,7 +243,7 @@ object ExtractionDecade {
       DicomQueries.flatProjection(spark,
         graft.pipeline.DicomPipeline.toDataFrame(spark,
           graft.pipeline.DicomPipeline.extractFromManifest(
-            spark, m, "decade", "local").rows))
+            spark, m, "decade", "local")))
     val funnelScratch = scratch.resolve("funnelstd")
     graft.util.Fs.deleteRecursively(funnelScratch)
     def buildStanding(m: org.apache.spark.sql.DataFrame, tag: String): Double = {

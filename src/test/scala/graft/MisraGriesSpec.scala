@@ -104,18 +104,16 @@ class MisraGriesSpec extends SparkSuite {
     }
     val dir = stage(docs)
     val exact = Map("hot" -> 100L, "warm" -> 100L, "tepid" -> 100L)
-    withConf("spark.graft.stream.hh.m" -> "8") {
-      val out = graft.queries.StreamQueries.streamHeavyHitters(spark, dir)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-      // lower bounds only — a streamed count above the true count would
-      // mean state leaked across shards or batches
-      out.foreach { case (w, n) =>
-        assert(n <= exact.getOrElse(w, 100L), s"'$w' overcounted: $n")
-      }
-      // the three heavies clear any possible per-shard err here and must
-      // all surface
-      exact.keys.foreach(w => assert(out.contains(w), s"heavy '$w' lost in trims"))
+    val out = graft.queries.StreamQueries.heavyHitters(spark, dir, m = 8)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    // lower bounds only — a streamed count above the true count would
+    // mean state leaked across shards or batches
+    out.foreach { case (w, n) =>
+      assert(n <= exact.getOrElse(w, 100L), s"'$w' overcounted: $n")
     }
+    // the three heavies clear any possible per-shard err here and must
+    // all surface
+    exact.keys.foreach(w => assert(out.contains(w), s"heavy '$w' lost in trims"))
   }
 
   test("certificate fails loudly when the budget cannot separate the tail") {

@@ -82,6 +82,16 @@ class ProductionJarSpec extends AnyFunSuite {
     assert((documented -- read).isEmpty, s"in CONFIG.md but read nowhere: ${(documented -- read).toSeq.sorted}")
   }
 
+  test("no wait in src/main has a deadline: every Await runs on Duration.Inf") {
+    // a deadline that holds at fixture scale fails a large corpus
+    val bounded = for {
+      (f, text) <- sources("src/main/scala")
+      fn <- Seq("""Await\.result""", """Await\.ready""")
+      args <- callArgs(code(text), fn) if !args.stripSuffix(")").trim.endsWith("Duration.Inf")
+    } yield s"$f: $args"
+    assert(bounded.isEmpty, s"Await with a deadline: $bounded")
+  }
+
   /** The argument text of every `fn(` call in `c`, up to its matching
     * close parenthesis. */
   private def callArgs(c: String, fn: String): Seq[String] =

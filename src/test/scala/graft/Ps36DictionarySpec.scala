@@ -66,7 +66,7 @@ class Ps36DictionarySpec extends SparkSuite {
       DicomWriter.strElement(0x300a, 0x000b, "LO", "PELVIS")))
     java.nio.file.Files.write(dir.resolve("rtplan.dcm"), bytes)
     val ex = DicomPipeline.extract(spark, dir.toString, "bkt", "reg")
-    val df = DicomPipeline.toDataFrame(spark, ex.rows)
+    val df = DicomPipeline.toDataFrame(spark, ex)
     val cols = df.columns.toSet
     Seq("rtplan_label", "beam_name", "roiname", "clinical_trial_subject_id",
         "film_size_id", "treatment_sites").foreach { c =>

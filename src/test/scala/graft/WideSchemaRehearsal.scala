@@ -121,7 +121,7 @@ object WideSchemaRehearsal {
       // observed-key collection + row materialization under test)
       val ex = graft.pipeline.DicomPipeline.extract(spark, input.toString, "wide", "local")
       val (df, finalizeSec) = timed {
-        val d = graft.pipeline.DicomPipeline.toDataFrame(spark, ex.rows)
+        val d = graft.pipeline.DicomPipeline.toDataFrame(spark, ex)
         d.count(); d
       }
       val nCols = df.columns.length

@@ -25,7 +25,7 @@ class WideSchemaSpec extends SparkSuite {
           WideSchemaRehearsal.wideDcm(pool, i, perObj = 60))
       }
       val ex = DicomPipeline.extract(spark, in.toString, "wide", "local")
-      val df = DicomPipeline.toDataFrame(spark, ex.rows)
+      val df = DicomPipeline.toDataFrame(spark, ex)
       assert(ex.errors.isEmpty(), "wide fixtures must parse clean")
       assert(df.count() == 80)
       // every pool keyword that any object carried is a column, snake_cased
